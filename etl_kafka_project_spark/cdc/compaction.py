@@ -1,110 +1,16 @@
-"""Table maintenance: tombstone purge, small-file compaction, snapshot
-expiry (vacuum).
+"""Table maintenance: snapshot expiry (vacuum).
 
-Tombstones (SURVEY §2.7 U3): a delete keeps a marker row so stale
-pre-delete events arriving later are recognized (``cdc/merge.py``). Once
-the stream has drained past a watermark LSN, markers at or below it can
-never matter again and are physically dropped — the batch analog of
-``dropDuplicates`` over *watermarked* state (north star), with the lake
-table playing the state store.
-
-Small files: every MERGE rewrites its touched buckets, so steady-state
-file counts stay bounded, but a long replay with many epochs and a
-``maxRecordsPerFile``-style salting plan can still fragment cold buckets;
-``compact`` rewrites any bucket whose file count exceeds a threshold.
-
-Snapshot expiry mirrors Iceberg's ``expireSnapshots``: old snapshot JSONs
-are deleted and data files referenced by NO retained snapshot are removed
-from disk. Time travel keeps working for retained versions.
+Mirrors Iceberg's ``expireSnapshots``: old snapshot JSONs are deleted
+and data files referenced by NO retained snapshot are removed from disk.
+Time travel keeps working for retained versions. Compaction and
+tombstone purge live in ``cdc/mor.py`` (``compact_deltas``).
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
-from pyspark.sql import functions as F
-
-from etl_kafka_project_spark.cdc.salting import plan_write_splits, salted_repartition
-from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.minilake.table import LakeTable
-
-
-@dataclass
-class CompactionStats:
-    buckets_rewritten: int
-    files_before: int
-    files_after: int
-    tombstones_purged: int
-    snapshot_version: int | None
-
-
-def compact(
-    table: LakeTable,
-    config: EngineConfig | None = None,
-    purge_tombstones_below_lsn: int | None = None,
-    max_files_per_bucket: int = 4,
-) -> CompactionStats:
-    """Rewrite buckets that are fragmented or carry purgeable tombstones.
-
-    ``purge_tombstones_below_lsn``: tombstone rows with
-    ``last_lsn <= watermark`` are dropped for good — pass the stream's
-    drained-through LSN (e.g. ``max_lsn`` from the lineage log minus the
-    re-delivery horizon). ``None`` purges nothing.
-    """
-    config = (config or EngineConfig()).validate()
-    snap = table.snapshot()
-    key_cols = snap.props["key_columns"]
-
-    by_bucket: dict[int, int] = {}
-    rows_by_bucket: dict[int, int] = {}
-    for fe in snap.files:
-        by_bucket[fe.bucket] = by_bucket.get(fe.bucket, 0) + 1
-        rows_by_bucket[fe.bucket] = rows_by_bucket.get(fe.bucket, 0) + fe.rows
-
-    fragmented = {b for b, n in by_bucket.items() if n > max_files_per_bucket}
-    if purge_tombstones_below_lsn is not None:
-        # buckets holding purgeable tombstones: found with one pruned scan
-        # over the tombstone flag + lsn columns only (column-pruned read)
-        tomb = (
-            table.read(include_tombstones=True)
-            .filter(F.col("_deleted") & (F.col("last_lsn") <= purge_tombstones_below_lsn))
-            .select(table.bucket_expr(snap).alias("_bucket"))
-            .groupBy("_bucket")
-            .count()
-            .collect()
-        )
-        fragmented |= {r["_bucket"] for r in tomb}
-        n_tombs = sum(r["count"] for r in tomb)
-    else:
-        n_tombs = 0
-
-    if not fragmented:
-        return CompactionStats(0, len(snap.files), len(snap.files), 0, snap.version)
-
-    df = table.read(buckets=fragmented, include_tombstones=True)
-    if purge_tombstones_below_lsn is not None:
-        df = df.filter(
-            ~(F.col("_deleted") & (F.col("last_lsn") <= purge_tombstones_below_lsn))
-        )
-    df = df.withColumn("_bucket", table.bucket_expr(snap))
-    splits = plan_write_splits(
-        {b: rows_by_bucket.get(b, 0) for b in fragmented}, config.target_file_rows
-    )
-    df = salted_repartition(df, key_cols, splits, bucket_col="_bucket")
-    new_files = table.write_data_files(df, bucket_col="_bucket")
-    committed = table.commit(
-        expected_version=snap.version,
-        new_files=new_files,
-        replaced_buckets=fragmented,
-    )
-    return CompactionStats(
-        buckets_rewritten=len(fragmented),
-        files_before=len(snap.files),
-        files_after=len(committed.files),
-        tombstones_purged=n_tombs,
-        snapshot_version=committed.version,
-    )
 
 
 def expire_snapshots(

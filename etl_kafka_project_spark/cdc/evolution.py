@@ -124,7 +124,6 @@ def evolve_table(table: LakeTable, batch_schema: T.StructType) -> tuple[Snapshot
         snap = table.commit(
             expected_version=snap.version,
             new_files=[],
-            replaced_buckets=set(),
             schema=evolved_schema(snap.schema, plan),
         )
     return snap, plan

@@ -34,6 +34,8 @@ LANG_EXT = {"python": "py", "java": "java", "scala": "scala", "go": "go", "js": 
 LANG_W = [0.35, 0.15, 0.10, 0.15, 0.15, 0.10]
 DIRS = ["core", "util", "api", "io", "net", "db"]
 BASE_TS = pd.Timestamp("2024-01-01", tz="UTC")
+#: parquet types of the schema-evolution columns (``evolve_after_lsn``)
+EVOLVED_TYPES = {"author": "string", "size": "int64"}
 
 
 @dataclass(frozen=True)
@@ -150,7 +152,7 @@ def write_segments(events: pd.DataFrame, out_dir: str, spec: StreamSpec) -> list
     n = len(events)
     seg_size = max(1, -(-n // spec.n_segments))
     paths: list[str] = []
-    evolved_cols = [c for c in ("author", "size") if c in events.columns]
+    evolved_cols = [c for c in EVOLVED_TYPES if c in events.columns]
     cut = spec.evolve_after_lsn
     for si in range(spec.n_segments):
         seg = events.iloc[si * seg_size : (si + 1) * seg_size]
@@ -171,6 +173,12 @@ def write_segments(events: pd.DataFrame, out_dir: str, spec: StreamSpec) -> list
         )
         out = seg.drop(columns=evolved_cols) if drop_evolved else seg
         table = pa.Table.from_pandas(out, preserve_index=False)
+        # declared types, not inferred ones: a segment from before the
+        # evolution holds an all-null column, which pandas infers as
+        # parquet type null and a typed reader then refuses
+        for c in [] if drop_evolved else evolved_cols:
+            i = table.schema.get_field_index(c)
+            table = table.set_column(i, c, table.column(c).cast(EVOLVED_TYPES[c]))
         path = os.path.join(out_dir, f"segment-{si:05d}.parquet")
         pq.write_table(table, path)
         paths.append(path)

@@ -249,8 +249,7 @@ def fold_batch(
     # null-key group survives both groupBys (groupBy keeps null keys)
     # and must survive the re-join too — a plain equi-join would
     # silently drop it, losing events for callers that bypass
-    # split_dead_letters' null-key quarantine (the COW merge join at
-    # merge.py uses eqNullSafe for the same reason).
+    # split_dead_letters' null-key quarantine.
     w, a = wide.alias("w"), applied.alias("a")
     cond = [F.col(f"w.{k}").eqNullSafe(F.col(f"a.{k}")) for k in key_columns]
     folded = w.join(a, cond, "inner").select("w.*", F.col("a._applied"), F.col("a._lsns"))

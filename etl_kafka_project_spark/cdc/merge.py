@@ -1,17 +1,20 @@
-"""Copy-on-write MERGE of a folded change batch into a LakeTable.
+"""Merge-on-read MERGE of a change batch into a LakeTable.
 
-The vectorized, partition-pruned replacement for the reference's per-event
-state mutation (``pyspark_interface.py:38-70``) and keyed sink upsert
+The vectorized replacement for the reference's per-event state mutation
+(``pyspark_interface.py:38-70``) and keyed sink upsert
 (``redis_interface.py:38-61``). One micro-batch = ONE merge:
 
-    folded batch (one resolved action per key, from ``cdc/fold.py``)
-      → touched buckets = distinct hash-bucket of batch keys (small, collected
-        together with per-bucket lineage stats in one job)
-      → read ONLY those buckets from the table (manual partition pruning)
-      → full-outer resolve (MERGE WHEN MATCHED / NOT MATCHED, column-granular
-        LWW vs the target's last_lsn)
-      → rewrite only the touched buckets' files; atomic snapshot commit that
-        also records the stream epoch (exactly-once).
+    change events
+      → fold (``cdc/fold.py``): one resolved action per key, per-column
+        ``(value, lsn)`` cells plus delete/reset barriers
+      → append the folded actions as delta files of the touched hash
+        buckets (``cdc/mor.py write_delta_files``) — O(batch) bytes
+      → atomic snapshot commit that also records the stream epoch
+        (exactly-once).
+
+Resolution against the stored rows happens at read
+(``cdc/mor.py resolve_deltas``) and is amortized by compaction
+(``cdc/mor.py compact_deltas``).
 
 Table meta columns (the generalization of the reference's per-key
 ``touch_counter``, ``utils/schemas.py:29``):
@@ -19,29 +22,11 @@ Table meta columns (the generalization of the reference's per-key
 * ``last_lsn``       — newest LSN applied to the key (LWW authority),
 * ``row_version``    — count of change events ever applied to the key,
 * ``content_sha256`` — per-row content hash (input_hint invariant),
-  computed with the JVM ``sha2`` built-in and only on rows whose content
-  actually changed (carried-forward rows keep their stored hash),
+  computed only on rows whose content cell the batch wrote,
 * ``_deleted``       — tombstone flag. Deleted keys keep a tombstone row
   (payload nulls + last_lsn) so stale pre-delete events arriving in later
-  batches are recognized and ignored; ``cdc/compaction.py`` physically
-  drops old tombstones.
-
-Semantics vs target, per key with a folded action ``s`` and existing row
-``t`` (all expressed as one joined ``select`` — no per-row Python):
-
-* no ``t``                      → INSERT (or tombstone if the action is a
-                                  delete — guards stale events for keys
-                                  never seen),
-* ``s._max_lsn <= t.last_lsn``  → stale replay, keep ``t``,
-* ``s._is_delete``              → tombstone,
-* otherwise per payload column ``c``: take ``s.c`` when its last non-null
-  write is newer than everything in ``t`` (``s.c_lsn > t.last_lsn``) or the
-  base is dead (``t`` is a tombstone, or the batch contains a RESET — an
-  ``I`` full-replace or a ``D`` — newer than ``t``); else keep ``t.c`` —
-  this is the column-granular non-null-wins of the reference
-  (``pyspark_interface.py:45-48``) made LSN-deterministic, with ``I``
-  restored to full-row-replace semantics (a late old-schema insert nulls
-  out evolved columns it doesn't carry).
+  batches are recognized and ignored; ``compact_deltas`` can physically
+  drop old tombstones (``purge_tombstones_below_lsn``).
 """
 
 from __future__ import annotations
@@ -55,10 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_kafka_project_spark.cdc.envelope import PAYLOAD_FIELDS
-from etl_kafka_project_spark.cdc.fold import NEVER, fold_batch
+from etl_kafka_project_spark.cdc.fold import fold_batch
 from etl_kafka_project_spark.config import EngineConfig
-from etl_kafka_project_spark.cdc.salting import plan_write_splits, salted_repartition
-from etl_kafka_project_spark.functions.hashing import sha256_builtin
 from etl_kafka_project_spark.minilake.table import LakeTable, SnapshotConflictError
 
 
@@ -111,20 +94,11 @@ class MergeStats:
     per_bucket: list[dict]
     snapshot_version: int | None = None
     skipped: bool = False
-    #: hottest key's folded event count (adaptive-salting signal). The
-    #: MOR fast path carries it here (global, from the write job's
-    #: observation); the COW path also repeats it per bucket.
+    #: hottest key's folded event count (adaptive-salting signal),
+    #: observed on the write job
     max_key_events: int = 0
-    #: [min, max] _max_lsn of the batch (MOR fast path; COW carries the
-    #: same per bucket)
+    #: [min, max] _max_lsn of the batch
     lsn_range: list[int] | None = None
-
-
-#: marker file dropped in a changelog epoch dir whose files are
-#: hardlinked DELTA files (fold-output shape) rather than feed-shaped
-#: parquet; serving.read_changelog projects them at read. Underscore
-#: prefix keeps Spark's parquet reader from treating it as data.
-DELTA_LAYOUT_MARKER = "_delta_layout"
 
 
 def _link_changelog_deltas(
@@ -147,51 +121,6 @@ def _link_changelog_deltas(
             os.link(src, dst)
         except OSError:
             shutil.copy2(src, dst)
-    with open(os.path.join(dest, DELTA_LAYOUT_MARKER), "w") as f:
-        f.write("delta")
-
-
-def _write_changelog(
-    folded: DataFrame,
-    key_cols: list[str],
-    payload_cols: list[str],
-    changelog_dir: str,
-    epoch: tuple[str, int],
-) -> None:
-    """Publish the batch's FOLDED per-key actions as the outbound change
-    feed — O(batch) work, no extra table read. To make partial updates
-    applicable without clobbering untouched columns with nulls, each
-    payload column ships its write-lsn (``{c}_lsn``, null = this batch
-    did not write the column) plus the reset barrier (``reset_lsn``: an
-    I/D at that lsn nulls every column whose stored write is older).
-    Consumer contract, per key in lsn order: if op='D' delete; else for
-    each column with non-null {c}_lsn newer than the consumer's stored
-    cell, take the value; then null out any stored cell older than
-    reset_lsn. Applying the feed this way reproduces the table's
-    resolved rows exactly (cdc/fold.py semantics).
-
-    Partitioned per STREAM as well as per epoch: committed epochs are
-    tracked per stream_id, so two streams merging into one table each
-    get their own feed namespace — without it they would overwrite each
-    other's epoch dirs and break the apply_changelog reconstruction
-    guarantee. serving.read_changelog globs this layout AND the legacy
-    flat ``epoch=*`` one. Written idempotently (overwrite) BEFORE the
-    data commit, so a crash-retry regenerates identical content.
-    """
-    feed = folded.select(
-        *key_cols,
-        F.when(F.col("_is_delete"), F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.col("_max_lsn").alias("lsn"),
-        F.col("_last_reset_lsn").alias("reset_lsn"),
-        *payload_cols,
-        *[
-            F.when(F.col(f"{c}_lsn") > NEVER, F.col(f"{c}_lsn")).alias(f"{c}_lsn")
-            for c in payload_cols
-        ],
-    )
-    feed.write.mode("overwrite").parquet(
-        os.path.join(changelog_dir, f"stream={epoch[0]}", f"epoch={epoch[1]}")
-    )
 
 
 def _merge_mor(
@@ -251,8 +180,7 @@ def _merge_mor(
         # pattern. Per epoch this sheds one full write job and halves
         # bytes written; the feed stays immutable across compaction and
         # vacuum because the links keep the inodes alive. Linked BEFORE
-        # the snapshot commit (same crash-retry idempotence as the old
-        # pre-commit overwrite: a retried epoch rebuilds the dir).
+        # the snapshot commit, so a crash-retried epoch rebuilds the dir.
         _link_changelog_deltas(table, new_files, changelog_dir, epoch)
         marks.append(("changelog_link", time.time()))
     m = obs.get  # write job has run; never blocks here
@@ -304,225 +232,6 @@ def _merge_mor(
     )
 
 
-def merge_folded(
-    table: LakeTable,
-    folded: DataFrame,
-    config: EngineConfig,
-    epoch: tuple[str, int] | None = None,
-    events_in: int = -1,
-    changelog_dir: str | None = None,
-    snap=None,
-) -> MergeStats:
-    """MERGE a folded batch (output of ``fold_batch``) into the table.
-
-    ``changelog_dir``: if set (and an epoch id is given), the batch's
-    FOLDED per-key actions are appended as an outbound change feed —
-    the analog of the reference's Redis pub/sub ``movie_updates`` channel
-    (``redis_interface.py:121-123``), consumable batch or streaming
-    (``serving.py``). Unlike the reference (which publishes full merged
-    documents), the feed is a partial-update stream: per-column write
-    lsns + the reset barrier make "unchanged" vs "set to null"
-    distinguishable (see the consumer contract at the write site below).
-    Written idempotently per epoch (overwrite) BEFORE the data commit,
-    so a crash-retry regenerates identical content.
-    """
-    t0 = time.time()
-    if snap is None:
-        # MOR appends never read the parent's file listing (the write
-        # needs only version/schema/props; resolution happens at read),
-        # so the per-epoch serial floor skips assembling every bucket
-        # manifest — O(1) header read instead of O(table files). COW
-        # rewrites buckets from the parent's base files and needs the
-        # full listing.
-        snap = (
-            table.snapshot_header()
-            if config.merge_mode == "mor"
-            else table.snapshot()
-        )
-    key_cols = snap.props["key_columns"]
-    payload_cols = [
-        f.name
-        for f in snap.schema.fields
-        if f.name not in key_cols and f.name not in {m.name for m in META_FIELDS}
-    ]
-
-    folded = folded.withColumn("_bucket", table.bucket_expr(snap))
-
-    if config.merge_mode == "mor":
-        return _merge_mor(
-            table, folded, snap, epoch=epoch, changelog_dir=changelog_dir, t0=t0
-        )
-
-    folded.persist()
-    try:
-        # One small job yields BOTH the touched-bucket set (partition
-        # pruning) and per-bucket lineage stats (cdc/metrics.py).
-        bucket_rows = (
-            folded.groupBy("_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("keys"),
-                F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
-                F.sum("_applied").alias("events"),
-                F.min("_max_lsn").alias("min_lsn"),
-                F.max("_max_lsn").alias("max_lsn"),
-                # hottest key's event count — drives the stream's
-                # adaptive salting (config.hot_key_threshold); free,
-                # same job as the pruning/lineage stats
-                F.max("_applied").alias("max_key_events"),
-            )
-            .collect()
-        )
-        per_bucket = [r.asDict() for r in bucket_rows]
-        touched = {r["_bucket"] for r in bucket_rows}
-        n_keys = sum(r["keys"] for r in bucket_rows)
-        n_deletes = sum(r["deletes"] for r in bucket_rows)
-
-        if not touched:
-            return MergeStats(
-                epoch_id=epoch[1] if epoch else None,
-                events_in=events_in,
-                keys=0,
-                upserts=0,
-                deletes=0,
-                touched_buckets=0,
-                wall_ms=(time.time() - t0) * 1000,
-                per_bucket=[],
-                snapshot_version=snap.version,
-                skipped=False,
-            )
-
-        if changelog_dir is not None and epoch is not None:
-            _write_changelog(folded, key_cols, payload_cols, changelog_dir, epoch)
-
-        target = table.read(buckets=touched, include_tombstones=True).alias("t")
-        src = folded.alias("s")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key_cols]
-        joined = target.join(src, cond, "full_outer")
-
-        s_absent = F.col("s._max_lsn").isNull()
-        t_absent = F.col("t.last_lsn").isNull()
-        stale = ~s_absent & ~t_absent & (F.col("s._max_lsn") <= F.col("t.last_lsn"))
-        keep_t = s_absent | stale
-        tombstone = ~keep_t & F.col("s._is_delete")
-        # the target's payload is irrelevant when the key was never seen,
-        # is tombstoned, or the batch contains a RESET (I full-replace or
-        # D) newer than everything applied — I-as-reset is what makes a
-        # late old-schema insert null out evolved columns (FIXTURES §3)
-        base_dead = t_absent | F.col("t._deleted") | (
-            F.col("s._last_reset_lsn").isNotNull()
-            & (F.col("s._last_reset_lsn") > F.col("t.last_lsn"))
-        )
-
-        dtypes = {f.name: f.dataType for f in snap.schema.fields}
-        out: list[F.Column] = []
-        for k in key_cols:
-            out.append(F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k))
-        for c in payload_cols:
-            upsert_val = F.when(
-                base_dead | (F.col(f"s.{c}_lsn") > F.col("t.last_lsn")), F.col(f"s.{c}")
-            ).otherwise(F.col(f"t.{c}"))
-            out.append(
-                F.when(keep_t, F.col(f"t.{c}"))
-                .when(tombstone, F.lit(None).cast(dtypes[c]))
-                .otherwise(upsert_val)
-                .alias(c)
-            )
-        new_content = (
-            F.when(keep_t | tombstone, F.lit(False))
-            .otherwise(
-                base_dead | (F.col(f"s.content_lsn") > F.col("t.last_lsn"))
-                if "content" in payload_cols
-                else F.lit(False)
-            )
-        )
-        resolved_content = (
-            F.when(
-                base_dead | (F.col("s.content_lsn") > F.col("t.last_lsn")), F.col("s.content")
-            ).otherwise(F.col("t.content"))
-            if "content" in payload_cols
-            else F.lit(None).cast("string")
-        )
-        out.append(
-            F.when(keep_t, F.col("t.content_sha256"))
-            .when(tombstone, F.lit(None).cast("string"))
-            .when(new_content, sha256_builtin(resolved_content))
-            .otherwise(F.col("t.content_sha256"))
-            .alias("content_sha256")
-        )
-        out.append(
-            F.when(keep_t, F.col("t.last_lsn"))
-            .otherwise(F.greatest(F.col("s._max_lsn"), F.coalesce(F.col("t.last_lsn"), F.lit(NEVER))))
-            .alias("last_lsn")
-        )
-        # row_version increment = the batch's distinct-lsn count MINUS
-        # the overlap with what this key already applied: a batch that
-        # MIXES verbatim re-deliveries of old events with new ones slips
-        # past the whole-row `stale` guard (its _max_lsn is newer), and
-        # without the subtraction each re-delivered event would count
-        # twice. Overlap = sampled batch lsns <= t.last_lsn (under the
-        # delivery contract those are exactly the re-deliveries; see
-        # cdc/fold.py LSN_SAMPLE — truncation over-counts conservatively,
-        # values are never affected).
-        overlap = F.when(
-            ~t_absent & F.col("s._lsns").isNotNull(),
-            F.size(F.filter(F.col("s._lsns"), lambda x: x <= F.col("t.last_lsn"))),
-        ).otherwise(F.lit(0))
-        out.append(
-            (
-                F.coalesce(F.col("t.row_version"), F.lit(0))
-                + F.when(keep_t, F.lit(0)).otherwise(F.col("s._applied") - overlap)
-            ).alias("row_version")
-        )
-        out.append(
-            F.when(keep_t, F.col("t._deleted")).otherwise(tombstone).alias("_deleted")
-        )
-        resolved = joined.select(*out).withColumn("_bucket", table.bucket_expr(snap))
-
-        # Skew-aware write layout: expected rows per touched bucket are
-        # KNOWN (parent snapshot file stats + this batch's folded keys),
-        # so hot buckets fan out across write tasks deterministically
-        # (cdc/salting.py) instead of serializing into one giant file.
-        expected_rows = {b: 0 for b in touched}
-        for fe in snap.files:
-            if fe.bucket in expected_rows:
-                expected_rows[fe.bucket] += fe.rows
-        for r in per_bucket:
-            expected_rows[r["_bucket"]] += r["keys"]
-        splits = plan_write_splits(expected_rows, config.target_file_rows)
-        resolved = salted_repartition(resolved, key_cols, splits, bucket_col="_bucket")
-
-        new_files = table.write_data_files(resolved, bucket_col="_bucket")
-        try:
-            committed = table.commit(
-                expected_version=snap.version,
-                new_files=new_files,
-                replaced_buckets=touched,
-                epoch=epoch,
-            )
-        except SnapshotConflictError:
-            # COW bucket rewrites are computed against THIS snapshot's
-            # base files — not commutative with a concurrent commit, so
-            # the whole merge re-runs from a fresh snapshot (apply_epoch
-            # retries); this attempt's rewritten buckets are garbage
-            _remove_files(table, new_files)
-            raise
-    finally:
-        folded.unpersist()
-
-    return MergeStats(
-        epoch_id=epoch[1] if epoch else None,
-        events_in=events_in,
-        keys=n_keys,
-        upserts=n_keys - n_deletes,
-        deletes=n_deletes,
-        touched_buckets=len(touched),
-        wall_ms=(time.time() - t0) * 1000,
-        per_bucket=per_bucket,
-        snapshot_version=committed.version,
-        skipped=False,
-    )
-
-
 def merge_events(
     table: LakeTable,
     events: DataFrame,
@@ -532,14 +241,24 @@ def merge_events(
     changelog_dir: str | None = None,
 ) -> MergeStats:
     """fold + merge in one call (the foreachBatch body, minus idempotence
-    which lives in ``cdc/stream.py``)."""
+    which lives in ``cdc/stream.py``).
+
+    ``changelog_dir``: if set (and an epoch id is given), the epoch's
+    delta files are published as the outbound change feed — the analog
+    of the reference's Redis pub/sub ``movie_updates`` channel
+    (``redis_interface.py:121-123``), consumable batch or streaming
+    (``serving.py``). Unlike the reference (which publishes full merged
+    documents), the feed is a partial-update stream: per-column write
+    lsns + the reset barrier make "unchanged" vs "set to null"
+    distinguishable (``serving.apply_changelog``).
+    """
     from etl_kafka_project_spark.cdc.evolution import align_events
 
-    # header-only for MOR (no file listing needed on the append path);
-    # the one snapshot read is shared with merge_folded below
-    snap = (
-        table.snapshot_header() if config.merge_mode == "mor" else table.snapshot()
-    )
+    t0 = time.time()
+    # header only: the append never reads the parent's file listing (the
+    # write needs version/schema/props; resolution happens at read), so
+    # the per-epoch serial floor skips assembling every bucket manifest
+    snap = table.snapshot_header()
     key_cols = snap.props["key_columns"]
     payload_cols = [
         f.name
@@ -554,7 +273,7 @@ def merge_events(
         lsn_col=config.lsn_column,
         op_col=config.op_column,
         salt=salt,
-    )
-    return merge_folded(
-        table, folded, config, epoch=epoch, changelog_dir=changelog_dir, snap=snap
+    ).withColumn("_bucket", table.bucket_expr(snap))
+    return _merge_mor(
+        table, folded, snap, epoch=epoch, changelog_dir=changelog_dir, t0=t0
     )

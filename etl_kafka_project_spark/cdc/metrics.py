@@ -10,12 +10,10 @@ alongside the checkpoint for crash-resume"):
      dead_letters: {reason: n}, touched_buckets, snapshot_version,
      wall_ms, events_per_sec, skipped,
      max_key_events, lsn_range: [min, max],
-     per_bucket: [{_bucket, keys, deletes, events, min_lsn, max_lsn}, ...]}
+     per_bucket: [{_bucket, keys}, ...]}
 
-(The MOR fast path observes batch-global stats on the write job itself,
-so its per_bucket entries carry {_bucket, keys} — from the commit's file
-manifest — with the global fields at the top level; the COW path still
-records the full per-bucket breakdown.)
+Batch-global stats are observed on the merge's write job itself; the
+per-bucket key counts come from the commit's file manifest.
 
 Writes are atomic (tmp + rename) and keyed by epoch id, so a replayed
 epoch after crash-resume overwrites its own document — lineage stays

@@ -1,10 +1,11 @@
-"""Merge-on-read deltas — the write-optimized path of the MERGE.
+"""Merge-on-read deltas — the storage side of the MERGE.
 
-Copy-on-write (``cdc/merge.py``) rewrites every touched bucket per epoch:
-write amplification is O(live table), which caps sustained events/s on a
-write-heavy CDC stream. The MOR path (the Iceberg merge-on-read /
-Paimon-LSM shape) instead **appends the folded batch as delta files** —
-O(batch) bytes per epoch — and defers conflict resolution:
+Rewriting every touched bucket per epoch (copy-on-write) makes write
+amplification O(live table), which caps sustained events/s on a
+write-heavy CDC stream. The MERGE (``cdc/merge.py``, the Iceberg
+merge-on-read / Paimon-LSM shape) instead **appends the folded batch as
+delta files** — O(batch) bytes per epoch — and defers conflict
+resolution:
 
 * **write** (:func:`delta_rows`): the fold output (one action per key,
   per-column ``(value, lsn)`` cells + reset/delete barriers, see
@@ -19,7 +20,9 @@ O(batch) bytes per epoch — and defers conflict resolution:
   "delta cell lsn vs base last_lsn" is a faithful ordering;
 * **compact** (:func:`compact_deltas`): resolve and rewrite buckets
   whose delta share grew past a threshold — amortized, off the hot
-  path, and what keeps read cost bounded.
+  path, and what keeps read cost bounded. The same rewrite drops
+  tombstones below a drained-through LSN and fans hot buckets out
+  across several base files (``cdc/salting.py``).
 
 The exactly-once story is unchanged: delta files + the epoch id commit
 in the same atomic snapshot.
@@ -34,7 +37,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_kafka_project_spark.cdc.fold import NEVER
-from etl_kafka_project_spark.minilake.table import FileEntry, LakeTable, Snapshot
+from etl_kafka_project_spark.cdc.salting import plan_write_splits, salted_repartition
+from etl_kafka_project_spark.config import EngineConfig
+from etl_kafka_project_spark.minilake.table import (
+    FileEntry,
+    LakeTable,
+    Snapshot,
+    SnapshotConflictError,
+)
 
 #: meta columns of a delta row (fold output + sha)
 DELTA_META = ["_max_lsn", "_last_d_lsn", "_last_reset_lsn", "_is_delete", "_applied", "_lsns"]
@@ -74,9 +84,9 @@ def delta_schema(snap: Snapshot) -> T.StructType:
         # version): lets the resolve detect cross-epoch re-delivery —
         # a delta row whose _max_lsn is not newer than everything an
         # EARLIER commit applied is a verbatim re-delivery and must not
-        # re-count row_version (the MOR analog of the COW staleness
-        # guard). Old delta files null-fill; nulls sort first, i.e.
-        # "oldest", which is the conservative direction.
+        # re-count row_version (a row-level staleness guard). Old delta
+        # files null-fill; nulls sort first, i.e. "oldest", which is the
+        # conservative direction.
         T.StructField("_writer_version", T.LongType(), True),
     ]
     return T.StructType(fields)
@@ -256,7 +266,11 @@ def delta_stats(snap: Snapshot) -> dict:
 
 
 def compact_deltas(
-    table: LakeTable, min_delta_rows: int = 1, delta_share: float = 0.0
+    table: LakeTable,
+    min_delta_rows: int = 1,
+    delta_share: float = 0.0,
+    config: EngineConfig | None = None,
+    purge_tombstones_below_lsn: int | None = None,
 ) -> dict:
     """Fold delta files into base (per-bucket resolve + rewrite).
 
@@ -270,10 +284,26 @@ def compact_deltas(
     when every delta-carrying bucket compacted unconditionally).
     ``delta_share=0`` compacts every delta-carrying bucket (full
     compaction — maintenance / end-of-replay). No-op when the table
-    carries fewer delta rows than ``min_delta_rows``."""
+    carries fewer delta rows than ``min_delta_rows`` and no purge is
+    asked for.
+
+    ``purge_tombstones_below_lsn``: tombstone rows with
+    ``last_lsn <= watermark`` are dropped for good (SURVEY §2.7 U3) —
+    pass the stream's drained-through LSN (e.g. ``max_lsn`` from the
+    lineage log minus the re-delivery horizon); once the stream is past
+    it, no stale pre-delete event can arrive for the marker to guard
+    against. Every bucket holding such a tombstone is rewritten, found
+    with one column-pruned scan. ``None`` purges nothing.
+
+    Skew-aware layout: each rewritten bucket gets
+    ``ceil(rows / config.target_file_rows)`` write splits from the
+    manifest row counts (``cdc/salting.py``), so a hot bucket fans out
+    across several base files instead of one giant one."""
+    config = config or EngineConfig()
     snap = table.snapshot()
     stats = delta_stats(snap)
-    if stats["delta_rows"] < min_delta_rows:
+    purge = purge_tombstones_below_lsn
+    if stats["delta_rows"] < min_delta_rows and purge is None:
         return {**stats, "compacted": False}
     t0 = time.time()
     base_rows: dict[int, int] = {}
@@ -286,18 +316,38 @@ def compact_deltas(
         for b, d in drow.items()
         if d / (base_rows.get(b, 0) + d) >= delta_share
     }
-    if not touched:
-        return {**stats, "compacted": False, "skipped_buckets": len(drow)}
-    # Pin the read to the snapshot the stats came from: the resolve's
+    # Pin every read to the snapshot the stats came from: the resolve's
     # input set must be EXACTLY the files the commit below removes, or a
     # commit racing in between makes them diverge.
-    resolved = table.read(
-        version=snap.version, buckets=touched, include_tombstones=True
-    ).withColumn("_bucket", table.bucket_expr(snap))
-    resolved = resolved.repartition(max(1, len(touched) // 2), F.col("_bucket"))
+    n_tombs = 0
+    if purge is not None:
+        dead = F.col("_deleted") & (F.col("last_lsn") <= purge)
+        tombs = (
+            table.read(version=snap.version, include_tombstones=True)
+            .filter(dead)
+            .groupBy(table.bucket_expr(snap).alias("_bucket"))
+            .count()
+            .collect()
+        )
+        touched |= {r["_bucket"] for r in tombs}
+        n_tombs = sum(r["count"] for r in tombs)
+    if not touched:
+        return {**stats, "compacted": False, "skipped_buckets": len(drow)}
+    resolved = table.read(version=snap.version, buckets=touched, include_tombstones=True)
+    if purge is not None:
+        resolved = resolved.filter(~dead)
+    resolved = resolved.withColumn("_bucket", table.bucket_expr(snap))
+    splits = plan_write_splits(
+        {b: base_rows.get(b, 0) + drow.get(b, 0) for b in touched},
+        config.target_file_rows,
+    )
+    if max(splits.values()) > 1:
+        resolved = salted_repartition(resolved, snap.props["key_columns"], splits)
+    else:
+        resolved = resolved.repartition(max(1, len(touched) // 2), F.col("_bucket"))
     new_files = table.write_data_files(resolved, bucket_col="_bucket", kind="base")
-    # Commit by EXACT removed-file set, not replaced_buckets: removal of
-    # the resolved inputs commutes with a concurrent epoch appending new
+    # Commit by EXACT removed-file set, not by bucket: removal of the
+    # resolved inputs commutes with a concurrent epoch appending new
     # delta files to the same buckets (the retry keeps them — they are
     # strictly newer by _writer_version, so resolving them against the
     # compacted base is order-faithful), whereas bucket replacement
@@ -305,9 +355,7 @@ def compact_deltas(
     # therefore safe UNLESS some input file is already gone — then a
     # concurrent compactor folded the same inputs, and committing our
     # rewrite would duplicate every row of it: abort and discard.
-    import os as _os
-
-    from etl_kafka_project_spark.minilake.table import SnapshotConflictError
+    from etl_kafka_project_spark.cdc.merge import _remove_files
 
     removed = {f.path for f in snap.files if f.bucket in touched}
     expected = snap.version
@@ -320,11 +368,7 @@ def compact_deltas(
         except SnapshotConflictError:
             cur = table.snapshot()
             if not removed <= {f.path for f in cur.files}:
-                for fe in new_files:  # orphaned rewrite — clean up
-                    try:
-                        _os.remove(_os.path.join(table.root, fe.path))
-                    except OSError:
-                        pass
+                _remove_files(table, new_files)  # orphaned rewrite
                 return {**stats, "compacted": False, "lost_race": True}
             expected = cur.version
     else:
@@ -333,7 +377,8 @@ def compact_deltas(
         **stats,
         "compacted": True,
         "buckets": len(touched),
-        "cold_buckets_skipped": len(drow) - len(touched),
+        "cold_buckets_skipped": len(drow.keys() - touched),
+        "tombstones_purged": n_tombs,
         "snapshot_version": committed.version,
         "wall_ms": round((time.time() - t0) * 1000, 1),
     }

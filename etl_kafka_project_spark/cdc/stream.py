@@ -197,10 +197,8 @@ class ReplayJob:
         if not hasattr(self, "_lsn_ranges"):
             ranges = []
             for doc in LineageLog(self.lineage_dir, self.stream_id).read_all():
-                # lsn_span = the batch's full valid span; lsn_range (the
-                # merge's min-of-per-key-maxima) is the conservative
-                # fallback for docs written by older engine builds
-                r = doc.get("lsn_span") or doc.get("lsn_range")
+                # lsn_span = the batch's full valid span
+                r = doc.get("lsn_span")
                 if r:
                     ranges.append([int(r[0]), int(r[1])])
             self._lsn_ranges: list[list[int]] = _coalesce_ranges(ranges)
@@ -208,6 +206,33 @@ class ReplayJob:
 
     def _note_applied_range(self, lo: int, hi: int) -> None:
         self._lsn_ranges = _coalesce_ranges(self._applied_lsn_ranges() + [[lo, hi]])
+
+    def _skip_committed(
+        self, table: LakeTable, lineage: LineageLog, epoch_id: int
+    ) -> tuple[MergeStats, list[int] | None]:
+        """Exactly-once skip of an epoch the table already committed — a
+        crash-resume retry, or a concurrent retry of this stream that won
+        the CAS with our epoch id. Returns the skipped stats, carrying the
+        original commit's ``lsn_range``, and that commit's ``lsn_span``
+        (None if it left no lineage doc), which also goes back into the
+        order guard's applied intervals: the caller overwrites the
+        original lineage doc, and a doc without the span would make a
+        restarted job trip a spurious violation on the next verbatim
+        re-delivery."""
+        stats = MergeStats(
+            epoch_id=epoch_id, events_in=0, keys=0, upserts=0, deletes=0,
+            touched_buckets=0, wall_ms=0.0, per_bucket=[], skipped=True,
+            snapshot_version=table.current_version(),
+        )
+        prev = lineage.read_epoch(epoch_id) or {}
+        if prev.get("lsn_range"):
+            stats.lsn_range = [int(x) for x in prev["lsn_range"]]
+        span = prev.get("lsn_span")
+        if span:
+            span = [int(span[0]), int(span[1])]
+            if self.config.order_guard != "off":
+                self._note_applied_range(*span)
+        return stats, span
 
     # ---------- incompatible-type dead letters ----------
 
@@ -286,23 +311,8 @@ class ReplayJob:
                 bad = self._incompatible_columns(table, batch_df.schema)
                 self._quarantined(batch_df, bad).write.mode("overwrite").parquet(dead_path)
                 dead_counts = _dead_letter_counts(dead_path)
-            stats = MergeStats(
-                epoch_id=epoch_id, events_in=0, keys=0, upserts=0, deletes=0,
-                touched_buckets=0, wall_ms=0.0, per_bucket=[], skipped=True,
-                snapshot_version=table.current_version(),
-            )
-            # keep the original commit's lsn_range in the overwritten
-            # lineage doc (and in the order guard's interval set) — the
-            # skip must not erase the evidence that the range was applied
-            prev = lineage.read_epoch(epoch_id) or {}
-            extra = {}
-            if prev.get("lsn_range"):
-                stats.lsn_range = [int(x) for x in prev["lsn_range"]]
-            span = prev.get("lsn_span") or prev.get("lsn_range")
-            if span:
-                extra["lsn_span"] = [int(x) for x in span]
-                if self.config.order_guard != "off":
-                    self._note_applied_range(*extra["lsn_span"])
+            stats, span = self._skip_committed(table, lineage, epoch_id)
+            extra = {"lsn_span": span} if span else {}
             lineage.record(stats, dead_letters=dead_counts, skipped=True, extra=extra)
             self.applied.append(stats)
             return stats
@@ -312,196 +322,151 @@ class ReplayJob:
         phases: dict[str, float] = {}
         t = _time.time()
 
-        # Batch consumers: the merge job (the fused fold scans the
-        # batch exactly once, cdc/fold.py) plus — rarely — the
-        # dead-letter quarantine write. config.batch_cache picks
-        # between re-scanning the source per consumer (default "none" —
-        # parallel work that scales; measured 4x faster than caching
-        # for content-heavy batches) and caching the batch once
-        # (see config.py).
-        from pyspark import StorageLevel
+        # Envelope validation rides the MERGE job itself: an
+        # Observation counts invalid events during the merge's own
+        # batch scan, and the quarantine write job — a SECOND full
+        # pass over the (content-heavy) batch — runs only when that
+        # count is non-zero. Dead letters are the rare path; the
+        # common all-valid epoch pays exactly ONE pass over the
+        # batch, which both halves per-epoch memory-bus traffic
+        # (the content-heavy scaling ceiling, BENCH/BASELINE.md)
+        # and sheds a job from the per-trigger serial floor.
+        from pyspark.sql import Observation
 
-        # NB pyspark naming: MEMORY_AND_DISK is the SERIALIZED level;
-        # MEMORY_AND_DISK_DESER is the JVM default deserialized one
-        cache_level = {
-            "deser": StorageLevel.MEMORY_AND_DISK_DESER,
-            "ser": StorageLevel.MEMORY_AND_DISK,
-            "none": None,
-        }[self.config.batch_cache]
-        if cache_level is not None:
-            batch_df.persist(cache_level)
-        try:
-            # Envelope validation rides the MERGE job itself: an
-            # Observation counts invalid events during the merge's own
-            # batch scan, and the quarantine write job — a SECOND full
-            # pass over the (content-heavy) batch — runs only when that
-            # count is non-zero. Dead letters are the rare path; the
-            # common all-valid epoch pays exactly ONE pass over the
-            # batch, which both halves per-epoch memory-bus traffic
-            # (the content-heavy scaling ceiling, BENCH/BASELINE.md)
-            # and sheds a job from the per-trigger serial floor.
-            from pyspark.sql import Observation
+        from etl_kafka_project_spark.cdc.envelope import dead_letter_reason
 
-            from etl_kafka_project_spark.cdc.envelope import dead_letter_reason
+        from etl_kafka_project_spark.functions.exprcache import cached_exprs
 
-            from etl_kafka_project_spark.functions.exprcache import cached_exprs
+        dead_obs = Observation()
+        # the same single-pass observation also captures the batch's
+        # PRE-dedup-filter valid-event lsn span for the delivery-order
+        # guard — min/max over valid rows only (a dead letter's bogus
+        # lsn must not trip the guard), at zero extra jobs
+        _lsn = self.config.lsn_column
+        obs_exprs = cached_exprs(
+            ("epoch_obs_metrics", _lsn),
+            lambda: [
+                F.sum(
+                    dead_letter_reason().isNotNull().cast("long")
+                ).alias("n_dead"),
+                F.min(
+                    F.when(dead_letter_reason().isNull(), F.col(_lsn))
+                ).alias("lsn_min"),
+                F.max(
+                    F.when(dead_letter_reason().isNull(), F.col(_lsn))
+                ).alias("lsn_max"),
+            ],
+        )
+        batch = batch_df.observe(dead_obs, *obs_exprs)
+        valid, _ = split_dead_letters(batch)
 
-            dead_obs = Observation()
-            # the same single-pass observation also captures the batch's
-            # PRE-dedup-filter valid-event lsn span for the delivery-order
-            # guard — min/max over valid rows only (a dead letter's bogus
-            # lsn must not trip the guard), at zero extra jobs
-            _lsn = self.config.lsn_column
-            obs_exprs = cached_exprs(
-                ("epoch_obs_metrics", _lsn),
-                lambda: [
-                    F.sum(
-                        dead_letter_reason().isNotNull().cast("long")
-                    ).alias("n_dead"),
-                    F.min(
-                        F.when(dead_letter_reason().isNull(), F.col(_lsn))
-                    ).alias("lsn_min"),
-                    F.max(
-                        F.when(dead_letter_reason().isNull(), F.col(_lsn))
-                    ).alias("lsn_max"),
-                ],
-            )
-            batch = batch_df.observe(dead_obs, *obs_exprs)
-            valid, _ = split_dead_letters(batch)
+        # incompatible-typed columns (rare; driver-side schema diff,
+        # cached per batch schema): rows carrying a non-null value
+        # there dead-letter — the merge must never silently coerce
+        # them — and the column drops from the merge input so
+        # align_events null-fills it like any absent column
+        bad_cols = self._incompatible_columns(table, valid.schema)
+        if bad_cols:
+            valid = valid.filter(~self._incompat_predicate(bad_cols)).drop(*bad_cols)
 
-            # incompatible-typed columns (rare; driver-side schema diff,
-            # cached per batch schema): rows carrying a non-null value
-            # there dead-letter — the merge must never silently coerce
-            # them — and the column drops from the merge input so
-            # align_events null-fills it like any absent column
-            bad_cols = self._incompatible_columns(table, valid.schema)
-            if bad_cols:
-                valid = valid.filter(~self._incompat_predicate(bad_cols)).drop(*bad_cols)
+        # watermarked cross-epoch dedup, "committed" scope: every
+        # event at or below this stream's committed high-water mark
+        # is a verbatim re-delivery (delivery contract; foreachBatch
+        # commits serially) — drop pre-merge with a literal
+        # predicate instead of a state-store shuffle. Valid events
+        # always carry a non-null lsn (envelope P2), so the
+        # null-unsafe comparison never drops a fresh event.
+        if self.watermark and self.watermark_scope == "committed":
+            hwm = self._committed_hwm()
+            if hwm is not None:
+                valid = valid.filter(
+                    F.col(self.config.lsn_column) > F.lit(int(hwm))
+                )
 
-            # watermarked cross-epoch dedup, "committed" scope: every
-            # event at or below this stream's committed high-water mark
-            # is a verbatim re-delivery (delivery contract; foreachBatch
-            # commits serially) — drop pre-merge with a literal
-            # predicate instead of a state-store shuffle. Valid events
-            # always carry a non-null lsn (envelope P2), so the
-            # null-unsafe comparison never drops a fresh event.
-            if self.watermark and self.watermark_scope == "committed":
-                hwm = self._committed_hwm()
-                if hwm is not None:
-                    valid = valid.filter(
-                        F.col(self.config.lsn_column) > F.lit(int(hwm))
-                    )
+        # Optimistic-concurrency retry: two live streams replaying
+        # into ONE table interleave snapshot commits; the loser's
+        # CAS raises SnapshotConflictError. A retry must RE-MERGE
+        # from the fresh snapshot — not just re-commit — because
+        # delta rows are stamped with the parent version as the
+        # commit-order authority (the failed attempt's files were
+        # already dropped at the commit site, cdc/merge.py). Each
+        # iteration also re-runs evolve_table (idempotent) in case
+        # the concurrent winner was a schema evolution.
+        from etl_kafka_project_spark.minilake.table import SnapshotConflictError
 
-            # Optimistic-concurrency retry: two live streams replaying
-            # into ONE table interleave snapshot commits; the loser's
-            # CAS raises SnapshotConflictError. A retry must RE-MERGE
-            # from the fresh snapshot — not just re-commit — because
-            # MOR delta rows are stamped with the parent version as the
-            # commit-order authority and COW rewrites buckets from its
-            # snapshot's base files (the failed attempt's files were
-            # already dropped at the commit site, cdc/merge.py). Each
-            # iteration also re-runs evolve_table (idempotent) in case
-            # the concurrent winner was a schema evolution.
-            from etl_kafka_project_spark.minilake.table import SnapshotConflictError
+        # Schema-coverage cache (per-trigger serial-floor item,
+        # round-5 verdict #5): the evolve diff costs ~80 ms of
+        # driver time per epoch, and in steady state every epoch
+        # carries the SAME batch schema. Coverage is MONOTONE —
+        # table schemas only ever widen (add/widen, never
+        # narrow/drop), including under concurrent streams — so once
+        # a batch schema has been diffed (and any ALTER committed),
+        # that exact schema is covered forever and the diff can be
+        # skipped. A schema change (the rare event) misses the cache
+        # and pays the full evolve path.
+        batch_schema_fp = valid.schema.json()
+        if not hasattr(self, "_covered_schemas"):
+            self._covered_schemas: set[str] = set()
 
-            # Schema-coverage cache (per-trigger serial-floor item,
-            # round-5 verdict #5): the evolve diff costs ~80 ms of
-            # driver time per epoch, and in steady state every epoch
-            # carries the SAME batch schema. Coverage is MONOTONE —
-            # table schemas only ever widen (add/widen, never
-            # narrow/drop), including under concurrent streams — so once
-            # a batch schema has been diffed (and any ALTER committed),
-            # that exact schema is covered forever and the diff can be
-            # skipped. A schema change (the rare event) misses the cache
-            # and pays the full evolve path.
-            batch_schema_fp = valid.schema.json()
-            if not hasattr(self, "_covered_schemas"):
-                self._covered_schemas: set[str] = set()
+        # set only by the conflict-skip branch: the winner's span,
+        # carried into the overwritten lineage doc below
+        lsn_span_carried: list[int] | None = None
 
-            # set only by the conflict-skip branch: the winner's span,
-            # carried into the overwritten lineage doc below
-            lsn_span_carried: list[int] | None = None
-
-            for attempt in range(EPOCH_COMMIT_RETRIES + 1):
-                try:
-                    # additive/widening schema evolution BEFORE the
-                    # merge; its commit is idempotent (re-diff after
-                    # crash is empty), so it can sit outside the
-                    # epoch-stamped data commit safely
-                    if batch_schema_fp not in self._covered_schemas:
-                        evolve_table(table, valid.schema)
-                        self._covered_schemas.add(batch_schema_fp)
-                    if attempt == 0:
-                        phases["evolve_s"] = round(_time.time() - t, 2)
-                        t = _time.time()
-                    stats = merge_events(
-                        table,
-                        valid,
-                        self.config,
-                        epoch=(self.stream_id, epoch_id),
-                        salt=self.salt,
-                        changelog_dir=self.changelog_dir if self.emit_changelog else None,
+        for attempt in range(EPOCH_COMMIT_RETRIES + 1):
+            try:
+                # additive/widening schema evolution BEFORE the
+                # merge; its commit is idempotent (re-diff after
+                # crash is empty), so it can sit outside the
+                # epoch-stamped data commit safely
+                if batch_schema_fp not in self._covered_schemas:
+                    evolve_table(table, valid.schema)
+                    self._covered_schemas.add(batch_schema_fp)
+                if attempt == 0:
+                    phases["evolve_s"] = round(_time.time() - t, 2)
+                    t = _time.time()
+                stats = merge_events(
+                    table,
+                    valid,
+                    self.config,
+                    epoch=(self.stream_id, epoch_id),
+                    salt=self.salt,
+                    changelog_dir=self.changelog_dir if self.emit_changelog else None,
+                )
+                break
+            except SnapshotConflictError:
+                phases["commit_conflicts"] = attempt + 1
+                if table.snapshot().has_epoch(self.stream_id, epoch_id):
+                    # a concurrent retry of THIS stream won with our
+                    # epoch id — exactly-once skip, same as the
+                    # crash-resume path above
+                    stats, lsn_span_carried = self._skip_committed(
+                        table, lineage, epoch_id
                     )
                     break
-                except SnapshotConflictError:
-                    phases["commit_conflicts"] = attempt + 1
-                    if table.snapshot().has_epoch(self.stream_id, epoch_id):
-                        # a concurrent retry of THIS stream won with our
-                        # epoch id — exactly-once skip, same as the
-                        # crash-resume path above, INCLUDING the
-                        # lsn_range/lsn_span carry-over: overwriting the
-                        # winner's lineage doc without its span would
-                        # erase the order guard's applied-interval
-                        # evidence and trip a spurious violation on the
-                        # next verbatim re-delivery after a restart
-                        stats = MergeStats(
-                            epoch_id=epoch_id, events_in=0, keys=0, upserts=0,
-                            deletes=0, touched_buckets=0, wall_ms=0.0,
-                            per_bucket=[], skipped=True,
-                            snapshot_version=table.current_version(),
-                        )
-                        prev = lineage.read_epoch(epoch_id) or {}
-                        if prev.get("lsn_range"):
-                            stats.lsn_range = [int(x) for x in prev["lsn_range"]]
-                        span = prev.get("lsn_span") or prev.get("lsn_range")
-                        if span:
-                            lsn_span_carried = [int(span[0]), int(span[1])]
-                            if self.config.order_guard != "off":
-                                self._note_applied_range(*lsn_span_carried)
-                        break
-            else:
-                raise SnapshotConflictError(
-                    f"epoch {epoch_id} of stream {self.stream_id} lost the"
-                    f" snapshot CAS {EPOCH_COMMIT_RETRIES + 1} times in a row"
-                )
-            phases["merge_s"] = round(_time.time() - t, 2)
-            t = _time.time()
+        else:
+            raise SnapshotConflictError(
+                f"epoch {epoch_id} of stream {self.stream_id} lost the"
+                f" snapshot CAS {EPOCH_COMMIT_RETRIES + 1} times in a row"
+            )
+        phases["merge_s"] = round(_time.time() - t, 2)
+        t = _time.time()
 
-            # quarantine dead letters (idempotent overwrite per epoch);
-            # per-reason counts come from the written files' metadata —
-            # no dedicated counting job. The merge job above always runs
-            # (even for an empty batch), so the observation never blocks.
-            if int(dead_obs.get["n_dead"] or 0) > 0 or bad_cols:
-                self._quarantined(batch_df, bad_cols).write.mode("overwrite").parquet(
-                    dead_path
-                )
-                dead_counts = _dead_letter_counts(dead_path)
-            else:
-                # zero-dead marker: lets the crash-resume skip path tell
-                # "nothing to quarantine" from "crashed before writing"
-                os.makedirs(dead_path, exist_ok=True)
-                dead_counts = {}
-            phases["dead_letters_s"] = round(_time.time() - t, 2)
-            t = _time.time()
-        finally:
-            if cache_level is not None:
-                batch_df.unpersist()
-        # applied-event count falls out of the merge's own stats (distinct
-        # lsns folded, observed on the merge job) — no extra count() pass.
-        # The COW path still carries them per bucket; the MOR fast path
-        # sets events_in directly.
-        if stats.per_bucket and "events" in stats.per_bucket[0]:
-            stats.events_in = sum(r["events"] for r in stats.per_bucket)
+        # quarantine dead letters (idempotent overwrite per epoch);
+        # per-reason counts come from the written files' metadata —
+        # no dedicated counting job. The merge job above always runs
+        # (even for an empty batch), so the observation never blocks.
+        if int(dead_obs.get["n_dead"] or 0) > 0 or bad_cols:
+            self._quarantined(batch_df, bad_cols).write.mode("overwrite").parquet(
+                dead_path
+            )
+            dead_counts = _dead_letter_counts(dead_path)
+        else:
+            # zero-dead marker: lets the crash-resume skip path tell
+            # "nothing to quarantine" from "crashed before writing"
+            os.makedirs(dead_path, exist_ok=True)
+            dead_counts = {}
+        phases["dead_letters_s"] = round(_time.time() - t, 2)
+        t = _time.time()
 
         # Delivery-order guard: the observation above saw the batch's
         # valid-lsn span BEFORE the committed-hwm dedup filter, so an
@@ -535,18 +500,16 @@ class ReplayJob:
         if self.watermark and self.watermark_scope == "committed" and stats.lsn_range:
             self._advance_hwm(stats.lsn_range[1])
 
-        # MOR housekeeping: fold deltas into base every N applied epochs
-        # (idempotent; a crash before/after just defers it). Also bounds
+        # Housekeeping: fold deltas into base every N applied epochs
+        # (idempotent; a crash before/after just defers it). Bounds
         # read-time resolve cost between compactions.
-        if (
-            self.config.merge_mode == "mor"
-            and (len([s for s in self.applied if not s.skipped]) + 1)
-            % self.config.compact_every_epochs
-            == 0
-        ):
+        n_applied = len([s for s in self.applied if not s.skipped]) + 1
+        if n_applied % self.config.compact_every_epochs == 0:
             from etl_kafka_project_spark.cdc.mor import compact_deltas
 
-            c = compact_deltas(table, delta_share=self.config.compact_delta_share)
+            c = compact_deltas(
+                table, delta_share=self.config.compact_delta_share, config=self.config
+            )
             phases["compact_s"] = round(_time.time() - t, 2)
             t = _time.time()
             phases["compact_buckets"] = c.get("buckets", 0)
@@ -558,7 +521,6 @@ class ReplayJob:
         # JSONs past the retention window plus data/manifest files no
         # retained snapshot references. The vacuum's orphan age-gate
         # makes it safe while concurrent streams stage commits.
-        n_applied = len([s for s in self.applied if not s.skipped]) + 1
         if (
             self.config.expire_snapshots_every_epochs
             and n_applied % self.config.expire_snapshots_every_epochs == 0
@@ -571,21 +533,16 @@ class ReplayJob:
             phases["expire_data_files_removed"] = e.get("data_files_removed", 0)
 
         # Adaptive hot-key salting (AQE-style, reactive): the merge's
-        # per-bucket stats carry the hottest key's folded event count for
-        # free; once it crosses config.hot_key_threshold, subsequent
-        # epochs fold via the two-phase salted aggregation. The epoch
-        # that DETECTED the skew already folded correctly (the plain
-        # fold is skew-tolerant via map-side partials) — salting only
-        # buys the pathological single-dominant-key + wide-payload case.
-        hot = max(
-            stats.max_key_events,
-            max((r.get("max_key_events") or 0 for r in stats.per_bucket), default=0),
-        )
-        if self.salt is None and hot >= self.config.hot_key_threshold:
+        # stats carry the hottest key's folded event count for free; once
+        # it crosses config.hot_key_threshold, subsequent epochs fold via
+        # the two-phase salted aggregation. The epoch that DETECTED the
+        # skew already folded correctly (the plain fold is skew-tolerant
+        # via map-side partials) — salting only buys the pathological
+        # single-dominant-key + wide-payload case.
+        if self.salt is None and stats.max_key_events >= self.config.hot_key_threshold:
             self.salt = self.config.salt_buckets
             phases["salted_from_next_epoch"] = self.salt
 
-        stats.per_bucket = list(stats.per_bucket)  # lineage doc carries phases too
         extra: dict = {"phases": phases}
         if lsn_span is not None:
             # the batch's FULL valid-lsn span (pre-dedup-filter, all

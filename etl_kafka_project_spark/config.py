@@ -24,8 +24,8 @@ class EngineConfig:
     the 32-core sandbox the default 32 keeps one bucket per core.
 
     ``hot_key_threshold`` is the per-batch event count above which a key
-    is treated as skewed: when a ``ReplayJob`` epoch's per-bucket stats
-    (collected for free with the lineage metrics) show a key at or above
+    is treated as skewed: when a ``ReplayJob`` epoch's merge stats
+    (observed for free on the merge's write job) show a key at or above
     it, subsequent epochs fold via the two-phase salted aggregation
     (``cdc/fold.py``; reactive AQE-style detection — see
     ``cdc/stream.py``). Callers can still force salting up front with
@@ -39,24 +39,12 @@ class EngineConfig:
     n_buckets: int = 32
     hot_key_threshold: int = 100_000
     salt_buckets: int = 16
-    tombstone_retention_epochs: int = 10
+    #: compaction splits a bucket's rewrite into ceil(rows / this) files
+    #: (skew-aware write fan-out, ``cdc/salting.py``)
     target_file_rows: int = 2_000_000
-    #: "mor" (default): epochs append folded delta files, resolved at
-    #: read, compacted every ``compact_every_epochs`` — O(batch) write
-    #: amplification. "cow": every epoch rewrites its touched buckets —
-    #: O(live bucket data) writes, zero read-time resolve.
-    merge_mode: str = "mor"
+    #: epochs append folded delta files, resolved at read and compacted
+    #: every ``compact_every_epochs`` applied epochs
     compact_every_epochs: int = 8
-    #: micro-batch materialization strategy for the epoch's three batch
-    #: consumers (dead-letter quarantine, wide fold, narrow lsn count).
-    #: "none" (default) re-scans the source per consumer: compressed
-    #: columnar scans off fast storage are parallel work that SCALES,
-    #: and measured 4x faster than caching for content-heavy batches
-    #: (local[16], 1.6M x 2.2KB epochs: 45s vs 186s — materializing raw
-    #: rows costs more than parquet re-decode). "ser"/"deser" cache the
-    #: batch (serialized / deserialized) — worth trying only when the
-    #: source is slow or remote relative to executor memory bandwidth.
-    batch_cache: str = "none"
     #: per-bucket compaction threshold: a bucket compacts only when
     #: delta_rows / (base_rows + delta_rows) >= this share (0 = always
     #: compact every delta-carrying bucket). Keeps the epoch-cadence
@@ -96,14 +84,10 @@ class EngineConfig:
     extra: dict = field(default_factory=dict)
 
     def validate(self) -> "EngineConfig":
-        if self.merge_mode not in ("cow", "mor"):
-            raise ConfigError(f"merge_mode must be cow|mor, got {self.merge_mode!r}")
         if self.compact_every_epochs < 1:
             raise ConfigError("compact_every_epochs must be >= 1")
         if not (0.0 <= self.compact_delta_share < 1.0):
             raise ConfigError("compact_delta_share must be in [0, 1)")
-        if self.batch_cache not in ("deser", "ser", "none"):
-            raise ConfigError("batch_cache must be deser|ser|none")
         if self.expire_snapshots_every_epochs is not None and (
             self.expire_snapshots_every_epochs < 1
         ):

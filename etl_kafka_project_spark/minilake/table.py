@@ -12,12 +12,14 @@ the sandbox — verified). What it reproduces from the Iceberg model:
   manifest-list shape, and what keeps the driver-side commit off the
   critical path at millions of files. The current version is an
   atomically-renamed ``VERSION`` pointer (POSIX ``rename``),
-* **copy-on-write**: a commit replaces a subset of files (the touched
-  hash-buckets) and carries the rest forward untouched,
+* **append + exact-file removal**: a commit appends files (merge-on-read
+  deltas, ``cdc/mor.py``) and/or removes an exact file set (compaction),
+  carrying every other file forward untouched,
 * **hash-bucket partitioning**: data files live under
   ``data/b{bucket:05d}/``, bucket = ``pmod(murmur3(key...), n_buckets)``
-  (the ``bucket(N, col)`` partition transform) — a MERGE only reads and
-  rewrites the buckets its batch touches (manual partition pruning),
+  (the ``bucket(N, col)`` partition transform) — a MERGE writes and
+  compaction rewrites only the buckets a batch touches, and reads prune
+  to the buckets they need (manual partition pruning),
 * **schema evolution**: the snapshot owns the schema; old files are read
   with the evolved schema (Spark 4's parquet reader null-fills added
   columns and widens int→long / float→double natively — verified),
@@ -107,25 +109,11 @@ class Snapshot:
     #: into every snapshot would make the driver-side commit itself the
     #: bottleneck; with manifests a steady-state CDC epoch writes one
     #: snapshot JSON of n_buckets lines plus manifests for the buckets
-    #: its batch touched. Empty for legacy inline-files snapshots.
+    #: its batch touched.
     manifests: dict[int, dict] = field(default_factory=dict)
 
     def has_epoch(self, stream_id: str, epoch_id: int) -> bool:
         return epoch_id in self.committed_epochs.get(stream_id, ())
-
-    def to_json(self) -> dict:
-        """Legacy inline-files serialization (kept for tests/tools that
-        round-trip snapshots without a table root; ``LakeTable`` commits
-        write the manifest form instead)."""
-        return {
-            "version": self.version,
-            "parent": self.parent,
-            "ts": self.ts,
-            "schema": json.loads(self.schema.json()),
-            "files": [f.to_json() for f in self.files],
-            "committed_epochs": self.committed_epochs,
-            "props": self.props,
-        }
 
     def to_json_manifests(self) -> dict:
         """Manifest-list serialization: files live in per-bucket manifest
@@ -142,9 +130,7 @@ class Snapshot:
         }
 
     @staticmethod
-    def from_json(d: dict, files: tuple[FileEntry, ...] | None = None) -> "Snapshot":
-        if files is None:
-            files = tuple(FileEntry.from_json(f) for f in d.get("files", ()))
+    def from_json(d: dict, files: tuple[FileEntry, ...]) -> "Snapshot":
         return Snapshot(
             version=d["version"],
             parent=d["parent"],
@@ -153,7 +139,7 @@ class Snapshot:
             committed_epochs={k: list(v) for k, v in d["committed_epochs"].items()},
             props=d.get("props", {}),
             ts=d.get("ts", 0.0),
-            manifests={int(b): m for b, m in d.get("manifests", {}).items()},
+            manifests={int(b): m for b, m in d["manifests"].items()},
         )
 
 
@@ -330,14 +316,12 @@ class LakeTable:
             version = self.current_version()
         with open(self._snapshot_path(version)) as f:
             d = json.load(f)
-        if "manifests" in d:
-            files: list[FileEntry] = []
-            for b in sorted(int(k) for k in d["manifests"]):
-                if buckets is not None and b not in buckets:
-                    continue
-                files.extend(self._load_manifest(d["manifests"][str(b)]["path"]))
-            return Snapshot.from_json(d, files=tuple(files))
-        return Snapshot.from_json(d)
+        files: list[FileEntry] = []
+        for b in sorted(int(k) for k in d["manifests"]):
+            if buckets is not None and b not in buckets:
+                continue
+            files.extend(self._load_manifest(d["manifests"][str(b)]["path"]))
+        return Snapshot.from_json(d, files=tuple(files))
 
     def snapshot_header(self, version: int | None = None) -> Snapshot:
         """Snapshot metadata (version/schema/epochs/props) WITHOUT
@@ -500,7 +484,6 @@ class LakeTable:
         self,
         expected_version: int,
         new_files: list[FileEntry] = (),
-        replaced_buckets: set[int] | None = None,
         removed_files: set[str] | None = None,
         schema: T.StructType | None = None,
         epoch: tuple[str, int] | None = None,
@@ -509,8 +492,7 @@ class LakeTable:
         """Atomically commit a new snapshot.
 
         * carries forward all parent files except those in
-          ``replaced_buckets`` (copy-on-write MERGE) or ``removed_files``
-          (compaction),
+          ``removed_files`` (compaction),
         * appends ``new_files``,
         * optionally evolves the schema and records a committed stream
           epoch — all in the SAME atomic rename, which is what makes the
@@ -526,10 +508,7 @@ class LakeTable:
             )
         parent = self.snapshot(current)
         kept = [
-            f
-            for f in parent.files
-            if (replaced_buckets is None or f.bucket not in replaced_buckets)
-            and (removed_files is None or f.path not in removed_files)
+            f for f in parent.files if removed_files is None or f.path not in removed_files
         ]
         epochs = {k: list(v) for k, v in parent.committed_epochs.items()}
         if epoch is not None:
@@ -544,15 +523,13 @@ class LakeTable:
         # Incremental manifest maintenance: only buckets whose file set
         # changed get a new manifest file; every other bucket reuses the
         # parent's (immutable) manifest by reference. A schema-evolution
-        # or epoch-only commit rewrites NO manifest at all. Legacy
-        # inline-files parents (manifests == {}) upgrade wholesale on
-        # their first commit. Manifests are written BEFORE the snapshot
-        # CAS — a lost race or crash leaves unreferenced uuid files,
-        # which is harmless garbage (expire_snapshots vacuums them).
-        changed: set[int] = set(replaced_buckets or ())
+        # or epoch-only commit rewrites NO manifest at all. Manifests
+        # are written BEFORE the snapshot CAS — a lost race or crash
+        # leaves unreferenced uuid files, which is harmless garbage
+        # (expire_snapshots vacuums them).
+        changed = {f.bucket for f in new_files}
         if removed_files:
             changed |= {f.bucket for f in parent.files if f.path in removed_files}
-        changed |= {f.bucket for f in new_files}
         by_bucket: dict[int, list[FileEntry]] = {}
         for f in kept:
             by_bucket.setdefault(f.bucket, []).append(f)
@@ -560,10 +537,10 @@ class LakeTable:
             by_bucket.setdefault(f.bucket, []).append(f)
         manifests: dict[int, dict] = {}
         for b, fl in by_bucket.items():
-            if b not in changed and b in parent.manifests:
-                manifests[b] = parent.manifests[b]
-            else:
+            if b in changed:
                 manifests[b] = self._write_manifest(b, fl)
+            else:
+                manifests[b] = parent.manifests[b]
 
         snap = Snapshot(
             version=new_version,

@@ -146,12 +146,9 @@ GROUP BY centroid_id, t.range
 
 #: bottom-k size for the KMV distinct-count sketch.  64 keeps the
 #: fixture's estimate path exercised (each return-flag group has ~2,000
-#: distinct partkeys at sf0.01) while the relative error stays within
-#: the sketch's 1/sqrt(K-1) ≈ 12.6% bound.
+#: distinct partkeys at sf0.01) at a relative standard error
+#: ≈ 1/√(K−1) ≈ 12.6%.
 KMV_K = 64
-#: salt fan-out for the mergeable two-phase min-K (one hex digit of the
-#: value hash → 16 disjoint pre-reduce partitions per group).
-_KMV_SALTS = 16
 
 
 def kmv_distinct_ndv(spark: SparkSession, sf: str) -> DataFrame:
@@ -175,7 +172,7 @@ def kmv_distinct_ndv(spark: SparkSession, sf: str) -> DataFrame:
       2. rank within (grp, salt)      — salt = h's 16th hex digit; each
          of the 16 disjoint salt slices keeps its own bottom-K
       3. rank within grp over ≤ 16·K survivors — the merge step; its
-         input is bounded at _KMV_SALTS·K rows per group no matter how
+         input is bounded at 16·K rows per group no matter how
          many distinct values the corpus has
 
     so at 10^9 NDV the only stage that sees the full distinct set is

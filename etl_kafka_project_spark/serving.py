@@ -104,67 +104,30 @@ def fill_none(df: DataFrame, placeholder: str = "None") -> DataFrame:
 # ---------- change feed (pub/sub analog) ----------
 
 
-def _changelog_globs(table_root: str) -> tuple[str, list[str]]:
-    """The feed dir plus whichever partition layouts exist on disk.
-
-    The merge writes ``changelog/stream=<id>/epoch=<n>`` (per-stream
-    namespacing, so two streams merging into one table can't clobber
-    each other's feed epochs); pre-round-3 tables have the flat
-    ``changelog/epoch=<n>`` layout. Both are globbed; mixed depths can't
-    share one ``basePath`` read, so callers read each and union."""
+def _changelog_glob(table_root: str) -> tuple[str, str]:
+    """The feed dir and the glob of its epoch dirs. The merge hardlinks
+    each epoch's delta files under ``changelog/stream=<id>/epoch=<n>``
+    (``cdc/merge.py _link_changelog_deltas``); the per-stream namespace
+    keeps two streams merging into one table from clobbering each
+    other's feed epochs."""
     import glob as _glob
 
     path = os.path.join(table_root, "changelog")
-    layouts = []
-    if _glob.glob(os.path.join(path, "stream=*", "epoch=*")):
-        layouts.append(os.path.join(path, "stream=*", "epoch=*"))
-    if _glob.glob(os.path.join(path, "epoch=*")):
-        layouts.append(os.path.join(path, "epoch=*"))
-    return path, layouts
-
-
-def _dir_max_lsn(epoch_dir: str) -> int | None:
-    """Max lsn of one changelog epoch dir from the parquet footers only
-    (driver-side, no Spark job) — the epoch's content signature, used to
-    decide whether a legacy flat ``epoch=<n>`` dir and a same-numbered
-    ``stream=*/epoch=<n>`` dir are the SAME epoch (crash-retry rewrite
-    after the layout migration) or an id collision across streams.
-    Feed-shaped dirs carry ``lsn``, delta-shaped ``_max_lsn``. Returns
-    None when no footer stat exists (caller must then keep both sides —
-    losing a legacy epoch is worse than double-reading one)."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return None
-    best: int | None = None
-    for fn in os.listdir(epoch_dir):
-        if not fn.endswith(".parquet"):
-            continue
-        try:
-            md = pq.ParquetFile(os.path.join(epoch_dir, fn)).metadata
-        except OSError:
-            continue
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        col = names.get("lsn", names.get("_max_lsn"))
-        if col is None:
-            continue
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col).statistics
-            if st is not None and st.has_min_max:
-                best = st.max if best is None else max(best, st.max)
-    return best
+    pattern = os.path.join(path, "stream=*", "epoch=*")
+    if not _glob.glob(pattern):
+        raise FileNotFoundError(f"no changelog under {path}")
+    return path, pattern
 
 
 def _feed_from_delta(df: DataFrame) -> DataFrame:
-    """Project delta-shaped changelog files (the MOR merge hardlinks
-    each epoch's committed delta files into the feed dir instead of
-    writing a second copy, ``cdc/merge.py _link_changelog_deltas``)
-    into the feed contract shape ``(<keys>, op U/D, lsn, reset_lsn,
-    <payload>, <payload>_lsn..., stream, epoch)``. Payload columns are
-    recognized by their ``{c}_lsn`` twin (every delta payload column
-    has one, ``cdc/mor.py delta_schema``); a write-lsn of the NEVER
-    sentinel (-1, column never set by a surviving event) surfaces as
-    null, matching the directly-written feed."""
+    """Project the changelog's delta files (the merge hardlinks each
+    epoch's committed delta files into the feed dir instead of writing a
+    second copy, ``cdc/merge.py _link_changelog_deltas``) into the feed
+    contract shape ``(<keys>, op U/D, lsn, reset_lsn, <payload>,
+    <payload>_lsn..., stream, epoch)``. Payload columns are recognized
+    by their ``{c}_lsn`` twin (every delta payload column has one,
+    ``cdc/mor.py delta_schema``); a write-lsn of the NEVER sentinel (-1,
+    column never set by a surviving event) surfaces as null."""
     from etl_kafka_project_spark.cdc.fold import NEVER
 
     meta = {
@@ -211,78 +174,15 @@ def read_changelog(
 ) -> DataFrame:
     """Batch read of the outbound change feed written by the merge
     (``cdc/merge.py`` changelog_dir). One row per changed key per epoch:
-    ``(stream, epoch, <keys>, op U/D, lsn, <payload>)``; legacy flat
-    layouts surface ``stream`` as null.
-
-    Three on-disk forms are unified here: per-stream DELTA-linked epochs
-    (marker file, projected via :func:`_feed_from_delta`), per-stream
-    feed-shaped epochs (COW merges / pre-round-4 tables), and the legacy
-    flat ``epoch=*`` layout. A crash-retried epoch rewritten under
-    stream=* after a layout migration leaves its flat epoch=<n> dir
-    behind; reading both would surface that epoch twice (harmless for
-    apply_changelog's max_by fold, double-counted by counting
-    consumers) — a flat epoch dir is superseded and excluded only when
-    a same-numbered stream=* dir PROVES it is the same epoch (equal max
-    lsn from the parquet footers — epoch ids are per-stream counters,
-    so a bare id match against some OTHER stream must not mask an
-    unrelated legacy epoch)."""
-    import glob as _glob
-
-    from etl_kafka_project_spark.cdc.merge import DELTA_LAYOUT_MARKER
-
-    path, _ = _changelog_globs(table_root)
-    nested = sorted(_glob.glob(os.path.join(path, "stream=*", "epoch=*")))
-    flat = sorted(_glob.glob(os.path.join(path, "epoch=*")))
-    nested_by_epoch: dict[str, list[str]] = {}
-    for p in nested:
-        nested_by_epoch.setdefault(os.path.basename(p), []).append(p)
-    delta_set = {
-        p for p in nested if os.path.exists(os.path.join(p, DELTA_LAYOUT_MARKER))
-    }
-    delta_dirs = [p for p in nested if p in delta_set]
-    feed_nested = [p for p in nested if p not in delta_set]
-    def _superseded(flat_dir: str) -> bool:
-        sig = _dir_max_lsn(flat_dir)
-        if sig is None:
-            return False
-        return any(
-            _dir_max_lsn(twin) == sig
-            for twin in nested_by_epoch.get(os.path.basename(flat_dir), ())
-        )
-
-    feed_flat = [p for p in flat if not _superseded(p)]
-
-    parts = []
-    # mergeSchema on every branch: files written before a schema
-    # evolution lack the evolved columns; merged footers null-fill them
-    # (a single-footer-inferred schema would silently DROP the evolved
-    # payload from the whole feed)
-    if feed_nested:
-        parts.append(
-            spark.read.option("basePath", path)
-            .option("mergeSchema", "true")
-            .parquet(*feed_nested)
-        )
-    if delta_dirs:
-        parts.append(
-            _feed_from_delta(
-                spark.read.option("basePath", path)
-                .option("mergeSchema", "true")
-                .parquet(*delta_dirs)
-            )
-        )
-    if feed_flat:
-        parts.append(
-            spark.read.option("basePath", path)
-            .option("mergeSchema", "true")
-            .parquet(*feed_flat)
-            .withColumn("stream", F.lit(None).cast("string"))
-        )
-    if not parts:
-        raise FileNotFoundError(f"no changelog under {path}")
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p, allowMissingColumns=True)
+    ``(<keys>, op U/D, lsn, reset_lsn, <payload>, <payload>_lsn...,
+    stream, epoch)``."""
+    path, pattern = _changelog_glob(table_root)
+    # mergeSchema: files written before a schema evolution lack the
+    # evolved columns; merged footers null-fill them (a single-footer-
+    # inferred schema would silently DROP the evolved payload)
+    df = _feed_from_delta(
+        spark.read.option("basePath", path).option("mergeSchema", "true").parquet(pattern)
+    )
     if stream_id is not None:
         df = df.filter(F.col("stream") == stream_id)
     if from_epoch is not None:
@@ -293,53 +193,31 @@ def read_changelog(
 def stream_changelog(spark: SparkSession, table_root: str) -> DataFrame:
     """Streaming subscription to the change feed — the engine's
     ``subscribe_movie_updates`` (``graphql_interface.py:44-63``): a file-
-    source tail of the changelog dir, ``outputMode('append')``-safe.
-    Delta-linked epochs (MOR merges) are projected to the feed shape on
-    the stream; one on-disk shape per subscription (a file stream needs
-    one schema — mixed-era tables use the batch reader, which unifies)."""
-    import glob as _glob
-
-    from etl_kafka_project_spark.cdc.merge import DELTA_LAYOUT_MARKER
-
-    path, layouts = _changelog_globs(table_root)
-    if not layouts:
-        raise FileNotFoundError(f"no changelog under {path}")
-    # one layout per subscription (mixed partition depths can't share a
-    # basePath); prefer the current stream=*/epoch=* layout
-    glob = layouts[0]
-    nested = _glob.glob(os.path.join(path, "stream=*", "epoch=*"))
-    n_delta = sum(
-        os.path.exists(os.path.join(p, DELTA_LAYOUT_MARKER)) for p in nested
-    )
-    if 0 < n_delta < len(nested):
-        # mixed delta/feed epochs under one glob: a single stream schema
-        # would null-fill one shape into the other (deletes silently
-        # become op='U' with null lsn). The batch reader unifies shapes.
-        raise ValueError(
-            f"changelog under {path} mixes delta-linked and feed-shaped"
-            " epochs (merge_mode changed mid-life?): use read_changelog"
-            " for mixed-era tables — a file stream needs one shape"
-        )
-    delta_shaped = n_delta > 0
-    # mergeSchema: pre-evolution epochs lack the evolved columns
+    source tail of the changelog dir, ``outputMode('append')``-safe,
+    projected to the same shape as :func:`read_changelog`."""
+    path, pattern = _changelog_glob(table_root)
+    # a file stream needs its schema up front: take the batch reader's
+    # merged one (pre-evolution epochs lack the evolved columns)
     schema = (
         spark.read.option("basePath", path)
         .option("mergeSchema", "true")
-        .parquet(glob)
+        .parquet(pattern)
         .schema
     )
-    out = spark.readStream.schema(schema).option("basePath", path).parquet(glob)
-    return _feed_from_delta(out) if delta_shaped else out
+    return _feed_from_delta(
+        spark.readStream.schema(schema).option("basePath", path).parquet(pattern)
+    )
 
 
 def apply_changelog(
     feed: DataFrame, key_columns: list[str], payload_columns: list[str]
 ) -> DataFrame:
-    """Fold the change feed into the final live state — the reference
-    consumer contract (``cdc/merge.py`` write site) made executable: per
-    column, the newest write (``max_by`` over ``{c}_lsn``) wins, writes
-    at or below a newer reset barrier die, and keys whose newest action
-    is a delete drop. Equals ``LakeTable.read()`` of the merged table
+    """Fold the change feed into the final live state — the feed's
+    consumer contract made executable: per column, the newest write
+    (``max_by`` over ``{c}_lsn``, null = the epoch did not write the
+    column) wins, writes below a newer reset barrier (``reset_lsn``: an
+    I or D nulls every older cell) die, and keys whose newest action is
+    a delete drop. Equals ``LakeTable.read()`` of the merged table
     (proved in test_serving_compaction), so a downstream keyed sink that
     applies the feed this way stays byte-identical to the lake."""
     d_lsn = F.max(F.when(F.col("op") == "D", F.col("lsn"))).alias("_d")

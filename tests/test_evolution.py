@@ -12,7 +12,7 @@ from etl_kafka_project_spark.cdc.evolution import (
     evolve_table,
     evolved_schema,
 )
-from etl_kafka_project_spark.cdc.fixtures import StreamSpec, generate_events
+from etl_kafka_project_spark.cdc.fixtures import StreamSpec, generate_events, generate_stream
 from etl_kafka_project_spark.cdc.merge import create_code_table, merge_events, table_schema
 from etl_kafka_project_spark.cdc.oracle import replay_oracle
 from etl_kafka_project_spark.config import EngineConfig
@@ -101,6 +101,21 @@ def test_mid_stream_evolution_with_late_old_writer(spark, tmp_table_dir):
 
     # evolution happened mid-stream: some rows carry authors, some never did
     assert got["author"].notna().any()
+
+
+def test_pre_evolution_segments_keep_declared_types(spark, tmp_path):
+    """Segments written before ``evolve_after_lsn`` hold an all-null
+    ``author`` column; it is stored as a string column, so a reader that
+    declares the evolved schema reads it (parquet type null would fail
+    with PARQUET_COLUMN_DATA_TYPE_MISMATCH)."""
+    spec = StreamSpec(n_events=400, n_keys=50, n_segments=4, evolve_after_lsn=300)
+    events, segs = generate_stream(str(tmp_path / "stream"), spec)
+    per_seg = [
+        [r["author"] for r in spark.read.schema(EVOLVED_EVENT_SCHEMA).parquet(seg).collect()]
+        for seg in segs
+    ]
+    assert per_seg[0] and all(a is None for a in per_seg[0])
+    assert {a for seg in per_seg for a in seg if a} == set(events.author.dropna())
 
 
 def test_align_events_nullfills_and_casts(spark):
@@ -201,7 +216,7 @@ def test_mor_evolution_property(spark, tmp_path_factory, case):
 
     events, cut, compact_mid = case
     tmp = tmp_path_factory.mktemp("morevo")
-    table = create_code_table(spark, str(tmp / "t"), CFG)  # merge_mode=mor
+    table = create_code_table(spark, str(tmp / "t"), CFG)
 
     pre = events[events.lsn <= cut].drop(columns=["author"])
     post = events[events.lsn > cut]

@@ -19,6 +19,12 @@ def _mk(spark, root):
     return LakeTable.create(spark, root, SCHEMA, key_columns=["repo", "path"], n_buckets=4)
 
 
+def _superseded(t, files):
+    """Paths of the current files in the buckets ``files`` rewrite."""
+    buckets = {f.bucket for f in files}
+    return {f.path for f in t.snapshot().files if f.bucket in buckets}
+
+
 def test_create_empty_and_read(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     assert t.current_version() == 0
@@ -121,7 +127,7 @@ def test_manifest_stats_pruning(spark, tmp_table_dir):
     from etl_kafka_project_spark.cdc.merge import create_code_table, merge_events
     from etl_kafka_project_spark.config import EngineConfig
 
-    cfg = EngineConfig(n_buckets=4, merge_mode="cow")
+    cfg = EngineConfig(n_buckets=4)
     events = generate_events(StreamSpec(n_events=600, n_keys=80, min_lines=2, max_lines=3))
     table = create_code_table(spark, tmp_table_dir, cfg)
     merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), cfg, epoch=("t", 0))
@@ -206,7 +212,7 @@ def test_manifest_vacuum(spark, tmp_table_dir):
     for i in range(3):
         df = spark.createDataFrame([("r1", "p1", i)], SCHEMA)
         files = t.write_data_files(df.withColumn("_bucket", t.bucket_expr()))
-        t.commit(i, new_files=files, replaced_buckets={f.bucket for f in files})
+        t.commit(i, new_files=files, removed_files=_superseded(t, files))
     stats = expire_snapshots(t, keep_last=1, orphan_grace_sec=0.0)
     assert stats["manifests_removed"] > 0
     live = {m["path"] for m in t.snapshot().manifests.values()}
@@ -230,7 +236,7 @@ def test_vacuum_age_gates_young_orphans(spark, tmp_table_dir):
     for i in range(2):
         df = spark.createDataFrame([("r1", "p1", i)], SCHEMA)
         files = t.write_data_files(df.withColumn("_bucket", t.bucket_expr()))
-        t.commit(i, new_files=files, replaced_buckets={f.bucket for f in files})
+        t.commit(i, new_files=files, removed_files=_superseded(t, files))
     # simulate an in-flight commit: data + manifest staged, no snapshot yet
     df = spark.createDataFrame([("r9", "p9", 99)], SCHEMA)
     staged = t.write_data_files(df.withColumn("_bucket", t.bucket_expr()))
@@ -246,7 +252,7 @@ def test_vacuum_age_gates_young_orphans(spark, tmp_table_dir):
         assert os.path.exists(os.path.join(tmp_table_dir, fe.path))
     assert len(os.listdir(os.path.join(tmp_table_dir, "manifests"))) == n_manifests
     # the in-flight commit can still land on the staged files
-    t.commit(2, new_files=staged, replaced_buckets={f.bucket for f in staged})
+    t.commit(2, new_files=staged, removed_files=_superseded(t, staged))
     got = {(r.repo, r.path, r.n) for r in t.read().collect()}
     assert ("r9", "p9", 99) in got
 
@@ -267,7 +273,7 @@ def test_vacuum_never_deletes_snapshots_newer_than_its_read(
     for i in range(3):
         df = spark.createDataFrame([("r1", "p1", i)], SCHEMA)
         files = t.write_data_files(df.withColumn("_bucket", t.bucket_expr()))
-        t.commit(i, new_files=files, replaced_buckets={f.bucket for f in files})
+        t.commit(i, new_files=files, removed_files=_superseded(t, files))
     # freeze the vacuum's view at v2 while a concurrent commit lands v3
     real = t.current_version()  # 3
     monkeypatch.setattr(
@@ -294,7 +300,7 @@ def test_vacuum_survives_keep_last_growth(spark, tmp_table_dir):
     for i in range(4):
         df = spark.createDataFrame([("r1", "p1", i)], SCHEMA)
         files = t.write_data_files(df.withColumn("_bucket", t.bucket_expr()))
-        t.commit(i, new_files=files, replaced_buckets={f.bucket for f in files})
+        t.commit(i, new_files=files, removed_files=_superseded(t, files))
     expire_snapshots(t, keep_last=1, orphan_grace_sec=0.0)  # deletes v0..v3
     stats = expire_snapshots(t, keep_last=4, orphan_grace_sec=0.0)  # window grows
     assert stats["snapshots_removed"] == 0

@@ -23,7 +23,7 @@ from etl_kafka_project_spark.cdc.oracle import replay_oracle
 from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.minilake.table import LakeTable
 
-CFG = EngineConfig(n_buckets=4, merge_mode="mor")
+CFG = EngineConfig(n_buckets=4)
 
 
 def _events(lsns, repo="r0"):

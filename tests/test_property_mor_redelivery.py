@@ -81,7 +81,7 @@ def redelivery_cases(draw):
 @given(case=redelivery_cases())
 def test_any_redelivery_any_compaction_is_noop(spark, tmp_path_factory, case):
     events, epochs, redeliver, compact_after = case
-    cfg = EngineConfig(n_buckets=4, merge_mode="mor")
+    cfg = EngineConfig(n_buckets=4)
     root = str(tmp_path_factory.mktemp("morprop") / "t")
     table = create_code_table(spark, root, cfg)
 

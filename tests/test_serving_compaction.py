@@ -6,9 +6,10 @@ import os
 import pytest
 
 from etl_kafka_project_spark import serving
-from etl_kafka_project_spark.cdc.compaction import compact, expire_snapshots
+from etl_kafka_project_spark.cdc.compaction import expire_snapshots
 from etl_kafka_project_spark.cdc.fixtures import StreamSpec, generate_stream
 from etl_kafka_project_spark.cdc.merge import create_code_table
+from etl_kafka_project_spark.cdc.mor import compact_deltas
 from etl_kafka_project_spark.cdc.oracle import replay_oracle
 from etl_kafka_project_spark.cdc.stream import ReplayJob
 from etl_kafka_project_spark.config import EngineConfig
@@ -159,8 +160,8 @@ def test_compaction_and_tombstone_purge(spark, tmp_path):
     assert n_tombs > 0  # fixture op mix guarantees deletes survive
 
     live_before = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    stats = compact(table, CFG, purge_tombstones_below_lsn=spec.n_events, max_files_per_bucket=1)
-    assert stats.tombstones_purged == n_tombs
+    stats = compact_deltas(table, config=CFG, purge_tombstones_below_lsn=spec.n_events)
+    assert stats["compacted"] and stats["tombstones_purged"] == n_tombs
     after = table.read(include_tombstones=True)
     assert after.filter(after._deleted).count() == 0
 
@@ -392,164 +393,6 @@ def test_serve_endpoint_end_to_end(spark, replayed):
     assert sess.handle({"op": "stop"})["stopped"]
 
 
-def test_changelog_migrated_flat_epoch_not_double_counted(spark, tmp_path):
-    """Round-3 advice: an epoch crash-retried after the flat->per-stream
-    layout migration is rewritten under ``stream=...`` while its flat
-    ``epoch=<n>`` dir remains on disk. ``read_changelog`` must surface
-    that epoch ONCE (the per-stream copy wins) so counting consumers
-    don't double-count; distinct flat-only epochs still appear."""
-    import shutil
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA
-
-    root = str(tmp_path / "table")
-    create_code_table(spark, root, CFG)
-
-    def events(rows):
-        cols = ["lsn", "op", "repo", "path", "commit", "lang", "content"]
-        pdf = pd.DataFrame(rows, columns=cols)
-        pdf["ts"] = pd.Timestamp("2024-01-01")
-        schema = T.StructType([f for f in EVENT_SCHEMA.fields])
-        return spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
-
-    job = ReplayJob(
-        table_root=root,
-        stream_dir=str(tmp_path / "unused"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        config=CFG,
-        stream_id="s1",
-    )
-    job.apply_epoch(events([(1, "I", "r1", "p", "c1", "go", "v1")]), 0)
-    job.apply_epoch(events([(2, "U", "r1", "p", "c2", None, None)]), 1)
-
-    cl = os.path.join(root, "changelog")
-    # simulate the migration leftover: epoch 0's files also present flat
-    shutil.copytree(
-        os.path.join(cl, "stream=s1", "epoch=0"), os.path.join(cl, "epoch=0")
-    )
-    # and one genuinely pre-migration epoch that exists ONLY flat
-    shutil.copytree(
-        os.path.join(cl, "stream=s1", "epoch=1"), os.path.join(cl, "epoch=7")
-    )
-
-    feed = serving.read_changelog(spark, root)
-    per_epoch = {
-        (r["epoch"], r["stream"]): r["n"]
-        for r in feed.groupBy("epoch", "stream").count().withColumnRenamed("count", "n").collect()
-    }
-    # epoch 0 appears once, under the stream namespace only
-    assert (0, "s1") in per_epoch and (0, None) not in per_epoch
-    # the flat-only epoch 7 is still served (as legacy, stream null)
-    assert (7, None) in per_epoch
-    assert per_epoch[(0, "s1")] == 1
-
-
-def test_flat_epoch_not_masked_by_other_streams_same_id(spark, tmp_path):
-    """Epoch ids are per-stream counters: a flat (legacy, pre-migration)
-    epoch whose NUMBER collides with some other stream's nested epoch is
-    an id collision, not a migration leftover — it must stay in the
-    feed. Supersession requires the content signature (footer max lsn)
-    to match, not just the id. Round-5 review finding."""
-    import shutil
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA
-
-    root = str(tmp_path / "table")
-    create_code_table(spark, root, CFG)
-
-    def events(rows):
-        cols = ["lsn", "op", "repo", "path", "commit", "lang", "content"]
-        pdf = pd.DataFrame(rows, columns=cols)
-        pdf["ts"] = pd.Timestamp("2024-01-01")
-        schema = T.StructType([f for f in EVENT_SCHEMA.fields])
-        return spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
-
-    job = ReplayJob(
-        table_root=root,
-        stream_dir=str(tmp_path / "unused"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        config=CFG,
-        stream_id="sB",
-    )
-    job.apply_epoch(events([(10, "I", "r1", "p", "c1", "go", "v1")]), 0)
-    job.apply_epoch(events([(11, "U", "r1", "p", "c2", None, None)]), 1)
-
-    cl = os.path.join(root, "changelog")
-    # legacy stream A's flat epoch=1 (different content: max lsn 10, vs
-    # stream B's nested epoch=1 at max lsn 11) — an id collision
-    shutil.copytree(
-        os.path.join(cl, "stream=sB", "epoch=0"), os.path.join(cl, "epoch=1")
-    )
-
-    feed = serving.read_changelog(spark, root)
-    per = {
-        (r["epoch"], r["stream"]) for r in feed.select("epoch", "stream").collect()
-    }
-    assert (1, "sB") in per  # stream B's own epoch 1
-    assert (1, None) in per  # legacy stream A's colliding epoch 1 survives
-
-
-def test_changelog_feed_shaped_epochs_span_schema_evolution(spark, tmp_path):
-    """COW merges write feed-SHAPED changelog epochs directly; after an
-    additive ALTER, pre-evolution epoch files lack the evolved columns
-    and only a mergeSchema read surfaces them for the whole feed (a
-    single-footer-inferred schema silently drops the evolved payload).
-    Round-5 review finding — the delta branch already merged, the feed
-    branches did not."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA
-    from etl_kafka_project_spark.cdc.evolution import evolve_table
-    from etl_kafka_project_spark.cdc.merge import merge_events
-
-    cfg = EngineConfig(n_buckets=8, merge_mode="cow")
-    root = str(tmp_path / "table")
-    feed_dir = os.path.join(root, "changelog")
-    table = create_code_table(spark, root, cfg)
-
-    def events(schema, rows, cols):
-        pdf = pd.DataFrame(rows, columns=cols)
-        pdf["ts"] = pd.Timestamp("2024-01-01")
-        return spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
-
-    base_cols = ["lsn", "op", "repo", "path", "commit", "lang", "content"]
-    merge_events(
-        table,
-        events(EVENT_SCHEMA, [(1, "I", "r1", "p", "c1", "go", "v1")], base_cols),
-        cfg,
-        epoch=("s", 0),
-        changelog_dir=feed_dir,
-    )
-    authored = T.StructType(
-        EVENT_SCHEMA.fields + [T.StructField("author", T.StringType(), True)]
-    )
-    evolve_table(table, authored)
-    merge_events(
-        table,
-        events(
-            authored,
-            [(2, "U", "r1", "p", "c2", None, None, "alice")],
-            base_cols + ["author"],
-        ),
-        cfg,
-        epoch=("s", 1),
-        changelog_dir=feed_dir,
-    )
-
-    feed = serving.read_changelog(spark, root)
-    assert "author" in feed.columns  # evolved column survives the union
-    rows = {r["epoch"]: r for r in feed.collect()}
-    assert rows[0]["author"] is None
-    assert rows[1]["author"] == "alice"
-
-
 def test_search_offset_requires_order(spark, replayed):
     """offset over an unordered scan has no stable page boundaries —
     the library refuses; the serve endpoint defaults order_by to the
@@ -597,21 +440,3 @@ def test_feed_from_delta_keeps_key_colliding_with_payload_name(spark):
     assert "name_enc" in out.columns
     row = out.collect()[0]
     assert row["name_enc"] == "k1" and row["name"] == "alice" and row["op"] == "U"
-
-
-def test_stream_changelog_refuses_mixed_shapes(spark, tmp_path):
-    """One file stream needs one schema: a changelog mixing delta-linked
-    and feed-shaped epochs (merge_mode changed mid-life) must refuse the
-    subscription loudly instead of null-filling one shape into the other
-    (deletes would silently become op='U'). Round-5 review finding."""
-    from etl_kafka_project_spark.cdc.merge import DELTA_LAYOUT_MARKER
-
-    root = str(tmp_path / "table")
-    cl = os.path.join(root, "changelog")
-    for epoch, delta in (("epoch=0", True), ("epoch=1", False)):
-        d = os.path.join(cl, "stream=s", epoch)
-        os.makedirs(d)
-        if delta:
-            open(os.path.join(d, DELTA_LAYOUT_MARKER), "w").close()
-    with pytest.raises(ValueError, match="mixes"):
-        serving.stream_changelog(spark, root)

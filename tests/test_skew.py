@@ -56,8 +56,9 @@ def test_skewed_batch_plain_vs_salted_vs_oracle(spark, tmp_path):
 
 
 def test_hot_bucket_write_fanout(spark, tmp_path):
-    """COW write path: a bucket whose rows exceed target_file_rows gets
-    multiple write tasks/files (cdc/salting.py), cold buckets one each."""
+    """Compaction write path: a bucket whose rows exceed target_file_rows
+    gets multiple write tasks/base files (cdc/salting.py), cold buckets
+    one each."""
     events = _skewed_events(n_hot=2000, n_cold=40)
     # many live rows in one bucket: use U-events on DISTINCT hot-bucket
     # keys so the final table itself is hot
@@ -68,25 +69,29 @@ def test_hot_bucket_write_fanout(spark, tmp_path):
     extra_df["ts"] = pd.Timestamp("2024-01-01", tz="UTC").as_unit("us")
     all_events = pd.concat([events, extra_df[events.columns]], ignore_index=True)
 
-    cfg = EngineConfig(n_buckets=4, target_file_rows=500, merge_mode="cow")
+    cfg = EngineConfig(n_buckets=4, target_file_rows=500)
     table = create_code_table(spark, str(tmp_path / "t"), cfg)
     merge_events(table, spark.createDataFrame(all_events, EVENT_SCHEMA), cfg, epoch=("t", 0))
+    want = table.read(include_tombstones=True).count()
+    assert compact_deltas(table, config=cfg)["compacted"]
 
     snap = table.snapshot()
+    assert all(fe.kind == "base" for fe in snap.files)
     per_bucket_files: dict[int, int] = {}
     for fe in snap.files:
         per_bucket_files[fe.bucket] = per_bucket_files.get(fe.bucket, 0) + 1
     # some bucket got > target_file_rows rows → fanned out into >1 file
     assert max(per_bucket_files.values()) > 1
     # totals survive layout decisions
-    assert sum(fe.rows for fe in snap.files) == table.read(include_tombstones=True).count()
+    assert sum(fe.rows for fe in snap.files) == want
+    assert table.read(include_tombstones=True).count() == want
 
 
 def test_mor_compaction_after_skewed_epochs(spark, tmp_path):
-    """MOR mode: skewed epochs append deltas; compaction folds them and
+    """Skewed epochs append deltas; compaction folds them and
     the resolved state still equals the oracle."""
     events = _skewed_events(n_hot=3000, n_cold=30)
-    cfg = EngineConfig(n_buckets=8, merge_mode="mor")
+    cfg = EngineConfig(n_buckets=8)
     table = create_code_table(spark, str(tmp_path / "t"), cfg)
     half = len(events) // 2
     merge_events(table, spark.createDataFrame(events.iloc[:half], EVENT_SCHEMA), cfg, epoch=("t", 0))

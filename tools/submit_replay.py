@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--stream-id", default="replay")
     ap.add_argument("--create", action="store_true", help="CREATE TABLE first")
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--watermark", default=None)
     ap.add_argument("--source-format", choices=["parquet", "json"], default="parquet")
@@ -44,7 +43,7 @@ def main() -> None:
     from etl_kafka_project_spark.cdc.stream import ReplayJob
     from etl_kafka_project_spark.config import EngineConfig
 
-    cfg = EngineConfig(n_buckets=args.n_buckets, merge_mode=args.merge_mode).validate()
+    cfg = EngineConfig(n_buckets=args.n_buckets).validate()
     if args.create:
         create_code_table(spark, args.table_root, cfg)
 
