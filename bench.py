@@ -10,7 +10,7 @@ The CDC replay is the engine's core workload: a deterministic
 ``code_changes`` stream (cached under /tmp keyed by its spec) replayed
 through the streaming foreachBatch MERGE into a fresh minilake table.
 Query timings use the noop sink so Catalyst cannot prune the measured
-work. Scaling evidence (local[8] vs local[32]) lives in
+work. Scaling evidence (local[N] vs local[4N]) lives in
 ``tools/scaling_bench.py`` → ``BENCH/BASELINE.md``.
 """
 
@@ -137,12 +137,6 @@ def run_cdc_replay(
     stats = job.run(spark)
     wall = time.time() - t0
     n_events = sum(s.events_in for s in stats)
-    if os.environ.get("SPARK_GRAFT_BENCH_PHASES") == "1":
-        from etl_kafka_project_spark.cdc.metrics import LineageLog
-
-        for d in LineageLog(job.lineage_dir).read_all():
-            log(f"    epoch {d['epoch']}: wall={d['wall_ms'] / 1000:.2f}s"
-                f" phases={d.get('phases')}")
     shutil.rmtree(work, ignore_errors=True)
     return {
         "events": n_events,
@@ -167,84 +161,36 @@ def main() -> None:
 
     only_cdc = os.environ.get("SPARK_GRAFT_BENCH_ONLY_CDC") == "1"
 
-    # SPARK_GRAFT_MASTER overrides the master, e.g.
-    # "local-cluster[4,4,6144]" — SEPARATE executor JVMs with their own
-    # heaps/GC, the sandbox's honest analog of adding cluster nodes
-    # (tools/scaling_bench.py --mode local-cluster). SPARK_GRAFT_CPUS
-    # then reports total cores (n_executors * cores_each).
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    local_dir = os.path.join(BENCH_ROOT, f"spark-local-{os.getpid()}")
+    # single local JVM hosts all "executors": size the heap for the
+    # machine (128 GiB box), not Spark's 1g default
+    # measured: a 48g G1 heap is 5-6x SLOWER and wildly unstable here
+    # (region recommit/zeroing shows up as kernel time)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     extra_conf = {
-        "spark.driver.extraJavaOptions": os.environ.get(
-            "SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"
-        ),
+        "spark.driver.memory": driver_mem,
+        # -Xms + AlwaysPreTouch: spark-submit passes only -Xmx, so the
+        # heap starts tiny and the FIRST big epoch pays the growth to
+        # steady state (mmap + kernel page zeroing + GC-heuristic churn —
+        # measured as a ~2x slower epoch 0 that no amount of JIT warmup
+        # removed); commit and pre-fault the whole heap at JVM start,
+        # outside any measured window.
+        # ActiveProcessorCount: without it the JVM sizes GC/JIT/netty
+        # thread pools for ALL host cores, so a local[4] "cluster"
+        # free-rides GC + JIT compilation on the cores outside its
+        # nominal allocation — flattering the N level and understating
+        # N -> 4N scaling. A real 4-core container gets this from cpuset
+        # limits.
+        "spark.driver.extraJavaOptions": f"-XX:+UseParallelGC -Xms{driver_mem}"
+        f" -XX:+AlwaysPreTouch -XX:ActiveProcessorCount={cpus}",
         # shuffle/spill files on tmpfs too — see BENCH_ROOT comment.
         # PER-PROCESS dir: Spark registers a local dir it had to
         # create for recursive deletion at JVM shutdown, so two
         # sessions sharing one path wipe each other's shuffle files
-        "spark.local.dir": local_dir,
+        "spark.local.dir": os.path.join(BENCH_ROOT, f"spark-local-{os.getpid()}"),
     }
-    # A/B knob: shuffle/spill block codec (default lz4). The wide LWW
-    # fold's shuffle is the measured scaling limiter on this host's
-    # memory bus — zstd trades CPU for bytes moved; unset = Spark default
-    if os.environ.get("SPARK_GRAFT_IO_CODEC"):
-        extra_conf["spark.io.compression.codec"] = os.environ["SPARK_GRAFT_IO_CODEC"]
-    if master.startswith("local-cluster"):
-        # standalone workers take local dirs from SPARK_LOCAL_DIRS
-        os.environ["SPARK_LOCAL_DIRS"] = local_dir
-        os.environ.setdefault(
-            "SPARK_HOME", os.path.dirname(__import__("pyspark").__file__)
-        )
-        # CRITICAL (measured 143s -> 86s on the 4-executor ladder): cap
-        # each executor JVM's perceived CPU count at its core slice.
-        # Without it every executor sizes ParallelGC threads, JIT
-        # compiler threads, and netty pools for ALL host cores — 4
-        # executors burned 6.5x the CPU of 1 executor for identical
-        # work. A real cluster gets this from container cpuset limits;
-        # local-cluster workers see the bare machine.
-        exec_cores = int(master.split("[", 1)[1].split(",")[1])
-        extra_conf.update(
-            {
-                "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-                "spark.executor.memory": os.environ.get(
-                    "SPARK_GRAFT_EXECUTOR_MEM", "6g"
-                ),
-                "spark.executor.extraJavaOptions": os.environ.get(
-                    "SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"
-                )
-                + f" -XX:ActiveProcessorCount={exec_cores}",
-            }
-        )
-    else:
-        # single local JVM hosts all "executors": size the heap for the
-        # machine (128 GiB box), not Spark's 1g default
-        # measured: a 48g G1 heap is 5-6x SLOWER and wildly unstable here
-        # (region recommit/zeroing shows up as kernel time)
-        driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-        extra_conf["spark.driver.memory"] = driver_mem
-        # spark-submit passes only -Xmx, so the heap starts tiny and the
-        # FIRST big epoch pays the growth to steady state (mmap + kernel
-        # page zeroing + GC-heuristic churn — measured as a ~2x slower
-        # epoch 0 that no amount of JIT warmup removed). Commit and
-        # pre-fault the whole heap at JVM start instead, outside any
-        # measured window.
-        extra_conf["spark.driver.extraJavaOptions"] = (
-            extra_conf["spark.driver.extraJavaOptions"]
-            + f" -Xms{driver_mem} -XX:+AlwaysPreTouch"
-        )
-        # Same fairness fix local-cluster mode already has: without it
-        # the JVM sizes GC/JIT/netty thread pools for ALL host cores, so
-        # a local[4] "cluster" free-rides GC + JIT compilation on the 28
-        # cores outside its nominal allocation — flattering the N level
-        # and understating N -> 4N scaling. A real 4-core container gets
-        # this from cpuset limits.
-        extra_conf["spark.driver.extraJavaOptions"] = (
-            extra_conf["spark.driver.extraJavaOptions"]
-            + f" -XX:ActiveProcessorCount={cpus}"
-        )
 
     spark = build_session(
-        master,
+        f"local[{cpus}]",
         # 2x cores: smooths stage tails; on a real cluster this config
         # scales with executor count the same way
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", 2 * cpus)),

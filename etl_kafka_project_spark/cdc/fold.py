@@ -47,8 +47,7 @@ bounded in the default engine by ``config.hot_key_threshold`` (100k ≈
 800 KB worst case), past which the stream's adaptive salting switches
 the fold to the *two-phase* shape below anyway.
 
-The **two-phase** shape (``fold_batch(salt=...)``, also reachable via
-``SPARK_GRAFT_FOLD_SHAPE=two_phase`` for A/B) keeps the round-3 narrow
+The **two-phase** shape (``fold_batch(salt=...)``) keeps the round-3 narrow
 (key, lsn) branch — two spillable hash aggregations over ~16-byte rows
 with a window-bounded sample buffer — for the pathological case of a
 single key dominating an entire batch; correctness is identical because
@@ -170,11 +169,7 @@ def fold_batch(
         _build_aggs,
     )
 
-    import os as _os
-
-    two_phase = salt is not None or _os.environ.get("SPARK_GRAFT_FOLD_SHAPE") == "two_phase"
-
-    if not two_phase:
+    if salt is None:
         # FUSED shape (default): _applied / _lsns ride the wide
         # aggregation as collect_set(lsn) — one scan, one exchange, no
         # join (see module docstring for the shape trade-offs). The set
@@ -221,28 +216,25 @@ def fold_batch(
         )
     )
 
-    if salt is None:
-        wide = events.groupBy(*key_columns).agg(*aggs)
-    else:
-        # Two-phase salted aggregation for the pathological
-        # one-key-dominates-the-batch case: partial per (key, salt), then
-        # final per key. Exactly correct because max/max_by are
-        # associative + commutative over unique lsns.
-        ev = events.dropDuplicates([*key_columns, lsn_col])
-        partial = ev.groupBy(
-            *key_columns, F.pmod(F.col(lsn_col), F.lit(salt)).alias("_salt")
-        ).agg(*aggs)
-        final_aggs = [
-            F.max("_max_lsn").alias("_max_lsn"),
-            F.max("_last_d_lsn").alias("_last_d_lsn"),
-            F.max("_last_reset_lsn").alias("_last_reset_lsn"),
+    # Two-phase salted aggregation for the pathological
+    # one-key-dominates-the-batch case: partial per (key, salt), then
+    # final per key. Exactly correct because max/max_by are
+    # associative + commutative over unique lsns.
+    ev = events.dropDuplicates([*key_columns, lsn_col])
+    partial = ev.groupBy(
+        *key_columns, F.pmod(F.col(lsn_col), F.lit(salt)).alias("_salt")
+    ).agg(*aggs)
+    final_aggs = [
+        F.max("_max_lsn").alias("_max_lsn"),
+        F.max("_last_d_lsn").alias("_last_d_lsn"),
+        F.max("_last_reset_lsn").alias("_last_reset_lsn"),
+    ]
+    for c in payload_columns:
+        final_aggs += [
+            F.max_by(F.col(f"_v_{c}"), F.col(f"_l_{c}")).alias(f"_v_{c}"),
+            F.max(F.col(f"_l_{c}")).alias(f"_l_{c}"),
         ]
-        for c in payload_columns:
-            final_aggs += [
-                F.max_by(F.col(f"_v_{c}"), F.col(f"_l_{c}")).alias(f"_v_{c}"),
-                F.max(F.col(f"_l_{c}")).alias(f"_l_{c}"),
-            ]
-        wide = partial.groupBy(*key_columns).agg(*final_aggs)
+    wide = partial.groupBy(*key_columns).agg(*final_aggs)
 
     # per-key inner join of two already-key-partitioned singleton
     # frames — no wide data moves. NULL-SAFE on the key columns: a

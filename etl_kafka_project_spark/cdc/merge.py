@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +99,10 @@ class MergeStats:
     max_key_events: int = 0
     #: [min, max] _max_lsn of the batch
     lsn_range: list[int] | None = None
+    #: merge sub-phase walls in seconds (plan build, write job,
+    #: changelog link, commit); apply_epoch files them under the
+    #: lineage doc's ``phases``
+    phases: dict[str, float] = field(default_factory=dict)
 
 
 def _link_changelog_deltas(
@@ -121,6 +125,14 @@ def _link_changelog_deltas(
             os.link(src, dst)
         except OSError:
             shutil.copy2(src, dst)
+
+
+def _spans(marks: list[tuple[str, float]]) -> dict[str, float]:
+    """``merge_<phase>_s`` walls between consecutive (phase, end) marks."""
+    return {
+        f"merge_{name}_s": round(end - start, 3)
+        for (_, start), (name, end) in zip(marks, marks[1:])
+    }
 
 
 def _merge_mor(
@@ -150,10 +162,9 @@ def _merge_mor(
 
     from etl_kafka_project_spark.cdc.mor import write_delta_files
 
-    # env-gated sub-phase wall clocks (SPARK_GRAFT_MERGE_PHASES=1): the
-    # per-epoch serial floor is what caps sustained scaling efficiency,
-    # so it has to be measurable, not guessed at
-    timing = os.environ.get("SPARK_GRAFT_MERGE_PHASES") == "1"
+    # sub-phase wall clocks: the per-epoch serial floor is what caps
+    # sustained scaling efficiency, so it has to be measurable, not
+    # guessed at
     marks: list[tuple[str, float]] = [("start", time.time())]
 
     obs = Observation()
@@ -190,7 +201,7 @@ def _merge_mor(
             epoch_id=epoch[1] if epoch else None,
             events_in=0, keys=0, upserts=0, deletes=0, touched_buckets=0,
             wall_ms=(time.time() - t0) * 1000, per_bucket=[],
-            snapshot_version=snap.version, skipped=False,
+            snapshot_version=snap.version, skipped=False, phases=_spans(marks),
         )
     n_deletes = int(m["deletes"] or 0)
     bucket_keys: dict[int, int] = {}
@@ -208,15 +219,7 @@ def _merge_mor(
         # rather than leave stamped orphans for the vacuum
         _remove_files(table, new_files)
         raise
-    if timing:
-        import sys
-
-        marks.append(("commit", time.time()))
-        spans = ", ".join(
-            f"{name}={t1 - t0:.3f}s"
-            for (_, t0), (name, t1) in zip(marks, marks[1:])
-        )
-        print(f"[merge-phases] epoch={epoch}: {spans}", file=sys.stderr, flush=True)
+    marks.append(("commit", time.time()))
     return MergeStats(
         epoch_id=epoch[1] if epoch else None,
         events_in=int(m["events"] or 0),
@@ -229,6 +232,7 @@ def _merge_mor(
         snapshot_version=committed.version,
         max_key_events=int(m["max_key_events"] or 0),
         lsn_range=[int(m["min_lsn"]), int(m["max_lsn"])],
+        phases=_spans(marks),
     )
 
 

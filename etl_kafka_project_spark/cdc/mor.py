@@ -149,8 +149,7 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
     window pass (stale-re-delivery detection) + ONE hash aggregation per
     key (associative, skew-tolerant for the same reason the fold is).
 
-    Re-delivery handling — the MOR counterpart of the COW staleness
-    guard (``cdc/merge.py``: ``s._max_lsn <= t.last_lsn`` keeps ``t``):
+    Re-delivery handling (last-writer-wins staleness, applied at read):
     a delta row whose ``_max_lsn`` is not newer than the running max of
     every EARLIER commit's ``_max_lsn`` for that key (base counts as the
     earliest) is, under the delivery contract, a verbatim re-delivery of

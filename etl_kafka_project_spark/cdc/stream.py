@@ -449,6 +449,7 @@ class ReplayJob:
                 f" snapshot CAS {EPOCH_COMMIT_RETRIES + 1} times in a row"
             )
         phases["merge_s"] = round(_time.time() - t, 2)
+        phases.update(stats.phases)
         t = _time.time()
 
         # quarantine dead letters (idempotent overwrite per epoch);

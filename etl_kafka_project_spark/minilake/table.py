@@ -431,9 +431,7 @@ class LakeTable:
             except FileNotFoundError:
                 stats_columns = []
         staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        _t0 = time.time()
         df.write.partitionBy(bucket_col).mode("overwrite").parquet(staging)
-        _t1 = time.time()
         entries: list[FileEntry] = []
         try:
             import pyarrow.parquet as pq
@@ -469,15 +467,6 @@ class LakeTable:
             import shutil
 
             shutil.rmtree(staging, ignore_errors=True)
-        if os.environ.get("SPARK_GRAFT_MERGE_PHASES") == "1":
-            import sys
-
-            print(
-                f"[write-files] spark_write={_t1 - _t0:.3f}s"
-                f" staging_move={time.time() - _t1:.3f}s files={len(entries)}",
-                file=sys.stderr,
-                flush=True,
-            )
         return entries
 
     def commit(

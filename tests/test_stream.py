@@ -50,6 +50,11 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
     docs = LineageLog(job.lineage_dir, job.stream_id).read_all()
     assert len(docs) == len(stats)
     assert all(d["events_per_sec"] is not None for d in docs if d["events_in"])
+    # merge sub-phase walls ride every applied epoch's doc
+    merge_phases = {"merge_plan_build_s", "merge_write_job_s", "merge_commit_s"}
+    for d in docs:
+        assert merge_phases <= d["phases"].keys()
+        assert all(d["phases"][k] >= 0 for k in merge_phases)
 
 
 def _open(spark, job):

@@ -1,36 +1,23 @@
-"""Scaling-efficiency evidence (BASELINE.json north rule): the same CDC
-replay job, same input, at two parallelism levels — no real cluster in
-this sandbox, so two proxies are measured (per driver instruction and
-round-1 verdict):
+"""Scaling-efficiency evidence for the BASELINE.json north rule
+(throughput efficiency >= 0.8 from N to 4N): the same CDC replay job, on
+the same input, at local[N] and local[4N] threads of one JVM.
 
-* ``--mode local``          — one JVM, local[N] vs local[4N] threads
-  (round-1 transparency ladder; under-reports for memory-bound work
-  because all "executors" share one heap/GC/memory bus);
-* ``--mode local-cluster``  — ``local-cluster[n,cores,mem]``: SEPARATE
-  executor JVM processes with their own heaps and GCs, N executors vs
-  4N executors at fixed cores/executor — the honest sandbox analog of
-  adding nodes.
+The host is shared and noisy, so each level runs ``--trials`` times,
+interleaved, behind a load gate (and the optional ``--membw-gate``), and
+the MINIMUM wall is scored. Each trial is a fresh ``python bench.py``
+subprocess, followed at the same level by an engine-free control
+(``tools/control_shuffle.py``), so engine-relative efficiency (engine /
+control) is read under the same noise.
 
-And two workload profiles:
+Each campaign is written once, to
+``BENCH/archive/scaling-<profile>-<lo>to<hi>-<UTC stamp>.json``, with its
+settings under ``args`` and an empty ``note`` to fill in by hand. The
+archive is the only record: ``BENCH/BASELINE.md`` is hand-written above
+``MARKER`` and rendered from the archive below it.
 
-* ``--profile content-heavy``    — ~2.2 KB content per event (default
-  bench stream; memory-bandwidth-bound at high core counts on this
-  single host);
-* ``--profile compute-weighted`` — ~150 B content, sha256/fold-dominated,
-  sits under the measured ~13.5-core single-host memory ceiling so the
-  4->16 pair reflects engine scaling, not the host bus.
-
-The host is shared and noisy, so each level runs ``--trials`` times
-interleaved behind a load gate and the MINIMUM wall (least-contended
-sample) is scored. Each trial is a fresh ``python bench.py`` subprocess.
-
-Every invocation writes ``BENCH/scaling-<mode>-<profile>.json`` and then
-regenerates ``BENCH/BASELINE.md`` from ALL such result files present, so
-ladders accumulate into one report.
-
-    PYTHONPATH=/root/repo python tools/scaling_bench.py \
-        [--mode local|local-cluster] [--profile content-heavy|compute-weighted] \
-        [--trials N] [--executors 1 2 4] [--cores-per-executor 4]
+    PYTHONPATH=. python tools/scaling_bench.py --profile compute-weighted-small \
+        --cpus 2 8 --trials 4 --load-gate 0.6 --membw-gate 6.3
+    python -c "from tools.scaling_bench import write_report; write_report()"
 """
 
 from __future__ import annotations
@@ -39,11 +26,16 @@ import argparse
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ARCHIVE = os.path.join(REPO, "BENCH", "archive")
+REPORT = os.path.join(REPO, "BENCH", "BASELINE.md")
+#: BASELINE.md is hand-written above this line and rendered below it
+MARKER = "<!-- generated below -->"
 
 PROFILES = {
     # ~2.2 KB content/event — the default bench stream, in 2 big epochs
@@ -81,12 +73,8 @@ PROFILES = {
         "SPARK_GRAFT_BENCH_FILES_PER_TRIGGER": "64",
     },
     # same epoch SIZE as compute-weighted-small (3.2M events/epoch) but
-    # FOUR epochs instead of two: isolates how fast full-replay
-    # efficiency converges to the sustained-epoch metric as more epochs
-    # amortize the per-replay constants (stream listing, first-trigger
-    # planning, final commit) — the 10^10-replay regime in miniature.
-    # Pre-declared prediction (round 5): full-replay efficiency lands
-    # between the 2-epoch full and sustained readings, nearer sustained.
+    # FOUR epochs: does full-replay efficiency converge on the sustained
+    # metric as more epochs amortize the per-replay constants?
     "compute-weighted-small-4ep": {
         "SPARK_GRAFT_BENCH_N_EVENTS": "12800000",
         "SPARK_GRAFT_BENCH_N_KEYS": "1200000",
@@ -165,7 +153,7 @@ def run_trial(level: dict, profile: str) -> dict:
         PYTHONPATH=REPO,
         **LADDER_ENV,
         **PROFILES[profile],
-        **level["env"],
+        SPARK_GRAFT_CPUS=str(level["cores"]),
     )
     load_at_start = loadavg()
     membw_at_start = membw_probe()
@@ -183,16 +171,10 @@ def run_trial(level: dict, profile: str) -> dict:
         # a neighbor-swamped trial that outran the budget is a bad
         # sample, not a campaign-fatal error: min-of-trials discards it
         print(f"  trial timed out (load {loadavg()}) — discarded", file=sys.stderr)
-        return {
-            "events": 0,
-            "epochs": 0,
-            "wall_sec": 9e9,
-            "events_per_sec": 0.0,
-            "epoch_walls": [],
-            "timed_out": True,
-            "host_load_at_start": load_at_start,
-            "trial_wall": round(time.time() - t0, 1),
-        }
+        return {"events": 0, "epochs": 0, "wall_sec": 9e9, "events_per_sec": 0.0,
+                "epoch_walls": [], "timed_out": True, "host_load_at_start": load_at_start,
+                "membw_gbps_at_start": membw_at_start,
+                "trial_wall": round(time.time() - t0, 1)}
     try:
         line = out.stdout.strip().splitlines()[-1]
         d = json.loads(line)
@@ -206,48 +188,28 @@ def run_trial(level: dict, profile: str) -> dict:
     return d["cdc"]
 
 
-def build_levels(args) -> list[dict]:
-    """One dict per parallelism level: display name, total cores, env."""
-    if args.mode == "local":
-        return [
-            {
-                "name": f"local[{c}]",
-                "cores": c,
-                "units": c,  # scaling unit = threads
-                "env": {"SPARK_GRAFT_CPUS": str(c)},
-            }
-            for c in sorted(set(args.cpus))
-        ]
-    levels = []
-    for n in sorted(set(args.executors)):
-        cores = n * args.cores_per_executor
-        master = f"local-cluster[{n},{args.cores_per_executor},{args.worker_mem_mb}]"
-        levels.append(
-            {
-                "name": master,
-                "cores": cores,
-                "units": n,  # scaling unit = executor JVMs
-                "env": {
-                    "SPARK_GRAFT_MASTER": master,
-                    "SPARK_GRAFT_CPUS": str(cores),
-                    "SPARK_GRAFT_EXECUTOR_MEM": args.executor_mem,
-                },
-            }
-        )
-    return levels
+def run_control(level: dict, rows: int) -> dict:
+    """One engine-free control trial at ``level``'s thread count."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "control_shuffle.py"),
+         "--masters", level["name"], "--trials", "1", "--rows", str(rows)],
+        env=dict(os.environ, PYTHONPATH=REPO),
+        capture_output=True,
+        text=True,
+        timeout=1200,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1])["control"][0]["runs"][0]
+
+
+def efficiency(walls: dict, lo: dict, hi: dict) -> float:
+    return round((walls[lo["name"]] / walls[hi["name"]]) / (hi["cores"] / lo["cores"]), 3)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--mode", choices=["local", "local-cluster"], default="local")
     ap.add_argument("--profile", choices=sorted(PROFILES), default="content-heavy")
     ap.add_argument("--trials", type=int, default=3)
-    # local mode: thread counts; local-cluster mode: executor counts
     ap.add_argument("--cpus", type=int, nargs="+", default=[4, 8, 16, 32])
-    ap.add_argument("--executors", type=int, nargs="+", default=[1, 4])
-    ap.add_argument("--cores-per-executor", type=int, default=4)
-    ap.add_argument("--executor-mem", default="6g")
-    ap.add_argument("--worker-mem-mb", type=int, default=8192)
     ap.add_argument("--load-gate", type=float, default=4.0)
     ap.add_argument(
         "--membw-gate",
@@ -258,481 +220,192 @@ def main() -> None:
     )
     ap.add_argument("--max-wait", type=float, default=600.0)
     ap.add_argument(
-        "--control",
-        action="store_true",
-        help="interleave an engine-free control trial (tools/control_shuffle.py)"
-        " at each level within the same round — pairs engine and control"
-        " under the SAME noise regime so the relative efficiency is robust"
-        " to the shared host's hour-scale load swings",
-    )
-    ap.add_argument(
         "--control-rows",
         type=int,
         default=50_000_000,
-        help="control input rows — size so the control wall MATCHES the"
-        " engine replay wall at the paired level (duration-matched"
-        " control; a shorter control skims quiet windows and biases"
-        " control efficiency high)",
+        help="control input rows: size the control wall to MATCH the engine"
+        " replay wall (a shorter control skims quiet windows, biasing it high)",
     )
     args = ap.parse_args()
 
-    levels = build_levels(args)
-    results: dict[str, list[dict]] = {lv["name"]: [] for lv in levels}
-    control_results: dict[str, list[dict]] = {lv["name"]: [] for lv in levels}
+    levels = [{"name": f"local[{c}]", "cores": c} for c in sorted(set(args.cpus))]
+    runs: dict[str, list[dict]] = {lv["name"]: [] for lv in levels}
+    controls: dict[str, list[dict]] = {lv["name"]: [] for lv in levels}
     for t in range(args.trials):
         for lv in levels:
             ld = wait_for_quiet(args.load_gate, args.max_wait, args.membw_gate)
-            print(
-                f"trial {t + 1}/{args.trials} {lv['name']} "
-                f"[{args.mode}/{args.profile}] (load {ld}) ...",
-                file=sys.stderr,
-                flush=True,
-            )
+            print(f"trial {t + 1}/{args.trials} {lv['name']} [{args.profile}] (load {ld}) ...",
+                  file=sys.stderr, flush=True)
             r = run_trial(lv, args.profile)
             print(f"  -> {r['wall_sec']}s, {r['events_per_sec']} ev/s", file=sys.stderr)
-            results[lv["name"]].append(r)
-            if args.control and args.mode == "local":
-                wait_for_quiet(args.load_gate, args.max_wait, args.membw_gate)
-                out = subprocess.run(
-                    [
-                        sys.executable,
-                        os.path.join(REPO, "tools", "control_shuffle.py"),
-                        "--masters",
-                        lv["name"],
-                        "--trials",
-                        "1",
-                        "--rows",
-                        str(args.control_rows),
-                    ],
-                    env=dict(os.environ, PYTHONPATH=REPO),
-                    capture_output=True,
-                    text=True,
-                    timeout=1200,
-                )
-                c = json.loads(out.stdout.strip().splitlines()[-1])["control"][0]
-                print(f"  control -> {c['runs'][0]}", file=sys.stderr)
-                control_results[lv["name"]].append(c["runs"][0])
+            runs[lv["name"]].append(r)
+            wait_for_quiet(args.load_gate, args.max_wait, args.membw_gate)
+            c = run_control(lv, args.control_rows)
+            print(f"  control -> {c}", file=sys.stderr)
+            controls[lv["name"]].append(c)
 
-    best = {n: min(rs, key=lambda r: r["wall_sec"]) for n, rs in results.items()}
-    by_units = {lv["units"]: lv["name"] for lv in levels}
-
-    def eff(lo_u: int, hi_u: int) -> float | None:
-        if lo_u not in by_units or hi_u not in by_units:
-            return None
-        lo, hi = best[by_units[lo_u]], best[by_units[hi_u]]
-        return round((lo["wall_sec"] / hi["wall_sec"]) / (hi_u / lo_u), 3)
-
-    unit_vals = sorted(by_units)
-    pairs = [(lo, hi) for lo in unit_vals for hi in unit_vals if hi == 4 * lo]
-    summary = {
-        "mode": args.mode,
+    best = {n: min(rs, key=lambda r: r["wall_sec"]) for n, rs in runs.items()}
+    walls = {n: r["wall_sec"] for n, r in best.items()}
+    cwalls = {n: min(r["wall_sec"] for r in rs) for n, rs in controls.items()}
+    pairs = [(lo, hi) for lo in levels for hi in levels if hi["cores"] == 4 * lo["cores"]]
+    # the headline pair is the lowest level and 4x it
+    head = next(((lo, hi) for lo, hi in pairs if lo is levels[0]), None)
+    headline = efficiency(walls, *head) if head else None
+    ceff = efficiency(cwalls, *head) if head else None
+    record = {
+        "note": "",
+        "args": vars(args),
         "profile": args.profile,
-        "scaling_unit": "threads" if args.mode == "local" else "executor JVMs",
-        "events": next(iter(best.values()))["events"],
-        "epochs": next(iter(best.values()))["epochs"],
+        "events": best[levels[0]["name"]]["events"],
+        "epochs": best[levels[0]["name"]]["epochs"],
         "ladder": {
             lv["name"]: {
-                "units": lv["units"],
-                "total_cores": lv["cores"],
+                "units": lv["cores"],
                 "wall_sec": best[lv["name"]]["wall_sec"],
                 "events_per_sec": best[lv["name"]]["events_per_sec"],
             }
             for lv in levels
         },
         "efficiency": {
-            f"{by_units[lo]} -> {by_units[hi]}": eff(lo, hi) for lo, hi in pairs
+            f"{lo['name']} -> {hi['name']}": efficiency(walls, lo, hi) for lo, hi in pairs
         },
-        "headline_efficiency": eff(unit_vals[0], unit_vals[0] * 4)
-        if unit_vals[0] * 4 in by_units
-        else None,
+        "headline_efficiency": headline,
         "trials": args.trials,
-        "all_runs": results,
+        "all_runs": runs,
+        "control": {"best_walls": cwalls, "efficiency": ceff, "all_runs": controls},
+        "engine_relative_efficiency": round(headline / ceff, 2) if ceff else None,
     }
-    if args.control and any(control_results.values()):
-        cbest = {
-            n: min(r["wall_sec"] for r in rs) for n, rs in control_results.items() if rs
-        }
-        names = [by_units[u] for u in unit_vals]
-        if len(names) == 2 and all(n in cbest for n in names):
-            lo_n, hi_n = names
-            ceff = round(
-                (cbest[lo_n] / cbest[hi_n]) / (unit_vals[1] / unit_vals[0]), 3
-            )
-            summary["control"] = {
-                "best_walls": cbest,
-                "efficiency": ceff,
-                "all_runs": control_results,
-            }
-            if summary["headline_efficiency"]:
-                summary["engine_relative_efficiency"] = round(
-                    summary["headline_efficiency"] / ceff, 2
-                )
-        with open(os.path.join(REPO, "BENCH", "control.json"), "w") as f:
-            json.dump(
-                {
-                    "control": [
-                        {
-                            "master": n,
-                            "runs": rs,
-                            "best_wall": min(r["wall_sec"] for r in rs),
-                        }
-                        for n, rs in control_results.items()
-                        if rs
-                    ],
-                    "efficiency": summary.get("control", {}).get("efficiency"),
-                },
-                f,
-            )
-
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    out_path = os.path.join(REPO, "BENCH", f"scaling-{args.mode}-{args.profile}.json")
+    stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+    lo_c, hi_c = levels[0]["cores"], levels[-1]["cores"]
+    out_path = os.path.join(ARCHIVE, f"scaling-{args.profile}-{lo_c}to{hi_c}-{stamp}.json")
+    os.makedirs(ARCHIVE, exist_ok=True)
     with open(out_path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(f"wrote {out_path}", file=sys.stderr)
-    regenerate_report()
-    print(json.dumps({k: v for k, v in summary.items() if k != "all_runs"}))
+        json.dump(record, f, indent=1)
+    print(f"wrote {out_path}; write its note, then re-render", file=sys.stderr)
+    write_report()
+    print(json.dumps({k: v for k, v in record.items() if k != "all_runs"}))
 
+
+def best_epoch_walls(s: dict) -> dict[str, float]:
+    """Fastest single epoch per level, over every trial."""
+    return {
+        n: min(w for r in rs for w in r.get("epoch_walls", []))
+        for n, rs in s["all_runs"].items()
+    }
 
 
 def sustained_eff(s: dict) -> float | None:
-    """Best-single-epoch N->4N efficiency for a two-level ladder summary."""
-    try:
-        names = list(s["ladder"])
-        if len(names) != 2:
-            return None
-        epw = {
-            n: min(w for r in s["all_runs"][n] for w in r.get("epoch_walls", []))
-            for n in names
-        }
-        lo_n, hi_n = names
-        ratio = s["ladder"][hi_n]["units"] / s["ladder"][lo_n]["units"]
-        return round((epw[lo_n] / epw[hi_n]) / ratio, 3)
-    except (KeyError, ValueError):
+    """Best-single-epoch N->4N efficiency for a two-level ladder: the
+    pre-declared criterion metric (sustained merge throughput, free of
+    JVM warm-up and of the noise a full replay must integrate)."""
+    if len(s["ladder"]) != 2:
         return None
+    (lo_n, lo), (hi_n, hi) = s["ladder"].items()
+    best = best_epoch_walls(s)
+    return round((best[lo_n] / best[hi_n]) / (hi["units"] / lo["units"]), 3)
 
 
-def regenerate_report() -> None:
-    """Rebuild BENCH/BASELINE.md from every scaling-*.json present."""
-    sections = []
-    ladders = []
-    for path in sorted(glob.glob(os.path.join(REPO, "BENCH", "scaling-*.json"))):
-        with open(path) as f:
-            ladders.append(json.load(f))
-    headline = None
-    for s in ladders:
-        if s.get("headline_efficiency"):
-            if headline is None or s["headline_efficiency"] > headline[0]:
-                headline = (s["headline_efficiency"], s)
+def load_records() -> list[tuple[str, dict]]:
+    """Every archived campaign as (file name, record), in natural name order."""
+    def natural(p: str) -> list:
+        return [int(t) if t.isdigit() else t for t in re.split(r"(\d+)", p)]
 
-    md = """# BENCH/BASELINE — measured CDC replay throughput + scaling
+    records = []
+    for p in sorted(glob.glob(os.path.join(ARCHIVE, "scaling-*.json")), key=natural):
+        with open(p) as f:
+            records.append((os.path.basename(p), json.load(f)))
+    return records
 
-North-rule criterion: throughput scaling efficiency >= 0.8 from N to 4N
-executors. No real cluster exists in this sandbox, so (per the driver
-instruction: "running the same job at two parallelism levels (e.g.
-local[8] and local[32], or N and 4N cores)") the SAME streaming replay
-job runs on the SAME input at two parallelism levels and efficiency =
-(T_N / T_4N) / 4. Two proxies are reported:
 
-* **local[N] vs local[4N]** — N and 4N cores, one JVM. **This is the
-  criterion evidence**: on this sandbox it is the only proxy whose
-  measurement reflects the engine rather than a host pathology (see
-  the multi-JVM section below for the controlled experiment proving
-  that).
-* **local-cluster[n,cores,mem]** — n separate executor JVM processes.
-  Conceptually the honest analog of adding nodes, and it was built,
-  tuned (per-executor -XX:ActiveProcessorCount was a measured 1.7x),
-  and measured — but this sandbox inflates CROSS-JVM shuffle CPU ~7x
-  (proven engine-free below), so its numbers indict the host, not the
-  engine. Reported for transparency.
+def units(s: dict) -> list[int]:
+    return [row["units"] for row in s["ladder"].values()]
 
-Workload: deterministic `code_changes` stream replayed through the
-exactly-once merge-on-read MERGE into a fresh minilake table (`bench.py`
-`run_cdc_replay`, tmpfs-backed — the sandbox disk is shared and slow).
-Two profiles: `content-heavy` (~2.2 KB content/event — bandwidth-bound
-on one host) and `compute-weighted` (~150 B content, sha256/fold-
-dominated — below the single-host memory ceiling, so it measures the
-ENGINE's scaling rather than the host bus). The host is shared and
-noisy: each level ran multiple interleaved trials behind a load gate;
-the MINIMUM (least-contended) wall is scored; every trial is listed.
 
-Round-4 engine deltas visible in `bench.py` (sf0.1, local[32]): the
-fused single-aggregation fold + zstd shuffle codec took plain replay
-from 21,908 to ~86,600 ev/s, and scoping the watermarked cross-epoch
-dedup to events at-or-below the committed high-water mark (instead of
-shuffling every event through `dropDuplicatesWithinWatermark` state)
-took the watermarked variant from 6,094 to ~93,400 ev/s — exactly-once
-WITH the watermark guard now runs at parity with plain replay
-(test_watermarked_cross_epoch_dedup still pins the dedup semantics).
+def criterion_passes(records: list[tuple[str, dict]]) -> list[tuple[str, float]]:
+    """The 2->8 records whose sustained efficiency reads >= 0.8."""
+    return [
+        (name, e)
+        for name, s in records
+        if units(s) == [2, 8] and (e := sustained_eff(s)) is not None and e >= 0.8
+    ]
 
-Round-5 delta: profiling decomposed the per-epoch serial floor — the
-snapshot commit is ~10 ms and the schema diff ~0.2 ms; the dominant
-constant cost was py4j CONSTRUCTION of the fold's unbound expression
-trees (~315 ms/epoch), now memoized across epochs
-(`functions/exprcache.py`, 315 -> 73 ms). Same-host A/B: epoch walls
-1.35-1.7 s -> ~1.2 s, plain replay ~100k -> ~137k ev/s at local[32].
-Serial driver work is exactly what erodes N -> 4N efficiency, so the
-cut also moves the scaling ladder's absolute throughput (repro4 set the
-first round-5 per-level records; the gated 4->16 repro15 and repro17
-campaigns then raised the absolute ceiling to 925.1k ev/s full replay
-and 1,103.4k ev/s peak sustained at 16 threads).
-"""
-    control = None
-    ctrl_path = os.path.join(REPO, "BENCH", "control.json")
-    if os.path.exists(ctrl_path):
-        try:
-            with open(ctrl_path) as f:
-                control = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            control = None
 
-    if headline:
-        # Curated verdict over ALL campaigns (the auto-picked single-run
-        # headline once overwrote the multi-pass statement on
-        # regeneration — the narrative lives in this template now, and
-        # the verdict metric stays the pre-declared sustained-epoch
-        # statistic, never the more favorable of the two).
-        md += (
-            "\n**Headline absolute result: N -> 4N scaling efficiency >= 0.8"
-            " on the pre-declared sustained-epoch criterion metric in ALL"
-            " SEVEN gated campaigns — 0.817 (r4 criterion ladder, full-replay"
-            " 0.812), 0.849 (r5 repro7, 603.8k ev/s), 0.815 (r5 repro8,"
-            " 627.5k ev/s peak sustained), 0.822 (r5 4-epoch convergence"
-            " campaign), 0.896 (r5 repro13 — the highest sustained"
-            " reading and throughput of any campaign: 658.4k ev/s peak"
-            " sustained, with the fastest full 8-thread replay ever at"
-            " 11.98 s), 0.814 (r5 repro14 — the first campaign >= 0.8 on"
-            " BOTH statistics: full-replay 0.839, the highest full-replay"
-            " efficiency ever), and 0.812 (r5 repro16 — the second campaign"
-            " >= 0.8 on BOTH statistics: full-replay 0.808, at the highest"
-            " engine-relative reading of any campaign, 1.28) — each measured"
-            " behind"
-            " the load + membw gates with a paired duration-matched"
-            " engine-free control in the same window (engine-relative 1.18,"
-            " 0.99, 0.85, 0.97, 0.92, 0.95, 1.28). MEETS the >= 0.8 target,"
-            " reproduced"
-            " across two engine builds and two epoch counts; an eighth"
-            " campaign (repro19, pressured window) read >= 0.8 on the"
-            " full-replay statistic (0.812) with sustained at 0.788; every"
-            " below-0.8"
-            " reading in the table below occurred outside a quiet window —"
-            " ungated, gated-but-pressured (mid-trial stalls / sub-gate membw"
-            " between trials, e.g. repro12/repro18/repro19/repro20), or for"
-            " repro11"
-            " self-inflicted trial contention — and is reported with its"
-            " control.**\n"
+def _span(values) -> str:
+    values = [v for v in values if v is not None]
+    return f"{min(values)}–{max(values)}" if values else "—"
+
+
+def _cell(v) -> str:
+    return "—" if v is None else str(v)
+
+
+def render_report() -> str:
+    """BASELINE.md: its hand-written part, then the records rendered."""
+    with open(REPORT) as f:
+        head = f.read().split(MARKER)[0].rstrip()
+    records = load_records()
+    passes = criterion_passes(records)
+    n_pair = sum(units(s) == [2, 8] for _, s in records)
+    md = [
+        head,
+        "",
+        MARKER,
+        "",
+        "## Campaign records",
+        "",
+        f"Rendered by `tools/scaling_bench.py` from the {len(records)} records in"
+        " `BENCH/archive/`. Edit a record's `note`, never this section.",
+        "",
+        f"**2→8 sustained readings >= 0.8: {len(passes)} of {n_pair} 2→8 records** — "
+        + ", ".join(f"{e} (`{name}`)" for name, e in passes)
+        + ".",
+        "",
+        "| record | pair | events × epochs | trials | full | sustained |"
+        " 4N peak sustained ev/s | control | engine-relative |"
+        " trial-start load | trial-start membw GB/s | note |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|",
+    ]
+    for name, s in records:
+        trials = [r for rs in s["all_runs"].values() for r in rs]
+        hi_n = list(s["ladder"])[-1]
+        peak = s["events"] / s["epochs"] / best_epoch_walls(s)[hi_n]
+        md.append(
+            f"| `{name}` | {'→'.join(map(str, units(s)))} |"
+            f" {s['events']:,} × {s['epochs']} | {s['trials']} |"
+            f" {_cell(s['headline_efficiency'])} | {_cell(sustained_eff(s))} |"
+            f" {peak:,.0f} | {_cell(s.get('control', {}).get('efficiency'))} |"
+            f" {_cell(s.get('engine_relative_efficiency'))} |"
+            f" {_span(r.get('host_load_at_start') for r in trials)} |"
+            f" {_span(r.get('membw_gbps_at_start') for r in trials)} | {s['note']} |"
         )
-        md += """
-## Engine-relative evidence across host-noise regimes
-
-The same ENGINE-FREE control (textbook `spark.range -> groupBy.agg`,
-`tools/control_shuffle.py`, same JVM flags and gating) was measured in
-paired sessions with the engine across noise regimes (rounds 3-4). The
-shared host's ceiling for ANY Spark workload varied 0.20-0.71 by time
-of day (hypervisor-neighbor memory-bandwidth theft), which is why the
-criterion ladder had to run behind the membw gate:
-
-| session (noise regime) | pair | engine eff | control eff | engine-relative |
-|---|---|---|---|---|
-| r4 quiet window — THE CRITERION LADDER | 2 -> 8 | **0.812 full / 0.817 sustained** | 0.689 (paired, duration-matched) | **1.18** |
-| r4 re-run of the 4->16 pair (fused fold + zstd engine) | 4 -> 16 | 0.704 full / 0.74 sustained | 0.633 (paired, duration-matched) | **1.11** |
-| r4 second independent 4->16 campaign (4 trials, membw-gated) | 4 -> 16 | **0.704 full (exact reproduction) / 0.755 sustained** | 0.705 (paired, duration-matched) | 1.00 |
-| r4 second 2->8 campaign, mixed noise (loads 0.1-2.0 mid-trial; `BENCH/archive/*-2to8-r4-repro2.json`) | 2 -> 8 | 0.739 full / 0.782 sustained | 0.903 (paired, duration-matched) | 0.82 |
-| r4 third 2->8 campaign, window turned noisy mid-run (loads 2.6-5.1 between trials, membw probe dipped to 3.44 GB/s; `BENCH/archive/*-2to8-r4-repro3.json`) | 2 -> 8 | 0.654 full / 0.728 sustained | 0.614 (paired, duration-matched) | **1.07** |
-| r5 fourth 2->8 campaign, round-5 engine (expr-cache serial floor cut), mixed noise (trial-start loads 1.5-1.9, mid-trial spikes to 4.6; `BENCH/archive/*-2to8-r5-repro4.json`) | 2 -> 8 | 0.763 full / 0.769 sustained — at HIGHER absolute throughput than the criterion ladder at both levels (170.8k vs 156.2k ev/s at 2, 521.6k vs 507.1k at 8) | 0.867 (paired, duration-matched) | 0.88 |
-| r5 fifth 2->8 campaign, sustained membw pressure (probes 4.2-6.2 GB/s between trials; the 8-thread level never saw a quiet start — best 14.1 s vs repro4's 12.3 s; `BENCH/archive/*-2to8-r5-repro5.json`) | 2 -> 8 | 0.708 full / 0.69 sustained | 0.814 (paired, duration-matched) | 0.87 |
-| r5 sixth 2->8 campaign, gate too permissive (load-gate 1.5; trial-start loads 1.1-1.5, one 8-thread trial hit a 38 s stall; 2-thread level matched repro4's throughput while the 8-thread best stayed at 17.0 s vs repro4's 12.3 s; `BENCH/archive/*-2to8-r5-repro6.json`) | 2 -> 8 | 0.562 full / 0.598 sustained | 0.831 (paired, duration-matched) | 0.68 |
-| r5 seventh 2->8 campaign — GATED QUIET WINDOW, second criterion-metric pass (load-gate 0.6 + membw-gate 6.3; all 8 trial starts at load 0.19-0.63, membw 6.3-7.4 GB/s; `BENCH/archive/*-2to8-r5-repro7.json`) | 2 -> 8 | 0.755 full / **0.849 sustained — the second >= 0.8 reading on the pre-declared sustained-epoch metric, at the highest sustained 4N throughput of any campaign (603.8k ev/s)** | 0.76 (paired, duration-matched) | **0.99** |
-| r5 eighth 2->8 campaign — gated window, THIRD criterion-metric pass (all 8 trial starts at load 0.14-0.48; two 8-thread trials took mid-trial neighbor hits; `BENCH/archive/*-2to8-r5-repro8.json`) | 2 -> 8 | 0.732 full (the 2-thread level posted the fastest 2-level reading of ANY campaign, 174.2k ev/s, which mechanically lowers the ratio) / **0.815 sustained — third >= 0.8 reading on the pre-declared sustained-epoch metric; 627.5k ev/s peak sustained, the highest of any campaign** | 0.857 (paired, duration-matched) | 0.85 |
-| r5 ninth campaign — 4-EPOCH convergence experiment in a gated quiet window, FOURTH criterion-metric pass (12.8M events over 4 epochs instead of 2, testing whether amortizing the first-epoch warmup pulls full-replay toward sustained; all 6 trial starts at load 0.0-0.45, membw 6.6-7.5 GB/s; `BENCH/scaling-local-compute-weighted-small-4ep.json`) | 2 -> 8 | 0.724 full / **0.822 sustained — fourth >= 0.8 reading on the pre-declared sustained-epoch metric** (full stays below sustained because the 8-thread level's non-warmup epochs still vary 6.4-7.7 s with neighbor noise, so doubling epochs doubles exposure) | 0.747 (paired, duration-matched) | **0.97** |
-| r5 tenth campaign — 4->16 re-run on the round-5 engine, window turned noisy mid-run (trial starts at load 0.52-0.65 but mid-trial neighbor hits: one 4-thread epoch stalled to 35.4 s and one 16-thread epoch to 14.5 s vs ~8-9 s peers; `BENCH/archive/*-4to16-r5-repro9.json`) | 4 -> 16 | 0.569 full / 0.65 sustained | 0.636 (paired, duration-matched) | 0.89 |
-| r5 eleventh 2->8 campaign — SELF-CONTENDED, excluded from the criterion read (three detached instances of the same campaign plus a pytest suite ran concurrently during trials 1-3 — an orchestration mistake, not host noise; trial 4's 2-thread reading was clean and near-record, 166.9k ev/s, but the 8-thread level never saw a clean start: best epoch 7.8 s vs 5.1-5.2 s in gated quiet windows, and asymmetric pollution mechanically craters the ratio; `BENCH/archive/*-2to8-r5-repro11.json`) | 2 -> 8 | 0.539 full / 0.572 sustained | 0.81 (paired, duration-matched) | 0.67 |
-| r5 twelfth 2->8 campaign — uncontended but PRESSURED window (all 8 trial starts gated at load 0.23-0.6, yet membw probes dipped to 5.6-6.0 GB/s between trials and the gate held repeatedly; best 8-thread epoch 5.61 s vs 5.1-5.2 s in the four criterion windows, absolute peak 498.8k ev/s vs their 603-628k; `BENCH/archive/*-2to8-r5-repro12.json`) | 2 -> 8 | 0.748 full / 0.768 sustained | 0.85 (paired, duration-matched) | 0.88 |
-| r5 thirteenth 2->8 campaign — gated window, FIFTH criterion-metric pass (all 8 trial starts at load 0.15-0.59 behind the membw gate; trials 2-3 took mid-trial neighbor hits — one 2-thread epoch stalled to 32.2 s — but trial 4 ran clean and set records at BOTH statistics; `BENCH/archive/*-2to8-r5-repro13.json`) | 2 -> 8 | 0.799 full (fastest full 8-thread replay of any campaign, 11.98 s / 534.4k ev/s) / **0.896 sustained — fifth >= 0.8 reading on the pre-declared sustained-epoch metric and the highest ever; 658.4k ev/s peak sustained (best epoch 4.86 s)** | 0.869 (paired, duration-matched) | **0.92** |
-| r5 fourteenth 2->8 campaign — gated window, SIXTH criterion-metric pass and the FIRST >= 0.8 on BOTH statistics (all 8 trial starts at load 0.25-0.62, membw 6.4-6.99 GB/s; the final 8-thread trial took a mid-trial neighbor spike to load 6.5 and stalled to 41 s — min-of-trials absorbs it; `BENCH/archive/*-2to8-r5-repro14.json`) | 2 -> 8 | **0.839 full — the highest full-replay efficiency of any campaign** / **0.814 sustained — sixth >= 0.8 reading on the pre-declared sustained-epoch metric** (559.4k ev/s peak sustained) | 0.886 (paired, duration-matched) | **0.95** |
-| r5 sixteenth 2->8 campaign — gated window, SEVENTH criterion-metric pass and the SECOND >= 0.8 on BOTH statistics (all 8 trial starts at load 0.28-0.64, membw 6.19-7.21 GB/s; the window degraded across the session — the paired 8-thread controls slowed 17.1 -> 25.6 -> 28.3 s and the late engine trials with them, but trial 1 at each level ran clean and min-of-trials scores it; `BENCH/archive/*-2to8-r5-repro16.json`) | 2 -> 8 | **0.808 full / 0.812 sustained — seventh >= 0.8 reading on the pre-declared sustained-epoch metric, second campaign >= 0.8 on BOTH statistics** (568.4k ev/s peak sustained) | **0.63** (paired, duration-matched — the host ceiling sagged while the engine held) | **1.28 — the highest engine-relative reading of any campaign** |
-| r5 fifteenth campaign — 4->16 in a gated window (trial starts at load 0.31-0.62, membw 6.05-7.25 GB/s): ABSOLUTE-THROUGHPUT RECORDS at the 16-thread level — 820.8k ev/s full replay and a 952k ev/s peak sustained epoch (6.72 s for 6.4M events) — but the pair stays host-ceiling-bound: the paired engine-free control itself reads 0.71 with only 13.1-13.6 busy cores measured at the 16 level, i.e. the host grants ANY Spark workload ~13.5 cores; the 4-thread level also warmed across trials (50.8 -> 41.4 s page-cache effect), mechanically deflating the ratio; `BENCH/archive/*-4to16-r5-repro15.json` | 4 -> 16 | 0.664 full / 0.712 sustained | **0.71** (paired, duration-matched at the 4 level) | **0.94** |
-| r5 eighteenth 2->8 campaign — gated starts but a pressured window throughout (all 8 trial starts at load 0.21-0.59 / membw 6.31-6.87 GB/s, yet the 8-thread level never ran truly clean: best epochs 6.05-6.68 s vs 5.1-5.2 s in the criterion windows, one trial stalled to 30.4 s mid-run; the 2-thread level meanwhile caught one anomalously fast 16.04 s epoch — its sibling epoch in the same trial took 21.05 s — which mechanically deflates the sustained ratio; `BENCH/archive/*-2to8-r5-repro18.json`) | 2 -> 8 | 0.751 full / 0.663 sustained (the full-replay statistic is the steadier read of this window) | 0.805 (paired, duration-matched) | 0.93 |
-| r5 seventeenth campaign — 4->16 re-run in a gated window (trial starts at load 0.35-0.71, membw 6.29-7.1 GB/s; one 4-thread trial took a mid-trial neighbor hit, first epoch 34.6 s vs ~18 s peers — min-of-trials absorbs it): NEW ABSOLUTE-THROUGHPUT RECORDS at the 16-thread level — 925.1k ev/s full replay (13.84 s for 12.8M events) and a 1,103.4k ev/s peak sustained epoch (5.8 s for 6.4M events), beating repro15's 820.8k/952k — while the pair stays host-ceiling-bound exactly as before: the paired engine-free control reads 0.565 with only 13.2-14.1 busy cores granted at the 16 level; `BENCH/archive/*-4to16-r5-repro17.json` | 4 -> 16 | 0.681 full / 0.759 sustained — the best 4->16 readings of any campaign on both statistics | **0.565** (paired, duration-matched — the host again grants ~13.5 cores at the 16 level) | **1.21 — the highest 4->16 engine-relative reading of any campaign** |
-| r5 nineteenth 2->8 campaign — gated starts, window pressured after trial 1 (all 8 trial starts at load 0.24-0.53 / membw 6.16-6.77 GB/s, but between-trial membw probes dipped to 4.53-5.91 GB/s: the 8-thread engine trials 2-4 degraded to 16.7-17.5 s vs trial 1's clean 12.56 s and the paired 8-thread controls slid 19.8 -> 25.0 -> 49.9 -> 34.5 s; min-of-trials scores trial 1; `BENCH/archive/*-2to8-r5-repro19.json`) | 2 -> 8 | **0.812 full — an eighth >= 0.8 reading on the full-replay statistic** / 0.788 sustained, a near-miss on the pre-declared metric: the 2-thread best epoch (17.85 s) landed in the pressured tail while the 8-thread best (5.66 s, 565.4k ev/s) came from clean trial 1 | 0.672 (paired, duration-matched) | **1.21** |
-| r5 twentieth 2->8 campaign — gated starts, persistently pressured window (all 8 trial starts at load 0.14-0.38 / membw 6.32-6.62 GB/s, yet NEITHER level ever ran clean: 2-thread trials 43.6-59.2 s vs 40.8-43.2 s in repro19's window, 8-thread best epoch 6.76 s vs 5.1-5.7 s in the criterion windows, and the paired controls read it the same way — 8-thread controls 17.1-24.9 s vs 19.8 s clean; `BENCH/archive/*-2to8-r5-repro20.json`) | 2 -> 8 | 0.699 full / 0.762 sustained — a below-criterion pressured-window reading in the repro12/repro18 mold | 0.741 (paired, duration-matched) | 0.94 |
-| r3 morning, moderate noise | 4 -> 16 | 0.552 full / 0.699 sustained | 0.71 (short-run, biased HIGH) | 0.78 |
-| r3 evening, bus-starved (`BENCH/archive/*-1825-starved.json`) | 4 -> 16 | 0.308 | **0.20** (duration-matched, 190M rows) | **1.54** |
-| r3 night, bus-starved (archived) | 2 -> 8 | 0.614 full / 0.591 sustained | — (controls dropped for trial cadence) | — |
-
-The starved-session control is the decisive data point: a bare Spark
-aggregation with NO engine code got SLOWER from 4 to 16 cores (339 s ->
-423 s, 12-13 busy cores measured via cgroup) while this VM's own load
-was ~3 — hypervisor-neighbor memory-bandwidth theft that /proc/loadavg
-cannot see (the `membw GB/s at start` column in every trial table below
-measures it directly; probes ran 0.02-8 GB/s for the entire evening).
-In the same windows the ENGINE scaled 1.54x BETTER than the bare
-aggregation: the absolute shortfall is the host, not the engine. The
-engine's own scaling headroom is also measured component-wise on static
-batches (noop sink, quiet morning): full fold 0.787, wide max_by
-aggregate 0.778, narrow applied path 0.864 at 4 -> 16.
-
-Across the twenty paired campaigns (five in round 4, fifteen in
-round 5) the engine scaled at or within 8% of its same-window
-engine-free ceiling in twelve (engine-relative 1.28, 1.21, 1.18, 1.11,
-1.07, 1.00, 0.99, 0.97, 0.95, 0.94, 0.93, 0.92; the noisier repros read
-0.82, 0.88, 0.87, 0.85, 0.89, 0.88 and 0.68, and the self-contended
-repro11 — three instances of the campaign racing each other — read
-0.67), and ALL SEVEN gated 2->8 QUIET-WINDOW campaigns produced >= 0.8
-on the pre-declared
-sustained-epoch criterion metric (0.817 in r4; 0.849, 0.815, 0.822,
-0.896, 0.814 and 0.812 in r5 — independent reproductions on different
-engine builds and two epoch counts, with repro14 and repro16 clearing
-0.8 on BOTH the sustained and the full-replay statistics, the former's
-full-replay at 0.839). The
-4->16 pair remains host-ceiling-bound in every attempt — the gated
-repro15 and repro17 campaigns read 0.664/0.712 and 0.681/0.759 against
-paired controls of 0.71 and 0.565 (both windows granting ~13.5 busy
-cores at the 16 level) while setting successive absolute throughput
-records, repro17's standing at 925.1k ev/s full replay and a 1,103.4k
-ev/s peak sustained epoch at 16 threads with the highest 4->16
-engine-relative reading (1.21). The round-5 repro4
-ran the faster round-5 engine
-(expression-cache serial-floor cut) and posted the highest absolute
-throughput of any campaign at BOTH levels while reading 0.769
-sustained — the 2-thread level happened to gain more vs the criterion
-ladder (+9% vs +3%), which mechanically lowers the ratio; trial-start
-loads were 1.5-1.9 (vs 0.73 in the criterion window) with mid-trial
-spikes to 4.6, so the reading is a mixed-noise one like repro2/3, not
-a quiet-window reproduction. The pattern is stable: absolute
-efficiency tracks the host's hour-scale bandwidth regime;
-engine-relative efficiency stays ~0.9-1.2.
-"""
-
-    for s in ladders:
-        md += f"\n## mode={s['mode']}, profile={s['profile']} (unit: {s['scaling_unit']})\n\n"
-        md += f"{s['events']:,} events over {s['epochs']} epochs, {s['trials']} trials/level.\n\n"
-        md += "| level | units | total cores | wall (s) | events/s |\n|---|---|---|---|---|\n"
-        for name, row in s["ladder"].items():
-            md += (
-                f"| {name} | {row['units']} | {row['total_cores']} |"
-                f" {row['wall_sec']} | {row['events_per_sec']} |\n"
-            )
-        md += "\n| N -> 4N pair | efficiency |\n|---|---|\n"
-        for pair, e in s["efficiency"].items():
-            md += f"| {pair} | {e} |\n"
-        # sustained metric: the criterion is "change-events/sec applied
-        # (SUSTAINED merge throughput)" — the best per-epoch wall at
-        # each level is the peak sustained rate, free of JVM warm-up
-        # and of the noise a full multi-minute replay must integrate
-        try:
-            names = list(s["ladder"])
-            epw = {
-                n: min(w for r in s["all_runs"][n] for w in r.get("epoch_walls", []))
-                for n in names
-            }
-            if len(names) == 2:
-                lo_n, hi_n = names
-                ratio = s["ladder"][hi_n]["units"] / s["ladder"][lo_n]["units"]
-                sus = round((epw[lo_n] / epw[hi_n]) / ratio, 3)
-                ev_epoch = s["events"] / s["epochs"]
-                md += (
-                    f"\nSustained (best single epoch, {ev_epoch:,.0f} events):"
-                    f" {lo_n} {epw[lo_n]}s vs {hi_n} {epw[hi_n]}s →"
-                    f" **sustained scaling efficiency {sus}**"
-                    f" ({ev_epoch / epw[hi_n]:,.0f} ev/s peak sustained at the"
-                    f" 4N level).\n"
-                )
-        except (KeyError, ValueError):
-            pass
-        if s.get("control"):
-            md += (
-                f"\nPaired engine-free control in the SAME session (interleaved"
-                f" trials, same noise regime): control efficiency"
-                f" **{s['control']['efficiency']}**, engine-relative efficiency"
-                f" **{s.get('engine_relative_efficiency')}**"
-                f" (>= 1 means the engine scales at or above what this host"
-                f" permits any Spark workload). The control is sized"
-                f" (--control-rows) so its wall matches the replay's at the"
-                f" paired level — the round-2 short-control bias is gone.\n"
-            )
-        md += "\n<details><summary>all trials</summary>\n\n"
-        md += (
-            "| level | trial | wall (s) | events/s | host load at start |"
-            " membw GB/s at start |\n|---|---|---|---|---|---|\n"
-        )
-        for name, rs in s["all_runs"].items():
+    md += ["", "## Trials", ""]
+    for name, s in records:
+        ctrl = s.get("control", {}).get("all_runs", {})
+        md += [
+            f"<details><summary><code>{name}</code></summary>",
+            "",
+            "| level | trial | wall (s) | events/s | epoch walls (s) | load at start |"
+            " membw GB/s at start | control wall (s) |",
+            "|---|---|---|---|---|---|---|---|",
+        ]
+        for level, rs in s["all_runs"].items():
+            cs = ctrl.get(level, [])
             for i, r in enumerate(rs):
-                md += (
-                    f"| {name} | {i + 1} | {r['wall_sec']} | {r['events_per_sec']} |"
-                    f" {r['host_load_at_start']} |"
-                    f" {r.get('membw_gbps_at_start', '—')} |\n"
+                md.append(
+                    f"| {level} | {i + 1} | {r['wall_sec']} | {r['events_per_sec']} |"
+                    f" {', '.join(map(str, r.get('epoch_walls', [])))} |"
+                    f" {_cell(r.get('host_load_at_start'))} |"
+                    f" {_cell(r.get('membw_gbps_at_start'))} |"
+                    f" {cs[i]['wall_sec'] if i < len(cs) else '—'} |"
                 )
-        md += "\n</details>\n"
+        md += ["", "</details>", ""]
+    return "\n".join(md)
 
-    md += """
-## Why the multi-JVM (local-cluster) ladder indicts the host, not the engine
 
-Controlled engine-free A/B (`spark.range(50M) -> groupBy(1M keys).agg`,
-no CDC code, same configs, 2 warm trials each, cgroup-measured):
-
-| master | wall (s) | our busy cores |
-|---|---|---|
-| local[16] | 16.8 / 26.7 | 6.3-9.5 |
-| local-cluster[4,4,8192] | 123.5 / 165.3 | 11.3-13.8 |
-
-Identical Spark job, ~7x more CPU burned and ~7x the wall when the
-shuffle crosses JVM processes on this sandbox (Firecracker-virtualized
-kernel; loopback/netty shuffle pays a severe virtualization tax). More
-cores busy, less work done — the signature of an environment pathology,
-not an engine bottleneck. Two real fixes were still found and landed
-while tuning this mode (they apply to real clusters too):
-
-- executors must see their core slice, not the machine's:
-  `-XX:ActiveProcessorCount=<cores>` (4-executor replay 143s -> 86s;
-  without it 4 executors burn 6.5x the CPU of 1 for identical work);
-- big micro-batches amortize the ~1-4 s/trigger serial floor (driver
-  planning/codegen + offset log + snapshot commit) that is identical
-  at every cluster size.
-
-## Measured host ceiling (single-JVM memory bus)
-
-A single JVM shares one memory bus across all "executors", unlike a
-real 4N-executor cluster that adds nodes with their own DRAM. Measured
-on this box:
-
-- 32 independent spinning processes achieve ~28.8 cores-equivalent;
-- one JVM running compute-only Spark stages achieves ~22 cores;
-- one JVM running memory-streaming Spark work (shuffles + parquet en/
-  decode, i.e. the content-heavy profile) saturates at ~13.5
-  cores-equivalent.
-
-So for memory-bound work the shared-JVM 8->32 wall ratio is capped near
-(13.5/8)/4 = 0.42 REGARDLESS of engine quality. The criterion pairs are
-therefore low-core pairs on the compute-weighted profiles — 4 -> 16
-(and 2 -> 8 on the half-size stream), where the 4N level sits under the
-~22-core compute ceiling and the small-payload stream keeps total bytes
-under the bus ceiling, so the pair measures the ENGINE's scaling —
-which is what the >= 0.8 criterion is about. On a real cluster,
-per-node memory bandwidth scales with N.
-
-Two fairness/validity rules discovered while measuring (both recorded
-in the harness):
-
-- every bench JVM gets `-XX:ActiveProcessorCount=<its cores>`; without
-  it the N level sizes GC/JIT/netty pools for all 32 host cores and
-  free-rides compilation on the cores outside its allocation,
-  flattering T_N and understating efficiency (walls measured before
-  and after this flag differ ~4x at local[4] and are never comparable);
-- /proc/loadavg sees only THIS VM. The physical host is shared at the
-  hypervisor level, and neighbor VMs steal memory bandwidth invisibly:
-  a 200-MB-copy probe (`membw_probe`) measured ~8 GB/s in windows where
-  an ENGINE-FREE groupBy control scaled at 0.2 from 4->16 cores (more
-  cores, slower wall — on a bare aggregation with no engine code).
-  Every trial records its probe; `--membw-gate` holds trials until the
-  bus clears. Campaign sessions in starved windows indict the host,
-  not the engine — the engine-relative number (engine efficiency /
-  control efficiency in the SAME session) is the noise-robust reading.
-
-Generated by `tools/scaling_bench.py`; machine-readable records live in
-`BENCH/scaling-<mode>-<profile>.json`.
-"""
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
+def write_report() -> None:
+    text = render_report()  # reads the hand-written part before rewriting
+    with open(REPORT, "w") as f:
+        f.write(text)
 
 
 if __name__ == "__main__":
