@@ -56,21 +56,6 @@ def payload_columns(schema: T.StructType | None = None) -> list[str]:
     return [f.name for f in schema.fields if f.name not in ("lsn", "op", "ts")]
 
 
-def decode_json_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Decode a JSON-string change feed (Kafka ``value`` analog) into the
-    typed envelope — ``from_json`` with explicit schema, never inference.
-
-    Mirrors ``kafka_interface.py:71``'s ``json.loads`` + ``movie.py:52-54``'s
-    envelope check, but vectorized: malformed JSON yields null struct which
-    :func:`split_dead_letters` routes to the dead-letter side.
-    """
-    parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), EVENT_SCHEMA).alias("e"),
-        F.col(value_col).cast("string").alias("_raw"),
-    )
-    return parsed.select("e.*", "_raw")
-
-
 def dead_letter_reason() -> F.Column:
     """Envelope-validation verdict per event: null when valid, else the
     dead-letter reason (see :func:`split_dead_letters`). Unbound

@@ -186,9 +186,9 @@ def write_segments(events: pd.DataFrame, out_dir: str, spec: StreamSpec) -> list
     return paths
 
 
-def space_mtimes(paths: list[str], step_sec: float = 0.005) -> None:
-    """Stamp segment files with strictly-increasing mtimes, >= step_sec
-    apart (well above Hadoop's 1 ms FileStatus resolution).
+def space_mtimes(paths: list[str]) -> None:
+    """Stamp segment files with strictly-increasing mtimes, 5 ms apart
+    (well above Hadoop's 1 ms FileStatus resolution).
 
     A real binlog directory satisfies this for free — the producer
     rotates segments over time, so arrival order == mtime order. This
@@ -202,7 +202,7 @@ def space_mtimes(paths: list[str], step_sec: float = 0.005) -> None:
     noise instead of real violations."""
     base = time.time()
     for i, p in enumerate(paths):
-        t = base + i * step_sec
+        t = base + i * 0.005
         os.utime(p, (t, t))
 
 

@@ -103,8 +103,6 @@ def fold_batch(
     events: DataFrame,
     key_columns: Sequence[str],
     payload_columns: Sequence[str],
-    lsn_col: str = "lsn",
-    op_col: str = "op",
     salt: int | None = None,
 ) -> DataFrame:
     """Collapse a batch of change events to one resolved row per key.
@@ -139,24 +137,22 @@ def fold_batch(
     # ~190 ms of serial driver time — memoized across epochs
     # (functions/exprcache.py): a steady-state replay builds them once.
     def _build_aggs() -> list[F.Column]:
-        d_lsn = F.max(F.when(F.col(op_col) == "D", F.col(lsn_col))).alias(
-            "_last_d_lsn"
-        )
+        d_lsn = F.max(F.when(F.col("op") == "D", F.col("lsn"))).alias("_last_d_lsn")
         # reset barrier: I and D both replace the whole row as of their lsn
-        reset_lsn = F.max(
-            F.when(F.col(op_col).isin("I", "D"), F.col(lsn_col))
-        ).alias("_last_reset_lsn")
+        reset_lsn = F.max(F.when(F.col("op").isin("I", "D"), F.col("lsn"))).alias(
+            "_last_reset_lsn"
+        )
 
         def cell_aggs(col: str) -> list[F.Column]:
-            live = F.when(F.col(op_col) != "D", F.col(col))
-            lsn_of_write = F.when(live.isNotNull(), F.col(lsn_col))
+            live = F.when(F.col("op") != "D", F.col(col))
+            lsn_of_write = F.when(live.isNotNull(), F.col("lsn"))
             return [
                 F.max_by(live, lsn_of_write).alias(f"_v_{col}"),
                 F.max(lsn_of_write).alias(f"_l_{col}"),
             ]
 
         aggs = [
-            F.max(F.col(lsn_col)).alias("_max_lsn"),
+            F.max(F.col("lsn")).alias("_max_lsn"),
             d_lsn,
             reset_lsn,
         ]
@@ -165,7 +161,7 @@ def fold_batch(
         return aggs
 
     aggs = cached_exprs(
-        ("fold_aggs", tuple(key_columns), tuple(payload_columns), lsn_col, op_col),
+        ("fold_aggs", tuple(key_columns), tuple(payload_columns)),
         _build_aggs,
     )
 
@@ -178,8 +174,8 @@ def fold_batch(
         # LSN_SAMPLE+1 members sorted (size == LSN_SAMPLE+1 marks
         # truncation, same contract as the two-phase shape).
         lsnset = cached_exprs(
-            ("fold_post", lsn_col),
-            lambda: F.collect_set(F.col(lsn_col)).alias("_lsnset"),
+            "fold_post",
+            lambda: F.collect_set(F.col("lsn")).alias("_lsnset"),
         )
         folded = events.groupBy(*key_columns).agg(*aggs, lsnset)
         # _applied/_lsns derive from _lsnset inside _resolve's single
@@ -201,17 +197,17 @@ def fold_batch(
     # above). The row_number window bounds the collect_list buffer at
     # LSN_SAMPLE+1 narrow rows per key, and shares the final groupBy's
     # hash partitioning (one exchange covers both).
-    wn = Window.partitionBy(*key_columns).orderBy(F.col(lsn_col))
+    wn = Window.partitionBy(*key_columns).orderBy(F.col("lsn"))
     applied = (
-        events.select(*key_columns, lsn_col)
-        .groupBy(*key_columns, lsn_col)
+        events.select(*key_columns, "lsn")
+        .groupBy(*key_columns, "lsn")
         .agg(F.lit(1))
         .withColumn("_rn", F.row_number().over(wn))
         .groupBy(*key_columns)
         .agg(
             F.count(F.lit(1)).alias("_applied"),
             F.sort_array(
-                F.collect_list(F.when(F.col("_rn") <= LSN_SAMPLE + 1, F.col(lsn_col)))
+                F.collect_list(F.when(F.col("_rn") <= LSN_SAMPLE + 1, F.col("lsn")))
             ).alias("_lsns"),
         )
     )
@@ -220,9 +216,9 @@ def fold_batch(
     # one-key-dominates-the-batch case: partial per (key, salt), then
     # final per key. Exactly correct because max/max_by are
     # associative + commutative over unique lsns.
-    ev = events.dropDuplicates([*key_columns, lsn_col])
+    ev = events.dropDuplicates([*key_columns, "lsn"])
     partial = ev.groupBy(
-        *key_columns, F.pmod(F.col(lsn_col), F.lit(salt)).alias("_salt")
+        *key_columns, F.pmod(F.col("lsn"), F.lit(salt)).alias("_salt")
     ).agg(*aggs)
     final_aggs = [
         F.max("_max_lsn").alias("_max_lsn"),

@@ -72,7 +72,7 @@ def table_schema(payload_fields: list[T.StructField] | None = None) -> T.StructT
 def create_code_table(
     spark: SparkSession, root: str, config: EngineConfig | None = None
 ) -> LakeTable:
-    config = (config or EngineConfig()).validate()
+    config = config or EngineConfig()
     return LakeTable.create(
         spark,
         root,
@@ -97,8 +97,6 @@ class MergeStats:
     #: hottest key's folded event count (adaptive-salting signal),
     #: observed on the write job
     max_key_events: int = 0
-    #: [min, max] _max_lsn of the batch
-    lsn_range: list[int] | None = None
     #: merge sub-phase walls in seconds (plan build, write job,
     #: changelog link, commit); apply_epoch files them under the
     #: lineage doc's ``phases``
@@ -155,7 +153,7 @@ def _merge_mor(
     round-trip — the floor is what caps sustained scaling efficiency
     (BENCH/BASELINE.md). Per-bucket lineage (keys per bucket) falls out
     of the written file manifest entries for free; batch-global stats
-    (deletes, applied events, lsn range, hottest key) come from the
+    (deletes, applied events, hottest key) come from the
     observation.
     """
     from pyspark.sql import Observation
@@ -173,8 +171,6 @@ def _merge_mor(
         F.count(F.lit(1)).alias("keys"),
         F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
         F.sum("_applied").alias("events"),
-        F.min("_max_lsn").alias("min_lsn"),
-        F.max("_max_lsn").alias("max_lsn"),
         F.max("_applied").alias("max_key_events"),
     )
     marks.append(("plan_build", time.time()))
@@ -231,7 +227,6 @@ def _merge_mor(
         per_bucket=[{"_bucket": b, "keys": k} for b, k in sorted(bucket_keys.items())],
         snapshot_version=committed.version,
         max_key_events=int(m["max_key_events"] or 0),
-        lsn_range=[int(m["min_lsn"]), int(m["max_lsn"])],
         phases=_spans(marks),
     )
 
@@ -274,8 +269,6 @@ def merge_events(
         events,
         key_columns=key_cols,
         payload_columns=payload_cols,
-        lsn_col=config.lsn_column,
-        op_col=config.op_column,
         salt=salt,
     ).withColumn("_bucket", table.bucket_expr(snap))
     return _merge_mor(

@@ -8,12 +8,16 @@ alongside the checkpoint for crash-resume"):
 
     {stream_id, epoch, ts, events_in, keys, upserts, deletes,
      dead_letters: {reason: n}, touched_buckets, snapshot_version,
-     wall_ms, events_per_sec, skipped,
-     max_key_events, lsn_range: [min, max],
-     per_bucket: [{_bucket, keys}, ...]}
+     wall_ms, events_per_sec, skipped, max_key_events,
+     per_bucket: [{_bucket, keys}, ...],
+     lsn_span: [min, max], phases: {name: seconds or value}}
 
 Batch-global stats are observed on the merge's write job itself; the
 per-bucket key counts come from the commit's file manifest.
+``lsn_span`` is the batch's valid-event LSN span (absent when the batch
+held no valid event); it is the stream's only persisted record of which
+LSNs it has applied (``cdc/stream.py``). ``phases`` holds the epoch's
+layer walls and housekeeping counters (absent on a crash-resume skip).
 
 Writes are atomic (tmp + rename) and keyed by epoch id, so a replayed
 epoch after crash-resume overwrites its own document — lineage stays
@@ -69,7 +73,6 @@ class LineageLog:
             ),
             "skipped": skipped,
             "max_key_events": stats.max_key_events,
-            "lsn_range": stats.lsn_range,
             "per_bucket": stats.per_bucket,
             **(extra or {}),
         }

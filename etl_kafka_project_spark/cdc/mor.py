@@ -253,8 +253,7 @@ def write_delta_files(table: LakeTable, folded_with_bucket: DataFrame, snap: Sna
     parent version is strictly increasing across applied epochs)."""
     rows = delta_rows(folded_with_bucket, snap, writer_version=snap.version)
     rows = rows.repartition(max(1, snap.props["n_buckets"] // 4), F.col("_bucket"))
-    entries = table.write_data_files(rows, bucket_col="_bucket", kind="delta")
-    return entries
+    return table.write_data_files(rows, kind="delta")
 
 
 def delta_stats(snap: Snapshot) -> dict:
@@ -266,7 +265,6 @@ def delta_stats(snap: Snapshot) -> dict:
 
 def compact_deltas(
     table: LakeTable,
-    min_delta_rows: int = 1,
     delta_share: float = 0.0,
     config: EngineConfig | None = None,
     purge_tombstones_below_lsn: int | None = None,
@@ -283,8 +281,7 @@ def compact_deltas(
     when every delta-carrying bucket compacted unconditionally).
     ``delta_share=0`` compacts every delta-carrying bucket (full
     compaction — maintenance / end-of-replay). No-op when the table
-    carries fewer delta rows than ``min_delta_rows`` and no purge is
-    asked for.
+    carries no delta rows and no purge is asked for.
 
     ``purge_tombstones_below_lsn``: tombstone rows with
     ``last_lsn <= watermark`` are dropped for good (SURVEY §2.7 U3) —
@@ -302,7 +299,7 @@ def compact_deltas(
     snap = table.snapshot()
     stats = delta_stats(snap)
     purge = purge_tombstones_below_lsn
-    if stats["delta_rows"] < min_delta_rows and purge is None:
+    if not stats["delta_rows"] and purge is None:
         return {**stats, "compacted": False}
     t0 = time.time()
     base_rows: dict[int, int] = {}
@@ -344,7 +341,7 @@ def compact_deltas(
         resolved = salted_repartition(resolved, snap.props["key_columns"], splits)
     else:
         resolved = resolved.repartition(max(1, len(touched) // 2), F.col("_bucket"))
-    new_files = table.write_data_files(resolved, bucket_col="_bucket", kind="base")
+    new_files = table.write_data_files(resolved, kind="base")
     # Commit by EXACT removed-file set, not by bucket: removal of the
     # resolved inputs commutes with a concurrent epoch appending new
     # delta files to the same buckets (the retry keeps them — they are

@@ -25,15 +25,17 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: upper bound on one bucket's write splits (= output files)
+MAX_SPLITS = 64
+
 
 def plan_write_splits(
     expected_rows: Mapping[int, int],
     target_file_rows: int,
-    max_splits: int = 64,
 ) -> dict[int, int]:
-    """Splits per bucket: ceil(rows/target), clamped to [1, max_splits]."""
+    """Splits per bucket: ceil(rows/target), clamped to [1, MAX_SPLITS]."""
     return {
-        b: max(1, min(max_splits, -(-int(rows) // max(1, target_file_rows))))
+        b: max(1, min(MAX_SPLITS, -(-int(rows) // max(1, target_file_rows))))
         for b, rows in expected_rows.items()
     }
 
@@ -42,7 +44,6 @@ def salted_repartition(
     df: DataFrame,
     key_columns: Sequence[str],
     splits: Mapping[int, int],
-    bucket_col: str = "_bucket",
 ) -> DataFrame:
     """Repartition merge output by (bucket, salt) ahead of the bucketed
     file write. Total partitions = Σ splits so every split maps to ~one
@@ -50,7 +51,7 @@ def salted_repartition(
     n_parts = max(1, sum(splits.values()))
     if all(s <= 1 for s in splits.values()):
         # no hot bucket — plain repartition by bucket, one file each
-        return df.repartition(n_parts, F.col(bucket_col))
+        return df.repartition(n_parts, F.col("_bucket"))
     # bucket → n_splits as a map literal; salt only fans out hot buckets
     map_args: list[F.Column] = []
     for b, s in splits.items():
@@ -58,10 +59,10 @@ def salted_repartition(
     splits_map = F.create_map(*map_args)
     salt = F.pmod(
         F.hash(*[F.col(k) for k in key_columns], F.lit("w")),
-        F.coalesce(splits_map[F.col(bucket_col)], F.lit(1)),
+        F.coalesce(splits_map[F.col("_bucket")], F.lit(1)),
     )
     return (
         df.withColumn("_salt", salt)
-        .repartition(n_parts, F.col(bucket_col), F.col("_salt"))
+        .repartition(n_parts, F.col("_bucket"), F.col("_salt"))
         .drop("_salt")
     )

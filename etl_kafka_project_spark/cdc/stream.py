@@ -34,7 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA, split_dead_letters
+from etl_kafka_project_spark.cdc.envelope import (
+    EVENT_SCHEMA,
+    dead_letter_reason,
+    split_dead_letters,
+)
+from etl_kafka_project_spark.functions.exprcache import cached_exprs
 
 #: max snapshot-CAS losses one epoch tolerates before failing the query;
 #: each loss means a concurrent stream committed — the retry re-merges
@@ -101,7 +106,6 @@ class ReplayJob:
     stream_id: str = "replay"
     event_schema: T.StructType = field(default_factory=lambda: EVENT_SCHEMA)
     max_files_per_trigger: int | None = None
-    salt: int | None = None
     source_format: str = "parquet"  # or "json" (cdc/sources.py)
     #: e.g. "10 minutes": enables cross-epoch dedup of re-delivered
     #: events with an event-time watermark declared on the stream
@@ -115,13 +119,15 @@ class ReplayJob:
     #:   SERIAL: epoch N's snapshot commit lands before epoch N+1 is
     #:   planned, so by the delivery contract (epochs LSN-range-disjoint
     #:   except verbatim re-delivery, ``cdc/fold.py``) any event with
-    #:   ``lsn <= `` this stream's committed high-water mark IS a
+    #:   ``lsn <= `` this stream's applied high-water mark IS a
     #:   re-delivery. ``apply_epoch`` drops those with one cheap literal
     #:   predicate — no state store, no extra shuffle; the watermark
     #:   stays declared on the stream for event-time/late-data
     #:   semantics. Measured ~3.6x cheaper than ``"state"`` at bench
-    #:   scale (round-3 verdict #3); the hwm persists next to the
-    #:   checkpoint so kill-and-resume keeps the guarantee.
+    #:   scale (round-3 verdict #3). The mark is the top of the order
+    #:   guard's applied LSN intervals, which the lineage docs'
+    #:   ``lsn_span`` rebuild on restart, so kill-and-resume keeps the
+    #:   guarantee.
     #: * ``"state"`` — the literal north-star construct:
     #:   ``dropDuplicatesWithinWatermark`` on (key..., lsn) BEFORE
     #:   ``foreachBatch``, shuffling every event into the streaming
@@ -130,7 +136,10 @@ class ReplayJob:
     #:   deliveries before committing would).
     watermark_scope: str = "committed"
     #: filled as epochs apply (driver-side; one entry per foreachBatch call)
-    applied: list[MergeStats] = field(default_factory=list)
+    applied: list[MergeStats] = field(default_factory=list, init=False)
+    #: two-phase fold fan-out, set once an epoch shows a hot key
+    #: (adaptive salting, see ``apply_epoch``)
+    salt: int | None = field(default=None, init=False)
 
     #: emit an outbound change feed (reference Redis pub/sub analog,
     #: ``redis_interface.py:121-123``) under <table_root>/changelog
@@ -148,91 +157,56 @@ class ReplayJob:
     def lineage_dir(self) -> str:
         return os.path.join(self.checkpoint_dir, "lineage")
 
-    # ---------- committed high-water mark (watermark_scope="committed") ----------
+    # ---------- applied LSN intervals (order guard + committed dedup) ----------
 
-    @property
-    def _hwm_path(self) -> str:
-        return os.path.join(self.checkpoint_dir, "hwm.json")
-
-    def _committed_hwm(self) -> int | None:
-        """Max LSN this stream has committed, surviving restarts (read
-        once per process, then tracked driver-side)."""
-        if not hasattr(self, "_hwm"):
-            import json
-
-            try:
-                with open(self._hwm_path) as f:
-                    self._hwm = int(json.load(f)["hwm"])
-            except (OSError, ValueError, KeyError):
-                self._hwm = None
-        return self._hwm
-
-    def _advance_hwm(self, max_lsn: int) -> None:
-        """Persist the new high-water mark AFTER the snapshot commit.
-        A crash between commit and this write just leaves a stale hwm;
-        the merge's own per-key staleness guards still no-op the
-        re-delivery, so the filter is an optimization that is always
-        safe to lag."""
-        import json
-
-        cur = self._committed_hwm()
-        if cur is not None and max_lsn <= cur:
-            return
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = self._hwm_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"hwm": int(max_lsn), "stream": self.stream_id}, f)
-        os.replace(tmp, self._hwm_path)
-        self._hwm = int(max_lsn)
-
-    # ---------- delivery-order guard (config.order_guard) ----------
-
-    def _applied_lsn_ranges(self) -> list[list[int]]:
+    def _applied_lsn_intervals(self) -> list[list[int]]:
         """Coalesced [min, max] LSN intervals of every epoch this stream
-        has applied, rebuilt from the lineage log on first use so the
-        guard survives restarts (a crash in the commit→lineage-record
-        window loses at most that one epoch's interval; the consequence
-        is a possible spurious guard trip on its re-delivery — loud,
-        never silent corruption)."""
-        if not hasattr(self, "_lsn_ranges"):
+        has applied; the top of the last one is the applied high-water
+        mark. Rebuilt from the lineage docs' ``lsn_span`` on first use,
+        so both the order guard and the committed-scope dedup survive
+        restarts. A crash between the snapshot commit and the lineage
+        record leaves no doc, but Spark retries the same epoch with the
+        same batch, and the skip path records the span from that
+        batch."""
+        if not hasattr(self, "_lsn_intervals"):
             ranges = []
             for doc in LineageLog(self.lineage_dir, self.stream_id).read_all():
                 # lsn_span = the batch's full valid span
                 r = doc.get("lsn_span")
                 if r:
                     ranges.append([int(r[0]), int(r[1])])
-            self._lsn_ranges: list[list[int]] = _coalesce_ranges(ranges)
-        return self._lsn_ranges
+            self._lsn_intervals: list[list[int]] = _coalesce_ranges(ranges)
+        return self._lsn_intervals
 
     def _note_applied_range(self, lo: int, hi: int) -> None:
-        self._lsn_ranges = _coalesce_ranges(self._applied_lsn_ranges() + [[lo, hi]])
+        self._lsn_intervals = _coalesce_ranges(self._applied_lsn_intervals() + [[lo, hi]])
 
-    def _skip_committed(
-        self, table: LakeTable, lineage: LineageLog, epoch_id: int
-    ) -> tuple[MergeStats, list[int] | None]:
-        """Exactly-once skip of an epoch the table already committed — a
-        crash-resume retry, or a concurrent retry of this stream that won
-        the CAS with our epoch id. Returns the skipped stats, carrying the
-        original commit's ``lsn_range``, and that commit's ``lsn_span``
-        (None if it left no lineage doc), which also goes back into the
-        order guard's applied intervals: the caller overwrites the
-        original lineage doc, and a doc without the span would make a
-        restarted job trip a spurious violation on the next verbatim
-        re-delivery."""
-        stats = MergeStats(
+    @staticmethod
+    def _skip_committed(table: LakeTable, epoch_id: int) -> MergeStats:
+        """Stats of an exactly-once skip of an epoch the table already
+        committed — a crash-resume retry, or a concurrent retry of this
+        stream that won the CAS with our epoch id."""
+        return MergeStats(
             epoch_id=epoch_id, events_in=0, keys=0, upserts=0, deletes=0,
             touched_buckets=0, wall_ms=0.0, per_bucket=[], skipped=True,
             snapshot_version=table.current_version(),
         )
-        prev = lineage.read_epoch(epoch_id) or {}
-        if prev.get("lsn_range"):
-            stats.lsn_range = [int(x) for x in prev["lsn_range"]]
-        span = prev.get("lsn_span")
-        if span:
-            span = [int(span[0]), int(span[1])]
-            if self.config.order_guard != "off":
-                self._note_applied_range(*span)
-        return stats, span
+
+    @staticmethod
+    def _batch_metrics() -> list[F.Column]:
+        """The batch's dead-letter count and valid-event lsn span —
+        min/max over valid rows only (a dead letter's bogus lsn must not
+        trip the order guard). Memoized unbound expressions."""
+
+        def build() -> list[F.Column]:
+            valid_lsn = F.when(dead_letter_reason().isNull(), F.col("lsn"))
+            return [
+                F.sum(dead_letter_reason().isNotNull().cast("long")).alias("n_dead"),
+                F.min(valid_lsn).alias("lsn_min"),
+                F.max(valid_lsn).alias("lsn_max"),
+            ]
+
+        return cached_exprs("epoch_obs_metrics", build)
 
     # ---------- incompatible-type dead letters ----------
 
@@ -267,8 +241,6 @@ class ReplayJob:
         carry a non-null value in an incompatibly-typed column — merging
         those would silently coerce (string→int null-fills, int→string
         stringifies) instead of honoring the evolve contract."""
-        from etl_kafka_project_spark.cdc.envelope import dead_letter_reason
-
         _, dead = split_dead_letters(batch_df)
         if bad_cols:
             incompat = batch_df.filter(
@@ -311,8 +283,17 @@ class ReplayJob:
                 bad = self._incompatible_columns(table, batch_df.schema)
                 self._quarantined(batch_df, bad).write.mode("overwrite").parquet(dead_path)
                 dead_counts = _dead_letter_counts(dead_path)
-            stats, span = self._skip_committed(table, lineage, epoch_id)
-            extra = {"lsn_span": span} if span else {}
+            # the epoch's span comes from the batch itself (one aggregate,
+            # skip path only): the crashed attempt may have died before
+            # recording its lineage doc, and a doc without the span would
+            # make a restarted job trip a spurious order violation on the
+            # next verbatim re-delivery
+            m = batch_df.agg(*self._batch_metrics()).first()
+            extra = {}
+            if m["lsn_min"] is not None:
+                extra["lsn_span"] = [int(m["lsn_min"]), int(m["lsn_max"])]
+                self._note_applied_range(*extra["lsn_span"])
+            stats = self._skip_committed(table, epoch_id)
             lineage.record(stats, dead_letters=dead_counts, skipped=True, extra=extra)
             self.applied.append(stats)
             return stats
@@ -333,31 +314,11 @@ class ReplayJob:
         # and sheds a job from the per-trigger serial floor.
         from pyspark.sql import Observation
 
-        from etl_kafka_project_spark.cdc.envelope import dead_letter_reason
-
-        from etl_kafka_project_spark.functions.exprcache import cached_exprs
-
-        dead_obs = Observation()
         # the same single-pass observation also captures the batch's
-        # PRE-dedup-filter valid-event lsn span for the delivery-order
-        # guard — min/max over valid rows only (a dead letter's bogus
-        # lsn must not trip the guard), at zero extra jobs
-        _lsn = self.config.lsn_column
-        obs_exprs = cached_exprs(
-            ("epoch_obs_metrics", _lsn),
-            lambda: [
-                F.sum(
-                    dead_letter_reason().isNotNull().cast("long")
-                ).alias("n_dead"),
-                F.min(
-                    F.when(dead_letter_reason().isNull(), F.col(_lsn))
-                ).alias("lsn_min"),
-                F.max(
-                    F.when(dead_letter_reason().isNull(), F.col(_lsn))
-                ).alias("lsn_max"),
-            ],
-        )
-        batch = batch_df.observe(dead_obs, *obs_exprs)
+        # PRE-dedup-filter valid-event lsn span for the applied
+        # intervals, at zero extra jobs
+        dead_obs = Observation()
+        batch = batch_df.observe(dead_obs, *self._batch_metrics())
         valid, _ = split_dead_letters(batch)
 
         # incompatible-typed columns (rare; driver-side schema diff,
@@ -370,18 +331,16 @@ class ReplayJob:
             valid = valid.filter(~self._incompat_predicate(bad_cols)).drop(*bad_cols)
 
         # watermarked cross-epoch dedup, "committed" scope: every
-        # event at or below this stream's committed high-water mark
+        # event at or below this stream's applied high-water mark
         # is a verbatim re-delivery (delivery contract; foreachBatch
         # commits serially) — drop pre-merge with a literal
         # predicate instead of a state-store shuffle. Valid events
         # always carry a non-null lsn (envelope P2), so the
         # null-unsafe comparison never drops a fresh event.
         if self.watermark and self.watermark_scope == "committed":
-            hwm = self._committed_hwm()
-            if hwm is not None:
-                valid = valid.filter(
-                    F.col(self.config.lsn_column) > F.lit(int(hwm))
-                )
+            ranges = self._applied_lsn_intervals()
+            if ranges:
+                valid = valid.filter(F.col("lsn") > F.lit(ranges[-1][1]))
 
         # Optimistic-concurrency retry: two live streams replaying
         # into ONE table interleave snapshot commits; the loser's
@@ -407,10 +366,6 @@ class ReplayJob:
         batch_schema_fp = valid.schema.json()
         if not hasattr(self, "_covered_schemas"):
             self._covered_schemas: set[str] = set()
-
-        # set only by the conflict-skip branch: the winner's span,
-        # carried into the overwritten lineage doc below
-        lsn_span_carried: list[int] | None = None
 
         for attempt in range(EPOCH_COMMIT_RETRIES + 1):
             try:
@@ -439,9 +394,7 @@ class ReplayJob:
                     # a concurrent retry of THIS stream won with our
                     # epoch id — exactly-once skip, same as the
                     # crash-resume path above
-                    stats, lsn_span_carried = self._skip_committed(
-                        table, lineage, epoch_id
-                    )
+                    stats = self._skip_committed(table, epoch_id)
                     break
         else:
             raise SnapshotConflictError(
@@ -456,7 +409,8 @@ class ReplayJob:
         # per-reason counts come from the written files' metadata —
         # no dedicated counting job. The merge job above always runs
         # (even for an empty batch), so the observation never blocks.
-        if int(dead_obs.get["n_dead"] or 0) > 0 or bad_cols:
+        obs = dead_obs.get
+        if int(obs["n_dead"] or 0) > 0 or bad_cols:
             self._quarantined(batch_df, bad_cols).write.mode("overwrite").parquet(
                 dead_path
             )
@@ -469,37 +423,35 @@ class ReplayJob:
         phases["dead_letters_s"] = round(_time.time() - t, 2)
         t = _time.time()
 
-        # Delivery-order guard: the observation above saw the batch's
-        # valid-lsn span BEFORE the committed-hwm dedup filter, so an
-        # out-of-order FIRST delivery is caught even when that filter
-        # would silently drop it. Detection is exact for the realistic
-        # failure shape (a whole late segment): the batch's min lsn
-        # falls below the applied high-water mark yet inside no applied
-        # interval. Re-deliveries pass (their lsns lie inside applied
-        # intervals), and in-order streams keep the bookkeeping at ONE
-        # coalesced interval. Events between a violating batch's min and
-        # max that fall in a gap while the min does not are the only
-        # shape the [min,max] summary cannot see.
+        # Applied LSN intervals + delivery-order guard: the observation
+        # above saw the batch's valid-lsn span BEFORE the committed-scope
+        # dedup filter, so an out-of-order FIRST delivery is caught even
+        # when that filter would silently drop it. Detection is exact
+        # for the realistic failure shape (a whole late segment): the
+        # batch's min lsn falls below the applied high-water mark yet
+        # inside no applied interval. Re-deliveries pass (their lsns lie
+        # inside applied intervals), and in-order streams keep the
+        # bookkeeping at ONE coalesced interval. Events between a
+        # violating batch's min and max that fall in a gap while the min
+        # does not are the only shape the [min,max] summary cannot see.
+        # A conflict-skipped epoch records its span but is not checked:
+        # the winner that applied it already was.
         order_violation: tuple[int, int] | None = None
-        lsn_span: list[int] | None = lsn_span_carried
-        if self.config.order_guard != "off" and not stats.skipped:
-            obs = dead_obs.get
-            lo, hi = obs.get("lsn_min"), obs.get("lsn_max")
-            if lo is not None:
-                ranges = self._applied_lsn_ranges()
-                hwm = ranges[-1][1] if ranges else None
-                if hwm is not None and lo <= hwm and not any(
-                    a <= lo <= b for a, b in ranges
-                ):
-                    order_violation = (int(lo), int(hwm))
-                    phases["order_violation"] = [int(lo), int(hwm)]
-                lsn_span = [int(lo), int(hi)]
-                self._note_applied_range(*lsn_span)
-
-        # advance the committed high-water mark only after the epoch's
-        # snapshot commit landed (merge_events returned)
-        if self.watermark and self.watermark_scope == "committed" and stats.lsn_range:
-            self._advance_hwm(stats.lsn_range[1])
+        lsn_span: list[int] | None = None
+        lo, hi = obs["lsn_min"], obs["lsn_max"]
+        if lo is not None:
+            ranges = self._applied_lsn_intervals()
+            if (
+                self.config.order_guard != "off"
+                and not stats.skipped
+                and ranges
+                and lo <= ranges[-1][1]
+                and not any(a <= lo <= b for a, b in ranges)
+            ):
+                order_violation = (int(lo), int(ranges[-1][1]))
+                phases["order_violation"] = list(order_violation)
+            lsn_span = [int(lo), int(hi)]
+            self._note_applied_range(*lsn_span)
 
         # Housekeeping: fold deltas into base every N applied epochs
         # (idempotent; a crash before/after just defers it). Bounds
@@ -546,9 +498,8 @@ class ReplayJob:
 
         extra: dict = {"phases": phases}
         if lsn_span is not None:
-            # the batch's FULL valid-lsn span (pre-dedup-filter, all
-            # events — vs lsn_range's fold-shaped min-of-per-key-maxima);
-            # the order guard rebuilds its applied intervals from this
+            # the batch's FULL valid-lsn span (pre-dedup-filter); a
+            # restarted job rebuilds its applied intervals from this
             extra["lsn_span"] = lsn_span
         lineage.record(
             stats, dead_letters=dead_counts, skipped=stats.skipped, extra=extra
@@ -596,10 +547,10 @@ class ReplayJob:
             events = events.withWatermark("ts", self.watermark)
             if self.watermark_scope == "state":
                 events = events.dropDuplicatesWithinWatermark(
-                    [*self.config.key_columns, self.config.lsn_column]
+                    [*self.config.key_columns, "lsn"]
                 )
             # "committed" scope drops re-deliveries in apply_epoch via
-            # the persisted high-water mark (see watermark_scope above)
+            # the applied high-water mark (see watermark_scope above)
         writer = (
             events.writeStream.queryName(f"cdc-{self.stream_id}")
             .option("checkpointLocation", os.path.join(self.checkpoint_dir, "spark"))
@@ -621,26 +572,3 @@ class ReplayJob:
             raise q.exception()
         return self.applied
 
-
-def run_replay(
-    spark: SparkSession,
-    table_root: str,
-    stream_dir: str,
-    checkpoint_dir: str,
-    config: EngineConfig | None = None,
-    stream_id: str = "replay",
-    event_schema: T.StructType | None = None,
-    max_files_per_trigger: int | None = None,
-) -> list[MergeStats]:
-    """One-call replay: tail ``stream_dir`` into the table at
-    ``table_root`` until the backlog drains (availableNow)."""
-    job = ReplayJob(
-        table_root=table_root,
-        stream_dir=stream_dir,
-        checkpoint_dir=checkpoint_dir,
-        config=(config or EngineConfig()).validate(),
-        stream_id=stream_id,
-        event_schema=event_schema or EVENT_SCHEMA,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-    return job.run(spark)

@@ -1,13 +1,15 @@
 """Engine configuration.
 
 The analog of the reference's startup config-validation gate
-(``utils/config.py:52-137``): every run validates its knobs up front and
-fails fast with a typed error instead of mid-stream.
+(``utils/config.py:52-137``): every ``EngineConfig`` is validated when it
+is constructed, so a bad knob fails fast with a typed error instead of
+mid-stream.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 
 class ConfigError(ValueError):
@@ -28,14 +30,14 @@ class EngineConfig:
     (observed for free on the merge's write job) show a key at or above
     it, subsequent epochs fold via the two-phase salted aggregation
     (``cdc/fold.py``; reactive AQE-style detection — see
-    ``cdc/stream.py``). Callers can still force salting up front with
-    ``ReplayJob.salt`` / ``merge_events(salt=...)``. ``salt_buckets`` is
-    the fan-out of phase one.
+    ``cdc/stream.py``). A direct ``merge_events(salt=...)`` call can
+    force salting up front. ``salt_buckets`` is the fan-out of phase one.
+
+    The change-event envelope's ``lsn``/``op`` column names are fixed
+    (``cdc/envelope.py``), and the compaction cadence is a constant.
     """
 
     key_columns: tuple[str, ...] = ("repo", "path")
-    lsn_column: str = "lsn"
-    op_column: str = "op"
     n_buckets: int = 32
     hot_key_threshold: int = 100_000
     salt_buckets: int = 16
@@ -44,13 +46,13 @@ class EngineConfig:
     target_file_rows: int = 2_000_000
     #: epochs append folded delta files, resolved at read and compacted
     #: every ``compact_every_epochs`` applied epochs
-    compact_every_epochs: int = 8
+    compact_every_epochs: ClassVar[int] = 8
     #: per-bucket compaction threshold: a bucket compacts only when
     #: delta_rows / (base_rows + delta_rows) >= this share (0 = always
     #: compact every delta-carrying bucket). Keeps the epoch-cadence
     #: compactor from re-reading cold buckets' full base data for a
     #: handful of delta rows.
-    compact_delta_share: float = 0.2
+    compact_delta_share: ClassVar[float] = 0.2
     #: snapshot-expiry housekeeping cadence: every N applied epochs the
     #: ReplayJob runs expire_snapshots(keep_last=expire_keep_last) after
     #: its delta compaction. None (default) = never — snapshot history
@@ -81,13 +83,8 @@ class EngineConfig:
     #: committed: roll back by time travel to ``snapshot_version - 1``
     #: and re-deliver in order).
     order_guard: str = "error"
-    extra: dict = field(default_factory=dict)
 
-    def validate(self) -> "EngineConfig":
-        if self.compact_every_epochs < 1:
-            raise ConfigError("compact_every_epochs must be >= 1")
-        if not (0.0 <= self.compact_delta_share < 1.0):
-            raise ConfigError("compact_delta_share must be in [0, 1)")
+    def __post_init__(self) -> None:
         if self.expire_snapshots_every_epochs is not None and (
             self.expire_snapshots_every_epochs < 1
         ):
@@ -104,6 +101,5 @@ class EngineConfig:
             raise ConfigError(f"salt_buckets must be >= 1, got {self.salt_buckets}")
         if self.hot_key_threshold < 1:
             raise ConfigError("hot_key_threshold must be >= 1")
-        if self.lsn_column in self.key_columns or self.op_column in self.key_columns:
+        if {"lsn", "op"} & set(self.key_columns):
             raise ConfigError("lsn/op columns cannot be key columns")
-        return self

@@ -254,7 +254,6 @@ class LakeTable:
         schema: T.StructType,
         key_columns: list[str],
         n_buckets: int = 32,
-        props: dict | None = None,
     ) -> "LakeTable":
         """CREATE TABLE: empty snapshot v0 (ref empty-state bootstrap,
         ``pyspark_interface.py:34``). Refuses to clobber an existing
@@ -271,7 +270,7 @@ class LakeTable:
             schema=schema,
             files=(),
             committed_epochs={},
-            props={"key_columns": list(key_columns), "n_buckets": n_buckets, **(props or {})},
+            props={"key_columns": list(key_columns), "n_buckets": n_buckets},
             ts=time.time(),
         )
         _atomic_write_json(table._snapshot_path(0), snap.to_json_manifests())
@@ -405,39 +404,32 @@ class LakeTable:
 
     # ---------- write ----------
 
-    def write_data_files(
-        self,
-        df: DataFrame,
-        bucket_col: str = "_bucket",
-        kind: str = "base",
-        stats_columns: list[str] | None = None,
-    ) -> list[FileEntry]:
-        """Write a DataFrame (carrying its bucket id in ``bucket_col``) as
+    def write_data_files(self, df: DataFrame, kind: str = "base") -> list[FileEntry]:
+        """Write a DataFrame (carrying its bucket id in ``_bucket``) as
         new data files; returns entries to pass to :meth:`commit`.
 
         The caller controls parallelism by repartitioning before the call
         (e.g. salted repartition for write-skew, ``cdc/salting.py``).
         Files are written by Spark directly into a staging dir, then moved
-        (same-filesystem rename) under ``data/``. Per-file [min, max] for
-        ``stats_columns`` (default: the key columns) are lifted from the
-        parquet footers into the manifest for read-time file pruning.
+        (same-filesystem rename) under ``data/``. Per-file [min, max] of
+        the key columns are lifted from the parquet footers into the
+        manifest for read-time file pruning.
         """
-        if stats_columns is None:
-            # header read only: this default runs on the per-epoch write
-            # hot path, and assembling every bucket's manifest just to
-            # read props would be O(n_buckets) file opens per epoch
-            try:
-                stats_columns = list(self.snapshot_header().props["key_columns"])
-            except FileNotFoundError:
-                stats_columns = []
+        # header read only: this runs on the per-epoch write hot path,
+        # and assembling every bucket's manifest just to read props
+        # would be O(n_buckets) file opens per epoch
+        try:
+            key_cols = list(self.snapshot_header().props["key_columns"])
+        except FileNotFoundError:
+            key_cols = []
         staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        df.write.partitionBy(bucket_col).mode("overwrite").parquet(staging)
+        df.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
         entries: list[FileEntry] = []
         try:
             import pyarrow.parquet as pq
 
             for bucket_dir in sorted(os.listdir(staging)):
-                if not bucket_dir.startswith(f"{bucket_col}="):
+                if not bucket_dir.startswith("_bucket="):
                     continue
                 bucket = int(bucket_dir.split("=", 1)[1])
                 dest_dir = os.path.join(self.root, "data", f"b{bucket:05d}")
@@ -450,7 +442,7 @@ class LakeTable:
                     rows = meta.num_rows
                     if rows == 0:
                         continue
-                    stats = _footer_stats(meta, stats_columns)
+                    stats = _footer_stats(meta, key_cols)
                     prefix = "delta" if kind == "delta" else "part"
                     name = f"{prefix}-{uuid.uuid4().hex}.parquet"
                     os.rename(src, os.path.join(dest_dir, name))
@@ -476,7 +468,6 @@ class LakeTable:
         removed_files: set[str] | None = None,
         schema: T.StructType | None = None,
         epoch: tuple[str, int] | None = None,
-        props_update: dict | None = None,
     ) -> Snapshot:
         """Atomically commit a new snapshot.
 
@@ -537,7 +528,7 @@ class LakeTable:
             schema=schema or parent.schema,
             files=tuple(kept) + tuple(new_files),
             committed_epochs=epochs,
-            props={**parent.props, **(props_update or {})},
+            props=parent.props,
             ts=time.time(),
             manifests=manifests,
         )

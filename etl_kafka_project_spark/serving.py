@@ -94,11 +94,11 @@ def search(
     return out.limit(limit) if limit is not None else out
 
 
-def fill_none(df: DataFrame, placeholder: str = "None") -> DataFrame:
-    """Replace nulls in string columns with a placeholder at the read
+def fill_none(df: DataFrame) -> DataFrame:
+    """Replace nulls in string columns with ``"None"`` at the read
     boundary — reference sink behavior (``redis_interface.py:63-74``)."""
     string_cols = [name for name, dtype in df.dtypes if dtype == "string"]
-    return df.na.fill(placeholder, subset=string_cols)
+    return df.na.fill("None", subset=string_cols)
 
 
 # ---------- change feed (pub/sub analog) ----------

@@ -122,8 +122,8 @@ def test_injected_conflict_retries_and_lands(spark, tmp_path, monkeypatch):
 def test_conflict_skip_preserves_winner_lsn_span(spark, tmp_path, monkeypatch):
     """A concurrent retry of the SAME stream wins epoch 1's commit; the
     loser takes the exactly-once skip branch. The skip must overwrite
-    the winner's lineage doc WITHOUT erasing its lsn_span/lsn_range
-    (the order guard's applied-interval evidence) and must record
+    the winner's lineage doc WITHOUT erasing its lsn_span (the order
+    guard's applied-interval evidence) and must record
     skipped=true — otherwise a restarted job rebuilds its intervals
     missing that epoch and a verbatim re-delivery trips a spurious
     OutOfOrderDeliveryError (round-5 review finding)."""
@@ -154,7 +154,6 @@ def test_conflict_skip_preserves_winner_lsn_span(spark, tmp_path, monkeypatch):
     doc = LineageLog(job.lineage_dir, "s1").read_epoch(1)
     assert doc["skipped"] is True
     assert doc.get("lsn_span"), doc
-    assert doc.get("lsn_range"), doc
     _compare(_final_state(spark, tmp_path), [ev])
 
     # restart: a fresh job rebuilds its applied intervals from lineage;

@@ -15,7 +15,7 @@ def test_plan_write_splits_hot_bucket_fans_out():
 
 
 def test_plan_write_splits_clamps():
-    splits = plan_write_splits({0: 10**12}, target_file_rows=1_000_000, max_splits=64)
+    splits = plan_write_splits({0: 10**12}, target_file_rows=1_000_000)
     assert splits[0] == 64
     assert plan_write_splits({0: 1}, target_file_rows=0)[0] >= 1
 

@@ -22,12 +22,12 @@ def _final_state_pdf(table):
     return table.read().select(*cols).toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
 
 
-def _job(tmp_path, **kw):
+def _job(tmp_path, config=CFG, **kw):
     return ReplayJob(
         table_root=str(tmp_path / "table"),
         stream_dir=str(tmp_path / "stream"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        config=CFG,
+        config=config,
         **kw,
     )
 
@@ -233,15 +233,18 @@ def _dup_stream(tmp_path):
     return events
 
 
-def test_watermarked_cross_epoch_dedup(spark, tmp_path):
+@pytest.mark.parametrize("order_guard", ["error", "off"])
+def test_watermarked_cross_epoch_dedup(spark, tmp_path, order_guard):
     """north star: dropDuplicates over watermarked state. A verbatim
     duplicate delivered in a LATER epoch (outside the per-batch fold's
-    sight) must be dropped pre-merge. Default scope ("committed"): the
-    persisted high-water-mark predicate does the dropping — no state
-    store shuffle (round-3 verdict #3)."""
+    sight) must be dropped pre-merge. Default scope ("committed"): a
+    predicate on the applied high-water mark does the dropping — no
+    state store shuffle (round-3 verdict #3). The mark is the top of
+    the applied LSN intervals, kept whatever the order guard's mode."""
     events = _dup_stream(tmp_path)
     create_code_table(spark, str(tmp_path / "table"), CFG)
-    job = _job(tmp_path, max_files_per_trigger=1, watermark="1 hour")
+    cfg = EngineConfig(n_buckets=CFG.n_buckets, order_guard=order_guard)
+    job = _job(tmp_path, config=cfg, max_files_per_trigger=1, watermark="1 hour")
     stats = job.run(spark)
     assert len(stats) == 3
     assert stats[2].events_in == 0  # the re-delivered epoch applied nothing
@@ -272,9 +275,10 @@ def test_watermarked_state_scope_dedup(spark, tmp_path):
 
 
 def test_watermarked_hwm_survives_restart(spark, tmp_path):
-    """committed-scope hwm persists next to the checkpoint: a NEW job
-    object (process restart) resuming the same checkpoint still drops a
-    duplicate segment delivered after the restart."""
+    """the committed-scope high-water mark survives a restart: a NEW job
+    object resuming the same checkpoint rebuilds it from the lineage
+    docs' lsn_span and still drops a duplicate segment delivered after
+    the restart."""
     spec = StreamSpec(n_events=400, n_keys=60, n_segments=2, dup_rate=0.0,
                       shuffle_within_segment=False, min_lines=2, max_lines=3)
     events, segs = generate_stream(str(tmp_path / "stream"), spec)
@@ -282,7 +286,6 @@ def test_watermarked_hwm_survives_restart(spark, tmp_path):
 
     job1 = _job(tmp_path, max_files_per_trigger=1, watermark="1 hour")
     assert len(job1.run(spark)) == 2
-    assert os.path.exists(os.path.join(str(tmp_path / "ckpt"), "hwm.json"))
 
     # "restart": fresh driver-side job state, same checkpoint; the dupe
     # arrives only now, so Spark's offsets alone can't skip it
@@ -386,6 +389,57 @@ def test_order_guard_trips_on_out_of_order_first_delivery(spark, tmp_path):
     job3.apply_epoch(read(segs[2]), 3)
     doc = LineageLog(job3.lineage_dir, job3.stream_id).read_epoch(3)
     assert "order_violation" not in doc["phases"]
+
+
+def test_crash_after_commit_before_lineage_record(spark, tmp_path, monkeypatch):
+    """Fault at the "after CAS commit" boundary: epoch 1's snapshot
+    commits, then the process dies before its lineage doc is written. A
+    fresh job resuming the same checkpoint skips the epoch and records
+    its lsn_span from the batch, so a later verbatim re-delivery passes
+    the order guard and the final state matches the oracle."""
+    spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
+    events, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+
+    orig = LineageLog.record
+    crashed = []
+
+    def crash_once(self, stats, *a, **kw):
+        if stats.epoch_id == 1 and not crashed:
+            crashed.append(1)
+            raise RuntimeError("injected crash before the lineage record")
+        return orig(self, stats, *a, **kw)
+
+    monkeypatch.setattr(LineageLog, "record", crash_once)
+    job = _job(tmp_path)
+    job.apply_epoch(read(segs[0]), 0)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.apply_epoch(read(segs[1]), 1)
+    lineage = LineageLog(job.lineage_dir, job.stream_id)
+    assert lineage.read_epoch(1) is None
+    assert _open(spark, job).snapshot().has_epoch(job.stream_id, 1)
+
+    # restart: fresh driver-side state; Spark retries epoch 1 with the
+    # same batch
+    job2 = _job(tmp_path)
+    assert job2.apply_epoch(read(segs[1]), 1).skipped
+    doc = lineage.read_epoch(1)
+    seg1 = pd.read_parquet(segs[1])
+    assert doc["skipped"] is True
+    assert doc["lsn_span"] == [int(seg1.lsn.min()), int(seg1.lsn.max())]
+
+    job2.apply_epoch(read(segs[2]), 2)
+    job2.apply_epoch(read(segs[3]), 3)
+    # a second restart rebuilds the intervals from lineage alone; the
+    # verbatim re-delivery of segment 1 lies inside them
+    job3 = _job(tmp_path)
+    job3.apply_epoch(read(segs[1]), 4)
+
+    got = _final_state_pdf(_open(spark, job3))
+    want = replay_oracle(events).reindex(columns=got.columns)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_rate_controlled_continuous_tail(spark, tmp_path):

@@ -43,7 +43,7 @@ def main() -> None:
     from etl_kafka_project_spark.cdc.stream import ReplayJob
     from etl_kafka_project_spark.config import EngineConfig
 
-    cfg = EngineConfig(n_buckets=args.n_buckets).validate()
+    cfg = EngineConfig(n_buckets=args.n_buckets)
     if args.create:
         create_code_table(spark, args.table_root, cfg)
 
