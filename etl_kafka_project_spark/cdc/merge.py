@@ -234,7 +234,6 @@ def _merge_mor(
 def merge_events(
     table: LakeTable,
     events: DataFrame,
-    config: EngineConfig,
     epoch: tuple[str, int] | None = None,
     salt: int | None = None,
     changelog_dir: str | None = None,

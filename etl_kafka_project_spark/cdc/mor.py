@@ -77,16 +77,13 @@ def delta_schema(snap: Snapshot) -> T.StructType:
         # key (cdc/fold.py LSN_SAMPLE): lets the resolve subtract the
         # EXACT overlap with earlier commits when one batch mixes
         # re-delivered old events with new ones — the case the whole-row
-        # staleness guard below cannot see. Old delta files null-fill
-        # (no subtraction, the round-2 behavior).
+        # staleness guard below cannot see.
         T.StructField("_lsns", T.ArrayType(T.LongType()), True),
         # commit-order stamp (the writing commit's parent snapshot
         # version): lets the resolve detect cross-epoch re-delivery —
         # a delta row whose _max_lsn is not newer than everything an
         # EARLIER commit applied is a verbatim re-delivery and must not
-        # re-count row_version (a row-level staleness guard). Old delta
-        # files null-fill; nulls sort first, i.e. "oldest", which is the
-        # conservative direction.
+        # re-count row_version (a row-level staleness guard).
         T.StructField("_writer_version", T.LongType(), True),
     ]
     return T.StructType(fields)
@@ -174,14 +171,13 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
     # are tiny (one row per commit that touched the key).
     w = (
         Window.partitionBy(*key_cols)
-        .orderBy(F.col("_writer_version").asc_nulls_first())
+        .orderBy("_writer_version")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prior_max = F.max("_max_lsn").over(w)
-    # only stamped delta rows (version >= 0) can be stale: the encoded
-    # base (-1) is the earliest by construction, and legacy unstamped
-    # deltas (null) fall back to the round-1 behavior (never suppressed)
-    stamped = F.col("_writer_version").isNotNull() & (F.col("_writer_version") >= 0)
+    # only delta rows (version >= 0) can be stale: the encoded base (-1)
+    # is the earliest by construction
+    stamped = F.col("_writer_version") >= 0
     stale_redelivery = stamped & (
         F.col("_max_lsn") <= F.coalesce(prior_max, F.lit(NEVER))
     )
@@ -328,7 +324,7 @@ def compact_deltas(
         touched |= {r["_bucket"] for r in tombs}
         n_tombs = sum(r["count"] for r in tombs)
     if not touched:
-        return {**stats, "compacted": False, "skipped_buckets": len(drow)}
+        return {**stats, "compacted": False, "cold_buckets_skipped": len(drow)}
     resolved = table.read(version=snap.version, buckets=touched, include_tombstones=True)
     if purge is not None:
         resolved = resolved.filter(~dead)

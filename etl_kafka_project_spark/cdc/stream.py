@@ -39,7 +39,12 @@ from etl_kafka_project_spark.cdc.envelope import (
     dead_letter_reason,
     split_dead_letters,
 )
+from etl_kafka_project_spark.cdc.evolution import evolve_table
+from etl_kafka_project_spark.cdc.merge import MergeStats, merge_events
+from etl_kafka_project_spark.cdc.metrics import LineageLog
+from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.functions.exprcache import cached_exprs
+from etl_kafka_project_spark.minilake.table import LakeTable
 
 #: max snapshot-CAS losses one epoch tolerates before failing the query;
 #: each loss means a concurrent stream committed — the retry re-merges
@@ -88,11 +93,6 @@ def _dead_letter_counts(path: str) -> dict[str, int]:
         return {}
     vc = pc.value_counts(table.column("_dead_reason").combine_chunks())
     return {str(e["values"]): int(e["counts"]) for e in vc.to_pylist()}
-from etl_kafka_project_spark.cdc.evolution import evolve_table
-from etl_kafka_project_spark.cdc.merge import MergeStats, merge_events
-from etl_kafka_project_spark.cdc.metrics import LineageLog
-from etl_kafka_project_spark.config import EngineConfig
-from etl_kafka_project_spark.minilake.table import LakeTable
 
 
 @dataclass
@@ -382,7 +382,6 @@ class ReplayJob:
                 stats = merge_events(
                     table,
                     valid,
-                    self.config,
                     epoch=(self.stream_id, epoch_id),
                     salt=self.salt,
                     changelog_dir=self.changelog_dir if self.emit_changelog else None,
@@ -466,9 +465,7 @@ class ReplayJob:
             phases["compact_s"] = round(_time.time() - t, 2)
             t = _time.time()
             phases["compact_buckets"] = c.get("buckets", 0)
-            phases["compact_cold_skipped"] = c.get(
-                "cold_buckets_skipped", c.get("skipped_buckets", 0)
-            )
+            phases["compact_cold_skipped"] = c.get("cold_buckets_skipped", 0)
 
         # Snapshot-expiry housekeeping (opt-in cadence): vacuum snapshot
         # JSONs past the retention window plus data/manifest files no

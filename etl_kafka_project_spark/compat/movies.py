@@ -188,7 +188,7 @@ def run_movie_pipeline(
     the state table after emit-tombstoning)."""
     table = create_movie_table(spark, table_root, config)
     events = enrich(tag_sources(tmdb, omdb), genres, actors, oscars, baftas)
-    merge_events(table, events, config, epoch=("movies", 0))
+    merge_events(table, events, epoch=("movies", 0))
 
     state = table.read()
     # completion trigger: both sources touched the key
@@ -209,5 +209,5 @@ def run_movie_pipeline(
         F.lit("D").alias("op"),
         "imdb_id",
     )
-    merge_events(table, tombstones, config, epoch=("movies", 1))
+    merge_events(table, tombstones, epoch=("movies", 1))
     return emitted, table

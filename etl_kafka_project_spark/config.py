@@ -30,8 +30,9 @@ class EngineConfig:
     (observed for free on the merge's write job) show a key at or above
     it, subsequent epochs fold via the two-phase salted aggregation
     (``cdc/fold.py``; reactive AQE-style detection — see
-    ``cdc/stream.py``). A direct ``merge_events(salt=...)`` call can
-    force salting up front. ``salt_buckets`` is the fan-out of phase one.
+    ``cdc/stream.py``). A direct ``merge_events`` call reads no config:
+    its ``salt=`` argument forces salting up front. ``salt_buckets`` is
+    the fan-out of phase one.
 
     The change-event envelope's ``lsn``/``op`` column names are fixed
     (``cdc/envelope.py``), and the compaction cadence is a constant.

@@ -270,10 +270,11 @@ def build_ivf_index(spark: SparkSession, sf: str, index_dir: str | None = None) 
     there, every query re-runs the full coarse assignment, a full-corpus
     scan per query. Building once amortizes that scan across all queries:
     at 100 TB the build is one pass + one shuffle-free partitioned write,
-    and each query then touches ~nprobe/k of the files (verified live by
-    ``tools/explain_audit.py``: PartitionFilters on centroid_id, and by
-    ``tests/test_ivf_index.py``: input_file_name confined to probed
-    partitions). Idempotent via a _DONE marker."""
+    and each query then touches ~nprobe/k of the files (verified by the
+    plan checks in ``tests/test_entry_oracles.py::test_query_matches_oracle``:
+    PartitionFilters on centroid_id, and by ``tests/test_ivf_index.py``:
+    input_file_name confined to probed partitions). Idempotent via a
+    _DONE marker."""
     index_dir = index_dir or ivf_index_dir(sf)
     if os.path.exists(os.path.join(index_dir, "_DONE")):
         return index_dir

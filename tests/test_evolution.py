@@ -83,10 +83,10 @@ def test_mid_stream_evolution_with_late_old_writer(spark, tmp_table_dir):
     # late old-writer: events after the cut arriving WITHOUT the new columns
     late_old = events[events.lsn > 760].drop(columns=["author", "size"])
 
-    merge_events(table, spark.createDataFrame(pre, EVENT_SCHEMA), CFG, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(pre, EVENT_SCHEMA), epoch=("t", 0))
     evolve_table(table, EVOLVED_EVENT_SCHEMA)
-    merge_events(table, spark.createDataFrame(evolved, EVOLVED_EVENT_SCHEMA), CFG, epoch=("t", 1))
-    merge_events(table, spark.createDataFrame(late_old, EVENT_SCHEMA), CFG, epoch=("t", 2))
+    merge_events(table, spark.createDataFrame(evolved, EVOLVED_EVENT_SCHEMA), epoch=("t", 1))
+    merge_events(table, spark.createDataFrame(late_old, EVENT_SCHEMA), epoch=("t", 2))
 
     cols = ["repo", "path", "commit", "lang", "content", "author", "size",
             "content_sha256", "last_lsn", "row_version"]
@@ -220,13 +220,13 @@ def test_mor_evolution_property(spark, tmp_path_factory, case):
 
     pre = events[events.lsn <= cut].drop(columns=["author"])
     post = events[events.lsn > cut]
-    merge_events(table, spark.createDataFrame(pre, EVENT_SCHEMA), CFG, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(pre, EVENT_SCHEMA), epoch=("t", 0))
     if compact_mid:
         compact_deltas(table, delta_share=0.0)
     evolve_table(table, AUTHOR_SCHEMA)
     if not post.empty:
         merge_events(
-            table, spark.createDataFrame(post, AUTHOR_SCHEMA), CFG, epoch=("t", 1)
+            table, spark.createDataFrame(post, AUTHOR_SCHEMA), epoch=("t", 1)
         )
 
     cols = ["repo", "path", "commit", "lang", "content", "author",

@@ -78,7 +78,7 @@ def test_recorded_kafka_frames_replay_to_oracle_state(spark, tmp_path):
 
     cfg = EngineConfig(n_buckets=8)
     table = create_code_table(spark, str(tmp_path / "table"), cfg)
-    stats = merge_events(table, valid, cfg, epoch=("kafka-contract", 0))
+    stats = merge_events(table, valid, epoch=("kafka-contract", 0))
     assert stats.events_in == valid.count()
 
     got = (

@@ -29,7 +29,7 @@ def _replay_in_batches(spark, table, events: pd.DataFrame, n_batches: int):
         if chunk.empty:
             continue
         sdf = spark.createDataFrame(chunk, EVENT_SCHEMA)
-        merge_events(table, sdf, CFG, epoch=("t", i))
+        merge_events(table, sdf, epoch=("t", i))
 
 
 @pytest.mark.parametrize("n_batches", [1, 7])
@@ -70,9 +70,9 @@ def test_idempotent_reapply_same_fold_is_noop(spark, tmp_table_dir):
     events = generate_events(spec)
     table = create_code_table(spark, tmp_table_dir, CFG)
     sdf = spark.createDataFrame(events, EVENT_SCHEMA)
-    merge_events(table, sdf, CFG)
+    merge_events(table, sdf)
     first = _final_state_pdf(table)
-    merge_events(table, sdf, CFG)  # replay, no epoch bookkeeping
+    merge_events(table, sdf)  # replay, no epoch bookkeeping
     second = _final_state_pdf(table)
     pd.testing.assert_frame_equal(first, second)
 
@@ -83,7 +83,7 @@ def test_sha256_invariant_pandas_udf_equals_builtin(spark, tmp_table_dir):
     spec = StreamSpec(n_events=200, n_keys=40, min_lines=2, max_lines=3)
     events = generate_events(spec)
     table = create_code_table(spark, tmp_table_dir, CFG)
-    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), CFG)
+    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA))
     df = table.read().withColumn("sha_udf", sha256_pandas("content"))
     bad = df.filter(
         ~df.sha_udf.eqNullSafe(df.content_sha256)
@@ -112,10 +112,10 @@ def test_mor_cross_epoch_subset_redelivery(spark, tmp_table_dir):
         }
     )
     table = create_code_table(spark, tmp_table_dir, CFG)
-    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), CFG, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), epoch=("t", 0))
     # epoch 1 re-delivers ONLY the newest event (lsn 5)
     redelivered = spark.createDataFrame(events[events.lsn == 5], EVENT_SCHEMA)
-    merge_events(table, redelivered, CFG, epoch=("t", 1))
+    merge_events(table, redelivered, epoch=("t", 1))
 
     row = table.read().collect()[0].asDict()
     assert row["commit"] == "c5"
@@ -128,7 +128,7 @@ def test_mor_cross_epoch_subset_redelivery(spark, tmp_table_dir):
     from etl_kafka_project_spark.cdc.mor import compact_deltas
 
     compact_deltas(table)
-    merge_events(table, redelivered, CFG, epoch=("t", 2))
+    merge_events(table, redelivered, epoch=("t", 2))
     row = table.read().collect()[0].asDict()
     assert (row["commit"], row["lang"], row["content"], row["row_version"]) == (
         "c5", "rust", "body3", 3,
@@ -160,11 +160,11 @@ def test_mor_redelivery_after_compaction_respects_erased_columns(spark, tmp_tabl
         }
     )
     table = create_code_table(spark, tmp_table_dir, CFG)
-    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), CFG, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), epoch=("t", 0))
     compact_deltas(table, delta_share=0.0)
     # verbatim re-delivery of the pre-delete events only
     redelivered = spark.createDataFrame(events[events.lsn.isin([3, 7])], EVENT_SCHEMA)
-    merge_events(table, redelivered, CFG, epoch=("t", 1))
+    merge_events(table, redelivered, epoch=("t", 1))
 
     row = table.read().collect()[0].asDict()
     assert row["lang"] is None, "erased column resurrected by re-delivery"
@@ -214,12 +214,12 @@ def test_mor_compaction_is_threshold_driven_per_bucket(spark, tmp_table_dir):
 
     # epoch 0: seed both buckets, full-compact to base
     seed = [(i, "I", k) for i, k in enumerate([*cold_keys, hot_key])]
-    merge_events(table, ev(seed), cfg, epoch=("t", 0))
+    merge_events(table, ev(seed), epoch=("t", 0))
     assert compact_deltas(table, delta_share=0.0)["compacted"]
 
     # epoch 1: heavy churn on the hot key, one touch on a cold key
     churn = [(100 + i, "U", hot_key) for i in range(5)] + [(200, "U", cold_keys[0])]
-    merge_events(table, ev(churn), cfg, epoch=("t", 1))
+    merge_events(table, ev(churn), epoch=("t", 1))
 
     snap = table.snapshot()
     cold_base_before = sorted(
@@ -275,7 +275,7 @@ def test_concurrent_merge_writers_conflict_then_retry(spark, tmp_table_dir):
 
     def run(tag: str) -> None:
         try:
-            merge_events(table, batches[tag], CFG, epoch=(tag, 0))
+            merge_events(table, batches[tag], epoch=(tag, 0))
         except BaseException as e:  # record — thread exceptions vanish
             failures[tag] = e
 
@@ -290,7 +290,7 @@ def test_concurrent_merge_writers_conflict_then_retry(spark, tmp_table_dir):
     assert len(failures) <= 1, failures
     assert all(isinstance(e, SnapshotConflictError) for e in failures.values()), failures
     for tag in failures:  # the loser's retry sees the new snapshot and lands
-        merge_events(table, batches[tag], CFG, epoch=(tag, 0))
+        merge_events(table, batches[tag], epoch=(tag, 0))
 
     rows = {r["repo"]: r for r in table.read().collect()}
     assert rows["repo-a"]["commit"] == "c11" and rows["repo-a"]["row_version"] == 2

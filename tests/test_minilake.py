@@ -130,7 +130,7 @@ def test_manifest_stats_pruning(spark, tmp_table_dir):
     cfg = EngineConfig(n_buckets=4)
     events = generate_events(StreamSpec(n_events=600, n_keys=80, min_lines=2, max_lines=3))
     table = create_code_table(spark, tmp_table_dir, cfg)
-    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), cfg, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), epoch=("t", 0))
 
     snap = table.snapshot()
     assert all(f.stats and "repo" in f.stats for f in snap.files)

@@ -56,7 +56,7 @@ def test_compactor_retries_past_concurrent_epoch(spark, tmp_path):
     all events (the late epoch's deltas resolve against the new base)."""
     table = create_code_table(spark, str(tmp_path / "t"), CFG)
     e0, e1 = _events(range(1, 21)), _events(range(21, 31))
-    merge_events(table, spark.createDataFrame(e0, EVENT_SCHEMA), CFG, epoch=("s", 0))
+    merge_events(table, spark.createDataFrame(e0, EVENT_SCHEMA), epoch=("s", 0))
 
     orig = table.commit
     hits = {"injected": 0, "calls": 0}
@@ -69,7 +69,6 @@ def test_compactor_retries_past_concurrent_epoch(spark, tmp_path):
             merge_events(
                 LakeTable(spark, table.root),
                 spark.createDataFrame(e1, EVENT_SCHEMA),
-                CFG,
                 epoch=("s", 1),
             )
         return orig(**kw)
@@ -95,7 +94,7 @@ def test_losing_compactor_aborts_without_duplicates(spark, tmp_path):
     holds each row exactly once."""
     table = create_code_table(spark, str(tmp_path / "t"), CFG)
     e0 = _events(range(1, 31))
-    merge_events(table, spark.createDataFrame(e0, EVENT_SCHEMA), CFG, epoch=("s", 0))
+    merge_events(table, spark.createDataFrame(e0, EVENT_SCHEMA), epoch=("s", 0))
 
     orig = table.commit
     hits = {"injected": 0}

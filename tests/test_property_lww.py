@@ -54,7 +54,7 @@ def test_any_log_any_split_matches_oracle(spark, tmp_path_factory, case):
     table = create_code_table(spark, root, cfg)
     for i, chunk in enumerate([events.iloc[:split], events.iloc[split:]]):
         if len(chunk):
-            merge_events(table, spark.createDataFrame(chunk, EVENT_SCHEMA), cfg, epoch=("p", i))
+            merge_events(table, spark.createDataFrame(chunk, EVENT_SCHEMA), epoch=("p", i))
 
     cols = ["repo", "path", "commit", "lang", "content", "content_sha256", "last_lsn", "row_version"]
     got = table.read().select(*cols).toPandas().sort_values(["repo", "path"]).reset_index(drop=True)

@@ -89,7 +89,7 @@ def test_any_redelivery_any_compaction_is_noop(spark, tmp_path_factory, case):
         batch = pd.concat([chunk, re_chunk]).sort_values("lsn", kind="stable")
         if len(batch):
             merge_events(
-                table, spark.createDataFrame(batch, EVENT_SCHEMA), cfg, epoch=("p", i)
+                table, spark.createDataFrame(batch, EVENT_SCHEMA), epoch=("p", i)
             )
         if i == compact_after:
             compact_deltas(table, delta_share=0.0)

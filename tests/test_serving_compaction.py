@@ -283,7 +283,6 @@ def test_changelog_spans_schema_evolution(spark, tmp_path):
     merge_events(
         table,
         events(EVENT_SCHEMA, [(1, "I", "r1", "p", "c1", "go", "v1")], base_cols),
-        CFG,
         epoch=("s", 0),
         changelog_dir=feed_dir,
     )
@@ -299,7 +298,6 @@ def test_changelog_spans_schema_evolution(spark, tmp_path):
             [(2, "U", "r1", "p", "c2", None, None, "alice")],
             base_cols + ["author"],
         ),
-        CFG,
         epoch=("s", 1),
         changelog_dir=feed_dir,
     )

@@ -46,8 +46,7 @@ def test_skewed_batch_plain_vs_salted_vs_oracle(spark, tmp_path):
         cfg = EngineConfig(n_buckets=8)
         root = str(tmp_path / name)
         table = create_code_table(spark, root, cfg)
-        merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), cfg,
-                     epoch=("t", 0), salt=salt)
+        merge_events(table, spark.createDataFrame(events, EVENT_SCHEMA), epoch=("t", 0), salt=salt)
         got = _final(table)
         pd.testing.assert_frame_equal(got, want.reindex(columns=got.columns), check_dtype=False)
         # the hot key resolved through its mid-stream delete correctly
@@ -71,7 +70,7 @@ def test_hot_bucket_write_fanout(spark, tmp_path):
 
     cfg = EngineConfig(n_buckets=4, target_file_rows=500)
     table = create_code_table(spark, str(tmp_path / "t"), cfg)
-    merge_events(table, spark.createDataFrame(all_events, EVENT_SCHEMA), cfg, epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(all_events, EVENT_SCHEMA), epoch=("t", 0))
     want = table.read(include_tombstones=True).count()
     assert compact_deltas(table, config=cfg)["compacted"]
 
@@ -94,8 +93,8 @@ def test_mor_compaction_after_skewed_epochs(spark, tmp_path):
     cfg = EngineConfig(n_buckets=8)
     table = create_code_table(spark, str(tmp_path / "t"), cfg)
     half = len(events) // 2
-    merge_events(table, spark.createDataFrame(events.iloc[:half], EVENT_SCHEMA), cfg, epoch=("t", 0))
-    merge_events(table, spark.createDataFrame(events.iloc[half:], EVENT_SCHEMA), cfg, epoch=("t", 1))
+    merge_events(table, spark.createDataFrame(events.iloc[:half], EVENT_SCHEMA), epoch=("t", 0))
+    merge_events(table, spark.createDataFrame(events.iloc[half:], EVENT_SCHEMA), epoch=("t", 1))
     assert delta_stats(table.snapshot())["delta_rows"] > 0
 
     out = compact_deltas(table)

@@ -81,7 +81,7 @@ def test_epoch_interleaving_determinism(spark, tmp_path):
         for i, size in enumerate(chunks):
             part = events.iloc[start : start + size]
             start += size
-            merge_events(table, spark.createDataFrame(part, EVENT_SCHEMA), CFG, epoch=("t", i))
+            merge_events(table, spark.createDataFrame(part, EVENT_SCHEMA), epoch=("t", i))
         finals.append(_final(table))
     pd.testing.assert_frame_equal(finals[0], finals[1])
     pd.testing.assert_frame_equal(finals[0], finals[2])
