@@ -7,8 +7,9 @@ The vectorized replacement for the reference's per-event state mutation
     change events
       → fold (``cdc/fold.py``): one resolved action per key, per-column
         ``(value, lsn)`` cells plus delete/reset barriers
-      → append the folded actions as delta files of the touched hash
-        buckets (``cdc/mor.py write_delta_files``) — O(batch) bytes
+      → append the folded actions as delta files, one per fold
+        reducer, each holding every bucket its keys hash to
+        (``cdc/mor.py write_delta_files``) — O(batch) bytes
       → atomic snapshot commit that also records the stream epoch
         (exactly-once).
 
@@ -46,10 +47,11 @@ from etl_kafka_project_spark.minilake.table import LakeTable, SnapshotConflictEr
 
 
 def _remove_files(table: LakeTable, files) -> None:
-    """Best-effort removal of a failed commit attempt's data files."""
-    for fe in files:
+    """Best-effort removal of a failed commit attempt's data files
+    (once per path: a delta file has one entry per bucket it holds)."""
+    for path in {fe.path for fe in files}:
         try:
-            os.remove(os.path.join(table.root, fe.path))
+            os.remove(os.path.join(table.root, path))
         except OSError:
             pass
 
@@ -116,9 +118,9 @@ def _link_changelog_deltas(
     dest = os.path.join(changelog_dir, f"stream={epoch[0]}", f"epoch={epoch[1]}")
     shutil.rmtree(dest, ignore_errors=True)
     os.makedirs(dest, exist_ok=True)
-    for fe in new_files:
-        src = os.path.join(table.root, fe.path)
-        dst = os.path.join(dest, os.path.basename(fe.path))
+    for path in {fe.path for fe in new_files}:
+        src = os.path.join(table.root, path)
+        dst = os.path.join(dest, os.path.basename(path))
         try:
             os.link(src, dst)
         except OSError:

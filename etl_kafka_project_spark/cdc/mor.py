@@ -242,20 +242,22 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
 
 
 def write_delta_files(table: LakeTable, folded_with_bucket: DataFrame, snap: Snapshot) -> list[FileEntry]:
-    """Append the folded batch as delta files (repartitioned to ~one
-    file per touched bucket — compaction consolidates later). Rows are
-    stamped with the parent snapshot version as the commit-order
-    authority for re-delivery detection (commits serialize, so the
-    parent version is strictly increasing across applied epochs)."""
+    """Append the folded batch as delta files, written straight from
+    the fold's (AQE-coalesced) reducers: no second exchange, one file
+    per reducer, each sorted by its stored ``_bucket`` column and named
+    in the manifest once per bucket it holds (``LakeTable.write_data_files``).
+    Rows are stamped with the parent snapshot version as the
+    commit-order authority for re-delivery detection (commits
+    serialize, so the parent version is strictly increasing across
+    applied epochs)."""
     rows = delta_rows(folded_with_bucket, snap, writer_version=snap.version)
-    rows = rows.repartition(max(1, snap.props["n_buckets"] // 4), F.col("_bucket"))
-    return table.write_data_files(rows, kind="delta")
+    return table.write_data_files(rows.sortWithinPartitions("_bucket"), kind="delta")
 
 
 def delta_stats(snap: Snapshot) -> dict:
     base_rows = sum(f.rows for f in snap.files if f.kind == "base")
     delta_rows_ = sum(f.rows for f in snap.files if f.kind == "delta")
-    delta_files = sum(1 for f in snap.files if f.kind == "delta")
+    delta_files = len({f.path for f in snap.files if f.kind == "delta"})
     return {"base_rows": base_rows, "delta_rows": delta_rows_, "delta_files": delta_files}
 
 
@@ -338,18 +340,21 @@ def compact_deltas(
     else:
         resolved = resolved.repartition(max(1, len(touched) // 2), F.col("_bucket"))
     new_files = table.write_data_files(resolved, kind="base")
-    # Commit by EXACT removed-file set, not by bucket: removal of the
+    # Commit by EXACT removed-entry set, not by bucket: removal of the
     # resolved inputs commutes with a concurrent epoch appending new
     # delta files to the same buckets (the retry keeps them — they are
     # strictly newer by _writer_version, so resolving them against the
     # compacted base is order-faithful), whereas bucket replacement
-    # would silently drop files the compactor never read. Retries are
-    # therefore safe UNLESS some input file is already gone — then a
-    # concurrent compactor folded the same inputs, and committing our
-    # rewrite would duplicate every row of it: abort and discard.
+    # would silently drop files the compactor never read. An entry is
+    # a (path, bucket) pair: a delta file shared with cold buckets
+    # loses only the touched buckets' entries and stays live for the
+    # rest. Retries are therefore safe UNLESS some input entry is
+    # already gone — then a concurrent compactor folded the same
+    # inputs, and committing our rewrite would duplicate every row of
+    # it: abort and discard.
     from etl_kafka_project_spark.cdc.merge import _remove_files
 
-    removed = {f.path for f in snap.files if f.bucket in touched}
+    removed = {(f.path, f.bucket) for f in snap.files if f.bucket in touched}
     expected = snap.version
     for _ in range(50):
         try:
@@ -359,7 +364,7 @@ def compact_deltas(
             break
         except SnapshotConflictError:
             cur = table.snapshot()
-            if not removed <= {f.path for f in cur.files}:
+            if not removed <= {(f.path, f.bucket) for f in cur.files}:
                 _remove_files(table, new_files)  # orphaned rewrite
                 return {**stats, "compacted": False, "lost_race": True}
             expected = cur.version

@@ -12,14 +12,20 @@ the sandbox — verified). What it reproduces from the Iceberg model:
   manifest-list shape, and what keeps the driver-side commit off the
   critical path at millions of files. The current version is an
   atomically-renamed ``VERSION`` pointer (POSIX ``rename``),
-* **append + exact-file removal**: a commit appends files (merge-on-read
-  deltas, ``cdc/mor.py``) and/or removes an exact file set (compaction),
-  carrying every other file forward untouched,
-* **hash-bucket partitioning**: data files live under
-  ``data/b{bucket:05d}/``, bucket = ``pmod(murmur3(key...), n_buckets)``
-  (the ``bucket(N, col)`` partition transform) — a MERGE writes and
-  compaction rewrites only the buckets a batch touches, and reads prune
-  to the buckets they need (manual partition pruning),
+* **append + exact-entry removal**: a commit appends files (merge-on-read
+  deltas, ``cdc/mor.py``) and/or removes an exact set of ``(path,
+  bucket)`` manifest entries (compaction), carrying every other entry
+  forward untouched,
+* **hash-bucket partitioning**: bucket = ``pmod(murmur3(key...),
+  n_buckets)`` (the ``bucket(N, col)`` partition transform). Base files
+  hold one bucket each and live under ``data/b{bucket:05d}/``. A delta
+  file holds every bucket one write task saw, sorted by a stored
+  ``_bucket`` column, and lives under ``data/deltas/``; it gets one
+  manifest entry per bucket it holds, carrying that bucket's row count.
+  A MERGE writes and compaction rewrites only the buckets a batch
+  touches, and reads prune to the buckets they need: manifests select
+  the files, and a ``_bucket`` filter pushed into the delta scan drops
+  other buckets' rows (manual partition pruning),
 * **schema evolution**: the snapshot owns the schema; old files are read
   with the evolved schema (Spark 4's parquet reader null-fills added
   columns and widens int→long / float→double natively — verified),
@@ -55,17 +61,22 @@ class SnapshotConflictError(RuntimeError):
 
 @dataclass(frozen=True)
 class FileEntry:
+    """One manifest entry: the rows of one bucket in one data file. A
+    delta file holding several buckets has one entry per bucket, all
+    with the same ``path``, ``kind`` and ``stats``."""
+
     path: str  # relative to table root
     bucket: int
-    rows: int
+    rows: int  # this bucket's rows in the file
     #: "base" = fully-resolved rows; "delta" = merge-on-read folded
     #: actions appended by an epoch (Iceberg MOR / Paimon-LSM shape),
     #: resolved against base at read time, folded in by compaction
     kind: str = "base"
-    #: per-column [min, max] harvested FREE from the parquet footer at
-    #: write time — the Iceberg manifest-stats analog. Lets `read()`
-    #: prune files against equality/range predicates without opening
-    #: them (at 100 TB this skips file opens, not just row groups).
+    #: per-column [min, max] of the whole file, harvested FREE from the
+    #: parquet footer at write time — the Iceberg manifest-stats analog.
+    #: Lets `read()` prune files against equality/range predicates
+    #: without opening them (at 100 TB this skips file opens, not just
+    #: row groups).
     stats: dict | None = None
 
     def to_json(self) -> dict:
@@ -381,7 +392,18 @@ class LakeTable:
             # merge-on-read: resolve appended delta actions against base
             from etl_kafka_project_spark.cdc.mor import delta_schema, resolve_deltas
 
-            deltas = self._read_files(snap, delta_files, schema=delta_schema(snap))
+            if buckets is None:
+                deltas = self._read_files(snap, delta_files, schema=delta_schema(snap))
+            else:
+                # a delta file also holds buckets outside the subset:
+                # filter on its stored, sorted _bucket column (pushed to
+                # the scan, so row groups of other buckets are skipped)
+                schema = delta_schema(snap).add("_bucket", T.IntegerType())
+                deltas = (
+                    self._read_files(snap, delta_files, schema=schema)
+                    .filter(F.col("_bucket").isin(sorted(buckets)))
+                    .drop("_bucket")
+                )
             df = resolve_deltas(df, deltas, snap)
         if key_equals:
             for c, v in key_equals.items():
@@ -399,7 +421,8 @@ class LakeTable:
         schema = schema or snap.schema
         if not files:
             return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f.path) for f in files]
+        # one scan per file, however many bucket entries name it
+        paths = [os.path.join(self.root, p) for p in dict.fromkeys(f.path for f in files)]
         return self.spark.read.schema(schema).parquet(*paths)
 
     # ---------- write ----------
@@ -408,6 +431,15 @@ class LakeTable:
         """Write a DataFrame (carrying its bucket id in ``_bucket``) as
         new data files; returns entries to pass to :meth:`commit`.
 
+        Base files (``kind="base"``) are split by ``_bucket``, one bucket
+        per file, under ``data/b{bucket}/``. Delta files are written as
+        the frame's partitions stand, one file per write task under
+        ``data/deltas/``, keeping ``_bucket`` as a stored column; the
+        caller sorts each partition by ``_bucket``. A delta file gets
+        one entry per bucket it holds, with that bucket's exact row
+        count, read back from its ``_bucket`` column alone (sorted, so
+        it decodes as a few runs; no key or payload column is read).
+
         The caller controls parallelism by repartitioning before the call
         (e.g. salted repartition for write-skew, ``cdc/salting.py``).
         Files are written by Spark directly into a staging dir, then moved
@@ -415,6 +447,11 @@ class LakeTable:
         the key columns are lifted from the parquet footers into the
         manifest for read-time file pruning.
         """
+        import shutil
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         # header read only: this runs on the per-epoch write hot path,
         # and assembling every bucket's manifest just to read props
         # would be O(n_buckets) file opens per epoch
@@ -423,41 +460,43 @@ class LakeTable:
         except FileNotFoundError:
             key_cols = []
         staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        df.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
         entries: list[FileEntry] = []
+        prefix = "delta" if kind == "delta" else "part"
         try:
-            import pyarrow.parquet as pq
-
-            for bucket_dir in sorted(os.listdir(staging)):
-                if not bucket_dir.startswith("_bucket="):
-                    continue
-                bucket = int(bucket_dir.split("=", 1)[1])
-                dest_dir = os.path.join(self.root, "data", f"b{bucket:05d}")
+            # (staging subdir, its one bucket or None, dir under data/)
+            if kind == "delta":
+                df.write.mode("overwrite").parquet(staging)
+                written = [(staging, None, "deltas")]
+            else:
+                df.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+                written = []
+                for d in sorted(os.listdir(staging)):
+                    if d.startswith("_bucket="):
+                        b = int(d.split("=", 1)[1])
+                        written.append((os.path.join(staging, d), b, f"b{b:05d}"))
+            for src_dir, bucket, dest in written:
+                dest_dir = os.path.join(self.root, "data", dest)
                 os.makedirs(dest_dir, exist_ok=True)
-                for fn in sorted(os.listdir(os.path.join(staging, bucket_dir))):
+                for fn in sorted(os.listdir(src_dir)):
                     if not fn.endswith(".parquet"):
                         continue
-                    src = os.path.join(staging, bucket_dir, fn)
+                    src = os.path.join(src_dir, fn)
                     meta = pq.read_metadata(src)
-                    rows = meta.num_rows
-                    if rows == 0:
+                    if meta.num_rows == 0:
                         continue
+                    if bucket is None:
+                        vc = pc.value_counts(pq.read_table(src, columns=["_bucket"])["_bucket"])
+                        rows = dict(zip(vc.field(0).to_pylist(), vc.field(1).to_pylist()))
+                    else:
+                        rows = {bucket: meta.num_rows}
                     stats = _footer_stats(meta, key_cols)
-                    prefix = "delta" if kind == "delta" else "part"
                     name = f"{prefix}-{uuid.uuid4().hex}.parquet"
                     os.rename(src, os.path.join(dest_dir, name))
-                    entries.append(
-                        FileEntry(
-                            path=f"data/b{bucket:05d}/{name}",
-                            bucket=bucket,
-                            rows=rows,
-                            kind=kind,
-                            stats=stats,
-                        )
-                    )
+                    entries += [
+                        FileEntry(f"data/{dest}/{name}", b, n, kind, stats)
+                        for b, n in sorted(rows.items())
+                    ]
         finally:
-            import shutil
-
             shutil.rmtree(staging, ignore_errors=True)
         return entries
 
@@ -465,14 +504,16 @@ class LakeTable:
         self,
         expected_version: int,
         new_files: list[FileEntry] = (),
-        removed_files: set[str] | None = None,
+        removed_files: set[tuple[str, int]] | None = None,
         schema: T.StructType | None = None,
         epoch: tuple[str, int] | None = None,
     ) -> Snapshot:
         """Atomically commit a new snapshot.
 
-        * carries forward all parent files except those in
-          ``removed_files`` (compaction),
+        * carries forward all parent entries except the ``(path,
+          bucket)`` pairs in ``removed_files`` (compaction; a delta file
+          shared with buckets the compaction skipped keeps their
+          entries),
         * appends ``new_files``,
         * optionally evolves the schema and records a committed stream
           epoch — all in the SAME atomic rename, which is what makes the
@@ -487,9 +528,8 @@ class LakeTable:
                 f"table at v{current}, commit expected v{expected_version}"
             )
         parent = self.snapshot(current)
-        kept = [
-            f for f in parent.files if removed_files is None or f.path not in removed_files
-        ]
+        removed_files = removed_files or set()
+        kept = [f for f in parent.files if (f.path, f.bucket) not in removed_files]
         epochs = {k: list(v) for k, v in parent.committed_epochs.items()}
         if epoch is not None:
             stream_id, epoch_id = epoch
@@ -507,9 +547,7 @@ class LakeTable:
         # are written BEFORE the snapshot CAS — a lost race or crash
         # leaves unreferenced uuid files, which is harmless garbage
         # (expire_snapshots vacuums them).
-        changed = {f.bucket for f in new_files}
-        if removed_files:
-            changed |= {f.bucket for f in parent.files if f.path in removed_files}
+        changed = {f.bucket for f in new_files} | {b for _, b in removed_files}
         by_bucket: dict[int, list[FileEntry]] = {}
         for f in kept:
             by_bucket.setdefault(f.bucket, []).append(f)

@@ -104,19 +104,27 @@ def fill_none(df: DataFrame) -> DataFrame:
 # ---------- change feed (pub/sub analog) ----------
 
 
-def _changelog_glob(table_root: str) -> tuple[str, str]:
-    """The feed dir and the glob of its epoch dirs. The merge hardlinks
-    each epoch's delta files under ``changelog/stream=<id>/epoch=<n>``
-    (``cdc/merge.py _link_changelog_deltas``); the per-stream namespace
-    keeps two streams merging into one table from clobbering each
-    other's feed epochs."""
+def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, str, str]:
+    """The feed's delta files as stored, the feed dir and the glob of
+    its epoch dirs. The merge hardlinks each epoch's delta files under
+    ``changelog/stream=<id>/epoch=<n>`` (``cdc/merge.py
+    _link_changelog_deltas``); the per-stream namespace keeps two
+    streams merging into one table from clobbering each other's feed
+    epochs. The epoch dirs found are read with the table's CURRENT
+    delta schema, so epochs written before a schema evolution null-fill
+    the evolved columns and no footer is opened to find the schema;
+    ``stream``/``epoch`` come from the dir names."""
     import glob as _glob
+
+    from etl_kafka_project_spark.cdc.mor import delta_schema
 
     path = os.path.join(table_root, "changelog")
     pattern = os.path.join(path, "stream=*", "epoch=*")
-    if not _glob.glob(pattern):
+    dirs = sorted(_glob.glob(pattern))
+    if not dirs:
         raise FileNotFoundError(f"no changelog under {path}")
-    return path, pattern
+    schema = delta_schema(LakeTable(spark, table_root).snapshot_header())
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs), path, pattern
 
 
 def _feed_from_delta(df: DataFrame) -> DataFrame:
@@ -132,7 +140,7 @@ def _feed_from_delta(df: DataFrame) -> DataFrame:
 
     meta = {
         "content_sha256", "_max_lsn", "_last_d_lsn", "_last_reset_lsn",
-        "_is_delete", "_applied", "_lsns", "_writer_version",
+        "_is_delete", "_applied", "_lsns", "_writer_version", "_bucket",
     }
     part_cols = [c for c in ("stream", "epoch") if c in df.columns]
     payload = [
@@ -176,13 +184,7 @@ def read_changelog(
     (``cdc/merge.py`` changelog_dir). One row per changed key per epoch:
     ``(<keys>, op U/D, lsn, reset_lsn, <payload>, <payload>_lsn...,
     stream, epoch)``."""
-    path, pattern = _changelog_glob(table_root)
-    # mergeSchema: files written before a schema evolution lack the
-    # evolved columns; merged footers null-fill them (a single-footer-
-    # inferred schema would silently DROP the evolved payload)
-    df = _feed_from_delta(
-        spark.read.option("basePath", path).option("mergeSchema", "true").parquet(pattern)
-    )
+    df = _feed_from_delta(_changelog(spark, table_root)[0])
     if stream_id is not None:
         df = df.filter(F.col("stream") == stream_id)
     if from_epoch is not None:
@@ -195,17 +197,11 @@ def stream_changelog(spark: SparkSession, table_root: str) -> DataFrame:
     ``subscribe_movie_updates`` (``graphql_interface.py:44-63``): a file-
     source tail of the changelog dir, ``outputMode('append')``-safe,
     projected to the same shape as :func:`read_changelog`."""
-    path, pattern = _changelog_glob(table_root)
-    # a file stream needs its schema up front: take the batch reader's
-    # merged one (pre-evolution epochs lack the evolved columns)
-    schema = (
-        spark.read.option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(pattern)
-        .schema
-    )
+    # a file stream needs its schema up front: take the batch reader's,
+    # which carries the stream/epoch dir columns too
+    batch, path, pattern = _changelog(spark, table_root)
     return _feed_from_delta(
-        spark.readStream.schema(schema).option("basePath", path).parquet(pattern)
+        spark.readStream.schema(batch.schema).option("basePath", path).parquet(pattern)
     )
 
 

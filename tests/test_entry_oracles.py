@@ -6,7 +6,10 @@ Each oracle case first checks its physical plan (``explain("formatted")``)
 for the properties that matter at 100 TB: predicate pushdown reaching the
 parquet scan, column pruning (ReadSchema narrower than the table),
 broadcast joins on small dims, top-k via TakeOrderedAndProject, scan and
-Exchange counts, and no Cartesian products in any query."""
+Exchange counts, and no Cartesian product in any query. At sf0.001 every
+table fits under the broadcast threshold, so a cross or non-equi join
+plans as ``BroadcastNestedLoopJoin``, not ``CartesianProduct``: that node
+fails every query not named, with its reason, in ``NESTED_LOOP_OK``."""
 
 import contextlib
 import io
@@ -258,6 +261,23 @@ COUNT_AUDITS: dict[str, list[tuple[str, str, int]]] = {
 }
 
 
+#: queries whose plan may hold a BroadcastNestedLoopJoin, and why: each
+#: broadcasts a build side whose size does not grow with the corpus
+NESTED_LOOP_OK: dict[str, str] = {
+    "ann_bruteforce_topk": "one query vector crossed with every embedding",
+    "bigram_surprisal": "one-row vocabulary size crossed with the bigram model",
+    "curated_corpus": "one-row corpus totals crossed with the vocabulary (surprisal gate)",
+    "curated_corpus_packed": "the curated_corpus keep-list, same one-row totals",
+    "dsir_importance": "one-row corpus totals crossed with the vocabulary",
+    "unigram_surprisal": "one-row corpus total crossed with the vocabulary",
+    "ivf_centroid_update": "O(k) centroid set crossed with every vector for assignment",
+    "ivf_coarse_assignment": "O(k) centroid set crossed with every vector for assignment",
+    "ivf_query_topk": "O(k) centroids and one query vector crossed for probing and ranking",
+    "ivf_query_topk_indexed": "one query vector crossed with the probed candidates",
+    "semdedup_prune": "O(k) centroid set crossed with every vector for assignment",
+}
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()
@@ -273,7 +293,7 @@ def test_every_query_has_oracle_or_is_declared(spark):
     # feature extractor gained a codepoint-stat oracle — ASCII payloads)
     assert set(queries) - set(oracles) == set()
     # a plan check on a name without an oracle case would never run
-    assert set(AUDITS) | set(COUNT_AUDITS) <= set(oracles)
+    assert set(AUDITS) | set(COUNT_AUDITS) | set(NESTED_LOOP_OK) <= set(oracles)
 
 
 @pytest.fixture(scope="module")
@@ -297,6 +317,12 @@ def test_query_matches_oracle(spark, duck, name):
                if plan.count(needle) != want_n]
     if "CartesianProduct" in plan:
         failed.append("no Cartesian product: 'CartesianProduct' in plan")
+    nested = "BroadcastNestedLoopJoin" in plan
+    if nested and name not in NESTED_LOOP_OK:
+        failed.append("no nested-loop join: 'BroadcastNestedLoopJoin' in plan,"
+                      " and the query is not in NESTED_LOOP_OK")
+    if not nested and name in NESTED_LOOP_OK:
+        failed.append("stale NESTED_LOOP_OK entry: no 'BroadcastNestedLoopJoin' in plan")
     assert not failed, "\n".join(failed) + "\n\n" + plan
     verdict = compare(name, df, duck, entrymod.oracle_sql()[name])
     assert verdict == "OK", verdict

@@ -295,3 +295,82 @@ def test_concurrent_merge_writers_conflict_then_retry(spark, tmp_table_dir):
     rows = {r["repo"]: r for r in table.read().collect()}
     assert rows["repo-a"]["commit"] == "c11" and rows["repo-a"]["row_version"] == 2
     assert rows["repo-b"]["commit"] == "c21" and rows["repo-b"]["row_version"] == 2
+
+
+def test_partial_compaction_keeps_shared_delta_files_for_cold_buckets(spark, tmp_path):
+    """A delta file holds every bucket its write task saw, with one
+    manifest entry per bucket. Compacting only the buckets past
+    ``delta_share`` removes the file's entries in those buckets alone:
+    cold buckets keep resolving their rows from the shared file, a later
+    full compaction drops its last entry, and the vacuum deletes it only
+    once no retained snapshot names it."""
+    import os
+
+    from etl_kafka_project_spark.cdc.compaction import expire_snapshots
+    from etl_kafka_project_spark.cdc.mor import compact_deltas
+
+    spec = StreamSpec(n_events=1200, n_keys=160, n_segments=4, min_lines=2, max_lines=4)
+    events = generate_events(spec)
+    root = str(tmp_path / "t")
+    table = create_code_table(spark, root, CFG)
+
+    def merge(chunk, i):
+        merge_events(table, spark.createDataFrame(chunk, EVENT_SCHEMA), epoch=("t", i))
+
+    def assert_matches_oracle():
+        got = _final_state_pdf(table)
+        want = replay_oracle(events).reindex(columns=got.columns)
+        pd.testing.assert_frame_equal(
+            got, want.astype(got.dtypes.to_dict()), check_dtype=False
+        )
+
+    cut = len(events) * 2 // 3
+    merge(events.iloc[:cut], 0)
+    assert compact_deltas(table)["compacted"]  # every bucket now has a base
+    merge(events.iloc[cut : cut + 200], 1)
+    merge(events.iloc[cut + 200 :], 2)
+
+    snap = table.snapshot()
+    holds: dict[str, set[int]] = {}
+    for f in snap.files:
+        if f.kind == "delta":
+            holds.setdefault(f.path, set()).add(f.bucket)
+    assert holds and all(len(bs) > 1 for bs in holds.values())
+    base_rows: dict[int, int] = {}
+    delta_rows: dict[int, int] = {}
+    for f in snap.files:
+        d = base_rows if f.kind == "base" else delta_rows
+        d[f.bucket] = d.get(f.bucket, 0) + f.rows
+    share = {b: d / (base_rows.get(b, 0) + d) for b, d in delta_rows.items()}
+    levels = sorted(set(share.values()))
+    delta_share = levels[len(levels) // 2]
+    hot = {b for b, s in share.items() if s >= delta_share}
+    cold = set(share) - hot
+    assert hot and cold
+    spans = [p for p, bs in holds.items() if bs & hot and bs & cold]
+    assert spans  # some file is shared by a compacted and a skipped bucket
+
+    res = compact_deltas(table, delta_share=delta_share)
+    assert res["buckets"] == len(hot) and res["cold_buckets_skipped"] == len(cold)
+    assert_matches_oracle()
+    snap = table.snapshot()
+    for p in spans:
+        assert os.path.exists(os.path.join(root, p))
+        assert {f.bucket for f in snap.files if f.path == p} == holds[p] & cold
+    # the cold buckets' newest rows can only come from the shared files
+    late = int(events["lsn"].iloc[cut - 1])
+    assert any(r["last_lsn"] > late for r in table.read(buckets=cold).collect())
+    # a vacuum keeping only the current snapshot leaves them in place
+    expire_snapshots(table, keep_last=1, orphan_grace_sec=0.0)
+    assert all(os.path.exists(os.path.join(root, p)) for p in spans)
+
+    assert compact_deltas(table)["compacted"]
+    assert not {f.path for f in table.snapshot().files} & set(spans)
+    assert_matches_oracle()
+    # the previous snapshot still names them...
+    expire_snapshots(table, keep_last=2, orphan_grace_sec=0.0)
+    assert all(os.path.exists(os.path.join(root, p)) for p in spans)
+    # ...and once it expires, nothing does
+    expire_snapshots(table, keep_last=1, orphan_grace_sec=0.0)
+    assert not any(os.path.exists(os.path.join(root, p)) for p in spans)
+    assert_matches_oracle()

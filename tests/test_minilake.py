@@ -20,9 +20,10 @@ def _mk(spark, root):
 
 
 def _superseded(t, files):
-    """Paths of the current files in the buckets ``files`` rewrite."""
+    """``(path, bucket)`` entries of the current files in the buckets
+    ``files`` rewrite (a commit removes entries, not paths)."""
     buckets = {f.bucket for f in files}
-    return {f.path for f in t.snapshot().files if f.bucket in buckets}
+    return {(f.path, f.bucket) for f in t.snapshot().files if f.bucket in buckets}
 
 
 def test_create_empty_and_read(spark, tmp_table_dir):

@@ -496,3 +496,38 @@ def test_rate_controlled_continuous_tail(spark, tmp_path):
     # epochs were applied across distinct trigger firings
     docs = LineageLog(job.lineage_dir, job.stream_id).read_all()
     assert len(docs) == len(job.applied)
+
+
+def test_steady_epoch_runs_two_jobs_and_few_delta_files(spark, tmp_path):
+    """A steady epoch (changelog on, no dead letters, no compaction) is
+    the fold exchange plus the delta write: exactly 2 Spark jobs. Its
+    delta files come straight from the fold's reducers, so their count
+    is bounded by the reducer count, not by the touched buckets."""
+    from etl_kafka_project_spark.minilake.table import LakeTable
+
+    spec = StreamSpec(n_events=3000, n_keys=600, n_segments=3, min_lines=2, max_lines=4)
+    _, segs = generate_stream(str(tmp_path / "stream"), spec)
+    cfg = EngineConfig(n_buckets=32)
+    create_code_table(spark, str(tmp_path / "table"), cfg)
+    job = _job(tmp_path, config=cfg)
+    assert job.emit_changelog
+    table = LakeTable(spark, job.table_root)
+    sc = spark.sparkContext
+    reducers = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def delta_paths() -> set[str]:
+        return {f.path for f in table.snapshot().files if f.kind == "delta"}
+
+    for epoch, seg in enumerate(sorted(segs)):
+        batch = spark.read.schema(EVENT_SCHEMA).parquet(seg)
+        before = delta_paths()
+        group = f"steady-epoch-{tmp_path.name}-{epoch}"
+        sc.setJobGroup(group, "steady epoch")
+        try:
+            stats = job.apply_epoch(batch, epoch)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not stats.skipped and stats.touched_buckets == 32
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+        assert 1 <= len(delta_paths() - before) <= reducers < stats.touched_buckets
