@@ -244,14 +244,13 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
 def write_delta_files(table: LakeTable, folded_with_bucket: DataFrame, snap: Snapshot) -> list[FileEntry]:
     """Append the folded batch as delta files, written straight from
     the fold's (AQE-coalesced) reducers: no second exchange, one file
-    per reducer, each sorted by its stored ``_bucket`` column and named
-    in the manifest once per bucket it holds (``LakeTable.write_data_files``).
-    Rows are stamped with the parent snapshot version as the
-    commit-order authority for re-delivery detection (commits
-    serialize, so the parent version is strictly increasing across
-    applied epochs)."""
+    per reducer, named in the manifest once per bucket it holds
+    (``LakeTable.write_data_files``). Rows are stamped with the parent
+    snapshot version as the commit-order authority for re-delivery
+    detection (commits serialize, so the parent version is strictly
+    increasing across applied epochs)."""
     rows = delta_rows(folded_with_bucket, snap, writer_version=snap.version)
-    return table.write_data_files(rows.sortWithinPartitions("_bucket"), kind="delta")
+    return table.write_data_files(rows, kind="delta")
 
 
 def delta_stats(snap: Snapshot) -> dict:

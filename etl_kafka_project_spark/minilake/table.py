@@ -15,7 +15,8 @@ the sandbox — verified). What it reproduces from the Iceberg model:
 * **append + exact-entry removal**: a commit appends files (merge-on-read
   deltas, ``cdc/mor.py``) and/or removes an exact set of ``(path,
   bucket)`` manifest entries (compaction), carrying every other entry
-  forward untouched,
+  forward; a delta file that keeps some of its entries is marked
+  ``partial`` so reads filter it to the buckets still live in it,
 * **hash-bucket partitioning**: bucket = ``pmod(murmur3(key...),
   n_buckets)`` (the ``bucket(N, col)`` partition transform). Base files
   hold one bucket each and live under ``data/b{bucket:05d}/``. A delta
@@ -44,11 +45,12 @@ optimistic concurrency (commit fails if VERSION moved) as the guard.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,17 +80,25 @@ class FileEntry:
     #: without opening them (at 100 TB this skips file opens, not just
     #: row groups).
     stats: dict | None = None
+    #: set by :meth:`LakeTable.commit` when it removes some, not all,
+    #: of this file's entries: the file still holds the removed
+    #: buckets' rows (already folded into base), so reads keep only the
+    #: rows of its live entries' buckets
+    partial: bool = False
 
     def to_json(self) -> dict:
         d = {"path": self.path, "bucket": self.bucket, "rows": self.rows, "kind": self.kind}
         if self.stats:
             d["stats"] = self.stats
+        if self.partial:
+            d["partial"] = True
         return d
 
     @staticmethod
     def from_json(d: dict) -> "FileEntry":
         return FileEntry(
-            d["path"], d["bucket"], d["rows"], d.get("kind", "base"), d.get("stats")
+            d["path"], d["bucket"], d["rows"], d.get("kind", "base"), d.get("stats"),
+            d.get("partial", False),
         )
 
     def might_contain(self, col: str, value) -> bool:
@@ -390,27 +400,46 @@ class LakeTable:
         df = self._read_files(snap, base_files)
         if delta_files:
             # merge-on-read: resolve appended delta actions against base
-            from etl_kafka_project_spark.cdc.mor import delta_schema, resolve_deltas
+            from etl_kafka_project_spark.cdc.mor import resolve_deltas
 
-            if buckets is None:
-                deltas = self._read_files(snap, delta_files, schema=delta_schema(snap))
-            else:
-                # a delta file also holds buckets outside the subset:
-                # filter on its stored, sorted _bucket column (pushed to
-                # the scan, so row groups of other buckets are skipped)
-                schema = delta_schema(snap).add("_bucket", T.IntegerType())
-                deltas = (
-                    self._read_files(snap, delta_files, schema=schema)
-                    .filter(F.col("_bucket").isin(sorted(buckets)))
-                    .drop("_bucket")
-                )
-            df = resolve_deltas(df, deltas, snap)
+            df = resolve_deltas(df, self._read_deltas(snap, delta_files, buckets), snap)
         if key_equals:
             for c, v in key_equals.items():
                 df = df.filter(F.col(c) == F.lit(v))
         if not include_tombstones and "_deleted" in df.columns:
             df = df.filter(~F.col("_deleted"))
         return df
+
+    def _read_deltas(
+        self, snap: Snapshot, files: list[FileEntry], buckets: set[int] | None
+    ) -> DataFrame:
+        """Exactly the rows of these delta entries. A delta file also
+        holds buckets outside a subset read, and a ``partial`` one holds
+        buckets whose entries a compaction removed, so scans filter on
+        the stored, sorted ``_bucket`` column (pushed down: other
+        buckets' row groups are skipped). Whole files share one scan,
+        filtered to ``buckets`` (unfiltered on a full read); partial
+        files are scanned in groups by their live buckets."""
+        from etl_kafka_project_spark.cdc.mor import delta_schema
+
+        live: dict[str, set[int]] = {}
+        for f in files:
+            live.setdefault(f.path, set()).add(f.bucket)
+        groups: dict[frozenset[int] | None, list[FileEntry]] = {}
+        for f in files:
+            if f.partial:
+                keep = frozenset(live[f.path])
+            else:
+                keep = None if buckets is None else frozenset(buckets)
+            groups.setdefault(keep, []).append(f)
+        schema = delta_schema(snap).add("_bucket", T.IntegerType())
+        parts = []
+        for keep, group in groups.items():
+            d = self._read_files(snap, group, schema=schema)
+            if keep is not None:
+                d = d.filter(F.col("_bucket").isin(sorted(keep)))
+            parts.append(d.drop("_bucket"))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _read_files(
         self,
@@ -434,11 +463,11 @@ class LakeTable:
         Base files (``kind="base"``) are split by ``_bucket``, one bucket
         per file, under ``data/b{bucket}/``. Delta files are written as
         the frame's partitions stand, one file per write task under
-        ``data/deltas/``, keeping ``_bucket`` as a stored column; the
-        caller sorts each partition by ``_bucket``. A delta file gets
-        one entry per bucket it holds, with that bucket's exact row
-        count, read back from its ``_bucket`` column alone (sorted, so
-        it decodes as a few runs; no key or payload column is read).
+        ``data/deltas/``, each sorted by ``_bucket``, which stays a
+        stored column. A delta file gets one entry per bucket it holds,
+        with that bucket's exact row count, read back from its
+        ``_bucket`` column alone (sorted, so it decodes as a few runs;
+        no key or payload column is read).
 
         The caller controls parallelism by repartitioning before the call
         (e.g. salted repartition for write-skew, ``cdc/salting.py``).
@@ -465,7 +494,7 @@ class LakeTable:
         try:
             # (staging subdir, its one bucket or None, dir under data/)
             if kind == "delta":
-                df.write.mode("overwrite").parquet(staging)
+                df.sortWithinPartitions("_bucket").write.mode("overwrite").parquet(staging)
                 written = [(staging, None, "deltas")]
             else:
                 df.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
@@ -513,7 +542,7 @@ class LakeTable:
         * carries forward all parent entries except the ``(path,
           bucket)`` pairs in ``removed_files`` (compaction; a delta file
           shared with buckets the compaction skipped keeps their
-          entries),
+          entries, marked ``partial``),
         * appends ``new_files``,
         * optionally evolves the schema and records a committed stream
           epoch — all in the SAME atomic rename, which is what makes the
@@ -529,7 +558,16 @@ class LakeTable:
             )
         parent = self.snapshot(current)
         removed_files = removed_files or set()
-        kept = [f for f in parent.files if (f.path, f.bucket) not in removed_files]
+        cut = {p for p, _ in removed_files}
+        kept: list[FileEntry] = []
+        marked: set[int] = set()
+        for f in parent.files:
+            if (f.path, f.bucket) in removed_files:
+                continue
+            if f.path in cut and not f.partial:
+                f = replace(f, partial=True)
+                marked.add(f.bucket)
+            kept.append(f)
         epochs = {k: list(v) for k, v in parent.committed_epochs.items()}
         if epoch is not None:
             stream_id, epoch_id = epoch
@@ -540,14 +578,15 @@ class LakeTable:
             epochs.setdefault(stream_id, []).append(epoch_id)
         new_version = current + 1
 
-        # Incremental manifest maintenance: only buckets whose file set
-        # changed get a new manifest file; every other bucket reuses the
-        # parent's (immutable) manifest by reference. A schema-evolution
-        # or epoch-only commit rewrites NO manifest at all. Manifests
-        # are written BEFORE the snapshot CAS — a lost race or crash
-        # leaves unreferenced uuid files, which is harmless garbage
+        # Incremental manifest maintenance: only buckets whose entries
+        # changed (added, removed or marked partial) get a new manifest
+        # file; every other bucket reuses the parent's (immutable)
+        # manifest by reference. A schema-evolution or epoch-only
+        # commit rewrites NO manifest at all. Manifests are written
+        # BEFORE the snapshot CAS — a lost race or crash leaves
+        # unreferenced uuid files, which is harmless garbage
         # (expire_snapshots vacuums them).
-        changed = {f.bucket for f in new_files} | {b for _, b in removed_files}
+        changed = {f.bucket for f in new_files} | {b for _, b in removed_files} | marked
         by_bucket: dict[int, list[FileEntry]] = {}
         for f in kept:
             by_bucket.setdefault(f.bucket, []).append(f)

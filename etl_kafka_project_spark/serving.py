@@ -140,7 +140,7 @@ def _feed_from_delta(df: DataFrame) -> DataFrame:
 
     meta = {
         "content_sha256", "_max_lsn", "_last_d_lsn", "_last_reset_lsn",
-        "_is_delete", "_applied", "_lsns", "_writer_version", "_bucket",
+        "_is_delete", "_applied", "_lsns", "_writer_version",
     }
     part_cols = [c for c in ("stream", "epoch") if c in df.columns]
     payload = [

@@ -21,6 +21,32 @@ def _final_state_pdf(table):
     return pdf
 
 
+def _events(rows) -> pd.DataFrame:
+    """Hand-built events from ``(lsn, op, repo)`` triples, one path."""
+    return pd.DataFrame(
+        {
+            "lsn": pd.array([r[0] for r in rows], dtype="Int64"),
+            "op": [r[1] for r in rows],
+            "ts": pd.to_datetime(["2026-01-01"] * len(rows)),
+            "repo": [r[2] for r in rows],
+            "path": ["p"] * len(rows),
+            "commit": [f"c{r[0]}" for r in rows],
+            "lang": ["rust"] * len(rows),
+            "content": [f"body{r[0]}" for r in rows],
+        }
+    )
+
+
+def _bucket_of(spark, repos: list[str], n_buckets: int) -> dict[str, int]:
+    from pyspark.sql import functions as F
+
+    bdf = spark.createDataFrame([(r, "p") for r in repos], "repo string, path string")
+    return {
+        r["repo"]: r["b"]
+        for r in bdf.withColumn("b", F.pmod(F.hash("repo", "path"), F.lit(n_buckets))).collect()
+    }
+
+
 def _replay_in_batches(spark, table, events: pd.DataFrame, n_batches: int):
     n = len(events)
     size = -(-n // n_batches)
@@ -177,40 +203,18 @@ def test_mor_compaction_is_threshold_driven_per_bucket(spark, tmp_table_dir):
     """compact_deltas(delta_share=s): only buckets whose delta share
     crosses s rewrite; a cold bucket's base files stay byte-identical on
     disk and its delta rows keep resolving at read."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
     from etl_kafka_project_spark.cdc.mor import compact_deltas
 
     cfg = EngineConfig(n_buckets=2)
     table = create_code_table(spark, tmp_table_dir, cfg)
     # sort candidate keys into the 2 buckets
     cand = [f"r{i}" for i in range(20)]
-    bdf = spark.createDataFrame([(r, "p") for r in cand], "repo string, path string")
-    bucket_of = {
-        r["repo"]: r["b"]
-        for r in bdf.withColumn("b", F.pmod(F.hash("repo", "path"), F.lit(2))).collect()
-    }
+    bucket_of = _bucket_of(spark, cand, 2)
     cold_keys = [r for r in cand if bucket_of[r] == 0][:10]
     hot_key = next(r for r in cand if bucket_of[r] == 1)
 
     def ev(rows):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "lsn": pd.array([r[0] for r in rows], dtype="Int64"),
-                    "op": [r[1] for r in rows],
-                    "ts": pd.to_datetime(["2026-01-01"] * len(rows)),
-                    "repo": [r[2] for r in rows],
-                    "path": ["p"] * len(rows),
-                    "commit": [f"c{r[0]}" for r in rows],
-                    "lang": ["rust"] * len(rows),
-                    "content": [f"body{r[0]}" for r in rows],
-                }
-            ),
-            EVENT_SCHEMA,
-        )
+        return spark.createDataFrame(_events(rows), EVENT_SCHEMA)
 
     # epoch 0: seed both buckets, full-compact to base
     seed = [(i, "I", k) for i, k in enumerate([*cold_keys, hot_key])]
@@ -374,3 +378,55 @@ def test_partial_compaction_keeps_shared_delta_files_for_cold_buckets(spark, tmp
     expire_snapshots(table, keep_last=1, orphan_grace_sec=0.0)
     assert not any(os.path.exists(os.path.join(root, p)) for p in spans)
     assert_matches_oracle()
+
+
+def test_partial_compaction_with_purge_keeps_a_deleted_key_deleted(spark, tmp_path):
+    """A compaction that purges a tombstone removes the delete's own
+    delta file, while an older upsert of the key stays in a delta file
+    shared with a cold bucket. Reads return only the live entries' rows
+    of such a file, so the full read and the point lookup agree with
+    the oracle: the key stays deleted, and rows already folded into
+    base are not resolved again."""
+    from etl_kafka_project_spark.cdc.mor import compact_deltas
+    from etl_kafka_project_spark.serving import point_lookup
+
+    root = str(tmp_path / "t")
+    table = create_code_table(spark, root, EngineConfig(n_buckets=4))
+    keys = [f"r{i}" for i in range(16)]
+    bucket_of = _bucket_of(spark, keys, 4)
+    victim = keys[0]
+    hot = bucket_of[victim]
+    assert set(bucket_of.values()) - {hot}
+
+    epochs = [
+        _events([(i, "I", k) for i, k in enumerate(keys)]),
+        _events([(100 + i, "U", k) for i, k in enumerate(keys)]),
+        _events([(200, "D", victim)]),
+    ]
+    for i, chunk in enumerate(epochs):
+        merge_events(table, spark.createDataFrame(chunk, EVENT_SCHEMA), epoch=("t", i))
+        if i == 0:
+            assert compact_deltas(table)["compacted"]  # every bucket now has a base
+    holds: dict[str, set[int]] = {}
+    for f in table.snapshot().files:
+        if f.kind == "delta":
+            holds.setdefault(f.path, set()).add(f.bucket)
+    shared = [p for p, bs in holds.items() if hot in bs and len(bs) > 1]
+    assert shared and any(bs == {hot} for bs in holds.values())
+
+    # no bucket reaches share 1.0 (each has a base): only the tombstone's
+    # bucket is rewritten, and the tombstone is dropped
+    res = compact_deltas(table, delta_share=1.0, purge_tombstones_below_lsn=200)
+    assert res["buckets"] == 1 and res["tombstones_purged"] == 1
+    snap = table.snapshot()
+    for p in shared:
+        live = [f for f in snap.files if f.path == p]
+        assert {f.bucket for f in live} == holds[p] - {hot} and all(f.partial for f in live)
+
+    got = _final_state_pdf(table)
+    want = replay_oracle(pd.concat(epochs, ignore_index=True)).reindex(columns=got.columns)
+    pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()), check_dtype=False)
+    assert point_lookup(spark, root, {"repo": victim, "path": "p"}).count() == 0
+    # a multi-bucket read spanning the compacted and a cold bucket
+    spans = set().union(*(holds[p] for p in shared))
+    assert victim not in {r["repo"] for r in table.read(buckets=spans).collect()}
