@@ -239,9 +239,10 @@ def main() -> None:
         f" (trials: {trials['cdc_replay']})")
 
     # Variant row (not in the total, so the headline metric stays
-    # comparable round-over-round): the same replay with the streaming
-    # watermarked cross-epoch dedup ON (dropDuplicatesWithinWatermark on
-    # key+lsn before foreachBatch) — publishes the cost of the
+    # comparable round-over-round): the same replay with the watermarked
+    # cross-epoch dedup ON, in its default "committed" scope (apply_epoch
+    # drops events at or below the applied high-water mark with a
+    # literal filter before the merge) — publishes the cost of the
     # exactly-once-with-watermark configuration at bench scale.
     cdc_wm = None
     if not only_cdc and os.environ.get("SPARK_GRAFT_BENCH_SKIP_WATERMARK") != "1":

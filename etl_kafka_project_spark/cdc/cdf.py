@@ -30,32 +30,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_kafka_project_spark.cdc.merge import key_columns, payload_columns
 from etl_kafka_project_spark.minilake.table import LakeTable
 
-#: engine bookkeeping columns — never part of the semantic payload
-INTERNAL_COLUMNS = ("last_lsn", "row_version", "_deleted")
 
-
-def touched_buckets(table: LakeTable, v_from: int, v_to: int) -> set[int] | None:
+def touched_buckets(table: LakeTable, v_from: int, v_to: int) -> set[int]:
     """Buckets whose per-bucket manifest differs between the versions —
     the metadata-only pruning set for a state diff. Manifests are
     immutable and content-addressed by path, so path equality proves
-    file-set equality. Returns None (= all buckets, no pruning) for
-    pre-manifest snapshot layouts."""
-    import json
-
-    def manifests(v: int) -> dict | None:
-        with open(table._snapshot_path(v)) as f:
-            d = json.load(f)
-        return d.get("manifests")
-
-    a, b = manifests(v_from), manifests(v_to)
-    if a is None or b is None:
-        return None
+    file-set equality."""
+    a = table.snapshot_header(v_from).manifests
+    b = table.snapshot_header(v_to).manifests
     return {
-        int(k)
-        for k in set(a) | set(b)
-        if a.get(k, {}).get("path") != b.get(k, {}).get("path")
+        k for k in a.keys() | b.keys() if a.get(k, {}).get("path") != b.get(k, {}).get("path")
     }
 
 
@@ -67,19 +54,14 @@ def diff_snapshots(table: LakeTable, v_from: int, v_to: int) -> DataFrame:
     differs (an LWW rewrite that left every payload column byte-equal is
     not a change; ``last_lsn`` is the after-side authority, null for
     deletes). Both reads are pruned to ``touched_buckets`` first, so a
-    diff after a one-bucket epoch reads one bucket, not the table."""
+    diff after a one-bucket epoch reads one bucket, not the table, and
+    a diff between identical versions reads no file at all."""
     buckets = touched_buckets(table, v_from, v_to)
-    if buckets is not None and not buckets:
-        # metadata proves the versions identical — empty diff, no read
-        empty = diff_schema(table, v_to)
-        return table.spark.createDataFrame([], empty)
-    snap_to = table.snapshot(v_to)
-    keys = snap_to.props["key_columns"]
-    payload = [
-        f.name
-        for f in snap_to.schema.fields
-        if f.name not in keys and f.name not in INTERNAL_COLUMNS
-    ]
+    snap_to = table.snapshot_header(v_to)
+    keys = key_columns(snap_to)
+    # the content hash is the one meta column that is row content; the
+    # rest (LWW authority, counter, tombstone flag) is bookkeeping
+    payload = [*payload_columns(snap_to), "content_sha256"]
     before = table.read(version=v_from, buckets=buckets)
     after = table.read(version=v_to, buckets=buckets)
     # evolution between versions: align the before side onto the after
@@ -122,29 +104,6 @@ def diff_snapshots(table: LakeTable, v_from: int, v_to: int) -> DataFrame:
             | ~F.col("before").eqNullSafe(F.col("after"))
         )
     )
-
-
-def diff_schema(table: LakeTable, version: int):
-    """Empty-diff schema (keys + change_type + before/after + last_lsn)."""
-    from pyspark.sql import types as T
-
-    snap = table.snapshot(version)
-    keys = snap.props["key_columns"]
-    payload = [
-        f
-        for f in snap.schema.fields
-        if f.name not in keys and f.name not in INTERNAL_COLUMNS
-    ]
-    image = [snap.schema[k] for k in keys] + payload  # same order as diff_snapshots
-    pstruct = T.StructType([T.StructField(f.name, f.dataType, True) for f in image])
-    fields = [T.StructField(k, snap.schema[k].dataType, True) for k in keys]
-    fields += [
-        T.StructField("change_type", T.StringType(), False),
-        T.StructField("before", pstruct, True),
-        T.StructField("after", pstruct, True),
-        T.StructField("last_lsn", T.LongType(), True),
-    ]
-    return T.StructType(fields)
 
 
 # ---------- incremental aggregate maintenance ----------

@@ -50,12 +50,6 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-def payload_columns(schema: T.StructType | None = None) -> list[str]:
-    """Non-envelope columns of an event schema (table value columns)."""
-    schema = schema or EVENT_SCHEMA
-    return [f.name for f in schema.fields if f.name not in ("lsn", "op", "ts")]
-
-
 def dead_letter_reason() -> F.Column:
     """Envelope-validation verdict per event: null when valid, else the
     dead-letter reason (see :func:`split_dead_letters`). Unbound

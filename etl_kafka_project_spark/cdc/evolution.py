@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_kafka_project_spark.cdc.merge import META_COLUMNS
 from etl_kafka_project_spark.minilake.table import LakeTable, Snapshot
 
 #: envelope columns never stored in the table: the change-event
@@ -93,14 +94,13 @@ def evolved_schema(table_schema: T.StructType, plan: EvolutionPlan) -> T.StructT
     inserted BEFORE the meta columns (content_sha256/last_lsn/...) so
     payload-vs-meta ordering stays stable for readers."""
     widen = {name: new for name, _, new in plan.widened}
-    meta_names = {"content_sha256", "last_lsn", "row_version", "_deleted"}
     fields: list[T.StructField] = []
     for f in table_schema.fields:
-        if f.name in meta_names:
+        if f.name in META_COLUMNS:
             continue
         fields.append(T.StructField(f.name, widen.get(f.name, f.dataType), f.nullable))
     fields.extend(plan.added)
-    fields.extend(f for f in table_schema.fields if f.name in meta_names)
+    fields.extend(f for f in table_schema.fields if f.name in META_COLUMNS)
     return T.StructType(fields)
 
 
@@ -136,13 +136,12 @@ def align_events(events: DataFrame, table_schema: T.StructType) -> DataFrame:
     drop. Envelope columns pass through untouched."""
     from etl_kafka_project_spark.functions.exprcache import cached_exprs
 
-    meta_names = {"content_sha256", "last_lsn", "row_version", "_deleted"}
     have = {f.name: f for f in events.schema.fields}
 
     def _build() -> list[F.Column]:
         cols: list[F.Column] = [F.col(c) for c in ENVELOPE_COLS if c in have]
         for f in table_schema.fields:
-            if f.name in meta_names:
+            if f.name in META_COLUMNS:
                 continue
             if f.name not in have:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))

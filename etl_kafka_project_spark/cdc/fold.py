@@ -83,6 +83,17 @@ from etl_kafka_project_spark.functions.exprcache import cached_exprs
 #: LSN sentinel for "this column was never set by a surviving event".
 NEVER = -1
 
+
+def cell_alive(lsn: F.Column, delete_lsn: F.Column, reset_lsn: F.Column) -> F.Column:
+    """LWW cell survival: a value cell written at ``lsn`` survives if it
+    is newer than the newest delete (strict — a D erases everything at
+    its lsn) and not older than the newest reset (>= — an I's own writes
+    share its lsn and survive). Null barriers never erase."""
+    return (lsn > F.coalesce(delete_lsn, F.lit(NEVER))) & (
+        lsn >= F.coalesce(reset_lsn, F.lit(NEVER))
+    )
+
+
 #: Cap on the per-key distinct-lsn sample carried in ``_lsns`` (the
 #: SMALLEST ``LSN_SAMPLE + 1`` distinct lsns of the batch, sorted; size
 #: == LSN_SAMPLE + 1 marks truncation). The merge paths use it to count
@@ -274,14 +285,9 @@ def _resolve(
             applied_c,
             lsns_c,
         ]
-        # a cell survives if it is newer than the newest delete (strict — a
-        # D erases everything at its lsn) and not older than the newest
-        # reset (>= — an I's own writes share its lsn and survive)
-        erased_below = F.coalesce(F.col("_last_d_lsn"), F.lit(NEVER))
-        reset_floor = F.coalesce(F.col("_last_reset_lsn"), F.lit(NEVER))
         for c in payload_columns:
             v, l = F.col(f"_v_{c}"), F.col(f"_l_{c}")
-            alive = (l > erased_below) & (l >= reset_floor)
+            alive = cell_alive(l, F.col("_last_d_lsn"), F.col("_last_reset_lsn"))
             out_cols.append(F.when(alive, v).alias(c))
             out_cols.append(
                 F.when(alive, l).otherwise(F.lit(NEVER)).alias(f"{c}_lsn")

@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from etl_kafka_project_spark.cdc.envelope import PAYLOAD_FIELDS
 from etl_kafka_project_spark.cdc.fold import fold_batch
 from etl_kafka_project_spark.config import EngineConfig
-from etl_kafka_project_spark.minilake.table import LakeTable, SnapshotConflictError
+from etl_kafka_project_spark.minilake.table import LakeTable, Snapshot, SnapshotConflictError
 
 
 def _remove_files(table: LakeTable, files) -> None:
@@ -61,6 +61,21 @@ META_FIELDS = [
     T.StructField("row_version", T.LongType(), False),
     T.StructField("_deleted", T.BooleanType(), False),
 ]
+
+#: names of the table meta columns — the one definition every reader and
+#: writer of the stored row layout consults
+META_COLUMNS = tuple(f.name for f in META_FIELDS)
+
+
+def key_columns(snap: Snapshot) -> list[str]:
+    """The table's primary-key columns, in declared order."""
+    return list(snap.props["key_columns"])
+
+
+def payload_columns(snap: Snapshot) -> list[str]:
+    """Stored columns that are neither keys nor meta, in schema order."""
+    keys = snap.props["key_columns"]
+    return [c for c in snap.schema.names if c not in keys and c not in META_COLUMNS]
 
 
 def table_schema(payload_fields: list[T.StructField] | None = None) -> T.StructType:
@@ -259,17 +274,11 @@ def merge_events(
     # write needs version/schema/props; resolution happens at read), so
     # the per-epoch serial floor skips assembling every bucket manifest
     snap = table.snapshot_header()
-    key_cols = snap.props["key_columns"]
-    payload_cols = [
-        f.name
-        for f in snap.schema.fields
-        if f.name not in key_cols and f.name not in {m.name for m in META_FIELDS}
-    ]
     events = align_events(events, snap.schema)
     folded = fold_batch(
         events,
-        key_columns=key_cols,
-        payload_columns=payload_cols,
+        key_columns=key_columns(snap),
+        payload_columns=payload_columns(snap),
         salt=salt,
     ).withColumn("_bucket", table.bucket_expr(snap))
     return _merge_mor(

@@ -51,7 +51,6 @@ class LineageLog:
         self,
         stats: MergeStats,
         dead_letters: dict[str, int] | None = None,
-        skipped: bool = False,
         extra: dict | None = None,
     ) -> dict:
         epoch_id = stats.epoch_id if stats.epoch_id is not None else -1
@@ -71,7 +70,7 @@ class LineageLog:
             "events_per_sec": (
                 round(stats.events_in / wall_s, 3) if wall_s > 0 and stats.events_in > 0 else None
             ),
-            "skipped": skipped,
+            "skipped": stats.skipped,
             "max_key_events": stats.max_key_events,
             "per_bucket": stats.per_bucket,
             **(extra or {}),

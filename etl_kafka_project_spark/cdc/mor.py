@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_kafka_project_spark.cdc.fold import NEVER
+from etl_kafka_project_spark.cdc.fold import NEVER, cell_alive
+from etl_kafka_project_spark.cdc.merge import _remove_files, key_columns, payload_columns
 from etl_kafka_project_spark.cdc.salting import plan_write_splits, salted_repartition
 from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.minilake.table import (
@@ -46,24 +47,13 @@ from etl_kafka_project_spark.minilake.table import (
     SnapshotConflictError,
 )
 
-#: meta columns of a delta row (fold output + sha)
-DELTA_META = ["_max_lsn", "_last_d_lsn", "_last_reset_lsn", "_is_delete", "_applied", "_lsns"]
-
-
-def _payload_cols(snap: Snapshot) -> list[str]:
-    key_cols = snap.props["key_columns"]
-    meta = {"content_sha256", "last_lsn", "row_version", "_deleted"}
-    return [f.name for f in snap.schema.fields if f.name not in key_cols and f.name not in meta]
-
-
 def delta_schema(snap: Snapshot) -> T.StructType:
     """Stored schema of delta files for the table's CURRENT schema —
     old delta files with fewer columns null-fill on read (same
     metadata-only evolution as base files)."""
-    key_cols = snap.props["key_columns"]
     dtypes = {f.name: f.dataType for f in snap.schema.fields}
-    fields = [T.StructField(k, dtypes[k], True) for k in key_cols]
-    for c in _payload_cols(snap):
+    fields = [T.StructField(k, dtypes[k], True) for k in key_columns(snap)]
+    for c in payload_columns(snap):
         fields.append(T.StructField(c, dtypes[c], True))
         fields.append(T.StructField(f"{c}_lsn", T.LongType(), True))
     fields += [
@@ -92,7 +82,7 @@ def delta_schema(snap: Snapshot) -> T.StructType:
 def delta_rows(folded: DataFrame, snap: Snapshot, writer_version: int) -> DataFrame:
     """Fold output → storable delta rows (adds the batch's content sha,
     tied to the content cell's lsn, and the commit-order stamp)."""
-    if "content" in _payload_cols(snap):
+    if "content" in payload_columns(snap):
         sha = F.when(F.col("content_lsn") > NEVER, F.sha2(F.col("content"), 256))
     else:
         sha = F.lit(None).cast("string")
@@ -119,9 +109,8 @@ def _encode_base_as_delta(base: DataFrame, snap: Snapshot) -> DataFrame:
     with lsn <= last_lsn is a re-delivery of something the base already
     reflects, so the base legitimately wins every such tie-or-older
     comparison, column by column."""
-    key_cols = snap.props["key_columns"]
-    cols: list[F.Column] = [F.col(k) for k in key_cols]
-    for c in _payload_cols(snap):
+    cols: list[F.Column] = [F.col(k) for k in key_columns(snap)]
+    for c in payload_columns(snap):
         cols.append(F.col(c))
         cols.append(F.col("last_lsn").alias(f"{c}_lsn"))
     dead = F.col("_deleted")
@@ -160,8 +149,8 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
     """
     from pyspark.sql import Window
 
-    key_cols = snap.props["key_columns"]
-    payload = _payload_cols(snap)
+    key_cols = key_columns(snap)
+    payload = payload_columns(snap)
     union = _encode_base_as_delta(base, snap).unionByName(
         deltas, allowMissingColumns=True
     )
@@ -218,17 +207,15 @@ def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFr
 
     g = union.groupBy(*key_cols).agg(*aggs)
 
-    erased = F.coalesce(F.col("_d"), F.lit(NEVER))
-    floor = F.coalesce(F.col("_r"), F.lit(NEVER))
+    def alive(c: str) -> F.Column:
+        l = F.coalesce(F.col(f"_l_{c}"), F.lit(NEVER))
+        return cell_alive(l, F.col("_d"), F.col("_r"))
+
     out: list[F.Column] = [F.col(k) for k in key_cols]
     for c in payload:
-        l = F.coalesce(F.col(f"_l_{c}"), F.lit(NEVER))
-        alive = (l > erased) & (l >= floor)
-        out.append(F.when(alive, F.col(f"_v_{c}")).alias(c))
+        out.append(F.when(alive(c), F.col(f"_v_{c}")).alias(c))
     if "content" in payload:
-        l = F.coalesce(F.col("_l_content"), F.lit(NEVER))
-        alive = (l > erased) & (l >= floor)
-        out.append(F.when(alive, F.col("_v_sha")).alias("content_sha256"))
+        out.append(F.when(alive("content"), F.col("_v_sha")).alias("content_sha256"))
     else:
         out.append(F.lit(None).cast("string").alias("content_sha256"))
     out += [
@@ -335,7 +322,7 @@ def compact_deltas(
         config.target_file_rows,
     )
     if max(splits.values()) > 1:
-        resolved = salted_repartition(resolved, snap.props["key_columns"], splits)
+        resolved = salted_repartition(resolved, key_columns(snap), splits)
     else:
         resolved = resolved.repartition(max(1, len(touched) // 2), F.col("_bucket"))
     new_files = table.write_data_files(resolved, kind="base")
@@ -351,8 +338,6 @@ def compact_deltas(
     # already gone — then a concurrent compactor folded the same
     # inputs, and committing our rewrite would duplicate every row of
     # it: abort and discard.
-    from etl_kafka_project_spark.cdc.merge import _remove_files
-
     removed = {(f.path, f.bucket) for f in snap.files if f.bucket in touched}
     expected = snap.version
     for _ in range(50):

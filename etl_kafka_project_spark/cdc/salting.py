@@ -49,9 +49,6 @@ def salted_repartition(
     file write. Total partitions = Σ splits so every split maps to ~one
     write task; buckets not in ``splits`` default to 1 split."""
     n_parts = max(1, sum(splits.values()))
-    if all(s <= 1 for s in splits.values()):
-        # no hot bucket — plain repartition by bucket, one file each
-        return df.repartition(n_parts, F.col("_bucket"))
     # bucket → n_splits as a map literal; salt only fans out hot buckets
     map_args: list[F.Column] = []
     for b, s in splits.items():

@@ -272,7 +272,7 @@ class ReplayJob:
         lineage = LineageLog(self.lineage_dir, self.stream_id)
 
         dead_path = os.path.join(self.dead_letter_dir, f"epoch={epoch_id}")
-        if table.snapshot().has_epoch(self.stream_id, epoch_id):
+        if table.snapshot_header().has_epoch(self.stream_id, epoch_id):
             # crash-resume retry of a committed epoch: exactly-once skip.
             # The quarantine write is gated on the merge job's observed
             # invalid count and so happens AFTER the data commit; a crash
@@ -294,7 +294,7 @@ class ReplayJob:
                 extra["lsn_span"] = [int(m["lsn_min"]), int(m["lsn_max"])]
                 self._note_applied_range(*extra["lsn_span"])
             stats = self._skip_committed(table, epoch_id)
-            lineage.record(stats, dead_letters=dead_counts, skipped=True, extra=extra)
+            lineage.record(stats, dead_letters=dead_counts, extra=extra)
             self.applied.append(stats)
             return stats
 
@@ -389,7 +389,7 @@ class ReplayJob:
                 break
             except SnapshotConflictError:
                 phases["commit_conflicts"] = attempt + 1
-                if table.snapshot().has_epoch(self.stream_id, epoch_id):
+                if table.snapshot_header().has_epoch(self.stream_id, epoch_id):
                     # a concurrent retry of THIS stream won with our
                     # epoch id — exactly-once skip, same as the
                     # crash-resume path above
@@ -498,9 +498,7 @@ class ReplayJob:
             # the batch's FULL valid-lsn span (pre-dedup-filter); a
             # restarted job rebuilds its applied intervals from this
             extra["lsn_span"] = lsn_span
-        lineage.record(
-            stats, dead_letters=dead_counts, skipped=stats.skipped, extra=extra
-        )
+        lineage.record(stats, dead_letters=dead_counts, extra=extra)
         self.applied.append(stats)
         if order_violation is not None and self.config.order_guard == "error":
             lo, hwm = order_violation

@@ -2,7 +2,8 @@
 
 Parquet data files hash-bucketed on the primary key + an atomic JSON
 snapshot log (schema, file manifest, committed epochs), with append and
-exact-file-removal commits, schema evolution, and time travel. Built because the sandbox has
+exact-entry-removal commits (one ``(path, bucket)`` manifest entry at a
+time), schema evolution, and time travel. Built because the sandbox has
 no Iceberg/Delta jars; the ``LakeTable`` interface is the seam where a real
 Iceberg catalog drops in on a cluster that has them.
 """

@@ -97,7 +97,7 @@ class FileEntry:
     @staticmethod
     def from_json(d: dict) -> "FileEntry":
         return FileEntry(
-            d["path"], d["bucket"], d["rows"], d.get("kind", "base"), d.get("stats"),
+            d["path"], d["bucket"], d["rows"], d["kind"], d.get("stats"),
             d.get("partial", False),
         )
 
@@ -158,8 +158,8 @@ class Snapshot:
             schema=T.StructType.fromJson(d["schema"]),
             files=files,
             committed_epochs={k: list(v) for k, v in d["committed_epochs"].items()},
-            props=d.get("props", {}),
-            ts=d.get("ts", 0.0),
+            props=d["props"],
+            ts=d["ts"],
             manifests={int(b): m for b, m in d["manifests"].items()},
         )
 
@@ -363,7 +363,7 @@ class LakeTable:
         Spark's ``hash()`` is Murmur3 and stable across sessions/versions
         of this engine, so the same key always lands in the same bucket.
         """
-        snap = snap or self.snapshot()
+        snap = snap or self.snapshot_header()
         keys = snap.props["key_columns"]
         n = snap.props["n_buckets"]
         return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n))

@@ -31,7 +31,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_kafka_project_spark.minilake.table import LakeTable
+from etl_kafka_project_spark.cdc.fold import NEVER, cell_alive
+from etl_kafka_project_spark.cdc.merge import key_columns, payload_columns
+from etl_kafka_project_spark.minilake.table import LakeTable, Snapshot
 
 DEFAULT_LIMIT = 10  # reference default page size, redis_interface.py:101
 
@@ -104,16 +106,16 @@ def fill_none(df: DataFrame) -> DataFrame:
 # ---------- change feed (pub/sub analog) ----------
 
 
-def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, str, str]:
-    """The feed's delta files as stored, the feed dir and the glob of
-    its epoch dirs. The merge hardlinks each epoch's delta files under
-    ``changelog/stream=<id>/epoch=<n>`` (``cdc/merge.py
-    _link_changelog_deltas``); the per-stream namespace keeps two
-    streams merging into one table from clobbering each other's feed
-    epochs. The epoch dirs found are read with the table's CURRENT
-    delta schema, so epochs written before a schema evolution null-fill
-    the evolved columns and no footer is opened to find the schema;
-    ``stream``/``epoch`` come from the dir names."""
+def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, Snapshot, str, str]:
+    """The feed's delta files as stored, the table's snapshot header,
+    the feed dir and the glob of its epoch dirs. The merge hardlinks
+    each epoch's delta files under ``changelog/stream=<id>/epoch=<n>``
+    (``cdc/merge.py _link_changelog_deltas``); the per-stream namespace
+    keeps two streams merging into one table from clobbering each
+    other's feed epochs. The epoch dirs found are read with the table's
+    CURRENT delta schema, so epochs written before a schema evolution
+    null-fill the evolved columns and no footer is opened to find the
+    schema; ``stream``/``epoch`` come from the dir names."""
     import glob as _glob
 
     from etl_kafka_project_spark.cdc.mor import delta_schema
@@ -123,45 +125,22 @@ def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, str, st
     dirs = sorted(_glob.glob(pattern))
     if not dirs:
         raise FileNotFoundError(f"no changelog under {path}")
-    schema = delta_schema(LakeTable(spark, table_root).snapshot_header())
-    return spark.read.schema(schema).option("basePath", path).parquet(*dirs), path, pattern
+    snap = LakeTable(spark, table_root).snapshot_header()
+    df = spark.read.schema(delta_schema(snap)).option("basePath", path).parquet(*dirs)
+    return df, snap, path, pattern
 
 
-def _feed_from_delta(df: DataFrame) -> DataFrame:
+def _feed_from_delta(df: DataFrame, snap: Snapshot) -> DataFrame:
     """Project the changelog's delta files (the merge hardlinks each
     epoch's committed delta files into the feed dir instead of writing a
     second copy, ``cdc/merge.py _link_changelog_deltas``) into the feed
     contract shape ``(<keys>, op U/D, lsn, reset_lsn, <payload>,
-    <payload>_lsn..., stream, epoch)``. Payload columns are recognized
-    by their ``{c}_lsn`` twin (every delta payload column has one,
-    ``cdc/mor.py delta_schema``); a write-lsn of the NEVER sentinel (-1,
-    column never set by a surviving event) surfaces as null."""
-    from etl_kafka_project_spark.cdc.fold import NEVER
-
-    meta = {
-        "content_sha256", "_max_lsn", "_last_d_lsn", "_last_reset_lsn",
-        "_is_delete", "_applied", "_lsns", "_writer_version",
-    }
-    part_cols = [c for c in ("stream", "epoch") if c in df.columns]
-    payload = [
-        c[: -len("_lsn")]
-        for c in df.columns
-        if c.endswith("_lsn") and c not in meta and c[: -len("_lsn")] in df.columns
-    ]
-    keys = [
-        c
-        for c in df.columns
-        if c not in meta
-        and c not in part_cols
-        and c not in payload
-        # only an actual *_lsn twin marks a bookkeeping column — without
-        # the suffix test a KEY whose name minus 4 chars collides with a
-        # payload name (e.g. key 'name_enc' vs payload 'name') would be
-        # silently dropped from the feed
-        and not (c.endswith("_lsn") and c[: -len("_lsn")] in payload)
-    ]
+    <payload>_lsn..., stream, epoch)``, keys and payload as the table's
+    snapshot lays them out. A write-lsn of the NEVER sentinel (column
+    never set by a surviving event) surfaces as null."""
+    payload = payload_columns(snap)
     return df.select(
-        *keys,
+        *key_columns(snap),
         F.when(F.col("_is_delete"), F.lit("D")).otherwise(F.lit("U")).alias("op"),
         F.col("_max_lsn").alias("lsn"),
         F.col("_last_reset_lsn").alias("reset_lsn"),
@@ -170,7 +149,8 @@ def _feed_from_delta(df: DataFrame) -> DataFrame:
             F.when(F.col(f"{c}_lsn") > NEVER, F.col(f"{c}_lsn")).alias(f"{c}_lsn")
             for c in payload
         ],
-        *part_cols,
+        "stream",
+        "epoch",
     )
 
 
@@ -184,7 +164,8 @@ def read_changelog(
     (``cdc/merge.py`` changelog_dir). One row per changed key per epoch:
     ``(<keys>, op U/D, lsn, reset_lsn, <payload>, <payload>_lsn...,
     stream, epoch)``."""
-    df = _feed_from_delta(_changelog(spark, table_root)[0])
+    df, snap, _, _ = _changelog(spark, table_root)
+    df = _feed_from_delta(df, snap)
     if stream_id is not None:
         df = df.filter(F.col("stream") == stream_id)
     if from_epoch is not None:
@@ -199,9 +180,9 @@ def stream_changelog(spark: SparkSession, table_root: str) -> DataFrame:
     projected to the same shape as :func:`read_changelog`."""
     # a file stream needs its schema up front: take the batch reader's,
     # which carries the stream/epoch dir columns too
-    batch, path, pattern = _changelog(spark, table_root)
+    batch, snap, path, pattern = _changelog(spark, table_root)
     return _feed_from_delta(
-        spark.readStream.schema(batch.schema).option("basePath", path).parquet(pattern)
+        spark.readStream.schema(batch.schema).option("basePath", path).parquet(pattern), snap
     )
 
 
@@ -223,12 +204,11 @@ def apply_changelog(
         aggs.append(F.max(f"{c}_lsn").alias(f"_l_{c}"))
     g = feed.groupBy(*key_columns).agg(*aggs)
     live = ~(F.col("_d").isNotNull() & (F.col("_d") == F.col("last_lsn")))
-    erased = F.coalesce(F.col("_d"), F.lit(-1))
-    floor = F.coalesce(F.col("_r"), F.lit(-1))
     out = [F.col(k) for k in key_columns]
     for c in payload_columns:
-        l = F.coalesce(F.col(f"_l_{c}"), F.lit(-1))
-        out.append(F.when((l > erased) & (l >= floor), F.col(f"_v_{c}")).alias(c))
+        l = F.coalesce(F.col(f"_l_{c}"), F.lit(NEVER))
+        alive = cell_alive(l, F.col("_d"), F.col("_r"))
+        out.append(F.when(alive, F.col(f"_v_{c}")).alias(c))
     out.append(F.col("last_lsn"))
     return g.filter(live).select(*out)
 
@@ -266,8 +246,8 @@ def point_lookup(spark: SparkSession, table_root: str, exact: dict | None) -> Da
     if not exact:
         return None
     table = LakeTable(spark, table_root)
-    snap = table.snapshot()
-    keys = snap.props["key_columns"]
+    snap = table.snapshot_header()
+    keys = key_columns(snap)
     if not all(k in exact and ", " not in str(exact[k]) for k in keys):
         return None
     vals = {k: _guard(str(exact[k])) for k in keys}

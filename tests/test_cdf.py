@@ -96,6 +96,18 @@ def test_identical_versions_prune_to_empty_without_reading(spark, replayed):
     assert diff_snapshots(table, v, v).count() == 0
 
 
+def test_empty_diff_has_the_same_schema_as_a_nonempty_one(spark, replayed):
+    """An identical-version diff reads no file, yet keeps the diff's
+    output shape: same column names and types as a real diff."""
+    table = LakeTable(spark, replayed)
+    v = table.current_version()
+
+    def shape(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert shape(diff_snapshots(table, v, v)) == shape(diff_snapshots(table, v - 1, v))
+
+
 def test_touched_buckets_prune_is_sound(spark, replayed):
     """Pruned diff == unpruned diff (metadata pruning drops no changes),
     and a single-epoch diff touches a strict subset when the epoch did."""

@@ -1,6 +1,7 @@
 """Driver-side units that need no Spark session: write-split planning
 (cdc/salting.py) and lineage documents (cdc/metrics.py)."""
 
+import dataclasses
 import json
 import os
 
@@ -37,7 +38,7 @@ def test_lineage_record_roundtrip(tmp_path):
     assert doc["dead_letters"] == {"bad_op": 2}
 
     # crash-retry overwrite: same epoch file, exactly one document
-    log.record(_stats(), skipped=True)
+    log.record(dataclasses.replace(_stats(), skipped=True))
     docs = log.read_all()
     assert len(docs) == 1 and docs[0]["skipped"] is True
 

@@ -449,17 +449,26 @@ def test_point_lookup_on_numeric_keys(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["v"] == "v7"
 
 
-def test_feed_from_delta_keeps_key_colliding_with_payload_name(spark):
+def test_feed_from_delta_keeps_key_colliding_with_payload_name(spark, tmp_path):
     """A key column whose name minus '_lsn''s length collides with a
-    payload column ('name_enc' vs payload 'name') must stay a key — only
-    an actual *_lsn suffix marks a bookkeeping twin. Round-5 review
-    finding."""
-    df = spark.createDataFrame(
-        [("k1", "alice", 5, 5, None, None, False)],
-        "name_enc string, name string, name_lsn long, _max_lsn long,"
-        " _last_d_lsn long, _last_reset_lsn long, _is_delete boolean",
+    payload column ('name_enc' vs payload 'name') must stay a key in the
+    feed: the feed takes its keys and payload from the table's snapshot,
+    not from column names. Round-5 review finding."""
+    from pyspark.sql import types as T
+
+    from etl_kafka_project_spark.cdc.merge import merge_events, table_schema
+
+    root = str(tmp_path / "collide")
+    fields = [T.StructField(c, T.StringType(), True) for c in ("name_enc", "name")]
+    table = LakeTable.create(spark, root, table_schema(fields), ["name_enc"], n_buckets=4)
+    events = spark.createDataFrame(
+        [("k1", "alice", 5, "I")], "name_enc string, name string, lsn long, op string"
     )
-    out = serving._feed_from_delta(df)
-    assert "name_enc" in out.columns
+    merge_events(table, events, epoch=("s", 0), changelog_dir=os.path.join(root, "changelog"))
+
+    out = serving.read_changelog(spark, root)
+    assert out.columns == [
+        "name_enc", "op", "lsn", "reset_lsn", "name", "name_lsn", "stream", "epoch"
+    ]
     row = out.collect()[0]
     assert row["name_enc"] == "k1" and row["name"] == "alice" and row["op"] == "U"

@@ -442,6 +442,83 @@ def test_crash_after_commit_before_lineage_record(spark, tmp_path, monkeypatch):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
+def test_crash_after_changelog_link_before_snapshot_cas(spark, tmp_path, monkeypatch):
+    """Fault at the "changelog linked, snapshot not committed" boundary:
+    epoch 1's delta files are written and linked into its feed dir, then
+    the process dies before the snapshot CAS. A fresh job resuming the
+    checkpoint re-merges the epoch and rebuilds its feed dir from its
+    own files; the crashed attempt's delta files are orphans that the
+    vacuum removes, and neither the table nor the feed counts them."""
+    from etl_kafka_project_spark import serving
+    from etl_kafka_project_spark.cdc.compaction import expire_snapshots
+    from etl_kafka_project_spark.minilake.table import LakeTable
+
+    spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
+    events, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+
+    orig = LakeTable.commit
+    crashed: list = []  # the crashed attempt's delta file entries
+
+    def crash_once(self, *a, **kw):
+        if kw.get("epoch") == ("replay", 1) and not crashed:
+            crashed.extend(kw["new_files"])
+            raise RuntimeError("injected crash before the snapshot CAS")
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "commit", crash_once)
+    job = _job(tmp_path)
+    job.apply_epoch(read(segs[0]), 0)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.apply_epoch(read(segs[1]), 1)
+    table = _open(spark, job)
+    assert not table.snapshot_header().has_epoch(job.stream_id, 1)
+    epoch_dir = os.path.join(job.changelog_dir, f"stream={job.stream_id}", "epoch=1")
+    orphans = {fe.path for fe in crashed}
+    assert orphans and set(os.listdir(epoch_dir)) == {os.path.basename(p) for p in orphans}
+
+    # restart: fresh driver-side state; Spark retries epoch 1 with the
+    # same batch, which is not committed and so applies in full
+    job2 = _job(tmp_path)
+    assert not job2.apply_epoch(read(segs[1]), 1).skipped
+    job2.apply_epoch(read(segs[2]), 2)
+    job2.apply_epoch(read(segs[3]), 3)
+
+    got = _final_state_pdf(table)
+    want = replay_oracle(events).reindex(columns=got.columns)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    # epoch 1's feed dir holds exactly the files its committed snapshot added
+    v1 = next(
+        v
+        for v in range(1, table.current_version() + 1)
+        if table.snapshot_header(v).has_epoch(job.stream_id, 1)
+    )
+    added = {fe.path for fe in table.snapshot(v1).files} - {
+        fe.path for fe in table.snapshot(v1 - 1).files
+    }
+    assert set(os.listdir(epoch_dir)) == {os.path.basename(p) for p in added}
+    assert not added & orphans
+
+    # the feed, applied, reproduces the table
+    payload = ["commit", "lang", "content"]
+    feed = serving.read_changelog(spark, str(tmp_path / "table"))
+    applied = serving.apply_changelog(feed, ["repo", "path"], payload)
+    cols = ["repo", "path", *payload, "last_lsn"]
+    pd.testing.assert_frame_equal(
+        applied.toPandas()[cols].sort_values(["repo", "path"]).reset_index(drop=True),
+        got[cols],
+        check_dtype=False,
+    )
+
+    # the crashed attempt's delta files are orphans: the vacuum deletes them
+    assert all(os.path.exists(os.path.join(table.root, p)) for p in orphans)
+    expire_snapshots(table, orphan_grace_sec=0)
+    assert not any(os.path.exists(os.path.join(table.root, p)) for p in orphans)
+
+
 def test_rate_controlled_continuous_tail(spark, tmp_path):
     """T8: a processingTime-triggered CONTINUOUS tail (available_now=False)
     picks up segments that arrive over time and merges them correctly —
