@@ -1,7 +1,8 @@
 """Change-data-feed from SNAPSHOT STATE: what changed between two
 committed table versions, derived by diffing the versions themselves —
 the read-side complement to the write-side changelog feed the merge
-publishes (``cdc/merge.py`` ``_link_changelog_deltas``,
+publishes after each snapshot CAS, from the delta files the committing
+snapshot added (``cdc/merge.py`` ``publish_changelog``,
 ``serving.read_changelog``).
 
 Why both exist (Delta's CDF makes the same split):

@@ -11,7 +11,9 @@ The vectorized replacement for the reference's per-event state mutation
         reducer, each holding every bucket its keys hash to
         (``cdc/mor.py write_delta_files``) — O(batch) bytes
       → atomic snapshot commit that also records the stream epoch
-        (exactly-once).
+        (exactly-once)
+      → the change feed: the delta files that commit added, linked into
+        the epoch's feed dir only after the CAS (``publish_changelog``).
 
 Resolution against the stored rows happens at read
 (``cdc/mor.py resolve_deltas``) and is amortized by compaction
@@ -33,7 +35,6 @@ Table meta columns (the generalization of the reference's per-key
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +43,7 @@ from pyspark.sql import types as T
 
 from etl_kafka_project_spark.cdc.envelope import PAYLOAD_FIELDS
 from etl_kafka_project_spark.cdc.fold import fold_batch
+from etl_kafka_project_spark.cdc.metrics import Stopwatch
 from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.minilake.table import LakeTable, Snapshot, SnapshotConflictError
 
@@ -114,138 +116,46 @@ class MergeStats:
     #: hottest key's folded event count (adaptive-salting signal),
     #: observed on the write job
     max_key_events: int = 0
-    #: merge sub-phase walls in seconds (plan build, write job,
-    #: changelog link, commit); apply_epoch files them under the
-    #: lineage doc's ``phases``
+    #: merge sub-phase walls in seconds (plan build, write job, commit,
+    #: feed publish); apply_epoch files them under the lineage doc's
+    #: ``phases``
     phases: dict[str, float] = field(default_factory=dict)
 
 
-def _link_changelog_deltas(
-    table: LakeTable, new_files, changelog_dir: str, epoch: tuple[str, int]
+def publish_changelog(
+    table: LakeTable, version: int, changelog_dir: str, epoch: tuple[str, int]
 ) -> None:
-    """Publish the epoch's delta files as its change-feed entry by
-    hardlink (fallback: copy, for a cross-device changelog dir). The
-    epoch dir is rebuilt from scratch so crash/conflict retries stay
-    idempotent — a conflict retry re-merges from a fresh snapshot and
-    relinks its OWN files, never the dropped attempt's."""
+    """Publish an epoch's change feed: the delta files that snapshot
+    ``version`` (the commit that recorded the epoch) added over its
+    parent, hardlinked (fallback: copied) into
+    ``changelog/stream=<id>/epoch=<n>``. The feed is thus defined by the
+    snapshot that committed the epoch and exists only after that CAS.
+    Only missing files are linked and nothing is deleted, so running it
+    again finishes an interrupted publish. Driver-side: snapshot headers
+    and the manifests of the buckets the commit changed, no Spark job."""
     import shutil
 
+    new = table.snapshot_header(version)
+    old = table.snapshot_header(new.parent)
+    changed = {b for b, m in new.manifests.items() if old.manifests.get(b) != m}
+    added = {fe.path for fe in table.snapshot(version, buckets=changed).files} - {
+        fe.path for fe in table.snapshot(new.parent, buckets=changed).files
+    }
     dest = os.path.join(changelog_dir, f"stream={epoch[0]}", f"epoch={epoch[1]}")
-    shutil.rmtree(dest, ignore_errors=True)
     os.makedirs(dest, exist_ok=True)
-    for path in {fe.path for fe in new_files}:
+    for path in sorted(added):
         src = os.path.join(table.root, path)
         dst = os.path.join(dest, os.path.basename(path))
         try:
             os.link(src, dst)
+        except FileExistsError:
+            pass  # linked by an earlier or a concurrent publish
         except OSError:
-            shutil.copy2(src, dst)
-
-
-def _spans(marks: list[tuple[str, float]]) -> dict[str, float]:
-    """``merge_<phase>_s`` walls between consecutive (phase, end) marks."""
-    return {
-        f"merge_{name}_s": round(end - start, 3)
-        for (_, start), (name, end) in zip(marks, marks[1:])
-    }
-
-
-def _merge_mor(
-    table: LakeTable,
-    folded: DataFrame,
-    snap,
-    epoch: tuple[str, int] | None,
-    changelog_dir: str | None,
-    t0: float,
-) -> MergeStats:
-    """Merge-on-read epoch apply: ONE batch-scale job.
-
-    The folded actions append as delta files — O(batch) bytes written;
-    resolution happens at read (cdc/mor.py), compaction amortizes it
-    (stream.py schedules). The round-2 shape ran a separate stats job
-    (groupBy(_bucket).collect) over a persisted fold BEFORE writing; now
-    an ``Observation`` (CollectMetrics) rides the write job itself, so
-    the fold computes exactly once, nothing is cached, and the
-    per-trigger serial floor sheds a whole job's plan/schedule/collect
-    round-trip — the floor is what caps sustained scaling efficiency
-    (BENCH/BASELINE.md). Per-bucket lineage (keys per bucket) falls out
-    of the written file manifest entries for free; batch-global stats
-    (deletes, applied events, hottest key) come from the
-    observation.
-    """
-    from pyspark.sql import Observation
-
-    from etl_kafka_project_spark.cdc.mor import write_delta_files
-
-    # sub-phase wall clocks: the per-epoch serial floor is what caps
-    # sustained scaling efficiency, so it has to be measurable, not
-    # guessed at
-    marks: list[tuple[str, float]] = [("start", time.time())]
-
-    obs = Observation()
-    observed = folded.observe(
-        obs,
-        F.count(F.lit(1)).alias("keys"),
-        F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
-        F.sum("_applied").alias("events"),
-        F.max("_applied").alias("max_key_events"),
-    )
-    marks.append(("plan_build", time.time()))
-    new_files = write_delta_files(table, observed, snap)
-    marks.append(("write_job", time.time()))
-    if changelog_dir is not None and epoch is not None:
-        # The outbound change feed IS the epoch's delta files: the feed
-        # columns are a pure projection of the fold output the deltas
-        # store (serving._feed_from_delta does the projection at read),
-        # so instead of a second batch-scale write job over a persisted
-        # fold (the round-3 shape), the committed delta files are
-        # HARDLINKED into the feed's epoch dir — the Paimon
-        # changelog-producer=input / Iceberg changelog-from-deltas
-        # pattern. Per epoch this sheds one full write job and halves
-        # bytes written; the feed stays immutable across compaction and
-        # vacuum because the links keep the inodes alive. Linked BEFORE
-        # the snapshot commit, so a crash-retried epoch rebuilds the dir.
-        _link_changelog_deltas(table, new_files, changelog_dir, epoch)
-        marks.append(("changelog_link", time.time()))
-    m = obs.get  # write job has run; never blocks here
-    n_keys = int(m["keys"] or 0)
-    if n_keys == 0:
-        return MergeStats(
-            epoch_id=epoch[1] if epoch else None,
-            events_in=0, keys=0, upserts=0, deletes=0, touched_buckets=0,
-            wall_ms=(time.time() - t0) * 1000, per_bucket=[],
-            snapshot_version=snap.version, skipped=False, phases=_spans(marks),
-        )
-    n_deletes = int(m["deletes"] or 0)
-    bucket_keys: dict[int, int] = {}
-    for fe in new_files:
-        bucket_keys[fe.bucket] = bucket_keys.get(fe.bucket, 0) + fe.rows
-    try:
-        committed = table.commit(
-            expected_version=snap.version, new_files=new_files, epoch=epoch
-        )
-    except SnapshotConflictError:
-        # a concurrent writer moved the table: these delta files carry a
-        # now-stale _writer_version stamp (parent-version commit-order
-        # authority), so the caller must RE-MERGE from a fresh snapshot
-        # (cdc/stream.py apply_epoch retries); drop this attempt's files
-        # rather than leave stamped orphans for the vacuum
-        _remove_files(table, new_files)
-        raise
-    marks.append(("commit", time.time()))
-    return MergeStats(
-        epoch_id=epoch[1] if epoch else None,
-        events_in=int(m["events"] or 0),
-        keys=n_keys,
-        upserts=n_keys - n_deletes,
-        deletes=n_deletes,
-        touched_buckets=len(bucket_keys),
-        wall_ms=(time.time() - t0) * 1000,
-        per_bucket=[{"_bucket": b, "keys": k} for b, k in sorted(bucket_keys.items())],
-        snapshot_version=committed.version,
-        max_key_events=int(m["max_key_events"] or 0),
-        phases=_spans(marks),
-    )
+            # cross-device feed dir: copy under a name readers skip, then
+            # rename, so a crash never leaves a truncated feed file
+            tmp = os.path.join(dest, "." + os.path.basename(path))
+            shutil.copy2(src, tmp)
+            os.replace(tmp, dst)
 
 
 def merge_events(
@@ -255,21 +165,35 @@ def merge_events(
     salt: int | None = None,
     changelog_dir: str | None = None,
 ) -> MergeStats:
-    """fold + merge in one call (the foreachBatch body, minus idempotence
-    which lives in ``cdc/stream.py``).
+    """fold + merge-on-read apply + snapshot commit in one call (the
+    foreachBatch body, minus idempotence which lives in
+    ``cdc/stream.py``). ONE batch-scale job: the folded actions append
+    as delta files, O(batch) bytes written; resolution happens at read
+    (``cdc/mor.py``), and compaction amortizes it. An ``Observation``
+    rides the write job for the batch-global stats (deletes, applied
+    events, hottest key), so the fold computes once and nothing is
+    cached; per-bucket key counts fall out of the written files'
+    manifest entries. A batch that folds to no key commits nothing.
 
-    ``changelog_dir``: if set (and an epoch id is given), the epoch's
-    delta files are published as the outbound change feed — the analog
-    of the reference's Redis pub/sub ``movie_updates`` channel
+    ``changelog_dir``: if set (and an epoch id is given), the committed
+    epoch's delta files are published as the outbound change feed
+    (:func:`publish_changelog`, after the CAS) — the analog of the
+    reference's Redis pub/sub ``movie_updates`` channel
     (``redis_interface.py:121-123``), consumable batch or streaming
-    (``serving.py``). Unlike the reference (which publishes full merged
-    documents), the feed is a partial-update stream: per-column write
-    lsns + the reset barrier make "unchanged" vs "set to null"
-    distinguishable (``serving.apply_changelog``).
+    (``serving.py``). The feed costs no write job: its columns are a
+    projection of the fold output the deltas store, and the links keep
+    the files alive across compaction and vacuum (the Paimon
+    changelog-producer=input shape). Unlike the reference (which
+    publishes full merged documents), the feed is a partial-update
+    stream: per-column write lsns + the reset barrier make "unchanged"
+    vs "set to null" distinguishable (``serving.apply_changelog``).
     """
-    from etl_kafka_project_spark.cdc.evolution import align_events
+    from pyspark.sql import Observation
 
-    t0 = time.time()
+    from etl_kafka_project_spark.cdc.evolution import align_events
+    from etl_kafka_project_spark.cdc.mor import write_delta_files
+
+    watch = Stopwatch()
     # header only: the append never reads the parent's file listing (the
     # write needs version/schema/props; resolution happens at read), so
     # the per-epoch serial floor skips assembling every bucket manifest
@@ -281,6 +205,50 @@ def merge_events(
         payload_columns=payload_columns(snap),
         salt=salt,
     ).withColumn("_bucket", table.bucket_expr(snap))
-    return _merge_mor(
-        table, folded, snap, epoch=epoch, changelog_dir=changelog_dir, t0=t0
+    obs = Observation()
+    observed = folded.observe(
+        obs,
+        F.count(F.lit(1)).alias("keys"),
+        F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
+        F.sum("_applied").alias("events"),
+        F.max("_applied").alias("max_key_events"),
+    )
+    watch.lap("merge_plan_build_s")
+    new_files = write_delta_files(table, observed, snap)
+    watch.lap("merge_write_job_s")
+    m = obs.get  # write job has run; never blocks here
+    n_keys, n_deletes = int(m["keys"] or 0), int(m["deletes"] or 0)
+    committed = snap  # a batch that folds to no key commits nothing
+    if n_keys:
+        try:
+            committed = table.commit(
+                expected_version=snap.version, new_files=new_files, epoch=epoch
+            )
+        except SnapshotConflictError:
+            # a concurrent writer moved the table: these delta files carry
+            # a now-stale _writer_version stamp (parent-version commit-order
+            # authority), so the caller must RE-MERGE from a fresh snapshot
+            # (cdc/stream.py apply_epoch retries); drop this attempt's
+            # files rather than leave stamped orphans for the vacuum
+            _remove_files(table, new_files)
+            raise
+        watch.lap("merge_commit_s")
+        if changelog_dir is not None and epoch is not None:
+            publish_changelog(table, committed.version, changelog_dir, epoch)
+            watch.lap("merge_changelog_link_s")
+    bucket_keys: dict[int, int] = {}
+    for fe in new_files:
+        bucket_keys[fe.bucket] = bucket_keys.get(fe.bucket, 0) + fe.rows
+    return MergeStats(
+        epoch_id=epoch[1] if epoch else None,
+        events_in=int(m["events"] or 0),
+        keys=n_keys,
+        upserts=n_keys - n_deletes,
+        deletes=n_deletes,
+        touched_buckets=len(bucket_keys),
+        wall_ms=watch.elapsed_ms(),
+        per_bucket=[{"_bucket": b, "keys": k} for b, k in sorted(bucket_keys.items())],
+        snapshot_version=committed.version,
+        max_key_events=int(m["max_key_events"] or 0),
+        phases=watch.phases,
     )

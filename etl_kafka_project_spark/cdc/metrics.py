@@ -17,7 +17,9 @@ per-bucket key counts come from the commit's file manifest.
 ``lsn_span`` is the batch's valid-event LSN span (absent when the batch
 held no valid event); it is the stream's only persisted record of which
 LSNs it has applied (``cdc/stream.py``). ``phases`` holds the epoch's
-layer walls and housekeeping counters (absent on a crash-resume skip).
+layer walls and housekeeping counters, timed by :class:`Stopwatch`; a
+skipped epoch's doc carries the walls of the steps its retry ran. The
+dead-letter quarantine exists only for an epoch that had dead letters.
 
 Writes are atomic (tmp + rename) and keyed by epoch id, so a replayed
 epoch after crash-resume overwrites its own document — lineage stays
@@ -29,11 +31,32 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_kafka_project_spark.cdc.merge import MergeStats
 from etl_kafka_project_spark.minilake.table import _atomic_write_json
+
+if TYPE_CHECKING:
+    from etl_kafka_project_spark.cdc.merge import MergeStats
+
+
+class Stopwatch:
+    """The one wall-clock helper behind every ``phases`` entry:
+    ``lap(name)`` files the seconds since the previous lap (or since
+    creation) under ``name``; counters go straight into ``phases``."""
+
+    def __init__(self) -> None:
+        self.phases: dict = {}
+        self._start = self._last = time.time()
+
+    def lap(self, name: str) -> None:
+        now = time.time()
+        self.phases[name] = round(now - self._last, 3)
+        self._last = now
+
+    def elapsed_ms(self) -> float:
+        return (time.time() - self._start) * 1000
 
 
 class LineageLog:

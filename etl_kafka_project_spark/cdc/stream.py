@@ -20,8 +20,9 @@ Exactly-once (north rule), two cooperating mechanisms:
 
 Per-epoch flow: idempotence check → dead-letter split (envelope
 validation, ``cdc/envelope.py``) → schema evolution (``cdc/evolution.py``)
-→ fold + MERGE (``cdc/fold.py``/``cdc/merge.py``) → lineage document next
-to the checkpoint (``cdc/metrics.py``).
+→ fold + MERGE + CAS + feed publish (``cdc/fold.py``/``cdc/merge.py``) →
+quarantine → lineage document next to the checkpoint (``cdc/metrics.py``);
+an epoch found already committed skips the merge, not the steps after it.
 """
 
 from __future__ import annotations
@@ -40,8 +41,8 @@ from etl_kafka_project_spark.cdc.envelope import (
     split_dead_letters,
 )
 from etl_kafka_project_spark.cdc.evolution import evolve_table
-from etl_kafka_project_spark.cdc.merge import MergeStats, merge_events
-from etl_kafka_project_spark.cdc.metrics import LineageLog
+from etl_kafka_project_spark.cdc.merge import MergeStats, merge_events, publish_changelog
+from etl_kafka_project_spark.cdc.metrics import LineageLog, Stopwatch
 from etl_kafka_project_spark.config import EngineConfig
 from etl_kafka_project_spark.functions.exprcache import cached_exprs
 from etl_kafka_project_spark.minilake.table import LakeTable
@@ -181,16 +182,38 @@ class ReplayJob:
     def _note_applied_range(self, lo: int, hi: int) -> None:
         self._lsn_intervals = _coalesce_ranges(self._applied_lsn_intervals() + [[lo, hi]])
 
-    @staticmethod
-    def _skip_committed(table: LakeTable, epoch_id: int) -> MergeStats:
-        """Stats of an exactly-once skip of an epoch the table already
-        committed — a crash-resume retry, or a concurrent retry of this
-        stream that won the CAS with our epoch id."""
-        return MergeStats(
+    def _skip_committed(
+        self, table: LakeTable, batch_df: DataFrame, epoch_id: int, watch: Stopwatch
+    ) -> tuple[MergeStats, dict]:
+        """Exactly-once skip of an epoch the table already committed — a
+        crash-resume retry, or a concurrent retry of this stream that
+        won the CAS with our epoch id. The committing attempt's
+        observation is not in hand, so one aggregate over the batch
+        gives its dead-letter count and valid-lsn span. That attempt may
+        also have died before or inside its feed publish: finish it from
+        the snapshot that committed the epoch, found by walking snapshot
+        headers back from the current one."""
+        current = table.snapshot_header()
+        if self.emit_changelog:
+            try:
+                snap = current
+                while (parent := table.snapshot_header(snap.parent)).has_epoch(
+                    self.stream_id, epoch_id
+                ):
+                    snap = parent
+                publish_changelog(
+                    table, snap.version, self.changelog_dir, (self.stream_id, epoch_id)
+                )
+            except FileNotFoundError:
+                # the walk (or the diff) reached an expired snapshot
+                watch.phases["changelog_snapshot_expired"] = True
+            watch.lap("merge_changelog_link_s")
+        stats = MergeStats(
             epoch_id=epoch_id, events_in=0, keys=0, upserts=0, deletes=0,
             touched_buckets=0, wall_ms=0.0, per_bucket=[], skipped=True,
-            snapshot_version=table.current_version(),
+            snapshot_version=current.version,
         )
+        return stats, batch_df.agg(*self._batch_metrics()).first().asDict()
 
     @staticmethod
     def _batch_metrics() -> list[F.Column]:
@@ -255,7 +278,13 @@ class ReplayJob:
 
     def apply_epoch(self, batch_df: DataFrame, epoch_id: int) -> MergeStats:
         """Apply one micro-batch exactly once. Public so batch-mode
-        replays and tests can drive it without a streaming query."""
+        replays and tests can drive it without a streaming query.
+
+        Merge and commit the epoch, or find it already committed (a
+        crash-resume retry, or a concurrent retry that won the CAS);
+        then the same idempotent finish, so a retry after a crash at
+        any step past the CAS finishes the epoch. Housekeeping runs
+        only after this attempt's own commit."""
         spark = batch_df.sparkSession
         # observations must fire even when a filter empties the batch
         # (all-redelivered epochs): AQE's empty-relation propagation
@@ -269,40 +298,126 @@ class ReplayJob:
                 f"{_excl},{_rule}" if _excl else _rule,
             )
         table = LakeTable(spark, self.table_root)
-        lineage = LineageLog(self.lineage_dir, self.stream_id)
+        watch = Stopwatch()
+        phases = watch.phases
+        # incompatible-typed columns (rare; driver-side schema diff,
+        # cached per batch schema): rows carrying a non-null value there
+        # dead-letter — the merge must never silently coerce them
+        bad_cols = self._incompatible_columns(table, batch_df.schema)
 
-        dead_path = os.path.join(self.dead_letter_dir, f"epoch={epoch_id}")
         if table.snapshot_header().has_epoch(self.stream_id, epoch_id):
-            # crash-resume retry of a committed epoch: exactly-once skip.
-            # The quarantine write is gated on the merge job's observed
-            # invalid count and so happens AFTER the data commit; a crash
-            # in that window reaches here with the epoch's dead letters
-            # unwritten — detect (no marker dir) and heal, idempotently.
-            dead_counts = {}
-            if not os.path.exists(dead_path):
-                bad = self._incompatible_columns(table, batch_df.schema)
-                self._quarantined(batch_df, bad).write.mode("overwrite").parquet(dead_path)
-                dead_counts = _dead_letter_counts(dead_path)
-            # the epoch's span comes from the batch itself (one aggregate,
-            # skip path only): the crashed attempt may have died before
-            # recording its lineage doc, and a doc without the span would
-            # make a restarted job trip a spurious order violation on the
-            # next verbatim re-delivery
-            m = batch_df.agg(*self._batch_metrics()).first()
-            extra = {}
-            if m["lsn_min"] is not None:
-                extra["lsn_span"] = [int(m["lsn_min"]), int(m["lsn_max"])]
-                self._note_applied_range(*extra["lsn_span"])
-            stats = self._skip_committed(table, epoch_id)
-            lineage.record(stats, dead_letters=dead_counts, extra=extra)
-            self.applied.append(stats)
-            return stats
+            stats, obs = self._skip_committed(table, batch_df, epoch_id, watch)
+        else:
+            stats, obs = self._merge_and_commit(table, batch_df, epoch_id, bad_cols, watch)
 
-        import time as _time
+        # quarantine dead letters (idempotent overwrite per epoch);
+        # per-reason counts come from the written files' metadata — no
+        # dedicated counting job, and no write at all for a clean epoch
+        dead_counts: dict[str, int] = {}
+        if int(obs["n_dead"] or 0) > 0 or bad_cols:
+            dead_path = os.path.join(self.dead_letter_dir, f"epoch={epoch_id}")
+            self._quarantined(batch_df, bad_cols).write.mode("overwrite").parquet(dead_path)
+            dead_counts = _dead_letter_counts(dead_path)
+        watch.lap("dead_letters_s")
 
-        phases: dict[str, float] = {}
-        t = _time.time()
+        # Applied LSN intervals + delivery-order guard: the batch's
+        # valid-lsn span is taken BEFORE the committed-scope dedup
+        # filter, so an out-of-order FIRST delivery is caught even when
+        # that filter would silently drop it. Detection is exact for the
+        # realistic failure shape (a whole late segment): the batch's
+        # min lsn falls below the applied high-water mark yet inside no
+        # applied interval. Re-deliveries pass (their lsns lie inside
+        # applied intervals), and in-order streams keep the bookkeeping
+        # at ONE coalesced interval. Events between a violating batch's
+        # min and max that fall in a gap while the min does not are the
+        # only shape the [min,max] summary cannot see. A skipped epoch
+        # records its span but is not checked: the attempt that
+        # committed it already was.
+        order_violation: tuple[int, int] | None = None
+        extra: dict = {"phases": phases}
+        lo, hi = obs["lsn_min"], obs["lsn_max"]
+        if lo is not None:
+            ranges = self._applied_lsn_intervals()
+            if (
+                self.config.order_guard != "off"
+                and not stats.skipped
+                and ranges
+                and lo <= ranges[-1][1]
+                and not any(a <= lo <= b for a, b in ranges)
+            ):
+                order_violation = (int(lo), int(ranges[-1][1]))
+                phases["order_violation"] = list(order_violation)
+            # the batch's FULL valid-lsn span (pre-dedup-filter); a
+            # restarted job rebuilds its applied intervals from this
+            extra["lsn_span"] = [int(lo), int(hi)]
+            self._note_applied_range(*extra["lsn_span"])
 
+        # Housekeeping, only after a commit of this attempt's own.
+        # Compaction: fold deltas into base every N applied epochs
+        # (idempotent; a crash before/after just defers it). Bounds
+        # read-time resolve cost between compactions.
+        n_applied = len([s for s in self.applied if not s.skipped]) + 1
+        if not stats.skipped and n_applied % self.config.compact_every_epochs == 0:
+            from etl_kafka_project_spark.cdc.mor import compact_deltas
+
+            c = compact_deltas(
+                table, delta_share=self.config.compact_delta_share, config=self.config
+            )
+            watch.lap("compact_s")
+            phases["compact_buckets"] = c.get("buckets", 0)
+            phases["compact_cold_skipped"] = c.get("cold_buckets_skipped", 0)
+
+        # Snapshot-expiry housekeeping (opt-in cadence): vacuum snapshot
+        # JSONs past the retention window plus data/manifest files no
+        # retained snapshot references. The vacuum's orphan age-gate
+        # makes it safe while concurrent streams stage commits.
+        if (
+            not stats.skipped
+            and self.config.expire_snapshots_every_epochs
+            and n_applied % self.config.expire_snapshots_every_epochs == 0
+        ):
+            from etl_kafka_project_spark.cdc.compaction import expire_snapshots
+
+            e = expire_snapshots(table, keep_last=self.config.expire_keep_last)
+            watch.lap("expire_s")
+            phases["expire_snapshots_removed"] = e.get("snapshots_removed", 0)
+            phases["expire_data_files_removed"] = e.get("data_files_removed", 0)
+
+        # Adaptive hot-key salting (AQE-style, reactive): the merge's
+        # stats carry the hottest key's folded event count for free; once
+        # it crosses config.hot_key_threshold, subsequent epochs fold via
+        # the two-phase salted aggregation. The epoch that DETECTED the
+        # skew already folded correctly (the plain fold is skew-tolerant
+        # via map-side partials) — salting only buys the pathological
+        # single-dominant-key + wide-payload case.
+        if self.salt is None and stats.max_key_events >= self.config.hot_key_threshold:
+            self.salt = self.config.salt_buckets
+            phases["salted_from_next_epoch"] = self.salt
+
+        LineageLog(self.lineage_dir, self.stream_id).record(
+            stats, dead_letters=dead_counts, extra=extra
+        )
+        self.applied.append(stats)
+        if order_violation is not None and self.config.order_guard == "error":
+            lo, hwm = order_violation
+            raise OutOfOrderDeliveryError(
+                f"stream {self.stream_id!r} epoch {epoch_id}: batch min lsn"
+                f" {lo} is below the applied high-water mark {hwm} but inside"
+                f" no applied lsn interval — an out-of-order first delivery."
+                f" Its snapshot (v{stats.snapshot_version}) is committed:"
+                f" roll back via time travel and re-deliver in order, or set"
+                f" EngineConfig(order_guard='warn') to record-and-continue."
+            )
+        return stats
+
+    def _merge_and_commit(
+        self, table: LakeTable, batch_df: DataFrame, epoch_id: int,
+        bad_cols: list[str], watch: Stopwatch,
+    ) -> tuple[MergeStats, dict]:
+        """Merge the batch's valid events and commit them with the epoch
+        id. Returns the stats and the batch's observed dead-letter count
+        and valid-lsn span, or the skip's when a concurrent retry of
+        this stream committed the epoch first."""
         # Envelope validation rides the MERGE job itself: an
         # Observation counts invalid events during the merge's own
         # batch scan, and the quarantine write job — a SECOND full
@@ -321,12 +436,9 @@ class ReplayJob:
         batch = batch_df.observe(dead_obs, *self._batch_metrics())
         valid, _ = split_dead_letters(batch)
 
-        # incompatible-typed columns (rare; driver-side schema diff,
-        # cached per batch schema): rows carrying a non-null value
-        # there dead-letter — the merge must never silently coerce
-        # them — and the column drops from the merge input so
-        # align_events null-fills it like any absent column
-        bad_cols = self._incompatible_columns(table, valid.schema)
+        # an incompatibly-typed column drops from the merge input (its
+        # non-null carriers dead-letter), so align_events null-fills it
+        # like any absent column
         if bad_cols:
             valid = valid.filter(~self._incompat_predicate(bad_cols)).drop(*bad_cols)
 
@@ -377,8 +489,7 @@ class ReplayJob:
                     evolve_table(table, valid.schema)
                     self._covered_schemas.add(batch_schema_fp)
                 if attempt == 0:
-                    phases["evolve_s"] = round(_time.time() - t, 2)
-                    t = _time.time()
+                    watch.lap("evolve_s")
                 stats = merge_events(
                     table,
                     valid,
@@ -388,129 +499,21 @@ class ReplayJob:
                 )
                 break
             except SnapshotConflictError:
-                phases["commit_conflicts"] = attempt + 1
+                watch.phases["commit_conflicts"] = attempt + 1
                 if table.snapshot_header().has_epoch(self.stream_id, epoch_id):
-                    # a concurrent retry of THIS stream won with our
-                    # epoch id — exactly-once skip, same as the
-                    # crash-resume path above
-                    stats = self._skip_committed(table, epoch_id)
-                    break
+                    watch.lap("merge_s")
+                    return self._skip_committed(table, batch_df, epoch_id, watch)
         else:
             raise SnapshotConflictError(
                 f"epoch {epoch_id} of stream {self.stream_id} lost the"
                 f" snapshot CAS {EPOCH_COMMIT_RETRIES + 1} times in a row"
             )
-        phases["merge_s"] = round(_time.time() - t, 2)
-        phases.update(stats.phases)
-        t = _time.time()
+        watch.lap("merge_s")
+        watch.phases.update(stats.phases)
+        # the merge job always runs (even for an empty batch), so the
+        # observation never blocks
+        return stats, dead_obs.get
 
-        # quarantine dead letters (idempotent overwrite per epoch);
-        # per-reason counts come from the written files' metadata —
-        # no dedicated counting job. The merge job above always runs
-        # (even for an empty batch), so the observation never blocks.
-        obs = dead_obs.get
-        if int(obs["n_dead"] or 0) > 0 or bad_cols:
-            self._quarantined(batch_df, bad_cols).write.mode("overwrite").parquet(
-                dead_path
-            )
-            dead_counts = _dead_letter_counts(dead_path)
-        else:
-            # zero-dead marker: lets the crash-resume skip path tell
-            # "nothing to quarantine" from "crashed before writing"
-            os.makedirs(dead_path, exist_ok=True)
-            dead_counts = {}
-        phases["dead_letters_s"] = round(_time.time() - t, 2)
-        t = _time.time()
-
-        # Applied LSN intervals + delivery-order guard: the observation
-        # above saw the batch's valid-lsn span BEFORE the committed-scope
-        # dedup filter, so an out-of-order FIRST delivery is caught even
-        # when that filter would silently drop it. Detection is exact
-        # for the realistic failure shape (a whole late segment): the
-        # batch's min lsn falls below the applied high-water mark yet
-        # inside no applied interval. Re-deliveries pass (their lsns lie
-        # inside applied intervals), and in-order streams keep the
-        # bookkeeping at ONE coalesced interval. Events between a
-        # violating batch's min and max that fall in a gap while the min
-        # does not are the only shape the [min,max] summary cannot see.
-        # A conflict-skipped epoch records its span but is not checked:
-        # the winner that applied it already was.
-        order_violation: tuple[int, int] | None = None
-        lsn_span: list[int] | None = None
-        lo, hi = obs["lsn_min"], obs["lsn_max"]
-        if lo is not None:
-            ranges = self._applied_lsn_intervals()
-            if (
-                self.config.order_guard != "off"
-                and not stats.skipped
-                and ranges
-                and lo <= ranges[-1][1]
-                and not any(a <= lo <= b for a, b in ranges)
-            ):
-                order_violation = (int(lo), int(ranges[-1][1]))
-                phases["order_violation"] = list(order_violation)
-            lsn_span = [int(lo), int(hi)]
-            self._note_applied_range(*lsn_span)
-
-        # Housekeeping: fold deltas into base every N applied epochs
-        # (idempotent; a crash before/after just defers it). Bounds
-        # read-time resolve cost between compactions.
-        n_applied = len([s for s in self.applied if not s.skipped]) + 1
-        if n_applied % self.config.compact_every_epochs == 0:
-            from etl_kafka_project_spark.cdc.mor import compact_deltas
-
-            c = compact_deltas(
-                table, delta_share=self.config.compact_delta_share, config=self.config
-            )
-            phases["compact_s"] = round(_time.time() - t, 2)
-            t = _time.time()
-            phases["compact_buckets"] = c.get("buckets", 0)
-            phases["compact_cold_skipped"] = c.get("cold_buckets_skipped", 0)
-
-        # Snapshot-expiry housekeeping (opt-in cadence): vacuum snapshot
-        # JSONs past the retention window plus data/manifest files no
-        # retained snapshot references. The vacuum's orphan age-gate
-        # makes it safe while concurrent streams stage commits.
-        if (
-            self.config.expire_snapshots_every_epochs
-            and n_applied % self.config.expire_snapshots_every_epochs == 0
-        ):
-            from etl_kafka_project_spark.cdc.compaction import expire_snapshots
-
-            e = expire_snapshots(table, keep_last=self.config.expire_keep_last)
-            phases["expire_s"] = round(_time.time() - t, 2)
-            phases["expire_snapshots_removed"] = e.get("snapshots_removed", 0)
-            phases["expire_data_files_removed"] = e.get("data_files_removed", 0)
-
-        # Adaptive hot-key salting (AQE-style, reactive): the merge's
-        # stats carry the hottest key's folded event count for free; once
-        # it crosses config.hot_key_threshold, subsequent epochs fold via
-        # the two-phase salted aggregation. The epoch that DETECTED the
-        # skew already folded correctly (the plain fold is skew-tolerant
-        # via map-side partials) — salting only buys the pathological
-        # single-dominant-key + wide-payload case.
-        if self.salt is None and stats.max_key_events >= self.config.hot_key_threshold:
-            self.salt = self.config.salt_buckets
-            phases["salted_from_next_epoch"] = self.salt
-
-        extra: dict = {"phases": phases}
-        if lsn_span is not None:
-            # the batch's FULL valid-lsn span (pre-dedup-filter); a
-            # restarted job rebuilds its applied intervals from this
-            extra["lsn_span"] = lsn_span
-        lineage.record(stats, dead_letters=dead_counts, extra=extra)
-        self.applied.append(stats)
-        if order_violation is not None and self.config.order_guard == "error":
-            lo, hwm = order_violation
-            raise OutOfOrderDeliveryError(
-                f"stream {self.stream_id!r} epoch {epoch_id}: batch min lsn"
-                f" {lo} is below the applied high-water mark {hwm} but inside"
-                f" no applied lsn interval — an out-of-order first delivery."
-                f" Its snapshot (v{stats.snapshot_version}) is committed:"
-                f" roll back via time travel and re-deliver in order, or set"
-                f" EngineConfig(order_guard='warn') to record-and-continue."
-            )
-        return stats
 
     # ---------- streaming query ----------
 

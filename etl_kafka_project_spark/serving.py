@@ -108,9 +108,11 @@ def fill_none(df: DataFrame) -> DataFrame:
 
 def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, Snapshot, str, str]:
     """The feed's delta files as stored, the table's snapshot header,
-    the feed dir and the glob of its epoch dirs. The merge hardlinks
-    each epoch's delta files under ``changelog/stream=<id>/epoch=<n>``
-    (``cdc/merge.py _link_changelog_deltas``); the per-stream namespace
+    the feed dir and the glob of its epoch dirs. After each snapshot CAS
+    the merge hardlinks the delta files that snapshot added under
+    ``changelog/stream=<id>/epoch=<n>`` (``cdc/merge.py
+    publish_changelog``), so an epoch dir exists only for a committed
+    epoch; the per-stream namespace
     keeps two streams merging into one table from clobbering each
     other's feed epochs. The epoch dirs found are read with the table's
     CURRENT delta schema, so epochs written before a schema evolution
@@ -131,9 +133,10 @@ def _changelog(spark: SparkSession, table_root: str) -> tuple[DataFrame, Snapsho
 
 
 def _feed_from_delta(df: DataFrame, snap: Snapshot) -> DataFrame:
-    """Project the changelog's delta files (the merge hardlinks each
-    epoch's committed delta files into the feed dir instead of writing a
-    second copy, ``cdc/merge.py _link_changelog_deltas``) into the feed
+    """Project the changelog's delta files (after the snapshot CAS, the
+    merge hardlinks the delta files the committing snapshot added into
+    the feed dir instead of writing a second copy, ``cdc/merge.py
+    publish_changelog``) into the feed
     contract shape ``(<keys>, op U/D, lsn, reset_lsn, <payload>,
     <payload>_lsn..., stream, epoch)``, keys and payload as the table's
     snapshot lays them out. A write-lsn of the NEVER sentinel (column

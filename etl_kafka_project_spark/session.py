@@ -65,12 +65,10 @@ def build_session(
         # zstd moves ~30% fewer bytes than lz4 for a CPU cost that only
         # shows below ~4 cores. A/B (2026-08-18, compute-weighted-small,
         # min-of-2): local[8] 23.6s vs 27.0s, 2->8 sustained-epoch
-        # efficiency 0.82 vs 0.65. Override: SPARK_GRAFT_IO_CODEC.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # efficiency 0.82 vs 0.65.
+        .config("spark.io.compression.codec", "zstd")
+        # a caller that wants the UI passes it in extra_conf
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
     for k, v in (extra_conf or {}).items():

@@ -156,6 +156,20 @@ def test_conflict_skip_preserves_winner_lsn_span(spark, tmp_path, monkeypatch):
     assert doc.get("lsn_span"), doc
     _compare(_final_state(spark, tmp_path), [ev])
 
+    # epoch 1's feed dir holds exactly the winner's committed files: the
+    # loser published nothing before its lost CAS
+    table = LakeTable(spark, str(tmp_path / "table"))
+    v1 = next(
+        v
+        for v in range(1, table.current_version() + 1)
+        if table.snapshot_header(v).has_epoch("s1", 1)
+    )
+    added = {fe.path for fe in table.snapshot(v1).files} - {
+        fe.path for fe in table.snapshot(v1 - 1).files
+    }
+    feed_dir = os.path.join(job.changelog_dir, "stream=s1", "epoch=1")
+    assert added and set(os.listdir(feed_dir)) == {os.path.basename(p) for p in added}
+
     # restart: a fresh job rebuilds its applied intervals from lineage;
     # a verbatim re-delivery of epoch 1's events (new epoch id) must
     # pass the order guard (lsns lie inside applied intervals), not

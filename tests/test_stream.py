@@ -55,6 +55,8 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
     for d in docs:
         assert merge_phases <= d["phases"].keys()
         assert all(d["phases"][k] >= 0 for k in merge_phases)
+    # a clean replay quarantines nothing: no per-epoch dead-letter dir
+    assert not os.path.exists(job.dead_letter_dir)
 
 
 def _open(spark, job):
@@ -80,6 +82,18 @@ def test_epoch_replay_is_skipped(spark, tmp_path):
     assert s2.skipped
     assert _open(spark, job).current_version() == v_before
     pd.testing.assert_frame_equal(before, _final_state_pdf(_open(spark, job)))
+
+    # the committing snapshot's parent has expired: the skip cannot
+    # re-derive the epoch's feed, records that, and does not fail
+    from etl_kafka_project_spark.cdc.compaction import expire_snapshots
+
+    feed_dir = os.path.join(job.changelog_dir, f"stream={job.stream_id}", "epoch=0")
+    feed = sorted(os.listdir(feed_dir))
+    expire_snapshots(_open(spark, job), keep_last=1)
+    assert job.apply_epoch(batch, 0).skipped
+    doc = LineageLog(job.lineage_dir, job.stream_id).read_epoch(0)
+    assert doc["phases"]["changelog_snapshot_expired"] is True
+    assert feed and sorted(os.listdir(feed_dir)) == feed
 
 
 def test_kill_and_resume(spark, tmp_path):
@@ -248,6 +262,9 @@ def test_watermarked_cross_epoch_dedup(spark, tmp_path, order_guard):
     stats = job.run(spark)
     assert len(stats) == 3
     assert stats[2].events_in == 0  # the re-delivered epoch applied nothing
+    # ...committed nothing, and so published no feed dir
+    feed = os.path.join(job.changelog_dir, f"stream={job.stream_id}")
+    assert sorted(os.listdir(feed)) == ["epoch=0", "epoch=1"]
 
     got = _final_state_pdf(_open(spark, job))
     want = replay_oracle(events).reindex(columns=got.columns)
@@ -442,13 +459,44 @@ def test_crash_after_commit_before_lineage_record(spark, tmp_path, monkeypatch):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_crash_after_changelog_link_before_snapshot_cas(spark, tmp_path, monkeypatch):
-    """Fault at the "changelog linked, snapshot not committed" boundary:
-    epoch 1's delta files are written and linked into its feed dir, then
-    the process dies before the snapshot CAS. A fresh job resuming the
-    checkpoint re-merges the epoch and rebuilds its feed dir from its
-    own files; the crashed attempt's delta files are orphans that the
-    vacuum removes, and neither the table nor the feed counts them."""
+def _committed_feed_files(table, stream_id, epoch_id) -> set[str]:
+    """Basenames of the delta files added by the snapshot that committed
+    the epoch: the one definition of that epoch's change feed."""
+    v = next(
+        v
+        for v in range(1, table.current_version() + 1)
+        if table.snapshot_header(v).has_epoch(stream_id, epoch_id)
+    )
+    added = {fe.path for fe in table.snapshot(v).files} - {
+        fe.path for fe in table.snapshot(v - 1).files
+    }
+    assert added
+    return {os.path.basename(p) for p in added}
+
+
+def _assert_feed_reproduces_table(spark, job, got):
+    from etl_kafka_project_spark import serving
+
+    payload = ["commit", "lang", "content"]
+    feed = serving.read_changelog(spark, job.table_root)
+    applied = serving.apply_changelog(feed, ["repo", "path"], payload)
+    cols = ["repo", "path", *payload, "last_lsn"]
+    pd.testing.assert_frame_equal(
+        applied.toPandas()[cols].sort_values(["repo", "path"]).reset_index(drop=True),
+        got[cols],
+        check_dtype=False,
+    )
+
+
+def test_crash_after_delta_write_before_snapshot_cas(spark, tmp_path, monkeypatch):
+    """Fault at the "delta files written, snapshot not committed"
+    boundary: epoch 1's delta files are written, then the process dies
+    before the snapshot CAS. The feed is published only after the CAS,
+    so the epoch has no feed dir and no feed rows. A fresh job resuming
+    the checkpoint re-merges the epoch and publishes its feed from its
+    own committed files; the crashed attempt's delta files are orphans
+    that the vacuum removes, and neither the table nor the feed counts
+    them."""
     from etl_kafka_project_spark import serving
     from etl_kafka_project_spark.cdc.compaction import expire_snapshots
     from etl_kafka_project_spark.minilake.table import LakeTable
@@ -477,7 +525,9 @@ def test_crash_after_changelog_link_before_snapshot_cas(spark, tmp_path, monkeyp
     assert not table.snapshot_header().has_epoch(job.stream_id, 1)
     epoch_dir = os.path.join(job.changelog_dir, f"stream={job.stream_id}", "epoch=1")
     orphans = {fe.path for fe in crashed}
-    assert orphans and set(os.listdir(epoch_dir)) == {os.path.basename(p) for p in orphans}
+    assert orphans and not os.path.exists(epoch_dir)
+    feed = serving.read_changelog(spark, job.table_root)
+    assert feed.filter(feed.epoch == 1).count() == 0
 
     # restart: fresh driver-side state; Spark retries epoch 1 with the
     # same batch, which is not committed and so applies in full
@@ -491,32 +541,151 @@ def test_crash_after_changelog_link_before_snapshot_cas(spark, tmp_path, monkeyp
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
     # epoch 1's feed dir holds exactly the files its committed snapshot added
-    v1 = next(
-        v
-        for v in range(1, table.current_version() + 1)
-        if table.snapshot_header(v).has_epoch(job.stream_id, 1)
-    )
-    added = {fe.path for fe in table.snapshot(v1).files} - {
-        fe.path for fe in table.snapshot(v1 - 1).files
-    }
-    assert set(os.listdir(epoch_dir)) == {os.path.basename(p) for p in added}
-    assert not added & orphans
+    added = _committed_feed_files(table, job.stream_id, 1)
+    assert set(os.listdir(epoch_dir)) == added
+    assert not added & {os.path.basename(p) for p in orphans}
 
     # the feed, applied, reproduces the table
-    payload = ["commit", "lang", "content"]
-    feed = serving.read_changelog(spark, str(tmp_path / "table"))
-    applied = serving.apply_changelog(feed, ["repo", "path"], payload)
-    cols = ["repo", "path", *payload, "last_lsn"]
-    pd.testing.assert_frame_equal(
-        applied.toPandas()[cols].sort_values(["repo", "path"]).reset_index(drop=True),
-        got[cols],
-        check_dtype=False,
-    )
+    _assert_feed_reproduces_table(spark, job, got)
 
     # the crashed attempt's delta files are orphans: the vacuum deletes them
     assert all(os.path.exists(os.path.join(table.root, p)) for p in orphans)
     expire_snapshots(table, orphan_grace_sec=0)
     assert not any(os.path.exists(os.path.join(table.root, p)) for p in orphans)
+
+
+#: the four envelope-invalid rows of test_dead_letters_quarantined, one
+#: per dead-letter reason
+_CORRUPT = pd.DataFrame(
+    {
+        "lsn": pd.array([None, 99991, 99992, 99993], dtype="Int64"),
+        "op": ["I", "X", "I", "I"],
+        "ts": pd.Timestamp("2024-01-01", tz="UTC"),
+        "repo": ["r", "r", None, "r"],
+        "path": ["p", "p", "p", "p"],
+        "commit": ["c"] * 4,
+        "lang": ["py"] * 4,
+        "content": ["x", "x", "x", None],
+    }
+)
+
+
+@pytest.mark.parametrize("step", ["feed_publish", "quarantine", "compaction_commit"])
+def test_crash_after_cas_resumes_by_skip(spark, tmp_path, monkeypatch, step):
+    """Fault matrix after the snapshot CAS: epoch 1 (a segment plus the
+    four corrupt rows) commits, then the process dies in one post-commit
+    step — in the feed publish before its first link, in the dead-letter
+    quarantine write, or in the compaction commit. A fresh job resuming
+    the checkpoint finds the epoch committed, skips it, and finishes
+    every step by running the same code again: the feed dir
+    holds exactly the files the committing snapshot added, the
+    quarantine holds all four reasons and the lineage doc counts them,
+    and the feed, applied, reproduces the table and the oracle."""
+    from etl_kafka_project_spark.minilake.table import LakeTable
+
+    spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
+    events, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+    noisy = lambda: read(segs[1]).unionByName(spark.createDataFrame(_CORRUPT, EVENT_SCHEMA))
+    crashed: list = []
+
+    def crash(*_):
+        crashed.append(step)
+        raise RuntimeError(f"injected crash in {step}")
+
+    if step == "feed_publish":
+        link = os.link
+        monkeypatch.setattr(
+            os,
+            "link",
+            lambda src, dst: (
+                crash() if f"{os.sep}epoch=1{os.sep}" in dst and not crashed else link(src, dst)
+            ),
+        )
+    elif step == "quarantine":
+        orig_q = ReplayJob._quarantined
+        monkeypatch.setattr(
+            ReplayJob,
+            "_quarantined",
+            lambda self, *a: crash() if not crashed else orig_q(self, *a),
+        )
+    else:
+        # compaction due on the second applied epoch, i.e. epoch 1
+        monkeypatch.setattr(EngineConfig, "compact_every_epochs", 2)
+        orig_c = LakeTable.commit
+        monkeypatch.setattr(
+            LakeTable,
+            "commit",
+            lambda self, *a, **kw: (
+                crash() if kw.get("removed_files") and not crashed else orig_c(self, *a, **kw)
+            ),
+        )
+
+    job = _job(tmp_path)
+    job.apply_epoch(read(segs[0]), 0)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.apply_epoch(noisy(), 1)
+    table = _open(spark, job)
+    lineage = LineageLog(job.lineage_dir, job.stream_id)
+    assert crashed == [step]
+    assert table.snapshot_header().has_epoch(job.stream_id, 1)
+    assert lineage.read_epoch(1) is None
+    epoch_dir = os.path.join(job.changelog_dir, f"stream={job.stream_id}", "epoch=1")
+    added = _committed_feed_files(table, job.stream_id, 1)
+    if step == "feed_publish":
+        assert os.listdir(epoch_dir) == []  # the publish died before its first link
+
+    # restart: fresh driver-side state; Spark retries epoch 1 with the
+    # same batch, which is committed and so skips
+    job2 = _job(tmp_path)
+    assert job2.apply_epoch(noisy(), 1).skipped
+    assert set(os.listdir(epoch_dir)) == added
+
+    reasons = {"null_lsn", "bad_op", "null_key", "null_content"}
+    dead = spark.read.parquet(os.path.join(job.dead_letter_dir, "epoch=1"))
+    assert {r["_dead_reason"] for r in dead.select("_dead_reason").collect()} == reasons
+    assert dead.count() == 4
+    doc = lineage.read_epoch(1)
+    seg1 = pd.read_parquet(segs[1])
+    assert doc["skipped"] is True
+    assert doc["dead_letters"] == {r: 1 for r in reasons}
+    assert doc["lsn_span"] == [int(seg1.lsn.min()), int(seg1.lsn.max())]
+
+    job2.apply_epoch(read(segs[2]), 2)
+    job2.apply_epoch(read(segs[3]), 3)
+    got = _final_state_pdf(table)
+    want = replay_oracle(events).reindex(columns=got.columns)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    _assert_feed_reproduces_table(spark, job, got)
+
+
+def test_order_guard_misses_gap_event_above_an_applied_min(spark, tmp_path):
+    """Known miss of the order guard: it summarises a batch by its
+    [min, max] valid-lsn span. A batch whose minimum lsn lies inside an
+    applied interval (a re-delivery) but which also carries a late FIRST
+    delivery inside a gap passes unflagged — no error, no
+    ``order_violation`` in its lineage doc. Closing this gap means
+    editing this test."""
+    spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
+    _, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+
+    job = _job(tmp_path)  # order_guard="error"
+    job.apply_epoch(read(segs[0]), 0)
+    job.apply_epoch(read(segs[2]), 1)  # segment 1's lsns are now a gap
+    seg0, seg1 = pd.read_parquet(segs[0]), pd.read_parquet(segs[1])
+    late = int(seg1.lsn.min())
+    assert seg0.lsn.max() < late < pd.read_parquet(segs[2]).lsn.min()
+    mixed = read(segs[0]).unionByName(read(segs[1]).filter(f"lsn = {late}"))
+    job.apply_epoch(mixed, 2)  # does not raise
+
+    doc = LineageLog(job.lineage_dir, job.stream_id).read_epoch(2)
+    assert doc["lsn_span"] == [int(seg0.lsn.min()), late]
+    assert "order_violation" not in doc["phases"]
 
 
 def test_rate_controlled_continuous_tail(spark, tmp_path):

@@ -53,13 +53,10 @@ def run_master(master: str, trials: int, rows: int = 50_000_000) -> dict:
             "spark.driver.extraJavaOptions",
             f"-XX:+UseParallelGC -XX:ActiveProcessorCount={n_cores}",
         )
-        # same shuffle codec as the engine session (session.py default),
+        # same shuffle codec as the engine session (session.py),
         # or the control and engine trade different byte volumes for the
         # same logical work and the pairing stops being apples-to-apples
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        .config("spark.io.compression.codec", "zstd")
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
