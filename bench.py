@@ -162,10 +162,12 @@ def main() -> None:
     only_cdc = os.environ.get("SPARK_GRAFT_BENCH_ONLY_CDC") == "1"
 
     # single local JVM hosts all "executors": size the heap for the
-    # machine (128 GiB box), not Spark's 1g default
+    # machine, not Spark's 1g default — half its physical memory, at
+    # most 24g, since the whole heap is pre-touched below
     # measured: a 48g G1 heap is 5-6x SLOWER and wildly unstable here
     # (region recommit/zeroing shows up as kernel time)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    host_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(24, host_gib // 2))}g")
     extra_conf = {
         "spark.driver.memory": driver_mem,
         # -Xms + AlwaysPreTouch: spark-submit passes only -Xmx, so the
@@ -239,10 +241,10 @@ def main() -> None:
         f" (trials: {trials['cdc_replay']})")
 
     # Variant row (not in the total, so the headline metric stays
-    # comparable round-over-round): the same replay with the watermarked
-    # cross-epoch dedup ON, in its default "committed" scope (apply_epoch
-    # drops events at or below the applied high-water mark with a
-    # literal filter before the merge) — publishes the cost of the
+    # comparable round-over-round): the same replay with a watermark
+    # declared, so dropDuplicatesWithinWatermark runs every event
+    # through the streaming state store ahead of the merge's own
+    # re-delivery drop — publishes the cost of the
     # exactly-once-with-watermark configuration at bench scale.
     cdc_wm = None
     if not only_cdc and os.environ.get("SPARK_GRAFT_BENCH_SKIP_WATERMARK") != "1":

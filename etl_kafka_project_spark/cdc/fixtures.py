@@ -197,9 +197,9 @@ def space_mtimes(paths: list[str]) -> None:
     new files by modification time with no path tie-break, so tied
     segments may enter micro-batches out of log order — an out-of-order
     FIRST delivery that violates the engine's delivery contract
-    (cdc/fold.py LSN_SAMPLE: lsns <= the key's applied max are verbatim
-    re-deliveries) and lets ReplayJob's order guard trip on fixture
-    noise instead of real violations."""
+    (cdc/fold.py docstring: within a stream, batches are LSN-range-disjoint
+    except for verbatim re-delivery) and lets ReplayJob's order guard trip
+    on fixture noise instead of real violations."""
     base = time.time()
     for i, p in enumerate(paths):
         t = base + i * 0.005

@@ -34,9 +34,9 @@ the reducer. This is what makes the fold skew-tolerant at 100 TB.
 (Measured on 38k × 2.5KB events: max_by 2.0s vs 5.2s for the equivalent
 max-over-struct, which Spark plans as a SortAggregate.)
 
-The per-key replay bookkeeping (``_applied`` = exact distinct-lsn count,
-``_lsns`` = bounded smallest-lsn sample) rides the SAME aggregation via
-``collect_set(lsn)``: unlike ``count_distinct`` — whose Expand-based
+The per-key replay bookkeeping (``_applied`` = exact distinct-lsn count)
+rides the SAME aggregation via ``collect_set(lsn)``: unlike
+``count_distinct`` — whose Expand-based
 rewrite flips the whole wide-payload fold to a SortAggregate —
 ``collect_set`` is an ordinary ObjectHashAggregate function, so one
 scan + one exchange produce the entire fold (round 3 ran a second
@@ -47,19 +47,25 @@ bounded in the default engine by ``config.hot_key_threshold`` (100k ≈
 800 KB worst case), past which the stream's adaptive salting switches
 the fold to the *two-phase* shape below anyway.
 
-The **two-phase** shape (``fold_batch(salt=...)``) keeps the round-3 narrow
-(key, lsn) branch — two spillable hash aggregations over ~16-byte rows
-with a window-bounded sample buffer — for the pathological case of a
-single key dominating an entire batch; correctness is identical because
-every aggregate involved is associative + commutative over unique lsns.
+The **two-phase** shape (``fold_batch(salt=...)``) is for the
+pathological case of a single key dominating an entire batch: it drops
+in-batch duplicates with ``dropDuplicates(key, lsn)``, aggregates per
+``(key, pmod(lsn, salt))`` — ``_applied`` is then a plain partial count —
+and merges the partials per key; correct because every aggregate
+involved is associative + commutative over unique lsns.
 
-Cross-batch delivery contract: batches must be LSN-range-disjoint from
-already-committed epochs except for verbatim re-delivery of old events
-(which the merge's staleness guard drops). Within a batch, arbitrary
-disorder is fine — lsn is the authority. Partial interleaving of NEW
-events below a key's applied ``last_lsn`` across different epochs is out
-of contract (the table stores one ``last_lsn`` per key, not one per
-column) — the standard row-sequence LWW contract of lake CDC mergers.
+Cross-batch delivery contract: within one stream id, batches must be
+LSN-range-disjoint from already-applied epochs except for verbatim
+re-delivery of old events. ``merge_events`` drops those before the fold:
+an event whose lsn lies inside its stream's applied intervals (kept in
+the snapshot, ``minilake/table.py``) is a re-delivery; an event in a gap
+is a first delivery and stays. Within a batch, arbitrary disorder is
+fine — lsn is the authority. A source that interleaves spans (a
+multi-partition Kafka topic) needs one stream id per partition. Partial
+interleaving of NEW events below a key's applied ``last_lsn`` across
+different epochs is out of contract (the table stores one ``last_lsn``
+per key, not one per column) — the standard row-sequence LWW contract
+of lake CDC mergers; ``cdc/stream.py``'s order guard reports it.
 
 The fold outputs one row per key:
 
@@ -75,7 +81,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_kafka_project_spark.functions.exprcache import cached_exprs
@@ -92,22 +98,6 @@ def cell_alive(lsn: F.Column, delete_lsn: F.Column, reset_lsn: F.Column) -> F.Co
     return (lsn > F.coalesce(delete_lsn, F.lit(NEVER))) & (
         lsn >= F.coalesce(reset_lsn, F.lit(NEVER))
     )
-
-
-#: Cap on the per-key distinct-lsn sample carried in ``_lsns`` (the
-#: SMALLEST ``LSN_SAMPLE + 1`` distinct lsns of the batch, sorted; size
-#: == LSN_SAMPLE + 1 marks truncation). The merge paths use it to count
-#: EXACTLY how many of a batch's events were verbatim re-deliveries of
-#: already-applied lsns (overlap = lsns <= the target's prior max), so
-#: ``row_version`` counts each event once even when a batch MIXES a
-#: key's re-delivered old events with new ones — a case the whole-row
-#: staleness guards cannot see (found by the round-3 Hypothesis test).
-#: Smallest-first is the right truncation: stale lsns are by definition
-#: the small ones, so the overlap count stays exact unless a single key
-#: re-delivers > LSN_SAMPLE events in one batch (then the counter
-#: over-counts conservatively — values are never affected). Memory is
-#: bounded: the window rank caps the collect at LSN_SAMPLE+1 rows/key.
-LSN_SAMPLE = 256
 
 
 def fold_batch(
@@ -177,61 +167,32 @@ def fold_batch(
     )
 
     if salt is None:
-        # FUSED shape (default): _applied / _lsns ride the wide
-        # aggregation as collect_set(lsn) — one scan, one exchange, no
-        # join (see module docstring for the shape trade-offs). The set
-        # dedups verbatim replay duplicates by construction; _applied =
-        # its size (exact distinct-lsn count), _lsns = its smallest
-        # LSN_SAMPLE+1 members sorted (size == LSN_SAMPLE+1 marks
-        # truncation, same contract as the two-phase shape).
+        # FUSED shape (default): _applied rides the wide aggregation as
+        # collect_set(lsn) — one scan, one exchange, no join (see module
+        # docstring for the shape trade-offs). The set dedups verbatim
+        # replay duplicates by construction; _applied = its size.
         lsnset = cached_exprs(
             "fold_post",
-            lambda: F.collect_set(F.col("lsn")).alias("_lsnset"),
+            lambda: F.collect_set(F.col("lsn")).alias("_lsn_set"),
         )
         folded = events.groupBy(*key_columns).agg(*aggs, lsnset)
-        # _applied/_lsns derive from _lsnset inside _resolve's single
-        # projection — three fewer DataFrame round-trips per epoch
-        return _resolve(folded, key_columns, payload_columns, from_lsnset=True)
+        # _applied derives from _lsn_set inside _resolve's single projection
+        return _resolve(folded, key_columns, payload_columns, from_lsn_set=True)
 
-    # TWO-PHASE shape: _applied = exact count of DISTINCT lsns per key,
-    # computed on a NARROW (key, lsn) projection as a two-phase hash
-    # aggregation: phase 1 groups by (key, lsn) — map-side partials dedup
-    # verbatim replay duplicates locally AND spread a hot key across
-    # reducers by lsn — phase 2 counts per key. Both phases are spillable
-    # hash aggregates over ~16-byte rows, so a key with millions of
-    # events in one batch never concentrates in a single non-spillable
-    # aggregation buffer (the fused shape's collect_set would).
-    #
-    # _lsns = the SMALLEST LSN_SAMPLE+1 distinct lsns, sorted — the
-    # bounded per-key sample the merge paths use to subtract verbatim
-    # cross-epoch re-deliveries from row_version exactly (see LSN_SAMPLE
-    # above). The row_number window bounds the collect_list buffer at
-    # LSN_SAMPLE+1 narrow rows per key, and shares the final groupBy's
-    # hash partitioning (one exchange covers both).
-    wn = Window.partitionBy(*key_columns).orderBy(F.col("lsn"))
-    applied = (
-        events.select(*key_columns, "lsn")
-        .groupBy(*key_columns, "lsn")
-        .agg(F.lit(1))
-        .withColumn("_rn", F.row_number().over(wn))
-        .groupBy(*key_columns)
-        .agg(
-            F.count(F.lit(1)).alias("_applied"),
-            F.sort_array(
-                F.collect_list(F.when(F.col("_rn") <= LSN_SAMPLE + 1, F.col("lsn")))
-            ).alias("_lsns"),
-        )
-    )
-
-    # Two-phase salted aggregation for the pathological
-    # one-key-dominates-the-batch case: partial per (key, salt), then
-    # final per key. Exactly correct because max/max_by are
-    # associative + commutative over unique lsns.
+    # TWO-PHASE salted aggregation for the pathological
+    # one-key-dominates-the-batch case: dedup verbatim in-batch
+    # duplicates, partial per (key, salt) — _applied is a plain count
+    # there, since each (key, lsn) is left once — then final per key.
+    # No collect_set buffer, so a key with millions of events in one
+    # batch never concentrates in a single non-spillable aggregation
+    # buffer. Exactly correct because max/max_by/sum are associative +
+    # commutative over unique lsns.
     ev = events.dropDuplicates([*key_columns, "lsn"])
     partial = ev.groupBy(
         *key_columns, F.pmod(F.col("lsn"), F.lit(salt)).alias("_salt")
-    ).agg(*aggs)
+    ).agg(*aggs, F.count(F.lit(1)).alias("_applied"))
     final_aggs = [
+        F.sum("_applied").alias("_applied"),
         F.max("_max_lsn").alias("_max_lsn"),
         F.max("_last_d_lsn").alias("_last_d_lsn"),
         F.max("_last_reset_lsn").alias("_last_reset_lsn"),
@@ -241,17 +202,7 @@ def fold_batch(
             F.max_by(F.col(f"_v_{c}"), F.col(f"_l_{c}")).alias(f"_v_{c}"),
             F.max(F.col(f"_l_{c}")).alias(f"_l_{c}"),
         ]
-    wide = partial.groupBy(*key_columns).agg(*final_aggs)
-
-    # per-key inner join of two already-key-partitioned singleton
-    # frames — no wide data moves. NULL-SAFE on the key columns: a
-    # null-key group survives both groupBys (groupBy keeps null keys)
-    # and must survive the re-join too — a plain equi-join would
-    # silently drop it, losing events for callers that bypass
-    # split_dead_letters' null-key quarantine.
-    w, a = wide.alias("w"), applied.alias("a")
-    cond = [F.col(f"w.{k}").eqNullSafe(F.col(f"a.{k}")) for k in key_columns]
-    folded = w.join(a, cond, "inner").select("w.*", F.col("a._applied"), F.col("a._lsns"))
+    folded = partial.groupBy(*key_columns).agg(*final_aggs)
     return _resolve(folded, key_columns, payload_columns)
 
 
@@ -259,21 +210,18 @@ def _resolve(
     folded: DataFrame,
     key_columns: list[str],
     payload_columns: list[str],
-    from_lsnset: bool = False,
+    from_lsn_set: bool = False,
 ) -> DataFrame:
     # Post-aggregation resolution: discard value cells at or below the
     # newest delete (they were erased), surface (value, value_lsn) pairs.
     # Unbound projection, memoized across epochs like the fold aggs.
-    # ``from_lsnset``: the fused shape carries the raw collect_set; the
-    # bookkeeping columns derive here, in the same single projection.
+    # ``from_lsn_set``: the fused shape carries the raw collect_set;
+    # ``_applied`` derives here, in the same single projection.
     def _build() -> list[F.Column]:
-        if from_lsnset:
-            applied_c = F.size("_lsnset").cast("long").alias("_applied")
-            lsns_c = F.slice(F.array_sort("_lsnset"), 1, LSN_SAMPLE + 1).alias(
-                "_lsns"
-            )
+        if from_lsn_set:
+            applied_c = F.size("_lsn_set").cast("long").alias("_applied")
         else:
-            applied_c, lsns_c = F.col("_applied"), F.col("_lsns")
+            applied_c = F.col("_applied")
         out_cols: list[F.Column] = [F.col(c) for c in key_columns] + [
             F.col("_max_lsn"),
             F.col("_last_d_lsn"),
@@ -283,7 +231,6 @@ def _resolve(
                 & (F.col("_last_d_lsn") == F.col("_max_lsn"))
             ).alias("_is_delete"),
             applied_c,
-            lsns_c,
         ]
         for c in payload_columns:
             v, l = F.col(f"_v_{c}"), F.col(f"_l_{c}")
@@ -295,7 +242,7 @@ def _resolve(
         return out_cols
 
     out_cols = cached_exprs(
-        ("fold_resolve", tuple(key_columns), tuple(payload_columns), from_lsnset),
+        ("fold_resolve", tuple(key_columns), tuple(payload_columns), from_lsn_set),
         _build,
     )
     return folded.select(*out_cols)

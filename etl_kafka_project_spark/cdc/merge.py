@@ -5,13 +5,15 @@ The vectorized replacement for the reference's per-event state mutation
 (``redis_interface.py:38-61``). One micro-batch = ONE merge:
 
     change events
+      → drop re-deliveries: events whose lsn lies inside the stream's
+        applied LSN intervals, kept in the snapshot
       → fold (``cdc/fold.py``): one resolved action per key, per-column
         ``(value, lsn)`` cells plus delete/reset barriers
       → append the folded actions as delta files, one per fold
         reducer, each holding every bucket its keys hash to
         (``cdc/mor.py write_delta_files``) — O(batch) bytes
-      → atomic snapshot commit that also records the stream epoch
-        (exactly-once)
+      → atomic snapshot commit that also records the stream epoch and
+        the fresh LSN span (exactly-once)
       → the change feed: the delta files that commit added, linked into
         the epoch's feed dir only after the CAS (``publish_changelog``).
 
@@ -45,6 +47,7 @@ from etl_kafka_project_spark.cdc.envelope import PAYLOAD_FIELDS
 from etl_kafka_project_spark.cdc.fold import fold_batch
 from etl_kafka_project_spark.cdc.metrics import Stopwatch
 from etl_kafka_project_spark.config import EngineConfig
+from etl_kafka_project_spark.functions.exprcache import cached_exprs
 from etl_kafka_project_spark.minilake.table import LakeTable, Snapshot, SnapshotConflictError
 
 
@@ -56,6 +59,10 @@ def _remove_files(table: LakeTable, files) -> None:
             os.remove(os.path.join(table.root, path))
         except OSError:
             pass
+
+#: stream id under which a ``merge_events`` call without an epoch
+#: records and drops its applied lsns
+ANONYMOUS_STREAM = "_anonymous"
 
 META_FIELDS = [
     T.StructField("content_sha256", T.StringType(), True),
@@ -116,6 +123,13 @@ class MergeStats:
     #: hottest key's folded event count (adaptive-salting signal),
     #: observed on the write job
     max_key_events: int = 0
+    #: valid events dropped before the fold as re-deliveries (their lsn
+    #: lies inside the stream's applied intervals)
+    redeliveries_dropped: int = 0
+    #: ``(lowest fresh lsn, the stream's prior high-water mark, n)`` when
+    #: n > 0 events left after the drop lie at or below that mark:
+    #: out-of-order first deliveries (``cdc/stream.py`` order guard)
+    order_violation: tuple[int, int, int] | None = None
     #: merge sub-phase walls in seconds (plan build, write job, commit,
     #: feed publish); apply_epoch files them under the lineage doc's
     #: ``phases``
@@ -158,6 +172,16 @@ def publish_changelog(
             os.replace(tmp, dst)
 
 
+def _inside(intervals: list[list[int]]) -> str:
+    """SQL predicate: the lsn lies inside one of ``intervals`` (integer
+    literals); false, not null, for a null lsn, so it is never dropped.
+    SQL text, not Column algebra: these expressions change every epoch,
+    and one ``F.expr`` costs one py4j call where the equivalent Column
+    tree costs one per operator (~12 ms of driver time per epoch)."""
+    ranges = " OR ".join(f"lsn BETWEEN {int(lo)} AND {int(hi)}" for lo, hi in intervals)
+    return f"coalesce({ranges}, false)" if intervals else "false"
+
+
 def merge_events(
     table: LakeTable,
     events: DataFrame,
@@ -165,15 +189,26 @@ def merge_events(
     salt: int | None = None,
     changelog_dir: str | None = None,
 ) -> MergeStats:
-    """fold + merge-on-read apply + snapshot commit in one call (the
-    foreachBatch body, minus idempotence which lives in
+    """drop re-deliveries + fold + merge-on-read apply + snapshot commit
+    in one call (the foreachBatch body, minus idempotence which lives in
     ``cdc/stream.py``). ONE batch-scale job: the folded actions append
     as delta files, O(batch) bytes written; resolution happens at read
-    (``cdc/mor.py``), and compaction amortizes it. An ``Observation``
-    rides the write job for the batch-global stats (deletes, applied
-    events, hottest key), so the fold computes once and nothing is
-    cached; per-bucket key counts fall out of the written files'
+    (``cdc/mor.py``), and compaction amortizes it. Two ``Observation``s
+    ride the write job, so the fold computes once and nothing is cached:
+    one on the events (re-deliveries dropped, the fresh lsn span, and
+    the out-of-order count), one on the fold (deletes, applied events,
+    hottest key). Per-bucket key counts fall out of the written files'
     manifest entries. A batch that folds to no key commits nothing.
+
+    Re-delivery: every event whose lsn lies inside the applied LSN
+    intervals the snapshot holds for the epoch's stream id is dropped
+    before the fold, and the commit records the fresh span
+    (``LakeTable.commit(applied=...)``) in the same CAS as the data. A
+    call without an epoch records and drops under
+    :data:`ANONYMOUS_STREAM`. The span is dense when the batch applied
+    every lsn in it (the fold's distinct-lsn count, ``_applied``, says
+    so); ``minilake.table.record_span`` keeps a dense span's gaps
+    visible and folds a sparse in-order span into the top interval.
 
     ``changelog_dir``: if set (and an epoch id is given), the committed
     epoch's delta files are published as the outbound change feed
@@ -195,10 +230,28 @@ def merge_events(
 
     watch = Stopwatch()
     # header only: the append never reads the parent's file listing (the
-    # write needs version/schema/props; resolution happens at read), so
-    # the per-epoch serial floor skips assembling every bucket manifest
+    # write needs version/schema/props/progress; resolution happens at
+    # read), so the per-epoch serial floor skips assembling every bucket
+    # manifest
     snap = table.snapshot_header()
-    events = align_events(events, snap.schema)
+    stream_id = epoch[0] if epoch else ANONYMOUS_STREAM
+    intervals = snap.lsn_intervals.get(stream_id, [])
+    hwm = intervals[-1][1] if intervals else None
+    inside = _inside(intervals)
+    fresh = f"CASE WHEN NOT {inside} THEN lsn END"
+    late = "false" if hwm is None else f"{fresh} <= {hwm}"
+    ev_obs = Observation()
+    events = (
+        align_events(events, snap.schema)
+        .observe(
+            ev_obs,
+            F.expr(f"count_if({inside}) AS dropped"),
+            F.expr(f"min({fresh}) AS lo"),
+            F.expr(f"max({fresh}) AS hi"),
+            F.expr(f"count_if({late}) AS late"),
+        )
+        .where(f"NOT {inside}")
+    )
     folded = fold_batch(
         events,
         key_columns=key_columns(snap),
@@ -208,28 +261,40 @@ def merge_events(
     obs = Observation()
     observed = folded.observe(
         obs,
-        F.count(F.lit(1)).alias("keys"),
-        F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
-        F.sum("_applied").alias("events"),
-        F.max("_applied").alias("max_key_events"),
+        *cached_exprs(
+            "merge_fold_obs",
+            lambda: [
+                F.count(F.lit(1)).alias("keys"),
+                F.sum(F.col("_is_delete").cast("long")).alias("deletes"),
+                F.sum("_applied").alias("events"),
+                F.max("_applied").alias("max_key_events"),
+            ],
+        ),
     )
     watch.lap("merge_plan_build_s")
     new_files = write_delta_files(table, observed, snap)
     watch.lap("merge_write_job_s")
-    m = obs.get  # write job has run; never blocks here
+    m, e = obs.get, ev_obs.get  # the write job has run; never blocks here
     n_keys, n_deletes = int(m["keys"] or 0), int(m["deletes"] or 0)
+    n_events, n_late = int(m["events"] or 0), int(e["late"] or 0)
     committed = snap  # a batch that folds to no key commits nothing
     if n_keys:
+        lo, hi = e["lo"], e["hi"]
+        # no span to record when every fresh event lacks an lsn (only a
+        # caller that skipped split_dead_letters can send those)
+        applied = None if lo is None else (stream_id, lo, hi, n_events >= hi - lo + 1)
         try:
             committed = table.commit(
-                expected_version=snap.version, new_files=new_files, epoch=epoch
+                expected_version=snap.version, new_files=new_files, epoch=epoch,
+                applied=applied,
             )
         except SnapshotConflictError:
-            # a concurrent writer moved the table: these delta files carry
-            # a now-stale _writer_version stamp (parent-version commit-order
-            # authority), so the caller must RE-MERGE from a fresh snapshot
-            # (cdc/stream.py apply_epoch retries); drop this attempt's
-            # files rather than leave stamped orphans for the vacuum
+            # a concurrent writer moved the table, and the drop above was
+            # planned against the parent's intervals — a writer of the
+            # same stream id may have applied some of these lsns since.
+            # The caller RE-MERGES from a fresh snapshot (cdc/stream.py
+            # apply_epoch retries); drop this attempt's files rather
+            # than leave orphans for the vacuum
             _remove_files(table, new_files)
             raise
         watch.lap("merge_commit_s")
@@ -241,7 +306,7 @@ def merge_events(
         bucket_keys[fe.bucket] = bucket_keys.get(fe.bucket, 0) + fe.rows
     return MergeStats(
         epoch_id=epoch[1] if epoch else None,
-        events_in=int(m["events"] or 0),
+        events_in=n_events,
         keys=n_keys,
         upserts=n_keys - n_deletes,
         deletes=n_deletes,
@@ -250,5 +315,7 @@ def merge_events(
         per_bucket=[{"_bucket": b, "keys": k} for b, k in sorted(bucket_keys.items())],
         snapshot_version=committed.version,
         max_key_events=int(m["max_key_events"] or 0),
+        redeliveries_dropped=int(e["dropped"] or 0),
+        order_violation=(e["lo"], hwm, n_late) if n_late else None,
         phases=watch.phases,
     )

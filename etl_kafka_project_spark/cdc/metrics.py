@@ -9,14 +9,16 @@ alongside the checkpoint for crash-resume"):
     {stream_id, epoch, ts, events_in, keys, upserts, deletes,
      dead_letters: {reason: n}, touched_buckets, snapshot_version,
      wall_ms, events_per_sec, skipped, max_key_events,
-     per_bucket: [{_bucket, keys}, ...],
+     per_bucket: [{_bucket, keys}, ...], redeliveries_dropped,
      lsn_span: [min, max], phases: {name: seconds or value}}
 
 Batch-global stats are observed on the merge's write job itself; the
 per-bucket key counts come from the commit's file manifest.
-``lsn_span`` is the batch's valid-event LSN span (absent when the batch
-held no valid event); it is the stream's only persisted record of which
-LSNs it has applied (``cdc/stream.py``). ``phases`` holds the epoch's
+``lsn_span`` is the batch's valid-event LSN span, re-deliveries included
+(absent when the batch held no valid event); ``redeliveries_dropped``
+counts the valid events the merge dropped as already applied. The doc
+is telemetry only: which LSNs a stream has applied lives in the
+snapshot (``minilake/table.py``). ``phases`` holds the epoch's
 layer walls and housekeeping counters, timed by :class:`Stopwatch`; a
 skipped epoch's doc carries the walls of the steps its retry ran. The
 dead-letter quarantine exists only for an epoch that had dead letters.

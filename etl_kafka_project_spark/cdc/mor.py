@@ -14,10 +14,15 @@ resolution:
 * **read** (:func:`resolve_deltas`): base rows are re-encoded as
   single-cell writes at their ``last_lsn`` and unioned with all delta
   rows; one hash aggregation per key (``max_by`` per column + barrier
-  maxes — exactly the fold's associative phase-2) yields the resolved
-  row. Correct because epochs are LSN-range-disjoint from compacted
-  base (the engine's delivery contract, ``cdc/fold.py`` docstring), so
-  "delta cell lsn vs base last_lsn" is a faithful ordering;
+  maxes + the sum of ``_applied`` — exactly the fold's associative
+  phase-2) yields the resolved row. Correct because epochs are
+  LSN-range-disjoint from compacted base (the engine's delivery
+  contract, ``cdc/fold.py`` docstring), so "delta cell lsn vs base
+  last_lsn" is a faithful ordering. Re-delivered events never reach a
+  delta file: ``merge_events`` drops them before the fold against the
+  stream's applied LSN intervals in the snapshot, so every delta row
+  counts only first deliveries and the read needs no re-delivery
+  window;
 * **compact** (:func:`compact_deltas`): resolve and rewrite buckets
   whose delta share grew past a threshold — amortized, off the hot
   path, and what keeps read cost bounded. The same rewrite drops
@@ -30,16 +35,16 @@ in the same atomic snapshot.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_kafka_project_spark.cdc.fold import NEVER, cell_alive
 from etl_kafka_project_spark.cdc.merge import _remove_files, key_columns, payload_columns
+from etl_kafka_project_spark.cdc.metrics import Stopwatch
 from etl_kafka_project_spark.cdc.salting import plan_write_splits, salted_repartition
 from etl_kafka_project_spark.config import EngineConfig
+from etl_kafka_project_spark.functions.exprcache import cached_exprs
 from etl_kafka_project_spark.minilake.table import (
     FileEntry,
     LakeTable,
@@ -63,35 +68,26 @@ def delta_schema(snap: Snapshot) -> T.StructType:
         T.StructField("_last_reset_lsn", T.LongType(), True),
         T.StructField("_is_delete", T.BooleanType(), True),
         T.StructField("_applied", T.LongType(), True),
-        # bounded sample of the batch's smallest distinct lsns for the
-        # key (cdc/fold.py LSN_SAMPLE): lets the resolve subtract the
-        # EXACT overlap with earlier commits when one batch mixes
-        # re-delivered old events with new ones — the case the whole-row
-        # staleness guard below cannot see.
-        T.StructField("_lsns", T.ArrayType(T.LongType()), True),
-        # commit-order stamp (the writing commit's parent snapshot
-        # version): lets the resolve detect cross-epoch re-delivery —
-        # a delta row whose _max_lsn is not newer than everything an
-        # EARLIER commit applied is a verbatim re-delivery and must not
-        # re-count row_version (a row-level staleness guard).
-        T.StructField("_writer_version", T.LongType(), True),
     ]
     return T.StructType(fields)
 
 
-def delta_rows(folded: DataFrame, snap: Snapshot, writer_version: int) -> DataFrame:
-    """Fold output → storable delta rows (adds the batch's content sha,
-    tied to the content cell's lsn, and the commit-order stamp)."""
-    if "content" in payload_columns(snap):
-        sha = F.when(F.col("content_lsn") > NEVER, F.sha2(F.col("content"), 256))
-    else:
-        sha = F.lit(None).cast("string")
-    out = folded.withColumn("content_sha256", sha).withColumn(
-        "_writer_version", F.lit(writer_version).cast("long")
-    )
+def delta_rows(folded: DataFrame, snap: Snapshot) -> DataFrame:
+    """Fold output → storable delta rows: one projection that adds the
+    batch's content sha, tied to the content cell's lsn, and keeps any
+    extra column the caller carries (e.g. ``_bucket``). Its expressions
+    are memoized across epochs (``functions/exprcache.py``)."""
     cols = [f.name for f in delta_schema(snap).fields]
-    extra = [c for c in out.columns if c not in cols]  # e.g. _bucket
-    return out.select(*cols, *extra)
+    extra = [c for c in folded.columns if c not in cols]
+
+    def build() -> list[F.Column]:
+        if "content" in cols:
+            sha = F.when(F.col("content_lsn") > NEVER, F.sha2(F.col("content"), 256))
+        else:
+            sha = F.lit(None).cast("string")
+        return [sha.alias(c) if c == "content_sha256" else F.col(c) for c in cols + extra]
+
+    return folded.select(*cached_exprs(("delta_rows", tuple(cols), tuple(extra)), build))
 
 
 def _encode_base_as_delta(base: DataFrame, snap: Snapshot) -> DataFrame:
@@ -102,12 +98,10 @@ def _encode_base_as_delta(base: DataFrame, snap: Snapshot) -> DataFrame:
     Null columns must be stamped at ``last_lsn`` too: a base null can
     mean "erased by a delete/reset barrier at last_lsn", and the barrier
     itself is gone once compaction folded it into the base. Stamping
-    nulls at NEVER (the pre-fix behavior) let a verbatim re-delivered
-    column write from BEFORE the barrier out-rank the null and resurrect
-    the erased value (found by the redelivery property test: value→D→I
-    then compact then re-deliver). Under the delivery contract any write
-    with lsn <= last_lsn is a re-delivery of something the base already
-    reflects, so the base legitimately wins every such tie-or-older
+    nulls at NEVER let any delta cell written BEFORE the barrier
+    out-rank the null and resurrect the erased value. Under the delivery
+    contract no live delta holds a write with lsn <= last_lsn of a
+    compacted key, so the base legitimately wins every such tie-or-older
     comparison, column by column."""
     cols: list[F.Column] = [F.col(k) for k in key_columns(snap)]
     for c in payload_columns(snap):
@@ -121,71 +115,20 @@ def _encode_base_as_delta(base: DataFrame, snap: Snapshot) -> DataFrame:
         F.when(dead, F.col("last_lsn")).alias("_last_reset_lsn"),
         dead.alias("_is_delete"),
         F.col("row_version").alias("_applied"),
-        # a resolved base carries no per-event lsn sample (its count is
-        # already net of every earlier overlap)
-        F.lit(None).cast(T.ArrayType(T.LongType())).alias("_lsns"),
-        # base precedes every live delta in commit order
-        F.lit(-1).cast("long").alias("_writer_version"),
     ]
     return base.select(*cols)
 
 
 def resolve_deltas(base: DataFrame, deltas: DataFrame, snap: Snapshot) -> DataFrame:
-    """Resolve base ∪ deltas to the standard stored row shape — one
-    window pass (stale-re-delivery detection) + ONE hash aggregation per
-    key (associative, skew-tolerant for the same reason the fold is).
-
-    Re-delivery handling (last-writer-wins staleness, applied at read):
-    a delta row whose ``_max_lsn`` is not newer than the running max of
-    every EARLIER commit's ``_max_lsn`` for that key (base counts as the
-    earliest) is, under the delivery contract, a verbatim re-delivery of
-    already-applied events. Its value cells are exact duplicates of the
-    originals (``max_by`` ties carry identical values — tie-safe), so
-    only its ``_applied`` count must be suppressed; dropping whole rows
-    on ``(key, _max_lsn)`` — the round-1 behavior — was WRONG when a
-    later commit re-delivered a *subset* of a key's events: it could
-    nondeterministically keep the subset row and silently lose the
-    superset's column writes.
-    """
-    from pyspark.sql import Window
-
+    """Resolve base ∪ deltas to the standard stored row shape — a union
+    and ONE hash aggregation per key (associative, skew-tolerant for the
+    same reason the fold is). ``row_version`` is the sum of
+    ``_applied``: re-deliveries were dropped before the fold, so every
+    row counts first deliveries only."""
     key_cols = key_columns(snap)
     payload = payload_columns(snap)
     union = _encode_base_as_delta(base, snap).unionByName(
         deltas, allowMissingColumns=True
-    )
-    # Running max of _max_lsn over strictly-earlier commits per key.
-    # The window shuffles by key — the SAME partitioning the groupBy
-    # below needs, so Catalyst plans one exchange, and per-key groups
-    # are tiny (one row per commit that touched the key).
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy("_writer_version")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior_max = F.max("_max_lsn").over(w)
-    # only delta rows (version >= 0) can be stale: the encoded base (-1)
-    # is the earliest by construction
-    stamped = F.col("_writer_version") >= 0
-    stale_redelivery = stamped & (
-        F.col("_max_lsn") <= F.coalesce(prior_max, F.lit(NEVER))
-    )
-    union = union.withColumn("_prior", F.coalesce(prior_max, F.lit(NEVER)))
-    # MIXED batches (re-delivered old events + new ones in one commit)
-    # pass the whole-row guard above because their _max_lsn IS newer;
-    # the lsn sample makes the overlap countable: every distinct batch
-    # lsn <= the prior commits' max is, under the delivery contract, a
-    # verbatim re-delivery already counted by an earlier commit. Values
-    # are unaffected either way (max_by ties carry identical payloads);
-    # only the _applied count must shed the overlap. Truncated samples
-    # (cdc/fold.py LSN_SAMPLE) under-subtract, i.e. row_version
-    # over-counts conservatively, never loses events.
-    overlap = F.size(F.filter(F.col("_lsns"), lambda x: x <= F.col("_prior")))
-    union = union.withColumn(
-        "_applied",
-        F.when(stale_redelivery, F.lit(0))
-        .when(stamped & F.col("_lsns").isNotNull(), F.col("_applied") - overlap)
-        .otherwise(F.col("_applied")),
     )
 
     def ord_of(c: str) -> F.Column:
@@ -232,11 +175,8 @@ def write_delta_files(table: LakeTable, folded_with_bucket: DataFrame, snap: Sna
     """Append the folded batch as delta files, written straight from
     the fold's (AQE-coalesced) reducers: no second exchange, one file
     per reducer, named in the manifest once per bucket it holds
-    (``LakeTable.write_data_files``). Rows are stamped with the parent
-    snapshot version as the commit-order authority for re-delivery
-    detection (commits serialize, so the parent version is strictly
-    increasing across applied epochs)."""
-    rows = delta_rows(folded_with_bucket, snap, writer_version=snap.version)
+    (``LakeTable.write_data_files``)."""
+    rows = delta_rows(folded_with_bucket, snap)
     return table.write_data_files(rows, kind="delta")
 
 
@@ -285,7 +225,7 @@ def compact_deltas(
     purge = purge_tombstones_below_lsn
     if not stats["delta_rows"] and purge is None:
         return {**stats, "compacted": False}
-    t0 = time.time()
+    watch = Stopwatch()
     base_rows: dict[int, int] = {}
     drow: dict[int, int] = {}
     for f in snap.files:
@@ -328,9 +268,10 @@ def compact_deltas(
     new_files = table.write_data_files(resolved, kind="base")
     # Commit by EXACT removed-entry set, not by bucket: removal of the
     # resolved inputs commutes with a concurrent epoch appending new
-    # delta files to the same buckets (the retry keeps them — they are
-    # strictly newer by _writer_version, so resolving them against the
-    # compacted base is order-faithful), whereas bucket replacement
+    # delta files to the same buckets (the retry keeps them — they
+    # hold first deliveries newer than every lsn the compactor folded,
+    # so resolving them against the compacted base is order-faithful),
+    # whereas bucket replacement
     # would silently drop files the compactor never read. An entry is
     # a (path, bucket) pair: a delta file shared with cold buckets
     # loses only the touched buckets' entries and stays live for the
@@ -361,5 +302,5 @@ def compact_deltas(
         "cold_buckets_skipped": len(drow.keys() - touched),
         "tombstones_purged": n_tombs,
         "snapshot_version": committed.version,
-        "wall_ms": round((time.time() - t0) * 1000, 1),
+        "wall_ms": round(watch.elapsed_ms(), 1),
     }

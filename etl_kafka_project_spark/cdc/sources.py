@@ -112,11 +112,11 @@ def kafka_binlog(
     Delivery-order contract: a multi-partition topic orders events per
     PARTITION (hence per key under key-hash partitioning), not globally
     — a lagging partition legally produces global lsn gaps across
-    micro-batches. The per-key order the merge requires still holds,
-    but ``EngineConfig.order_guard``'s global-interval check (built for
-    the globally-ordered segment-tail source) would flag those gaps:
-    set ``order_guard="warn"`` (or ``"off"``) when feeding a
-    multi-partition topic through ``ReplayJob.apply_epoch``."""
+    micro-batches, and interleaved batch spans break the
+    range-disjoint contract the re-delivery drop relies on
+    (``cdc/fold.py`` docstring). Use one stream id per partition: each
+    partition then keeps its own applied LSN intervals in the snapshot,
+    in order."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

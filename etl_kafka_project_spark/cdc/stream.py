@@ -11,9 +11,11 @@ Exactly-once (north rule), two cooperating mechanisms:
 * Spark's checkpoint (``checkpointLocation``) makes epoch ids stable
   across restarts — a batch that failed mid-apply is retried with the
   SAME epoch id;
-* the lake table records ``committed_epochs`` inside the same atomic
-  snapshot commit as the data (``minilake/table.py``), so the retry of an
-  already-committed epoch is detected and skipped — the analog of the
+* the lake table records ``committed_epochs`` and the stream's applied
+  LSN intervals inside the same atomic snapshot commit as the data
+  (``minilake/table.py``), so the retry of an already-committed epoch is
+  detected and skipped, and a re-delivered event is dropped before the
+  fold (``cdc/merge.py``) — the analog of the
   reference's commit-after-process + idempotent keyed sink
   (``kafka_interface.py:74`` + ``redis_interface.py:58``), but actually
   atomic instead of approximately so.
@@ -55,30 +57,16 @@ EPOCH_COMMIT_RETRIES = 20
 
 
 class OutOfOrderDeliveryError(RuntimeError):
-    """An applied epoch violated the in-order delivery contract: its
-    minimum valid LSN sits below this stream's applied high-water mark
-    yet inside none of the previously applied LSN intervals — a FIRST
-    delivery arriving after newer events were already applied (e.g. a
-    file source listing two same-millisecond segments out of log
-    order). The engine's bounded per-key state (``last_lsn`` as the
-    LWW / re-delivery authority) cannot apply such a batch with
-    in-LSN-order semantics, so the guard fails loud instead of silently
-    mis-counting the late events as re-deliveries. The epoch's snapshot
-    is already committed when this raises: recover by rolling back to
-    the prior snapshot (time travel) and re-delivering in order."""
-
-
-def _coalesce_ranges(ranges: list[list[int]]) -> list[list[int]]:
-    """Sort + merge overlapping/adjacent integer LSN intervals. In-order
-    delivery collapses to ONE interval, so the guard's bookkeeping is
-    O(1) in steady state regardless of epoch count."""
-    out: list[list[int]] = []
-    for lo, hi in sorted(ranges):
-        if out and lo <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], hi)
-        else:
-            out.append([lo, hi])
-    return out
+    """An applied epoch violated the in-order delivery contract: after
+    the re-delivery drop, some of its valid events sit at or below this
+    stream's applied high-water mark — FIRST deliveries inside a gap of
+    the applied LSN intervals, arriving after newer events were already
+    applied (e.g. a file source listing two same-millisecond segments
+    out of log order). The engine's bounded per-key state (``last_lsn``
+    as the LWW authority) cannot apply such a batch with in-LSN-order
+    semantics, so the guard fails loud. The epoch's snapshot is already
+    committed when this raises: recover by rolling back to the prior
+    snapshot (time travel) and re-delivering in order."""
 
 
 def _dead_letter_counts(path: str) -> dict[str, int]:
@@ -108,34 +96,13 @@ class ReplayJob:
     event_schema: T.StructType = field(default_factory=lambda: EVENT_SCHEMA)
     max_files_per_trigger: int | None = None
     source_format: str = "parquet"  # or "json" (cdc/sources.py)
-    #: e.g. "10 minutes": enables cross-epoch dedup of re-delivered
-    #: events with an event-time watermark declared on the stream
-    #: (north star: "dropDuplicates over watermarked state"). How the
-    #: duplicates are actually dropped is picked by ``watermark_scope``.
+    #: e.g. "10 minutes": declares an event-time watermark on the
+    #: stream and drops duplicates of (key..., lsn) inside it with
+    #: ``dropDuplicatesWithinWatermark`` before ``foreachBatch`` (north
+    #: star: "dropDuplicates over watermarked state"), shuffling every
+    #: event into the streaming state store. Re-deliveries of applied
+    #: events are dropped by ``merge_events`` whether or not it is set.
     watermark: str | None = None
-    #: HOW the watermarked dedup executes (only read when ``watermark``
-    #: is set):
-    #:
-    #: * ``"committed"`` (default) — exploit that ``foreachBatch`` is
-    #:   SERIAL: epoch N's snapshot commit lands before epoch N+1 is
-    #:   planned, so by the delivery contract (epochs LSN-range-disjoint
-    #:   except verbatim re-delivery, ``cdc/fold.py``) any event with
-    #:   ``lsn <= `` this stream's applied high-water mark IS a
-    #:   re-delivery. ``apply_epoch`` drops those with one cheap literal
-    #:   predicate — no state store, no extra shuffle; the watermark
-    #:   stays declared on the stream for event-time/late-data
-    #:   semantics. Measured ~3.6x cheaper than ``"state"`` at bench
-    #:   scale (round-3 verdict #3). The mark is the top of the order
-    #:   guard's applied LSN intervals, which the lineage docs'
-    #:   ``lsn_span`` rebuild on restart, so kill-and-resume keeps the
-    #:   guarantee.
-    #: * ``"state"`` — the literal north-star construct:
-    #:   ``dropDuplicatesWithinWatermark`` on (key..., lsn) BEFORE
-    #:   ``foreachBatch``, shuffling every event into the streaming
-    #:   state store. Equivalent result, pays for generality this
-    #:   engine's serial-commit sink doesn't need (a sink that ACKed
-    #:   deliveries before committing would).
-    watermark_scope: str = "committed"
     #: filled as epochs apply (driver-side; one entry per foreachBatch call)
     applied: list[MergeStats] = field(default_factory=list, init=False)
     #: two-phase fold fan-out, set once an epoch shows a hot key
@@ -157,30 +124,6 @@ class ReplayJob:
     @property
     def lineage_dir(self) -> str:
         return os.path.join(self.checkpoint_dir, "lineage")
-
-    # ---------- applied LSN intervals (order guard + committed dedup) ----------
-
-    def _applied_lsn_intervals(self) -> list[list[int]]:
-        """Coalesced [min, max] LSN intervals of every epoch this stream
-        has applied; the top of the last one is the applied high-water
-        mark. Rebuilt from the lineage docs' ``lsn_span`` on first use,
-        so both the order guard and the committed-scope dedup survive
-        restarts. A crash between the snapshot commit and the lineage
-        record leaves no doc, but Spark retries the same epoch with the
-        same batch, and the skip path records the span from that
-        batch."""
-        if not hasattr(self, "_lsn_intervals"):
-            ranges = []
-            for doc in LineageLog(self.lineage_dir, self.stream_id).read_all():
-                # lsn_span = the batch's full valid span
-                r = doc.get("lsn_span")
-                if r:
-                    ranges.append([int(r[0]), int(r[1])])
-            self._lsn_intervals: list[list[int]] = _coalesce_ranges(ranges)
-        return self._lsn_intervals
-
-    def _note_applied_range(self, lo: int, hi: int) -> None:
-        self._lsn_intervals = _coalesce_ranges(self._applied_lsn_intervals() + [[lo, hi]])
 
     def _skip_committed(
         self, table: LakeTable, batch_df: DataFrame, epoch_id: int, watch: Stopwatch
@@ -320,37 +263,26 @@ class ReplayJob:
             dead_counts = _dead_letter_counts(dead_path)
         watch.lap("dead_letters_s")
 
-        # Applied LSN intervals + delivery-order guard: the batch's
-        # valid-lsn span is taken BEFORE the committed-scope dedup
-        # filter, so an out-of-order FIRST delivery is caught even when
-        # that filter would silently drop it. Detection is exact for the
-        # realistic failure shape (a whole late segment): the batch's
-        # min lsn falls below the applied high-water mark yet inside no
-        # applied interval. Re-deliveries pass (their lsns lie inside
-        # applied intervals), and in-order streams keep the bookkeeping
-        # at ONE coalesced interval. Events between a violating batch's
-        # min and max that fall in a gap while the min does not are the
-        # only shape the [min,max] summary cannot see. A skipped epoch
-        # records its span but is not checked: the attempt that
-        # committed it already was.
-        order_violation: tuple[int, int] | None = None
-        extra: dict = {"phases": phases}
-        lo, hi = obs["lsn_min"], obs["lsn_max"]
-        if lo is not None:
-            ranges = self._applied_lsn_intervals()
-            if (
-                self.config.order_guard != "off"
-                and not stats.skipped
-                and ranges
-                and lo <= ranges[-1][1]
-                and not any(a <= lo <= b for a, b in ranges)
-            ):
-                order_violation = (int(lo), int(ranges[-1][1]))
+        # Delivery-order guard: the merge counted the events left after
+        # its re-delivery drop at or below the stream's high-water mark
+        # (first deliveries inside a gap), on the job it already ran. A
+        # skipped epoch is not checked again: the attempt that committed
+        # it was, and a crash after its lineage record leaves the
+        # verdict in the doc this skip overwrites, so it is carried.
+        lineage = LineageLog(self.lineage_dir, self.stream_id)
+        order_violation = None
+        if self.config.order_guard != "off":
+            if stats.skipped:
+                prior = (lineage.read_epoch(epoch_id) or {}).get("phases", {})
+                if "order_violation" in prior:
+                    phases["order_violation"] = prior["order_violation"]
+            elif stats.order_violation:
+                order_violation = stats.order_violation
                 phases["order_violation"] = list(order_violation)
-            # the batch's FULL valid-lsn span (pre-dedup-filter); a
-            # restarted job rebuilds its applied intervals from this
-            extra["lsn_span"] = [int(lo), int(hi)]
-            self._note_applied_range(*extra["lsn_span"])
+        extra: dict = {"phases": phases, "redeliveries_dropped": stats.redeliveries_dropped}
+        if obs["lsn_min"] is not None:
+            # the batch's full valid-lsn span, re-deliveries included
+            extra["lsn_span"] = [int(obs["lsn_min"]), int(obs["lsn_max"])]
 
         # Housekeeping, only after a commit of this attempt's own.
         # Compaction: fold deltas into base every N applied epochs
@@ -394,19 +326,18 @@ class ReplayJob:
             self.salt = self.config.salt_buckets
             phases["salted_from_next_epoch"] = self.salt
 
-        LineageLog(self.lineage_dir, self.stream_id).record(
-            stats, dead_letters=dead_counts, extra=extra
-        )
+        lineage.record(stats, dead_letters=dead_counts, extra=extra)
         self.applied.append(stats)
         if order_violation is not None and self.config.order_guard == "error":
-            lo, hwm = order_violation
+            lo, hwm, n = order_violation
             raise OutOfOrderDeliveryError(
-                f"stream {self.stream_id!r} epoch {epoch_id}: batch min lsn"
-                f" {lo} is below the applied high-water mark {hwm} but inside"
-                f" no applied lsn interval — an out-of-order first delivery."
-                f" Its snapshot (v{stats.snapshot_version}) is committed:"
-                f" roll back via time travel and re-deliver in order, or set"
-                f" EngineConfig(order_guard='warn') to record-and-continue."
+                f"stream {self.stream_id!r} epoch {epoch_id}: {n} valid events"
+                f" from lsn {lo} are at or below the applied high-water mark"
+                f" {hwm} but inside no applied lsn interval — out-of-order"
+                f" first deliveries. Its snapshot (v{stats.snapshot_version})"
+                f" is committed: roll back via time travel and re-deliver in"
+                f" order, or set EngineConfig(order_guard='warn') to"
+                f" record-and-continue."
             )
         return stats
 
@@ -430,8 +361,8 @@ class ReplayJob:
         from pyspark.sql import Observation
 
         # the same single-pass observation also captures the batch's
-        # PRE-dedup-filter valid-event lsn span for the applied
-        # intervals, at zero extra jobs
+        # full valid-event lsn span for the lineage doc, at zero extra
+        # jobs
         dead_obs = Observation()
         batch = batch_df.observe(dead_obs, *self._batch_metrics())
         valid, _ = split_dead_letters(batch)
@@ -442,24 +373,11 @@ class ReplayJob:
         if bad_cols:
             valid = valid.filter(~self._incompat_predicate(bad_cols)).drop(*bad_cols)
 
-        # watermarked cross-epoch dedup, "committed" scope: every
-        # event at or below this stream's applied high-water mark
-        # is a verbatim re-delivery (delivery contract; foreachBatch
-        # commits serially) — drop pre-merge with a literal
-        # predicate instead of a state-store shuffle. Valid events
-        # always carry a non-null lsn (envelope P2), so the
-        # null-unsafe comparison never drops a fresh event.
-        if self.watermark and self.watermark_scope == "committed":
-            ranges = self._applied_lsn_intervals()
-            if ranges:
-                valid = valid.filter(F.col("lsn") > F.lit(ranges[-1][1]))
-
         # Optimistic-concurrency retry: two live streams replaying
         # into ONE table interleave snapshot commits; the loser's
-        # CAS raises SnapshotConflictError. A retry must RE-MERGE
-        # from the fresh snapshot — not just re-commit — because
-        # delta rows are stamped with the parent version as the
-        # commit-order authority (the failed attempt's files were
+        # CAS raises SnapshotConflictError. A retry RE-MERGES from
+        # the fresh snapshot, whose applied intervals the re-delivery
+        # drop is planned against (the failed attempt's files were
         # already dropped at the commit site, cdc/merge.py). Each
         # iteration also re-runs evolve_table (idempotent) in case
         # the concurrent winner was a schema evolution.
@@ -542,13 +460,9 @@ class ReplayJob:
                 spark, self.stream_dir, self.event_schema, self.max_files_per_trigger
             )
         if self.watermark:
-            events = events.withWatermark("ts", self.watermark)
-            if self.watermark_scope == "state":
-                events = events.dropDuplicatesWithinWatermark(
-                    [*self.config.key_columns, "lsn"]
-                )
-            # "committed" scope drops re-deliveries in apply_epoch via
-            # the applied high-water mark (see watermark_scope above)
+            events = events.withWatermark("ts", self.watermark).dropDuplicatesWithinWatermark(
+                [*self.config.key_columns, "lsn"]
+            )
         writer = (
             events.writeStream.queryName(f"cdc-{self.stream_id}")
             .option("checkpointLocation", os.path.join(self.checkpoint_dir, "spark"))

@@ -63,26 +63,25 @@ class EngineConfig:
     expire_snapshots_every_epochs: int | None = None
     expire_keep_last: int = 8
     #: delivery-contract guard: the engine's bounded per-key state
-    #: (``last_lsn`` as the LWW/re-delivery authority, cdc/merge.py)
-    #: requires each KEY's events to arrive in LSN order, re-delivery
-    #: of already-applied events excepted. Tracking that per key is
-    #: unbounded, so the guard checks the stronger GLOBAL property —
-    #: an applied epoch's min-lsn below the high-water mark yet outside
-    #: every previously applied lsn interval is an out-of-order FIRST
-    #: delivery — via driver-side interval bookkeeping (no extra Spark
-    #: jobs, O(1) intervals in steady state). That global property is
-    #: exactly the contract of a binlog/WAL segment tail (this engine's
-    #: primary source), which a file source can still break when two
-    #: segment files tie on modification time — the failure the guard
-    #: exists to catch. It is deliberately STRICTER than the per-key
-    #: contract: a multi-partition Kafka topic orders per partition,
-    #: not globally, so a lagging partition makes global lsn gaps that
-    #: are per-key legal — key-partitioned deployments must set "warn"
-    #: (record in lineage phases, continue) or "off"; the default
-    #: "error" records the violation in lineage and raises
-    #: OutOfOrderDeliveryError (the epoch's snapshot is already
-    #: committed: roll back by time travel to ``snapshot_version - 1``
-    #: and re-deliver in order).
+    #: (``last_lsn`` as the LWW authority, cdc/merge.py) requires each
+    #: KEY's events to arrive in LSN order, re-delivery of
+    #: already-applied events excepted. Tracking that per key is
+    #: unbounded, so the guard checks the stronger per-STREAM property:
+    #: an event left after the merge's re-delivery drop at or below the
+    #: stream's applied high-water mark lies in a gap of the applied LSN
+    #: intervals (snapshot-held, cdc/merge.py) and is an out-of-order
+    #: FIRST delivery — one count on the merge's existing observation,
+    #: no extra Spark job. That property is exactly the contract of a
+    #: binlog/WAL segment tail (this engine's primary source), which a
+    #: file source can still break when two segment files tie on
+    #: modification time — the failure the guard exists to catch. A
+    #: multi-partition Kafka topic orders per partition, not globally:
+    #: use one stream id per partition (cdc/sources.py). "warn" records
+    #: the violation in lineage phases and continues; the default
+    #: "error" records it and raises OutOfOrderDeliveryError (the
+    #: epoch's snapshot is already committed: roll back by time travel
+    #: to ``snapshot_version - 1`` and re-deliver in order); "off"
+    #: records nothing.
     order_guard: str = "error"
 
     def __post_init__(self) -> None:

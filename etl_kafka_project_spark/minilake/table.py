@@ -31,9 +31,11 @@ the sandbox — verified). What it reproduces from the Iceberg model:
   with the evolved schema (Spark 4's parquet reader null-fills added
   columns and widens int→long / float→double natively — verified),
 * **time travel**: ``read(version=N)``,
-* **exactly-once bookkeeping**: ``committed_epochs`` per stream id is part
-  of the same atomic snapshot commit as the data it covers, so an epoch is
-  never half-applied (SURVEY §4.2.3).
+* **exactly-once bookkeeping**: ``committed_epochs`` and the coalesced
+  applied ``lsn_intervals`` per stream id are part of the same atomic
+  snapshot commit as the data they cover, so an epoch is never
+  half-applied (SURVEY §4.2.3) and a re-delivered event is recognised
+  from the snapshot alone (Delta Lake's ``txn`` action).
 
 The table role mirrors the reference's keyed state store + serving sink in
 one: the persisted-DataFrame state (``pyspark_interface.py:34-36``) and the
@@ -55,6 +57,8 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_kafka_project_spark.functions.exprcache import cached_exprs
 
 
 class SnapshotConflictError(RuntimeError):
@@ -120,6 +124,10 @@ class Snapshot:
     files: tuple[FileEntry, ...]
     committed_epochs: dict[str, list[int]]
     props: dict = field(default_factory=dict)
+    #: stream id → coalesced [lo, hi] LSN intervals the stream has
+    #: applied (:func:`record_span`); the top of the last one is its
+    #: high-water mark
+    lsn_intervals: dict[str, list[list[int]]] = field(default_factory=dict)
     ts: float = 0.0
     #: bucket → {"path": manifest file (relative), "rows", "n_files"}.
     #: The stored form of ``files`` (Iceberg manifest-list shape): the
@@ -147,6 +155,7 @@ class Snapshot:
             "schema": json.loads(self.schema.json()),
             "manifests": {str(b): m for b, m in sorted(self.manifests.items())},
             "committed_epochs": self.committed_epochs,
+            "lsn_intervals": self.lsn_intervals,
             "props": self.props,
         }
 
@@ -159,9 +168,31 @@ class Snapshot:
             files=files,
             committed_epochs={k: list(v) for k, v in d["committed_epochs"].items()},
             props=d["props"],
+            lsn_intervals=d["lsn_intervals"],
             ts=d["ts"],
             manifests={int(b): m for b, m in d["manifests"].items()},
         )
+
+
+def record_span(
+    intervals: list[list[int]], lo: int, hi: int, dense: bool
+) -> list[list[int]]:
+    """A stream's applied-LSN intervals after it applies the fresh span
+    ``[lo, hi]``. A dense span (every lsn in it applied) merges only
+    with overlapping or adjacent intervals, so a skipped segment stays a
+    visible gap. A span with holes (sparse LSNs such as WAL byte
+    offsets) that lies above the high-water mark extends the top
+    interval, so an in-order sparse stream keeps one interval. A
+    one-event batch counts as dense."""
+    if not dense and intervals and lo > intervals[-1][1]:
+        return [*intervals[:-1], [intervals[-1][0], hi]]
+    out: list[list[int]] = []
+    for a, b in sorted([*intervals, [lo, hi]]):
+        if out and a <= out[-1][1] + 1:
+            out[-1][1] = max(out[-1][1], b)
+        else:
+            out.append([a, b])
+    return out
 
 
 def _footer_stats(meta, columns: list[str]) -> dict | None:
@@ -364,9 +395,12 @@ class LakeTable:
         of this engine, so the same key always lands in the same bucket.
         """
         snap = snap or self.snapshot_header()
-        keys = snap.props["key_columns"]
+        keys = tuple(snap.props["key_columns"])
         n = snap.props["n_buckets"]
-        return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n))
+        return cached_exprs(
+            ("bucket_expr", keys, n),
+            lambda: F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n)),
+        )
 
     # ---------- read ----------
 
@@ -536,6 +570,7 @@ class LakeTable:
         removed_files: set[tuple[str, int]] | None = None,
         schema: T.StructType | None = None,
         epoch: tuple[str, int] | None = None,
+        applied: tuple[str, int, int, bool] | None = None,
     ) -> Snapshot:
         """Atomically commit a new snapshot.
 
@@ -544,9 +579,12 @@ class LakeTable:
           shared with buckets the compaction skipped keeps their
           entries, marked ``partial``),
         * appends ``new_files``,
-        * optionally evolves the schema and records a committed stream
-          epoch — all in the SAME atomic rename, which is what makes the
-          foreachBatch sink exactly-once (data+epoch can't diverge).
+        * optionally evolves the schema, records a committed stream
+          epoch, and records ``applied = (stream_id, lo, hi, dense)``,
+          the fresh LSN span the data applies, into that stream's
+          intervals (:func:`record_span`) — all in the SAME atomic
+          rename, which is what makes the foreachBatch sink exactly-once
+          (data, epoch and progress can't diverge).
 
         Optimistic concurrency: fails with :class:`SnapshotConflictError`
         if the table moved past ``expected_version``.
@@ -576,6 +614,10 @@ class LakeTable:
                     f"epoch {epoch_id} of stream {stream_id} already committed"
                 )
             epochs.setdefault(stream_id, []).append(epoch_id)
+        lsns = dict(parent.lsn_intervals)
+        if applied is not None:
+            stream_id, lo, hi, dense = applied
+            lsns[stream_id] = record_span(lsns.get(stream_id, []), lo, hi, dense)
         new_version = current + 1
 
         # Incremental manifest maintenance: only buckets whose entries
@@ -606,6 +648,7 @@ class LakeTable:
             files=tuple(kept) + tuple(new_files),
             committed_epochs=epochs,
             props=parent.props,
+            lsn_intervals=lsns,
             ts=time.time(),
             manifests=manifests,
         )

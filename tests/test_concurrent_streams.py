@@ -122,11 +122,10 @@ def test_injected_conflict_retries_and_lands(spark, tmp_path, monkeypatch):
 def test_conflict_skip_preserves_winner_lsn_span(spark, tmp_path, monkeypatch):
     """A concurrent retry of the SAME stream wins epoch 1's commit; the
     loser takes the exactly-once skip branch. The skip must overwrite
-    the winner's lineage doc WITHOUT erasing its lsn_span (the order
-    guard's applied-interval evidence) and must record
-    skipped=true — otherwise a restarted job rebuilds its intervals
-    missing that epoch and a verbatim re-delivery trips a spurious
-    OutOfOrderDeliveryError (round-5 review finding)."""
+    the winner's lineage doc WITHOUT erasing its lsn_span and must
+    record skipped=true; a restarted job reads its applied intervals
+    from the snapshot, so a verbatim re-delivery of the epoch passes the
+    order guard."""
     ev, segs = _stream(tmp_path, "s1")
     create_code_table(spark, str(tmp_path / "table"), CFG)
     job = _job(tmp_path, "s1")
@@ -170,8 +169,8 @@ def test_conflict_skip_preserves_winner_lsn_span(spark, tmp_path, monkeypatch):
     feed_dir = os.path.join(job.changelog_dir, "stream=s1", "epoch=1")
     assert added and set(os.listdir(feed_dir)) == {os.path.basename(p) for p in added}
 
-    # restart: a fresh job rebuilds its applied intervals from lineage;
-    # a verbatim re-delivery of epoch 1's events (new epoch id) must
+    # restart: a fresh job reads its applied intervals from the
+    # snapshot; a verbatim re-delivery of epoch 1's events (new epoch id) must
     # pass the order guard (lsns lie inside applied intervals), not
     # raise OutOfOrderDeliveryError
     job2 = _job(tmp_path, "s1")

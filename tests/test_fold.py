@@ -4,7 +4,7 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA
-from etl_kafka_project_spark.cdc.fold import LSN_SAMPLE, NEVER, fold_batch
+from etl_kafka_project_spark.cdc.fold import NEVER, fold_batch
 
 KEYS = ["repo", "path"]
 PAYLOAD = ["commit", "lang", "content"]
@@ -110,24 +110,20 @@ def test_null_key_group_survives_fold(spark):
     assert out[("r", "p")]["_applied"] == 1
 
 
-def test_lsn_sample_truncation_identical_across_shapes(spark):
-    """A key with more than LSN_SAMPLE distinct lsns in one batch: the
-    fused shape (collect_set + slice(array_sort)) and the two-phase
-    shape (window-ranked narrow sample) must emit the SAME bounded
-    ``_lsns`` sample — the smallest LSN_SAMPLE+1 lsns, sorted, size ==
-    LSN_SAMPLE+1 marking truncation — and the same exact ``_applied``
-    count. The merge paths subtract re-delivered lsns from this sample,
-    so a shape divergence here would corrupt ``row_version``."""
-    n = LSN_SAMPLE + 40
+def test_applied_count_identical_across_shapes(spark):
+    """A key with hundreds of distinct lsns (plus verbatim in-batch
+    duplicates) in one batch: the fused shape (size of collect_set) and
+    the two-phase shape (dropDuplicates, then partial counts summed)
+    must give the same exact ``_applied``, which feeds ``row_version``."""
+    n = 296
     rows = [
         (i + 1, "I" if i == 0 else "U", "r", "p", f"c{i}", None, None)
         for i in range(n)
     ]
+    rows += rows[:10]
     plain = _fold(spark, rows)[("r", "p")]
     salted = _fold(spark, rows, salt=4)[("r", "p")]
     assert plain["_applied"] == salted["_applied"] == n
-    assert plain["_lsns"] == salted["_lsns"] == list(range(1, LSN_SAMPLE + 2))
-    assert len(plain["_lsns"]) == LSN_SAMPLE + 1  # truncation marker
 
 
 def test_salted_fold_identical_to_plain(spark):

@@ -103,6 +103,33 @@ def test_idempotent_reapply_same_fold_is_noop(spark, tmp_table_dir):
     pd.testing.assert_frame_equal(first, second)
 
 
+def test_two_streams_with_interleaved_lsns_drop_their_own_redeliveries(spark, tmp_table_dir):
+    """Two key-disjoint streams share one global lsn sequence, so each
+    stream's lsns are sparse, and every later epoch also re-delivers
+    some of its own stream's earlier events. The re-deliveries drop
+    before the fold, so state equals the oracle including
+    ``row_version``, and each stream's record stays ONE interval: a
+    sparse span above the high-water mark extends the top interval."""
+    spec = StreamSpec(n_events=900, n_keys=120, min_lines=2, max_lines=3)
+    events = generate_events(spec)
+    owner = events["repo"].str[-1].astype(int) % 2
+    streams = {"a": events[owner == 0], "b": events[owner == 1]}
+    table = create_code_table(spark, tmp_table_dir, CFG)
+    for i, (lo, hi) in enumerate([(1, 300), (301, 600), (601, 900)]):
+        for sid, ev in streams.items():
+            chunk = ev[(ev.lsn >= lo) & (ev.lsn <= hi)]
+            again = ev[ev.lsn < lo].iloc[::5]
+            batch = pd.concat([chunk, again]).sample(frac=1.0, random_state=i)
+            merge_events(table, spark.createDataFrame(batch, EVENT_SCHEMA), epoch=(sid, i))
+
+    got = _final_state_pdf(table)
+    want = replay_oracle(events).reindex(columns=got.columns)
+    pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()), check_dtype=False)
+    assert table.snapshot_header().lsn_intervals == {
+        sid: [[int(ev.lsn.min()), int(ev.lsn.max())]] for sid, ev in streams.items()
+    }
+
+
 def test_sha256_invariant_pandas_udf_equals_builtin(spark, tmp_table_dir):
     from etl_kafka_project_spark.functions.hashing import sha256_pandas
 

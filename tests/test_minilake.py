@@ -306,3 +306,29 @@ def test_vacuum_survives_keep_last_growth(spark, tmp_table_dir):
     stats = expire_snapshots(t, keep_last=4, orphan_grace_sec=0.0)  # window grows
     assert stats["snapshots_removed"] == 0
     assert {(r.repo, r.path, r.n) for r in t.read().collect()} == {("r1", "p1", 3)}
+
+
+def test_delta_read_plans_no_window(spark, tmp_table_dir):
+    """A read of a delta-holding table resolves base ∪ deltas as a union
+    and one aggregation per key: neither a full nor a bucket-pruned read
+    plans a Window."""
+    import contextlib
+    import io
+
+    from etl_kafka_project_spark.cdc.envelope import EVENT_SCHEMA
+    from etl_kafka_project_spark.cdc.fixtures import StreamSpec, generate_events
+    from etl_kafka_project_spark.cdc.merge import create_code_table, merge_events
+    from etl_kafka_project_spark.config import EngineConfig
+
+    events = generate_events(StreamSpec(n_events=300, n_keys=40, min_lines=2, max_lines=3))
+    table = create_code_table(spark, tmp_table_dir, EngineConfig(n_buckets=4))
+    for i, half in enumerate((events.iloc[:150], events.iloc[150:])):
+        merge_events(table, spark.createDataFrame(half, EVENT_SCHEMA), epoch=("t", i))
+    assert {f.kind for f in table.snapshot().files} == {"delta"}
+    for df in (table.read(), table.read(buckets={0})):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        assert "Aggregate" in plan
+        assert "Window" not in plan, plan

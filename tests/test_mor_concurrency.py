@@ -134,3 +134,53 @@ def test_losing_compactor_aborts_without_duplicates(spark, tmp_path):
     }
     assert orphans == set()
     _check_oracle(table, e0)
+
+
+def test_crash_between_compaction_conflict_retries(spark, tmp_path):
+    """Fault at the compaction commit: the first attempt loses the CAS
+    to a concurrent epoch, and the process dies before the retry
+    commits. The table holds both epochs and no compaction, so state
+    equals the oracle, and the vacuum deletes the compactor's orphaned
+    base files."""
+    import os
+
+    from etl_kafka_project_spark.cdc.compaction import expire_snapshots
+
+    table = create_code_table(spark, str(tmp_path / "t"), CFG)
+    e0, e1 = _events(range(1, 21)), _events(range(21, 31))
+    merge_events(table, spark.createDataFrame(e0, EVENT_SCHEMA), epoch=("s", 0))
+
+    orig = table.commit
+    attempts: list = []
+
+    def racing_then_crash(**kw):
+        if kw.get("removed_files"):
+            attempts.append(kw["new_files"])
+            if len(attempts) == 1:
+                merge_events(
+                    LakeTable(spark, table.root),
+                    spark.createDataFrame(e1, EVENT_SCHEMA),
+                    epoch=("s", 1),
+                )
+            else:
+                raise RuntimeError("injected crash between compaction retries")
+        return orig(**kw)
+
+    table.commit = racing_then_crash
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            compact_deltas(table, delta_share=0.0)
+    finally:
+        del table.commit
+    assert len(attempts) == 2 and attempts[0] == attempts[1]
+    orphans = {fe.path for fe in attempts[0]}
+    snap = table.snapshot()
+    assert snap.committed_epochs["s"] == [0, 1]
+    assert not orphans & {f.path for f in snap.files}
+    all_events = pd.concat([e0, e1], ignore_index=True)
+    _check_oracle(table, all_events)
+
+    assert all(os.path.exists(os.path.join(table.root, p)) for p in orphans)
+    expire_snapshots(table, orphan_grace_sec=0)
+    assert not any(os.path.exists(os.path.join(table.root, p)) for p in orphans)
+    _check_oracle(table, all_events)

@@ -3,8 +3,9 @@ verdict item #6): for ANY event log, ANY partition into epochs, ANY
 verbatim re-delivery of a subset of earlier epochs' events inside later
 epochs, and ANY compaction point, the resolved table must equal the
 pandas oracle of the ORIGINAL log — including ``row_version`` (each
-event counted exactly once; re-deliveries are provable no-ops via the
-``_writer_version`` staleness window in cdc/mor.py)."""
+event counted exactly once; re-deliveries are provable no-ops: the
+merge drops them before the fold against the stream's applied LSN
+intervals in the snapshot)."""
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings

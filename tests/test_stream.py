@@ -251,17 +251,18 @@ def _dup_stream(tmp_path):
 def test_watermarked_cross_epoch_dedup(spark, tmp_path, order_guard):
     """north star: dropDuplicates over watermarked state. A verbatim
     duplicate delivered in a LATER epoch (outside the per-batch fold's
-    sight) must be dropped pre-merge. Default scope ("committed"): a
-    predicate on the applied high-water mark does the dropping — no
-    state store shuffle (round-3 verdict #3). The mark is the top of
-    the applied LSN intervals, kept whatever the order guard's mode."""
+    sight) is dropped inside the streaming graph by
+    dropDuplicatesWithinWatermark, whatever the order guard's mode."""
     events = _dup_stream(tmp_path)
     create_code_table(spark, str(tmp_path / "table"), CFG)
     cfg = EngineConfig(n_buckets=CFG.n_buckets, order_guard=order_guard)
     job = _job(tmp_path, config=cfg, max_files_per_trigger=1, watermark="1 hour")
     stats = job.run(spark)
-    assert len(stats) == 3
-    assert stats[2].events_in == 0  # the re-delivered epoch applied nothing
+    # the stateful graph may append one trailing NO-DATA batch under
+    # availableNow — Spark runs it to let the advanced watermark evict
+    # state; it applies nothing
+    assert len(stats) in (3, 4)
+    assert all(s.events_in == 0 for s in stats[2:])  # the re-delivery applied nothing
     # ...committed nothing, and so published no feed dir
     feed = os.path.join(job.changelog_dir, f"stream={job.stream_id}")
     assert sorted(os.listdir(feed)) == ["epoch=0", "epoch=1"]
@@ -271,50 +272,54 @@ def test_watermarked_cross_epoch_dedup(spark, tmp_path, order_guard):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_watermarked_state_scope_dedup(spark, tmp_path):
-    """watermark_scope="state": the literal dropDuplicatesWithinWatermark
-    construct drops the re-delivered epoch inside the streaming graph —
-    same observable result as the default committed scope."""
-    events = _dup_stream(tmp_path)
-    create_code_table(spark, str(tmp_path / "table"), CFG)
-    job = _job(tmp_path, max_files_per_trigger=1, watermark="1 hour",
-               watermark_scope="state")
-    stats = job.run(spark)
-    # the stateful graph (dropDuplicatesWithinWatermark) may append one
-    # trailing NO-DATA batch under availableNow — Spark runs it to let
-    # the advanced watermark evict state; it applies nothing
-    assert len(stats) in (3, 4)
-    assert all(s.events_in == 0 for s in stats[2:])
+def _restart_keeps_progress(spark, tmp_path, watermark):
+    """Stream progress lives in the snapshot: a NEW job object resuming
+    the same checkpoint, with the lineage dir deleted, still drops a
+    duplicate segment delivered after the restart, and its order guard
+    still sees the gap a skipped segment left."""
+    import shutil
 
-    got = _final_state_pdf(_open(spark, job))
-    want = replay_oracle(events).reindex(columns=got.columns)
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    from etl_kafka_project_spark.cdc.stream import OutOfOrderDeliveryError
 
-
-def test_watermarked_hwm_survives_restart(spark, tmp_path):
-    """the committed-scope high-water mark survives a restart: a NEW job
-    object resuming the same checkpoint rebuilds it from the lineage
-    docs' lsn_span and still drops a duplicate segment delivered after
-    the restart."""
-    spec = StreamSpec(n_events=400, n_keys=60, n_segments=2, dup_rate=0.0,
+    spec = StreamSpec(n_events=600, n_keys=60, n_segments=3, dup_rate=0.0,
                       shuffle_within_segment=False, min_lines=2, max_lines=3)
     events, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    gap = shutil.move(segs[1], str(tmp_path / "late.parquet"))
     create_code_table(spark, str(tmp_path / "table"), CFG)
 
-    job1 = _job(tmp_path, max_files_per_trigger=1, watermark="1 hour")
-    assert len(job1.run(spark)) == 2
+    job1 = _job(tmp_path, max_files_per_trigger=1, watermark=watermark)
+    # (+1 trailing no-data batch of the stateful graph with a watermark)
+    assert len([s for s in job1.run(spark) if s.events_in]) == 2
+    shutil.rmtree(job1.lineage_dir)
 
     # "restart": fresh driver-side job state, same checkpoint; the dupe
     # arrives only now, so Spark's offsets alone can't skip it
     dup = pd.read_parquet(segs[0]).head(20)
-    dup.to_parquet(str(tmp_path / "stream" / "segment-00002.parquet"))
-    job2 = _job(tmp_path, max_files_per_trigger=1, watermark="1 hour")
+    dup.to_parquet(str(tmp_path / "stream" / "segment-00003.parquet"))
+    job2 = _job(tmp_path, max_files_per_trigger=1, watermark=watermark)
     stats = job2.run(spark)
-    assert [s.events_in for s in stats if not s.skipped] == [0]
+    assert all(s.events_in == 0 for s in stats)
+    # without a watermark the merge drops the re-delivery; with one, the
+    # state store already did
+    dropped = sum(d["redeliveries_dropped"] for d in LineageLog(job2.lineage_dir).read_all())
+    assert dropped == (0 if watermark else 20)
 
+    late = pd.read_parquet(gap)
     got = _final_state_pdf(_open(spark, job2))
-    want = replay_oracle(events).reindex(columns=got.columns)
+    want = replay_oracle(events[~events.lsn.isin(late.lsn)]).reindex(columns=got.columns)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    with pytest.raises(OutOfOrderDeliveryError):
+        job2.apply_epoch(spark.read.schema(EVENT_SCHEMA).parquet(gap), 99)
+
+
+def test_watermarked_hwm_survives_restart(spark, tmp_path):
+    _restart_keeps_progress(spark, tmp_path, "1 hour")
+
+
+def test_hwm_survives_restart_without_lineage(spark, tmp_path):
+    _restart_keeps_progress(spark, tmp_path, None)
 
 
 def test_expiry_housekeeping_cadence(spark, tmp_path):
@@ -395,7 +400,7 @@ def test_order_guard_trips_on_out_of_order_first_delivery(spark, tmp_path):
     doc = LineageLog(job2.lineage_dir, job2.stream_id).read_epoch(2)
     assert "order_violation" in doc["phases"]
 
-    # a fresh job over the same lineage rebuilds intervals on resume:
+    # a fresh job reads the intervals from the snapshot on resume:
     # re-delivery of every applied segment still passes the guard
     job3 = ReplayJob(
         table_root=str(tmp_path / "table2"),
@@ -412,7 +417,7 @@ def test_crash_after_commit_before_lineage_record(spark, tmp_path, monkeypatch):
     """Fault at the "after CAS commit" boundary: epoch 1's snapshot
     commits, then the process dies before its lineage doc is written. A
     fresh job resuming the same checkpoint skips the epoch and records
-    its lsn_span from the batch, so a later verbatim re-delivery passes
+    its lsn_span from the batch; a later verbatim re-delivery passes
     the order guard and the final state matches the oracle."""
     spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
     events, segs = generate_stream(str(tmp_path / "stream"), spec)
@@ -449,7 +454,7 @@ def test_crash_after_commit_before_lineage_record(spark, tmp_path, monkeypatch):
 
     job2.apply_epoch(read(segs[2]), 2)
     job2.apply_epoch(read(segs[3]), 3)
-    # a second restart rebuilds the intervals from lineage alone; the
+    # a second restart reads the intervals from the snapshot; the
     # verbatim re-delivery of segment 1 lies inside them
     job3 = _job(tmp_path)
     job3.apply_epoch(read(segs[1]), 4)
@@ -661,13 +666,15 @@ def test_crash_after_cas_resumes_by_skip(spark, tmp_path, monkeypatch, step):
     _assert_feed_reproduces_table(spark, job, got)
 
 
-def test_order_guard_misses_gap_event_above_an_applied_min(spark, tmp_path):
-    """Known miss of the order guard: it summarises a batch by its
-    [min, max] valid-lsn span. A batch whose minimum lsn lies inside an
-    applied interval (a re-delivery) but which also carries a late FIRST
-    delivery inside a gap passes unflagged — no error, no
-    ``order_violation`` in its lineage doc. Closing this gap means
-    editing this test."""
+def test_order_guard_catches_gap_event_above_an_applied_min(spark, tmp_path):
+    """A batch whose minimum lsn lies inside an applied interval (a
+    re-delivery) but which also carries a late FIRST delivery inside a
+    gap: the merge drops the re-delivered events before the fold, the
+    one event left sits below the high-water mark, and the guard trips.
+    The late event's lsn joins the applied intervals; the rest of the
+    gap stays open."""
+    from etl_kafka_project_spark.cdc.stream import OutOfOrderDeliveryError
+
     spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
     _, segs = generate_stream(str(tmp_path / "stream"), spec)
     segs = sorted(segs)
@@ -677,15 +684,64 @@ def test_order_guard_misses_gap_event_above_an_applied_min(spark, tmp_path):
     job = _job(tmp_path)  # order_guard="error"
     job.apply_epoch(read(segs[0]), 0)
     job.apply_epoch(read(segs[2]), 1)  # segment 1's lsns are now a gap
-    seg0, seg1 = pd.read_parquet(segs[0]), pd.read_parquet(segs[1])
+    seg0, seg1, seg2 = (pd.read_parquet(s) for s in segs[:3])
     late = int(seg1.lsn.min())
-    assert seg0.lsn.max() < late < pd.read_parquet(segs[2]).lsn.min()
+    assert seg0.lsn.max() < late < seg2.lsn.min()
     mixed = read(segs[0]).unionByName(read(segs[1]).filter(f"lsn = {late}"))
-    job.apply_epoch(mixed, 2)  # does not raise
+    with pytest.raises(OutOfOrderDeliveryError):
+        job.apply_epoch(mixed, 2)
 
     doc = LineageLog(job.lineage_dir, job.stream_id).read_epoch(2)
     assert doc["lsn_span"] == [int(seg0.lsn.min()), late]
-    assert "order_violation" not in doc["phases"]
+    assert doc["phases"]["order_violation"] == [late, int(seg2.lsn.max()), 1]
+    assert doc["redeliveries_dropped"] == len(seg0)
+    assert doc["events_in"] == 1
+    assert _open(spark, job).snapshot_header().lsn_intervals[job.stream_id] == [
+        [int(seg0.lsn.min()), late], [int(seg2.lsn.min()), int(seg2.lsn.max())],
+    ]
+
+
+def test_crash_after_lineage_record_before_order_guard_raises(spark, tmp_path, monkeypatch):
+    """Fault between the lineage record and the order guard's raise: the
+    out-of-order epoch 2 commits and its doc records the violation, then
+    the process dies. A fresh job retrying the epoch skips it without
+    raising; the doc it rewrites keeps ``order_violation``, and the state
+    is the committed snapshot's."""
+    spec = StreamSpec(n_events=400, n_keys=60, n_segments=4, min_lines=2, max_lines=3)
+    _, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+
+    orig = LineageLog.record
+    crashed = []
+
+    def crash_after(self, stats, *a, **kw):
+        doc = orig(self, stats, *a, **kw)
+        if stats.epoch_id == 2 and not crashed:
+            crashed.append(1)
+            raise RuntimeError("injected crash after the lineage record")
+        return doc
+
+    monkeypatch.setattr(LineageLog, "record", crash_after)
+    job = _job(tmp_path)
+    job.apply_epoch(read(segs[0]), 0)
+    job.apply_epoch(read(segs[2]), 1)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.apply_epoch(read(segs[1]), 2)  # gap-filling first delivery
+    table = _open(spark, job)
+    assert table.snapshot_header().has_epoch(job.stream_id, 2)
+    lineage = LineageLog(job.lineage_dir, job.stream_id)
+    violation = lineage.read_epoch(2)["phases"]["order_violation"]
+    version, committed = table.current_version(), _final_state_pdf(table)
+
+    job2 = _job(tmp_path)
+    assert job2.apply_epoch(read(segs[1]), 2).skipped
+    doc = lineage.read_epoch(2)
+    assert doc["skipped"] is True
+    assert doc["phases"]["order_violation"] == violation
+    assert table.current_version() == version
+    pd.testing.assert_frame_equal(_final_state_pdf(table), committed)
 
 
 def test_rate_controlled_continuous_tail(spark, tmp_path):
