@@ -37,6 +37,7 @@ Table meta columns (the generalization of the reference's per-key
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -188,6 +189,7 @@ def merge_events(
     epoch: tuple[str, int] | None = None,
     salt: int | None = None,
     changelog_dir: str | None = None,
+    quarantined: Callable[[], int] | None = None,
 ) -> MergeStats:
     """drop re-deliveries + fold + merge-on-read apply + snapshot commit
     in one call (the foreachBatch body, minus idempotence which lives in
@@ -205,10 +207,13 @@ def merge_events(
     before the fold, and the commit records the fresh span
     (``LakeTable.commit(applied=...)``) in the same CAS as the data. A
     call without an epoch records and drops under
-    :data:`ANONYMOUS_STREAM`. The span is dense when the batch applied
-    every lsn in it (the fold's distinct-lsn count, ``_applied``, says
-    so); ``minilake.table.record_span`` keeps a dense span's gaps
-    visible and folds a sparse in-order span into the top interval.
+    :data:`ANONYMOUS_STREAM`. The record counts the lsns the batch
+    delivered: the fold's distinct-lsn count (``_applied``) plus
+    ``quarantined()``, the caller's count of rows it split off this
+    delivery before the call (dead letters, read once the write job has
+    run, e.g. from an ``Observation`` on the undivided batch). A span
+    holed only by dead letters is thus still dense, and a skipped
+    segment below it stays a gap (``minilake.table.record_span``).
 
     ``changelog_dir``: if set (and an epoch id is given), the committed
     epoch's delta files are published as the outbound change feed
@@ -282,7 +287,8 @@ def merge_events(
         lo, hi = e["lo"], e["hi"]
         # no span to record when every fresh event lacks an lsn (only a
         # caller that skipped split_dead_letters can send those)
-        applied = None if lo is None else (stream_id, lo, hi, n_events >= hi - lo + 1)
+        delivered = n_events + (quarantined() if quarantined else 0)
+        applied = None if lo is None else (stream_id, lo, hi, delivered)
         try:
             committed = table.commit(
                 expected_version=snap.version, new_files=new_files, epoch=epoch,

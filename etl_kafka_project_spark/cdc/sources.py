@@ -116,7 +116,10 @@ def kafka_binlog(
     range-disjoint contract the re-delivery drop relies on
     (``cdc/fold.py`` docstring). Use one stream id per partition: each
     partition then keeps its own applied LSN intervals in the snapshot,
-    in order."""
+    in order. A partition whose lsns are sparse (WAL byte offsets)
+    shows a skipped segment to the order guard only when the gap is
+    wider than the holes in the next batch's span; a narrower one is
+    dropped as a re-delivery (``EngineConfig.order_guard``)."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

@@ -101,7 +101,9 @@ class ReplayJob:
     #: ``dropDuplicatesWithinWatermark`` before ``foreachBatch`` (north
     #: star: "dropDuplicates over watermarked state"), shuffling every
     #: event into the streaming state store. Re-deliveries of applied
-    #: events are dropped by ``merge_events`` whether or not it is set.
+    #: events are dropped by ``merge_events`` whether or not it is set,
+    #: so this repeats that work at the cost of a state-store shuffle;
+    #: it is kept as the north star's construct.
     watermark: str | None = None
     #: filled as epochs apply (driver-side; one entry per foreachBatch call)
     applied: list[MergeStats] = field(default_factory=list, init=False)
@@ -364,8 +366,19 @@ class ReplayJob:
         # full valid-event lsn span for the lineage doc, at zero extra
         # jobs
         dead_obs = Observation()
-        batch = batch_df.observe(dead_obs, *self._batch_metrics())
+        metrics = self._batch_metrics()
+        if bad_cols:
+            metrics = [*metrics, F.count_if(
+                dead_letter_reason().isNull() & self._incompat_predicate(bad_cols)
+            ).alias("n_incompat")]
+        batch = batch_df.observe(dead_obs, *metrics)
         valid, _ = split_dead_letters(batch)
+
+        def quarantined() -> int:
+            # a quarantined row's lsn was delivered too (counting the
+            # null-lsn ones over-counts, which only keeps gaps open)
+            m = dead_obs.get
+            return int(m["n_dead"] or 0) + int(m.get("n_incompat") or 0)
 
         # an incompatibly-typed column drops from the merge input (its
         # non-null carriers dead-letter), so align_events null-fills it
@@ -414,6 +427,7 @@ class ReplayJob:
                     epoch=(self.stream_id, epoch_id),
                     salt=self.salt,
                     changelog_dir=self.changelog_dir if self.emit_changelog else None,
+                    quarantined=quarantined,
                 )
                 break
             except SnapshotConflictError:

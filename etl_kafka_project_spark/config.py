@@ -75,8 +75,15 @@ class EngineConfig:
     #: binlog/WAL segment tail (this engine's primary source), which a
     #: file source can still break when two segment files tie on
     #: modification time — the failure the guard exists to catch. A
-    #: multi-partition Kafka topic orders per partition, not globally:
-    #: use one stream id per partition (cdc/sources.py). "warn" records
+    #: skipped segment shows as a gap when the stream's lsns are dense
+    #: (dead letters count as delivered); with sparse lsns (e.g. WAL
+    #: byte offsets) only when the gap is wider than the holes inside
+    #: the next applied batch's span — a narrower one is taken for
+    #: spacing, and its late delivery is dropped as a re-delivery
+    #: (``redeliveries_dropped``), not raised (``record_span``,
+    #: minilake/table.py). A multi-partition Kafka topic orders per
+    #: partition, not globally: use one stream id per partition
+    #: (cdc/sources.py). "warn" records
     #: the violation in lineage phases and continues; the default
     #: "error" records it and raises OutOfOrderDeliveryError (the
     #: epoch's snapshot is already committed: roll back by time travel

@@ -168,23 +168,37 @@ class Snapshot:
             files=files,
             committed_epochs={k: list(v) for k, v in d["committed_epochs"].items()},
             props=d["props"],
-            lsn_intervals=d["lsn_intervals"],
+            lsn_intervals=_lsn_intervals(d),
             ts=d["ts"],
             manifests={int(b): m for b, m in d["manifests"].items()},
         )
 
 
+def _lsn_intervals(d: dict) -> dict[str, list[list[int]]]:
+    if "lsn_intervals" not in d:
+        raise ValueError(
+            f"snapshot v{d['version']} records no applied lsn_intervals: the"
+            " table was written by an engine that kept stream progress in"
+            " lineage docs; replay it into a new table"
+        )
+    return d["lsn_intervals"]
+
+
 def record_span(
-    intervals: list[list[int]], lo: int, hi: int, dense: bool
+    intervals: list[list[int]], lo: int, hi: int, delivered: int
 ) -> list[list[int]]:
     """A stream's applied-LSN intervals after it applies the fresh span
-    ``[lo, hi]``. A dense span (every lsn in it applied) merges only
-    with overlapping or adjacent intervals, so a skipped segment stays a
-    visible gap. A span with holes (sparse LSNs such as WAL byte
-    offsets) that lies above the high-water mark extends the top
-    interval, so an in-order sparse stream keeps one interval. A
-    one-event batch counts as dense."""
-    if not dense and intervals and lo > intervals[-1][1]:
+    ``[lo, hi]``, in which ``delivered`` distinct lsns (at most) were
+    delivered. The span merges with overlapping or adjacent intervals,
+    so a skipped segment stays a visible gap. A span with holes (sparse
+    LSNs such as WAL byte offsets) also bridges the gap between the
+    high-water mark and ``lo`` when that gap is no wider than its own
+    holes, so an in-order sparse stream keeps one interval. A skipped
+    segment of a sparse stream that narrow is taken for spacing: its
+    late first delivery is dropped as a re-delivery. Over-counting
+    ``delivered`` only ever keeps a gap open."""
+    holes = hi - lo + 1 - delivered
+    if intervals and 0 < lo - intervals[-1][1] - 1 <= holes:
         return [*intervals[:-1], [intervals[-1][0], hi]]
     out: list[list[int]] = []
     for a, b in sorted([*intervals, [lo, hi]]):
@@ -570,7 +584,7 @@ class LakeTable:
         removed_files: set[tuple[str, int]] | None = None,
         schema: T.StructType | None = None,
         epoch: tuple[str, int] | None = None,
-        applied: tuple[str, int, int, bool] | None = None,
+        applied: tuple[str, int, int, int] | None = None,
     ) -> Snapshot:
         """Atomically commit a new snapshot.
 
@@ -580,9 +594,9 @@ class LakeTable:
           entries, marked ``partial``),
         * appends ``new_files``,
         * optionally evolves the schema, records a committed stream
-          epoch, and records ``applied = (stream_id, lo, hi, dense)``,
-          the fresh LSN span the data applies, into that stream's
-          intervals (:func:`record_span`) — all in the SAME atomic
+          epoch, and records ``applied = (stream_id, lo, hi,
+          delivered)``, the fresh LSN span the data applies, into that
+          stream's intervals (:func:`record_span`) — all in the SAME atomic
           rename, which is what makes the foreachBatch sink exactly-once
           (data, epoch and progress can't diverge).
 
@@ -616,8 +630,8 @@ class LakeTable:
             epochs.setdefault(stream_id, []).append(epoch_id)
         lsns = dict(parent.lsn_intervals)
         if applied is not None:
-            stream_id, lo, hi, dense = applied
-            lsns[stream_id] = record_span(lsns.get(stream_id, []), lo, hi, dense)
+            stream_id, lo, hi, delivered = applied
+            lsns[stream_id] = record_span(lsns.get(stream_id, []), lo, hi, delivered)
         new_version = current + 1
 
         # Incremental manifest maintenance: only buckets whose entries

@@ -130,6 +130,24 @@ def test_two_streams_with_interleaved_lsns_drop_their_own_redeliveries(spark, tm
     }
 
 
+def test_sparse_stream_keeps_a_skipped_segment_wider_than_its_holes(spark, tmp_table_dir):
+    """A stream of even lsns skips its middle segment. The next span has
+    one hole per event, fewer than the skipped segment is wide, so the
+    gap stays open: the segment's late first delivery is counted as
+    out of order, not dropped as a re-delivery."""
+    events = generate_events(StreamSpec(n_events=900, n_keys=120, min_lines=2, max_lines=3))
+    events = events[events.lsn % 2 == 0]
+    chunks = [events[(events.lsn >= lo) & (events.lsn <= lo + 299)] for lo in (1, 301, 601)]
+    table = create_code_table(spark, tmp_table_dir, CFG)
+    for i, c in enumerate([chunks[0], chunks[2]]):
+        merge_events(table, spark.createDataFrame(c, EVENT_SCHEMA), epoch=("s", i))
+    assert table.snapshot_header().lsn_intervals["s"] == [[2, 300], [602, 900]]
+
+    stats = merge_events(table, spark.createDataFrame(chunks[1], EVENT_SCHEMA), epoch=("s", 2))
+    assert stats.redeliveries_dropped == 0
+    assert stats.order_violation == (302, 900, len(chunks[1]))
+
+
 def test_sha256_invariant_pandas_udf_equals_builtin(spark, tmp_table_dir):
     from etl_kafka_project_spark.functions.hashing import sha256_pandas
 

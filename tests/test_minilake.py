@@ -90,6 +90,33 @@ def test_epoch_idempotence_bookkeeping(spark, tmp_table_dir):
         t.commit(1, epoch=("s1", 0))
 
 
+def test_record_span_bridges_only_gaps_its_holes_cover():
+    from etl_kafka_project_spark.minilake.table import record_span
+
+    top = [[1, 100]]
+    assert record_span(top, 101, 200, 100) == [[1, 200]]  # adjacent
+    assert record_span(top, 201, 300, 100) == [[1, 100], [201, 300]]  # dense: gap kept
+    # 50 of 100 lsns delivered: a gap of 50 is spacing, one of 51 is not
+    assert record_span(top, 151, 250, 50) == [[1, 250]]
+    assert record_span(top, 152, 251, 50) == [[1, 100], [152, 251]]
+    assert record_span([], 5, 9, 1) == [[5, 9]]
+
+
+def test_snapshot_without_lsn_intervals_fails_clearly(spark, tmp_table_dir):
+    import json
+    import os
+
+    _mk(spark, tmp_table_dir)
+    path = os.path.join(tmp_table_dir, "snapshots", "v0.json")
+    with open(path) as f:
+        d = json.load(f)
+    del d["lsn_intervals"]
+    with open(path, "w") as f:
+        json.dump(d, f)
+    with pytest.raises(ValueError, match="no applied lsn_intervals"):
+        LakeTable(spark, tmp_table_dir).snapshot_header()
+
+
 def test_time_travel(spark, tmp_table_dir):
     t = _mk(spark, tmp_table_dir)
     df = spark.createDataFrame([("r1", "a", 1)], SCHEMA)

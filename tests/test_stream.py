@@ -288,9 +288,14 @@ def _restart_keeps_progress(spark, tmp_path, watermark):
     gap = shutil.move(segs[1], str(tmp_path / "late.parquet"))
     create_code_table(spark, str(tmp_path / "table"), CFG)
 
+    # the stateful graph of a watermarked job may append one trailing
+    # NO-DATA batch under availableNow; it applies nothing
+    trailing = (0, 1) if watermark else (0,)
     job1 = _job(tmp_path, max_files_per_trigger=1, watermark=watermark)
-    # (+1 trailing no-data batch of the stateful graph with a watermark)
-    assert len([s for s in job1.run(spark) if s.events_in]) == 2
+    stats = job1.run(spark)
+    assert len(stats) - 2 in trailing
+    assert all(s.events_in for s in stats[:2])
+    assert all(s.events_in == 0 for s in stats[2:])
     shutil.rmtree(job1.lineage_dir)
 
     # "restart": fresh driver-side job state, same checkpoint; the dupe
@@ -299,6 +304,7 @@ def _restart_keeps_progress(spark, tmp_path, watermark):
     dup.to_parquet(str(tmp_path / "stream" / "segment-00003.parquet"))
     job2 = _job(tmp_path, max_files_per_trigger=1, watermark=watermark)
     stats = job2.run(spark)
+    assert len(stats) - 1 in trailing
     assert all(s.events_in == 0 for s in stats)
     # without a watermark the merge drops the re-delivery; with one, the
     # state store already did
@@ -698,6 +704,49 @@ def test_order_guard_catches_gap_event_above_an_applied_min(spark, tmp_path):
     assert doc["events_in"] == 1
     assert _open(spark, job).snapshot_header().lsn_intervals[job.stream_id] == [
         [int(seg0.lsn.min()), late], [int(seg2.lsn.min()), int(seg2.lsn.max())],
+    ]
+
+
+@pytest.mark.parametrize("hole", ["bad_op", "incompatible_type"])
+def test_order_guard_sees_gap_below_a_span_holed_by_a_dead_letter(spark, tmp_path, hole):
+    """A segment delivered before its predecessor, with one dead letter
+    inside its lsn span: the dead letter's lsn was delivered, so the
+    span still counts as dense and the gap below it stays open. The
+    predecessor's late first delivery then trips the guard; none of its
+    events is taken for a re-delivery."""
+    from pyspark.sql import functions as F
+
+    from etl_kafka_project_spark.cdc.stream import OutOfOrderDeliveryError
+
+    spec = StreamSpec(n_events=300, n_keys=60, n_segments=3, dup_rate=0.0,
+                      min_lines=2, max_lines=3)
+    _, segs = generate_stream(str(tmp_path / "stream"), spec)
+    segs = sorted(segs)
+    create_code_table(spark, str(tmp_path / "table"), CFG)
+    read = lambda p: spark.read.schema(EVENT_SCHEMA).parquet(p)
+    seg0, seg1, seg2 = (pd.read_parquet(s) for s in segs)
+    bad = F.col("lsn") == int(seg2.lsn.min()) + 5
+    holed = read(segs[2])
+    if hole == "bad_op":
+        holed = holed.withColumn("op", F.when(bad, F.lit("X")).otherwise(F.col("op")))
+    else:  # a long in the string column `lang`, on that row only
+        holed = holed.withColumn("lang", F.when(bad, F.lit(7)).cast("long"))
+
+    job = _job(tmp_path)  # order_guard="error"
+    job.apply_epoch(read(segs[0]), 0)
+    assert job.apply_epoch(holed, 1).events_in == len(seg2) - 1
+    assert _open(spark, job).snapshot_header().lsn_intervals[job.stream_id] == [
+        [int(seg0.lsn.min()), int(seg0.lsn.max())],
+        [int(seg2.lsn.min()), int(seg2.lsn.max())],
+    ]
+    with pytest.raises(OutOfOrderDeliveryError):
+        job.apply_epoch(read(segs[1]), 2)
+
+    doc = LineageLog(job.lineage_dir, job.stream_id).read_epoch(2)
+    assert doc["redeliveries_dropped"] == 0
+    assert doc["events_in"] == len(seg1)
+    assert doc["phases"]["order_violation"] == [
+        int(seg1.lsn.min()), int(seg2.lsn.max()), len(seg1),
     ]
 
 
