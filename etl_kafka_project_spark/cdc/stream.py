@@ -29,6 +29,7 @@ an epoch found already committed skips the merge, not the steps after it.
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
@@ -374,10 +375,13 @@ class ReplayJob:
         batch = batch_df.observe(dead_obs, *metrics)
         valid, _ = split_dead_letters(batch)
 
+        # fetched once: each Observation.get is a py4j round trip
+        observed = functools.cache(lambda: dead_obs.get)
+
         def quarantined() -> int:
             # a quarantined row's lsn was delivered too (counting the
             # null-lsn ones over-counts, which only keeps gaps open)
-            m = dead_obs.get
+            m = observed()
             return int(m["n_dead"] or 0) + int(m.get("n_incompat") or 0)
 
         # an incompatibly-typed column drops from the merge input (its
@@ -444,7 +448,7 @@ class ReplayJob:
         watch.phases.update(stats.phases)
         # the merge job always runs (even for an empty batch), so the
         # observation never blocks
-        return stats, dead_obs.get
+        return stats, observed()
 
 
     # ---------- streaming query ----------
